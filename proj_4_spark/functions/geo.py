@@ -103,15 +103,29 @@ def with_projected(df: DataFrame, projstr: str, lon: str = "lon",
 
 
 def s2_cell_udf(level: int):
-    """pandas UDF (lon_deg, lat_deg) -> int64 S2 cell id at ``level``."""
+    """pandas UDF (lon_deg, lat_deg) -> int64 S2 cell id at ``level``;
+    a NaN, infinite or null coordinate gives a null cell."""
 
     @pandas_udf("long")
     def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(run_chunked(
-            lambda a, b: s2idx.cell_id(a, b, level),
-            lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
+        a = lon.to_numpy(np.float64)
+        b = lat.to_numpy(np.float64)
+        cid = run_chunked(lambda x, y: s2idx.cell_id(x, y, level), a, b)
+        finite = np.isfinite(a) & np.isfinite(b)
+        if finite.all():
+            return pd.Series(cid)
+        return pd.Series(pd.arrays.IntegerArray(cid, ~finite))
 
     return _cell
+
+
+def s2_parent(cell: Column, level: int) -> Column:
+    """Ancestor at ``level`` of an S2 cell column at ``level`` or finer,
+    as an exact Catalyst bit expression (index/s2.py::parent); null
+    stays null."""
+    lsb = 1 << 2 * (s2idx.MAX_LEVEL - level)
+    return (cell.bitwiseAND(F.lit(-lsb).cast("long"))
+            .bitwiseOR(F.lit(lsb).cast("long")))
 
 
 def s2_face_ij_udf(level: int):
@@ -150,14 +164,6 @@ def s2_cell_to_face_ij_udf(level: int):
     return _decode
 
 
-def s2_parent_udf(level: int):
-    @pandas_udf("long")
-    def _parent(cid: pd.Series) -> pd.Series:
-        return pd.Series(s2idx.parent(cid.to_numpy(np.int64), level))
-
-    return _parent
-
-
 def a7hex_cell_udf(res: int):
     """pandas UDF (lon, lat) -> int64 aperture-7 icosahedral hex cell
     (index/hexdggs.py).  NOT canonical-H3-bit-compatible — the surface
@@ -171,11 +177,6 @@ def a7hex_cell_udf(res: int):
             lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
 
     return _cell
-
-
-# deprecated pre-rename alias (round <=3 name; the index was never H3
-# bit-compatible and the old name suggested it was)
-hex_cell_udf = a7hex_cell_udf
 
 
 def a7hex_parent_udf(parent_res: int):

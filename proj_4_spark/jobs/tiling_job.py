@@ -4,8 +4,9 @@ S2 cells -> PIP tile assignments -> per-polygon/per-cell aggregates.
 Every stage is checkpointed (plans/checkpoint.py — parquet snapshot +
 completion marker + lineage metrics; Iceberg snapshots on a real
 deployment), so a killed job resumes from the last complete stage.
-Hot-cell skew (Zipf city head) is handled by deterministic salting in
-the final aggregation plus AQE.
+Each point is S2-encoded once; the join key and the roll-up are its
+Catalyst parent.  Hot cells (Zipf head) need no salting: the counts
+partially aggregate map-side before the shuffle, plus AQE.
 
 Run under spark-submit (scripts/run_tiling_job.sh packages the
 module with --py-files) or directly:
@@ -35,13 +36,15 @@ def build_session(master: str | None = None, shuffle_partitions: int = 32):
     return b.getOrCreate()
 
 
-def run(spark: SparkSession, sf_dir: str, out_dir: str,
-        cell_level: int = 12, cover_level: int = 8,
-        n_salt: int = 16) -> dict:
-    from proj_4_spark.functions.geo import s2_cell_udf, utm_all_zones_udf
+CELL_LEVEL = 12  # the per-point S2 encode
+COVER_LEVEL = 8  # PIP join key and cell-count roll-up; <= CELL_LEVEL
+
+
+def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
+    from proj_4_spark.functions.geo import (s2_cell_udf, s2_parent,
+                                            utm_all_zones_udf)
     from proj_4_spark.operators.spatial_join import pip_join
     from proj_4_spark.plans.checkpoint import CheckpointedPipeline
-    from proj_4_spark.plans.salting import salted_agg
     from proj_4_spark.sources.pages import mine_coords, synthesize_pages
     from proj_4_spark.sources.polygons import polygon_rows
 
@@ -67,7 +70,7 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str,
 
     # 3. S2 cell encode (narrow)
     def _encode():
-        cell = s2_cell_udf(cell_level)(F.col("lon"), F.col("lat"))
+        cell = s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))
         return projected.withColumn("cell", cell)
 
     encoded = cp.stage("encoded", _encode)
@@ -75,34 +78,24 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str,
     # 4. PIP tile assignments (broadcast cover + exact ray cast)
     tiles = cp.stage(
         "tile_assignments",
-        lambda: pip_join(encoded, polygon_rows(), level=cover_level)
+        lambda: pip_join(encoded, polygon_rows(), level=COVER_LEVEL,
+                         cell="cell")
         .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
 
-    # 5a. per-polygon counts (salted two-stage agg: Zipf hot head)
-    poly_counts = cp.stage(
+    # 5a. per-polygon counts
+    cp.stage(
         "polygon_counts",
-        lambda: salted_agg(tiles, ["polygon_id"], "doc_id", n_salt=n_salt,
-                           count_alias="n_docs").orderBy("polygon_id"))
+        lambda: tiles.groupBy("polygon_id").agg(F.count("*").alias("n_docs")))
 
-    # 5b. per-cell histogram at a coarser roll-up level
-    def _cell_counts():
-        from proj_4_spark.functions.geo import s2_parent_udf
+    # 5b. per-cell histogram at the coarser roll-up level
+    cp.stage(
+        "cell_counts",
+        lambda: encoded.groupBy(
+            s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
+        .agg(F.count("*").alias("n_mentions")))
 
-        parent = s2_parent_udf(cover_level)(F.col("cell"))
-        return (encoded.withColumn("cell8", parent)
-                .groupBy("cell8").agg(F.count("*").alias("n_mentions")))
-
-    cell_counts = cp.stage("cell_counts", _cell_counts)
-
-    return {
-        "stages": cp.metrics(),
-        "rows": {
-            "mined": mined.count(),
-            "tile_assignments": tiles.count(),
-            "polygon_counts": poly_counts.count(),
-            "cell_counts": cell_counts.count(),
-        },
-    }
+    stages = cp.metrics()
+    return {"stages": stages, "rows": {m["stage"]: m["rows"] for m in stages}}
 
 
 def main():

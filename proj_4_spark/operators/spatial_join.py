@@ -4,7 +4,8 @@ Replaces PROJ's scalar quadtree + point-in-rect gating
 (/root/reference/src/quadtree.hpp:60+, src/trans.cpp:44-173) with the
 Spark-native plan from SURVEY.md §2.5:
 
-  1. encode points to S2 cells at a join level (narrow, no shuffle);
+  1. encode points to S2 cells at a join level, or take the parent of
+     an existing finer cell column (narrow, no shuffle);
   2. driver-side: compute each polygon's conservative cell cover
      (bbox rasterization, a superset) and EXPLODE to (cell, polygon_id);
   3. broadcast-hash join points to candidate polygons on the cell id
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
-from ..functions.geo import s2_cell_udf
+from ..functions.geo import s2_cell_udf, s2_parent
 from ..index import s2 as s2idx
 
 
@@ -93,15 +94,17 @@ def ray_cast_udf(polygon_rows: list[dict]):
 
 
 def pip_join(points: DataFrame, polygon_rows: list[dict], level: int = 10,
-             lon: str = "lon", lat: str = "lat",
+             lon: str = "lon", lat: str = "lat", cell: str | None = None,
              broadcast_cover: bool = True) -> DataFrame:
     """points × polygons -> (points.*, polygon_id) for every polygon
-    strictly containing the point."""
+    strictly containing the point.  ``cell`` names an S2 cell column at
+    ``level`` or finer to key on by parent instead of encoding lon/lat."""
     spark = points.sparkSession
     cover = (polygon_cover_df(spark, polygon_rows, level)
              .withColumnRenamed("cell", "_cover_cell"))
-    cell = s2_cell_udf(level)(F.col(lon), F.col(lat)).alias("_cell")
-    pts = points.withColumn("_cell", cell)
+    key = (s2_cell_udf(level)(F.col(lon), F.col(lat)) if cell is None
+           else s2_parent(F.col(cell), level))
+    pts = points.withColumn("_cell", key)
     cov = broadcast(cover) if broadcast_cover else cover
     cand = (pts.join(cov, pts["_cell"] == cov["_cover_cell"], "inner")
                .drop("_cover_cell"))

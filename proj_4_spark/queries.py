@@ -1267,7 +1267,7 @@ def q_hex_cell_counts(spark, sf_dir):
     a doc_id->cell VALUES join (plans/oracles.py::hex_cells_sql) — a
     distributed-vs-driver consistency gate, not canonical-H3 parity."""
     df = _coords(spark, sf_dir)
-    cell = G.hex_cell_udf(5)(F.col("lon"), F.col("lat")).alias("hex_cell")
+    cell = G.a7hex_cell_udf(5)(F.col("lon"), F.col("lat")).alias("hex_cell")
     return (df.select(cell).groupBy("hex_cell")
               .agg(F.count("*").alias("n_docs"))
               .orderBy("hex_cell"))

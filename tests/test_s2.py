@@ -86,3 +86,79 @@ def test_cover_bbox_superset():
             lat = rng.uniform(la0, la1, 3000)
             cells = s2.cell_id(lon, lat, lvl)
             assert set(cells.tolist()) <= cover
+
+
+def test_s2_parent_expression_matches_index(spark):
+    """The Catalyst parent is bit-exact with index/s2.py::parent on
+    level-12 cells of all six faces (faces 4-5 have negative ids)."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.functions.geo import s2_parent
+
+    rng = np.random.RandomState(8)
+    n = 6000
+    face = np.repeat(np.arange(6), n // 6)
+    i = rng.randint(0, 1 << 30, n)
+    j = rng.randint(0, 1 << 30, n)
+    cells = s2.parent(s2.from_face_ij(face, i, j), 12)
+    assert (cells < 0).any()
+    df = spark.createDataFrame([(int(c),) for c in cells], "cell long")
+    got = df.select("cell", *[s2_parent(F.col("cell"), lvl).alias(f"p{lvl}")
+                              for lvl in range(12)]).toPandas()
+    src = got["cell"].to_numpy(np.int64)
+    assert sorted(src.tolist()) == sorted(cells.tolist())
+    for lvl in range(12):
+        assert (got[f"p{lvl}"].to_numpy(np.int64)
+                == s2.parent(src, lvl)).all(), lvl
+
+
+def test_s2_cell_udf_non_finite_gives_null(spark):
+    """NaN, infinite or null lon/lat -> null cell; the null survives
+    s2_parent and never matches in pip_join on either key path."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.functions.geo import s2_cell_udf, s2_parent
+    from proj_4_spark.operators.spatial_join import pip_join
+    from proj_4_spark.sources.polygons import polygon_rows
+
+    polys = polygon_rows()
+    inside_lon = float(np.mean(polys[0]["ring_lon"]))
+    inside_lat = float(np.mean(polys[0]["ring_lat"]))
+    nan, inf = float("nan"), float("inf")
+    rows = [(0, inside_lon, inside_lat), (1, nan, nan), (2, None, None),
+            (3, inside_lon, nan), (4, inf, inside_lat), (5, None, 1.0)]
+    pts = spark.createDataFrame(rows, "doc_id long, lon double, lat double")
+    enc = pts.withColumn("cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
+    got = {r.doc_id: (r.cell, r.p8) for r in enc.select(
+        "doc_id", "cell", s2_parent(F.col("cell"), 8).alias("p8")).collect()}
+    assert got[0] == (int(s2.cell_id(inside_lon, inside_lat, 12)),
+                      int(s2.cell_id(inside_lon, inside_lat, 8)))
+    for k in range(1, 6):
+        assert got[k] == (None, None), k
+    for kw in ({}, {"cell": "cell"}):
+        ids = {r.doc_id for r in pip_join(enc, polys, level=8, **kw)
+               .select("doc_id").collect()}
+        assert ids == {0}, kw
+
+
+def test_pip_join_cell_column_matches_lonlat(spark, sf_dir):
+    """Keying on the parent of an existing level-12 cell column gives
+    the same rows as encoding lon/lat at the join level."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.functions.geo import s2_cell_udf
+    from proj_4_spark.operators.spatial_join import pip_join
+    from proj_4_spark.sources.coords import coords_df
+    from proj_4_spark.sources.polygons import polygon_rows
+
+    polys = polygon_rows()
+    pts = coords_df(spark, sf_dir).withColumn(
+        "cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
+
+    def rows(df):
+        return sorted(tuple(r) for r in
+                      df.select("doc_id", "polygon_id", "cell").collect())
+
+    by_lonlat = rows(pip_join(pts, polys, level=8))
+    by_cell = rows(pip_join(pts, polys, level=8, cell="cell"))
+    assert by_lonlat and by_cell == by_lonlat

@@ -1,9 +1,17 @@
-"""End-to-end flagship job: stage checkpointing, resume, lineage."""
+"""End-to-end flagship job: stage checkpointing, resume, lineage,
+oracle parity of the aggregates and the shape of the stage plans."""
 
-import json
 import os
 
+import duckdb
+import numpy as np
+import pytest
+
+from proj_4_spark import queries as Q
+from proj_4_spark.index import s2
 from proj_4_spark.jobs import tiling_job
+from proj_4_spark.plans import oracles as O
+from proj_4_spark.plans.checkpoint import CheckpointedPipeline
 
 
 def test_tiling_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
@@ -17,6 +25,11 @@ def test_tiling_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     # lineage metrics recorded per stage
     for m in summary["stages"]:
         assert m["rows"] >= 0 and m["wall_s"] >= 0 and m["partitions"] >= 1
+    # the summary's row counts are the checkpoint layer's, and they are
+    # the row counts of the written parquet
+    assert set(summary["rows"]) == stages
+    for st, n in summary["rows"].items():
+        assert spark.read.parquet(os.path.join(out, st)).count() == n, st
 
     # resume: markers exist, a second run recomputes nothing (wall
     # times unchanged in the metrics files — they are only written on
@@ -46,3 +59,69 @@ def test_tiling_job_partial_resume(spark, sf_dir, tmp_path):
     assert summary["rows"]["tile_assignments"] > 0
     m_after = os.path.getmtime(os.path.join(out, "_metrics", "mined.json"))
     assert m_before == m_after  # early stages untouched
+
+
+@pytest.fixture(scope="module")
+def job(spark, sf_dir, tmp_path_factory):
+    """One fresh run that also keeps the DataFrame each stage wrote."""
+    out = str(tmp_path_factory.mktemp("job3"))
+    built = {}
+    orig = CheckpointedPipeline.stage
+
+    def spy(cp, name, build, partition_by=None):
+        return orig(cp, name, lambda: built.setdefault(name, build()),
+                    partition_by)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(CheckpointedPipeline, "stage", spy)
+        tiling_job.run(spark, sf_dir, out)
+    return out, built
+
+
+def _oracle_on_mined(sql, out):
+    """Run a registered oracle over the job's own mined coordinates
+    (the miner parses the '%.6f' text, so these are rounded)."""
+    cte = O.coords_cte()
+    assert cte in sql
+    mined = f"SELECT doc_id, lon, lat FROM read_parquet('{out}/mined/*.parquet')"
+    return duckdb.sql(sql.replace(cte, mined)).fetchall()
+
+
+def _job_rows(out, stage, cols):
+    return duckdb.sql(f"SELECT {cols} FROM "
+                      f"read_parquet('{out}/{stage}/*.parquet')").fetchall()
+
+
+def test_tiling_job_polygon_counts_match_oracle(job):
+    out, _ = job
+    want = _oracle_on_mined(Q.oracle_sql()["pip_polygon_counts"], out)
+    got = _job_rows(out, "polygon_counts", "polygon_id, n_docs")
+    assert want and sorted(got) == sorted(want)
+
+
+def test_tiling_job_cell_counts_match_oracle(job):
+    out, _ = job
+    level = tiling_job.COVER_LEVEL
+    want = _oracle_on_mined(
+        f"WITH fij AS ({O.s2_face_ij_sql(level)}) "
+        "SELECT face, i, j, count(*) FROM fij GROUP BY face, i, j", out)
+    cell8, n = zip(*_job_rows(out, "cell_counts", "cell8, n_mentions"))
+    face, i, j = s2.to_face_ij(np.array(cell8, dtype=np.int64))
+    shift = s2.MAX_LEVEL - level
+    got = zip(face.tolist(), (i >> shift).tolist(), (j >> shift).tolist(), n)
+    assert want and sorted(got) == sorted(want)
+
+
+def test_tiling_job_one_s2_crossing_per_point(job):
+    """Only `encoded` runs the S2 UDF: the join key and the roll-up are
+    Catalyst parents, so cell_counts has no Python UDF and
+    tile_assignments has just the ray cast."""
+    _, built = job
+
+    def n_udf(stage):
+        plan = built[stage]._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("ArrowEvalPython")
+
+    assert n_udf("encoded") == 1
+    assert n_udf("tile_assignments") == 1
+    assert n_udf("cell_counts") == 0
