@@ -9,7 +9,24 @@ The Hilbert-curve cell-id layout (3 face bits + 60 position bits +
 sentinel bit) follows the public S2 geometry spec; the reference does
 not contain the cell-id integer encoding, only the projection math.
 
-Cell ids are int64 (top bit never set: face <= 5). Level 0..30.
+Cell ids are int64 (faces 4-5 set the top bit, so they are negative).
+Level 0..30.  Every id has its sentinel bit set, so 0 is never a cell.
+
+Bbox covers (:func:`cover_bboxes`).  Inside one face chart a bbox's
+u/v extremes lie on its boundary.  Face u/v are gnomonic coordinates,
+so a meridian is a straight line in u/v and the bbox's meridian edges
+reach their u/v extremes at the corners.  Along a parallel, u and v
+are tan or cot of lon, or a constant times cos, sin, 1/cos or 1/sin of
+lon (face 0: u = tan(lon), v = tan(lat)/cos(lon); face 2:
+u = -cos(lon)/tan(lat)), so their only interior extremes sit where lon
+is a multiple of 90°.  The exact u/v bounding box of a bbox inside one
+face chart therefore comes from its 4 corners plus at most 5 points on
+each of its two parallels, and its i/j range at the level is the
+cover.  A bbox counts as inside the chart of its first corner's face
+when all these points have a positive (face-signed) denominator and
+u/v within [-1, 1] after a 1e-9 widening.  Every other bbox (across a
+face edge or the antimeridian, or outside the lon/lat range) falls
+back to the rasterised :func:`cover_bbox`.
 """
 
 from __future__ import annotations
@@ -73,17 +90,25 @@ def xyz_to_face_uv(x, y, z):
     face = np.where(ax > ay, np.where(ax > az, 0, 2), np.where(ay > az, 1, 2))
     pface = np.choose(face, [x, y, z])
     face = np.where(pface < 0, face + 3, face)
-    nx, ny, nz = -x, -y, -z
-    # u = [y/x, -x/y, -x/z, z/x, z/y, -y/z][face]
-    u_num = np.choose(face, [y, nx, nx, z, z, ny])
-    v_num = np.choose(face, [z, z, ny, y, nx, nx])
-    den = np.choose(face, [x, y, z, x, y, z])
+    u_num, v_num, den = _face_frame(face, x, y, z)
     with np.errstate(invalid="ignore", divide="ignore"):
         # true division (not reciprocal-multiply): bit-parity with the
         # oracle's y/x etc. must hold
         u = u_num / den
         v = v_num / den
     return face, u, v
+
+
+def _face_frame(face, x, y, z):
+    """(u numerator, v numerator, denominator) of xyz in ``face``'s
+    chart, whichever face the point lies on (ValidFaceXYZtoUV,
+    s2.cpp:192-220); the denominator's sign is the face's axis sign."""
+    nx, ny = -x, -y
+    # u = [y/x, -x/y, -x/z, z/x, z/y, -y/z][face]
+    u_num = np.choose(face, [y, nx, nx, z, z, ny])
+    v_num = np.choose(face, [z, z, ny, y, nx, nx])
+    den = np.choose(face, [x, y, z, x, y, z])
+    return u_num, v_num, den
 
 
 def face_uv_to_xyz(face, u, v):
@@ -238,3 +263,63 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, level, pad_cells=1.0):
     LO, LA = np.meshgrid(lons, lats)
     ids = cell_id(LO.ravel(), LA.ravel(), level)
     return np.unique(ids)
+
+
+_QUADRANTS = np.array([-180.0, -90.0, 0.0, 90.0, 180.0])
+_UV_EPS = 1e-9
+
+
+def cover_bboxes(lon_min, lat_min, lon_max, lat_max, level):
+    """Cell covers of many lon/lat bboxes at `level` in one call ->
+    (bbox_idx, cell) int64 arrays: every level-`level` cell holding a
+    point of the closed bbox is listed with that bbox's index.
+
+    A bbox whose u/v extremes all lie inside the face chart of its
+    (lon_min, lat_min) corner is covered by the i/j range of its u/v
+    bounding box (widened by 1e-9), enumerated with from_face_ij +
+    parent.  The other bboxes (across a face edge or the antimeridian,
+    or outside the lon/lat range) fall back to :func:`cover_bbox`.
+    """
+    lo0, la0, lo1, la1 = (np.atleast_1d(np.asarray(a, dtype=np.float64))
+                          for a in (lon_min, lat_min, lon_max, lat_max))
+    n = len(lo0)
+    # the u/v extremes: 4 corners plus each parallel's multiples of 90°
+    # (see the module docstring), as (n, 2 parallels, 7 lons) points
+    on = (_QUADRANTS >= lo0[:, None]) & (_QUADRANTS <= lo1[:, None])
+    lons = np.concatenate([lo0[:, None], lo1[:, None],
+                           np.where(on, _QUADRANTS, lo0[:, None])], axis=1)
+    lons = np.broadcast_to(lons[:, None, :], (n, 2, 7))
+    lats = np.broadcast_to(np.stack([la0, la1], axis=1)[:, :, None], (n, 2, 7))
+    x, y, z = lonlat_to_xyz(np.deg2rad(lons), np.deg2rad(lats))
+    face = xyz_to_face_uv(x[:, 0, 0], y[:, 0, 0], z[:, 0, 0])[0]
+    u_num, v_num, den = _face_frame(face[:, None, None], x, y, z)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        u = u_num / den
+        v = v_num / den
+    pts = (1, 2)
+    u_lo, u_hi = u.min(axis=pts) - _UV_EPS, u.max(axis=pts) + _UV_EPS
+    v_lo, v_hi = v.min(axis=pts) - _UV_EPS, v.max(axis=pts) + _UV_EPS
+    sign = np.where(face < 3, 1.0, -1.0)[:, None, None]
+    fast = ((-180.0 <= lo0) & (lo0 <= lo1) & (lo1 <= 180.0)
+            & (-90.0 <= la0) & (la0 <= la1) & (la1 <= 90.0)
+            & (den * sign > 0).all(axis=pts)
+            & (u_lo >= -1.0) & (u_hi <= 1.0) & (v_lo >= -1.0) & (v_hi <= 1.0))
+
+    shift = MAX_LEVEL - level
+    k = np.flatnonzero(fast)
+    i_lo = st_to_ij(uv_to_st(u_lo[k])) >> shift
+    j_lo = st_to_ij(uv_to_st(v_lo[k])) >> shift
+    ni = (st_to_ij(uv_to_st(u_hi[k])) >> shift) - i_lo + 1
+    nj = (st_to_ij(uv_to_st(v_hi[k])) >> shift) - j_lo + 1
+    cnt = ni * nj
+    rep = np.repeat(np.arange(len(k)), cnt)
+    off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    i = (i_lo[rep] + off // nj[rep]) << shift
+    j = (j_lo[rep] + off % nj[rep]) << shift
+    idx = [k[rep]]
+    cells = [parent(from_face_ij(face[k][rep], i, j), level)]
+    for b in np.flatnonzero(~fast):
+        c = cover_bbox(lo0[b], la0[b], lo1[b], la1[b], level)
+        idx.append(np.full(len(c), b, dtype=np.int64))
+        cells.append(c)
+    return np.concatenate(idx), np.concatenate(cells)

@@ -88,6 +88,73 @@ def test_cover_bbox_superset():
             assert set(cells.tolist()) <= cover
 
 
+def _bbox_points(rng, lo0, la0, lo1, la1, n=30):
+    """Corners, edge midpoints and `n` random interior points."""
+    lon = np.concatenate([[lo0, lo1, lo0, lo1, (lo0 + lo1) / 2, lo0,
+                           (lo0 + lo1) / 2, lo1], rng.uniform(lo0, lo1, n)])
+    lat = np.concatenate([[la0, la0, la1, la1, la0, (la0 + la1) / 2, la1,
+                           (la0 + la1) / 2], rng.uniform(la0, la1, n)])
+    return lon, lat
+
+
+def test_cover_bboxes_property(monkeypatch):
+    """Every corner and random interior point of a bbox lies in a cell
+    of that bbox's cover, anywhere on the globe, across face edges and
+    at the poles; a bbox spanning several faces takes the cover_bbox
+    fallback."""
+    rng = np.random.default_rng(11)
+    fallback = []
+    cover_bbox = s2.cover_bbox
+
+    def spy(*args):
+        fallback.append(args[:4])
+        return cover_bbox(*args)
+
+    monkeypatch.setattr(s2, "cover_bbox", spy)
+    # fallback covers rasterise, so straddlers shrink as the level grows
+    for level, max_deg in ((6, 5.0), (8, 2.0), (10, 0.5), (12, 0.1)):
+        k = 12
+        clon = np.concatenate([
+            rng.uniform(-180, 180, 3 * k),
+            rng.choice([-135.0, -45.0, 45.0, 135.0], k),
+            rng.uniform(-180, 180, 2 * k)])
+        clat = np.concatenate([
+            np.rad2deg(np.arcsin(rng.uniform(-1, 1, 3 * k))),
+            rng.uniform(-35, 35, k),
+            rng.choice([-89.9, -35.26, 35.26, 89.9], 2 * k)])
+        half = rng.uniform(0.001, max_deg, (2, len(clon))) / 2
+        lo0 = np.clip(clon - half[0], -180, 180)
+        lo1 = np.clip(clon + half[0], -180, 180)
+        la0 = np.clip(clat - half[1], -90, 90)
+        la1 = np.clip(clat + half[1], -90, 90)
+        # boxes whose lower parallel peaks at lon 0 or 90 just past a
+        # level grid line that all four corners stay inside: faces 0
+        # and 1 (v = tan(lat)/cos(lon - axis)), polar face 2
+        # (u = -cos(lon)/tan(lat))
+        line = -s2.st_to_uv(np.round(rng.uniform(0.2, 0.4, 3) * 2**level)
+                            / 2**level)
+        mid = np.array([0.0, 90.0, 0.0])
+        edge = np.rad2deg(np.arctan([line[0] - 1e-7, line[1] - 1e-7,
+                                     1.0 / (line[2] + 1e-7)]))
+        lo0, lo1 = np.append(lo0, mid - 1.0), np.append(lo1, mid + 1.0)
+        la0, la1 = np.append(la0, edge), np.append(la1, edge + 0.05)
+        fallback.clear()
+        idx, cells = s2.cover_bboxes(lo0, la0, lo1, la1, level)
+        assert (s2.level_of(cells) == level).all()
+        slow = set(fallback)
+        n_multi = 0
+        for b in range(len(lo0)):
+            cover = set(cells[idx == b].tolist())
+            lon, lat = _bbox_points(rng, lo0[b], la0[b], lo1[b], la1[b])
+            assert set(s2.cell_id(lon, lat, level).tolist()) <= cover, (
+                level, lo0[b], la0[b], lo1[b], la1[b])
+            x, y, z = s2.lonlat_to_xyz(np.deg2rad(lon), np.deg2rad(lat))
+            if len(set(s2.xyz_to_face_uv(x, y, z)[0].tolist())) > 1:
+                n_multi += 1
+                assert (lo0[b], la0[b], lo1[b], la1[b]) in slow
+        assert n_multi and len(slow) < len(lo0), level
+
+
 def test_s2_parent_expression_matches_index(spark):
     """The Catalyst parent is bit-exact with index/s2.py::parent on
     level-12 cells of all six faces (faces 4-5 have negative ids)."""
@@ -162,3 +229,113 @@ def test_pip_join_cell_column_matches_lonlat(spark, sf_dir):
     by_lonlat = rows(pip_join(pts, polys, level=8))
     by_cell = rows(pip_join(pts, polys, level=8, cell="cell"))
     assert by_lonlat and by_cell == by_lonlat
+
+
+def _ray_cast_reference(rows, px, py, pid):
+    """Per-polygon even-odd loop: one pass per polygon, one per edge."""
+    out = np.zeros(len(px), dtype=bool)
+    for r in rows:
+        m = pid == r["polygon_id"]
+        rx, ry = np.asarray(r["ring_lon"]), np.asarray(r["ring_lat"])
+        x, y = px[m], py[m]
+        inside = np.zeros(len(x), dtype=bool)
+        for i in range(len(rx)):
+            j = (i + 1) % len(rx)
+            x1, y1, x2, y2 = rx[i], ry[i], rx[j], ry[j]
+            crosses = (y1 > y) != (y2 > y)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                xint = (x2 - x1) * (y - y1) / (y2 - y1) + x1
+            inside ^= crosses & (x < xint)
+        out[m] = inside
+    return out
+
+
+def test_ray_cast_udf_bit_identical_to_per_polygon_loop(spark):
+    """The edge-slot kernel gives the per-polygon loop's answer
+    bit for bit: 3-32-vertex star rings with non-contiguous ids, points
+    exactly on vertices, on edge midpoints and on vertex rows, more rows
+    than one run_chunked block, and a 0-row batch."""
+    import pandas as pd
+
+    from proj_4_spark.functions.geo import CHUNK
+    from proj_4_spark.operators.spatial_join import ray_cast_udf
+
+    rng = np.random.default_rng(12)
+    rows = [dict(polygon_id=-5, ring_lon=[0.0, 1.0, 1.0, 0.0],
+                 ring_lat=[0.0, 0.0, 1.0, 1.0])]
+    for q, pid in enumerate(rng.choice(10**6, 40, replace=False)):
+        nv = 3 + q % 30
+        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
+        rad = rng.uniform(0.2, 1.0, nv)
+        c = rng.uniform(-50, 50, 2)
+        rows.append(dict(polygon_id=int(pid),
+                         ring_lon=(c[0] + rad * np.cos(ang)).tolist(),
+                         ring_lat=(c[1] + rad * np.sin(ang)).tolist()))
+    lon, lat, pid = [], [], []
+    for r in rows:
+        rx, ry = np.asarray(r["ring_lon"]), np.asarray(r["ring_lat"])
+        mx, my = (rx + np.roll(rx, -1)) / 2, (ry + np.roll(ry, -1)) / 2
+        m = CHUNK // len(rows) + 64
+        rnd_x = rng.uniform(rx.min() - 0.1, rx.max() + 0.1, m)
+        rows_y = rng.choice(ry, m)
+        xs = np.concatenate([rx, mx, rnd_x, rnd_x])
+        ys = np.concatenate([ry, my, rng.uniform(ry.min() - 0.1,
+                                                 ry.max() + 0.1, m), rows_y])
+        lon.append(xs)
+        lat.append(ys)
+        pid.append(np.full(len(xs), r["polygon_id"]))
+    lon, lat, pid = (np.concatenate(a) for a in (lon, lat, pid))
+    perm = rng.permutation(len(lon))
+    lon, lat, pid = lon[perm], lat[perm], pid[perm]
+    assert len(lon) > CHUNK
+
+    inside = ray_cast_udf(rows).func
+    got = inside(pd.Series(lon), pd.Series(lat), pd.Series(pid)).to_numpy()
+    want = _ray_cast_reference(rows, lon, lat, pid)
+    assert got.dtype == bool and want.any()
+    assert np.array_equal(got, want)
+    empty = pd.Series([], dtype=np.float64)
+    assert len(inside(empty, empty, pd.Series([], dtype=np.int64))) == 0
+    unknown = inside(pd.Series([0.5]), pd.Series([0.5]), pd.Series([-6]))
+    assert not unknown.any()
+
+
+def _n_python_evals(df):
+    df.count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("ArrowEvalPython"), plan
+
+
+def test_pip_join_plan_one_encode_bbox_in_join(spark, sf_dir):
+    """Both key paths run exactly two Python evaluations (the encode and
+    the ray cast), and the polygon bbox test sits in the join."""
+    from pyspark.sql import functions as F
+
+    from proj_4_spark.functions.geo import s2_cell_udf
+    from proj_4_spark.operators.spatial_join import pip_join
+    from proj_4_spark.sources.coords import coords_df
+    from proj_4_spark.sources.polygons import polygon_rows
+
+    polys = polygon_rows()
+    pts = coords_df(spark, sf_dir)
+    enc = pts.withColumn("cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
+    for df in (pip_join(pts, polys, level=8),
+               pip_join(enc, polys, level=8, cell="cell")):
+        n, plan = _n_python_evals(df)
+        assert n == 2, plan
+        join = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+        assert len(join) == 1, plan
+        for bound in ("lon#", "_lon_min", "_lon_max", "lat#", "_lat_min",
+                      "_lat_max"):
+            assert bound in join[0], join[0]
+
+
+def test_pip_join_no_polygons(spark, sf_dir):
+    """No polygons: an empty frame that still has the polygon_id column."""
+    from proj_4_spark.operators.spatial_join import pip_join
+    from proj_4_spark.sources.coords import coords_df
+
+    pts = coords_df(spark, sf_dir)
+    out = pip_join(pts, [], level=8)
+    assert out.columns == pts.columns + ["polygon_id"]
+    assert out.count() == 0
