@@ -117,9 +117,10 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
         "transformed",
         lambda: transform_frame(spark.read.parquet(in_path), tr,
                                 direction, x_col, y_col, z_col, t_col))
-    n_rows = result.count()
+    stages = cp.metrics()
+    n_rows = next(m["rows"] for m in stages if m["stage"] == "transformed")
     n_err = result.where(F.col("errno") != ERRNO_OK).count()
-    return {"stages": cp.metrics(),
+    return {"stages": stages,
             "rows": n_rows, "errors": n_err,
             "projstr": desc, "direction": direction}
 

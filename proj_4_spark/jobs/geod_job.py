@@ -65,11 +65,12 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
     from proj_4_spark.plans.checkpoint import CheckpointedPipeline
 
     cp = CheckpointedPipeline(spark, out_dir)
-    result = cp.stage(
+    cp.stage(
         "solved",
         lambda: solve_frame(spark.read.parquet(in_path), mode, a, rf))
-    n_rows = result.count()
-    return {"stages": cp.metrics(), "rows": n_rows,
+    stages = cp.metrics()
+    n_rows = next(m["rows"] for m in stages if m["stage"] == "solved")
+    return {"stages": stages, "rows": n_rows,
             "mode": mode, "a": a, "rf": rf}
 
 

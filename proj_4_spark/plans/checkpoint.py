@@ -11,16 +11,29 @@ snapshot-completeness check maps 1:1 onto Iceberg's
 
 Also records per-stage lineage/metrics rows (row counts, wall time,
 partition count) in `<root>/_metrics/<stage>.json`.
+
+A stage that runs is one Spark job: the write.  Its row count is an
+`Observation` filled in during that write, `partitions` is the number
+of `part-*` files it wrote (at least one, even for an empty result),
+and the output is read back with the schema already known, so no
+footer-inference or `count()` job follows.  Parquet reads make every
+field nullable and list `partition_by` columns last with their type
+inferred from the directory names; the read-back passes only the data
+columns, so it has the same schema as a plain `spark.read.parquet`.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .metrics import observed
 
 DONE = "_GRAFT_DONE"
 
@@ -46,18 +59,23 @@ class CheckpointedPipeline:
             return self.spark.read.parquet(out_dir)
         t0 = time.perf_counter()
         df = build()
-        w = df.write.mode("overwrite")
+        counted, obs = observed(df, f"cp_{name}")
+        w = counted.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out_dir)
-        result = self.spark.read.parquet(out_dir)
-        n = result.count()
+        n = obs.get["rows"]
+        data_schema = StructType([f for f in df.schema.fields
+                                  if f.name not in (partition_by or ())])
+        result = self.spark.read.schema(data_schema).parquet(out_dir)
         wall = time.perf_counter() - t0
+        files = glob.glob(os.path.join(glob.escape(out_dir), "**", "part-*"),
+                          recursive=True)
         meta = {
             "stage": name,
             "rows": n,
             "wall_s": round(wall, 3),
-            "partitions": result.rdd.getNumPartitions(),
+            "partitions": len(files),
             "ts": time.time(),
         }
         with open(os.path.join(self.root, "_metrics", f"{name}.json"),

@@ -1283,8 +1283,8 @@ FROM documents ORDER BY doc_id
 """)
 def q_mined_coords(spark, sf_dir):
     """End-to-end miner check: synthesize pages (text + embedded
-    'located at lat, lon' mention), run the vectorized regex miner
-    (sources/pages.py mapInPandas), return what it extracted — must
+    'located at lat, lon' mention), run the Catalyst regex miner
+    (sources/pages.py mine_coords), return what it extracted — must
     equal the deterministic coordinates the generator embedded."""
     from .sources.pages import mine_coords, synthesize_pages
 

@@ -1,4 +1,4 @@
-"""Web-page table handling: schema, synthesis, coordinate mining.
+r"""Web-page table handling: schema, synthesis, coordinate mining.
 
 The engine's input contract (BASELINE.json input_hint) is an Iceberg
 table `(url string, warc_ts timestamp, html binary, text string,
@@ -7,8 +7,17 @@ lang string)`.  Two hard rules implemented here:
 - **`text` is never rewritten** — every transformation projects it
   through untouched (byte-identical per url); derived columns ride
   alongside.
-- **no per-row Python** — the coordinate miner is a vectorized
+- **no per-row Python** — the decimal coordinate miner is one
+  Catalyst expression (`regexp_extract_all` + `zip_with` +
+  `posexplode`), so nothing crosses into Python and columns no output
+  uses (the `html` copy) are pruned; the DMS miner is a vectorized
   pandas-str regex over Arrow batches.
+
+The decimal miner's regex runs in Java, whose `\d` and `\s` are
+ASCII only, so `COORD_RE` spells both out: digits are ASCII `[0-9]`,
+and the whitespace class lists exactly the characters Python's `\s`
+matches (a NBSP or U+3000 after the comma still matches).  Non-ASCII
+digits (e.g. Arabic-Indic "٤٨.٥, ٢.٣") are not mined.
 
 `synthesize_pages` builds a deterministic pages table from the driver
 documents table (or `spark.range`) with 0-3 embedded coordinate
@@ -18,7 +27,6 @@ mentions per FIXTURES.md §1.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,8 +35,13 @@ from .coords import lonlat_sql
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
 
-# "lat, lon" decimal-degree mentions, e.g. "48.858844, 2.294351"
-COORD_RE = r"(-?\d{1,2}\.\d{1,8}),\s*(-?\d{1,3}\.\d{1,8})"
+# "lat, lon" decimal-degree mentions, e.g. "48.858844, 2.294351".
+# The same pattern in Java and Python regex: ASCII digits, and the
+# whitespace class is Python's Unicode `\s` written out.
+_WS = (r"[\t\n\x0b\x0c\r\x1c-\x20\x85\xa0"
+       r"\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]")
+COORD_RE = (r"(-?[0-9]{1,2}\.[0-9]{1,8}),"
+            + _WS + r"*(-?[0-9]{1,3}\.[0-9]{1,8})")
 
 
 def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,37 +73,30 @@ def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Extract every 'lat, lon' mention: (url, mention_idx, lon, lat).
+    """Extract every 'lat, lon' mention of `COORD_RE`: every input
+    column but `text_col`, then (mention_idx int, lat double,
+    lon double).
 
-    Vectorized pandas `str.extractall` over Arrow batches inside
-    mapInPandas — no per-row Python.  Out-of-range pairs are dropped
-    (lat in [-90,90], lon in [-180,180])."""
+    One Catalyst expression, no Python UDF: `regexp_extract_all` per
+    group, zipped into (lat, lon) pairs and numbered by `posexplode`
+    before the range filter, so `mention_idx` is the match position
+    (as pandas `extractall` numbers it).  Out-of-range pairs are
+    dropped (lat in [-90,90], lon in [-180,180]); a null or empty text
+    gives no row.  Only ASCII digits are mined (see the module
+    docstring)."""
     cols = [c for c in pages.columns if c != text_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pages.schema.fields if f.name != text_col
-    ) + ", mention_idx int, lat double, lon double"
-
-    def _mine(batches):
-        for pdf in batches:
-            ex = pdf[text_col].str.extractall(COORD_RE)
-            if len(ex) == 0:
-                continue
-            ex.columns = ["lat", "lon"]
-            ex = ex.astype({"lat": "float64", "lon": "float64"})
-            ex = ex.reset_index()
-            ex.rename(columns={"level_0": "_row", "match": "mention_idx"},
-                      inplace=True)
-            ok = (ex.lat.abs() <= 90.0) & (ex.lon.abs() <= 180.0)
-            ex = ex[ok]
-            base = pdf[cols].reset_index(drop=True)
-            out = base.iloc[ex["_row"].to_numpy()].reset_index(drop=True)
-            out["mention_idx"] = ex["mention_idx"].to_numpy().astype("int32")
-            out["lat"] = ex["lat"].to_numpy()
-            out["lon"] = ex["lon"].to_numpy()
-            yield out
-
-    return pages.mapInPandas(_mine, schema)
+    text, pat = pages[text_col], F.lit(COORD_RE)
+    pairs = F.zip_with(
+        F.regexp_extract_all(text, pat, F.lit(1)),
+        F.regexp_extract_all(text, pat, F.lit(2)),
+        lambda a, b: F.struct(a.cast("double").alias("lat"),
+                              b.cast("double").alias("lon")))
+    m = pages.select(*[pages[c] for c in cols],
+                     F.posexplode(pairs).alias("mention_idx", "_m"))
+    lat, lon = F.col("_m.lat"), F.col("_m.lon")
+    return (m.where((F.abs(lat) <= 90.0) & (F.abs(lon) <= 180.0))
+             .select(*[m[c] for c in cols], "mention_idx",
+                     lat.alias("lat"), lon.alias("lon")))
 
 
 # DMS mentions: 48°51'24.5"N 2°21'03"E — ASCII d/'/" and the unicode
@@ -105,8 +111,8 @@ def mine_coords_dms(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """Extract every DMS 'lat lon' mention: (…, mention_idx, lat, lon)
     in signed decimal degrees (deg + min/60 + sec/3600, S/W negative).
 
-    Same vectorized extractall-over-Arrow-batches shape as
-    mine_coords; out-of-range pairs dropped."""
+    Vectorized pandas `str.extractall` over Arrow batches inside
+    mapInPandas — no per-row Python; out-of-range pairs dropped."""
     cols = [c for c in pages.columns if c != text_col]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"

@@ -61,6 +61,68 @@ def test_checkpoint_resume(spark, sf_dir, tmp_path):
     assert m and m[0]["stage"] == "coords50" and m[0]["rows"] == 50
 
 
+def test_checkpoint_stage_is_one_job(spark, tmp_path):
+    """The write is the stage's only Spark job: rows are observed during
+    it and the read-back needs no footer-inference or count job."""
+    cp = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    sc.setJobGroup("test_checkpoint.narrow", "test_checkpoint.narrow")
+    try:
+        out = cp.stage("narrow", lambda: spark.range(1000))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_checkpoint.narrow")
+    assert len(jobs) == 1, jobs
+    m = cp.metrics()[0]
+    assert m["rows"] == 1000 and m["partitions"] >= 1
+    assert set(m) == {"stage", "rows", "wall_s", "partitions", "ts"}
+    with open(tmp_path / "ckpt" / "narrow" / "_GRAFT_DONE") as f:
+        assert f.read() == '{"rows": 1000}'
+    assert out.count() == 1000
+
+
+def test_checkpoint_empty_stages(spark, tmp_path):
+    """A 0-partition input and a filter-to-empty frame both finish with
+    rows == 0 and at least one written file."""
+    cp = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    no_parts = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                     "a long, b string")
+    assert no_parts.rdd.getNumPartitions() == 0
+    a = cp.stage("no_partitions", lambda: no_parts)
+    b = cp.stage("filtered_empty", lambda: spark.range(100).where("id < 0"))
+    m = {r["stage"]: r for r in cp.metrics()}
+    for st in ("no_partitions", "filtered_empty"):
+        assert m[st]["rows"] == 0 and m[st]["partitions"] >= 1, m[st]
+    assert a.count() == 0 and b.count() == 0
+    assert a.columns == ["a", "b"]
+
+
+def test_checkpoint_readback_schema_is_inferred_schema(spark, tmp_path):
+    """The schema-known read-back equals a plain footer-inferring read:
+    nullable fields, and partition columns last with their inferred
+    type."""
+    cp = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    rng = spark.range(1000)
+    agg = cp.stage("agg", lambda: rng.groupBy((F.col("id") % 7).alias("k"))
+                   .agg(F.count("*").alias("n")))
+    parted = cp.stage(
+        "parted",
+        lambda: rng.select((F.col("id") % 3).alias("k"), "id",
+                           F.lit("x").alias("s"),
+                           (F.col("id") % 2 == 0).alias("even")),
+        ["s", "k"])
+    for name, df in (("agg", agg), ("parted", parted)):
+        inferred = spark.read.parquet(str(tmp_path / "ckpt" / name)).schema
+        assert df.schema == inferred, (name, df.schema, inferred)
+    assert parted.columns == ["id", "even", "s", "k"]
+    assert sorted(parted.collect()) == sorted(
+        spark.read.parquet(str(tmp_path / "ckpt" / "parted")).collect())
+    # part files are counted in the partition directories too
+    m = {r["stage"]: r for r in cp.metrics()}
+    assert m["parted"]["partitions"] >= 3 and m["parted"]["rows"] == 1000
+
+
 def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     from proj_4_spark.streaming.events import run_to_memory
     from proj_4_spark import queries as Q

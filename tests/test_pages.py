@@ -1,8 +1,9 @@
 """Pages table: synthesis, regex mining, text-invariance."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
-from proj_4_spark.sources.pages import mine_coords, synthesize_pages
+from proj_4_spark.sources.pages import COORD_RE, mine_coords, synthesize_pages
 from proj_4_spark.sources.coords import lonlat_numpy
 
 
@@ -27,7 +28,6 @@ def test_mine_coords_recovers_embedded(spark, sf_dir):
     assert len(rows) == n
     ids = sorted(by_doc)
     lon, lat = lonlat_numpy(ids)
-    import numpy as np
 
     got_lon = np.array([by_doc[i][0] for i in ids])
     got_lat = np.array([by_doc[i][1] for i in ids])
@@ -67,3 +67,121 @@ def test_mine_coords_dms_unicode_and_ascii(spark):
     assert abs(out[("u4", 1)][0] + (5 + 6 / 60 + 7.2 / 3600)) < 1e-12
     assert abs(out[("u4", 1)][1] + (3 + 2 / 60 + 1 / 3600)) < 1e-12
     assert len(out) == 4
+
+
+def _reference_mine(rows):
+    """The pandas `extractall` miner the Catalyst one must equal:
+    (url, mention_idx, lat, lon) of every in-range COORD_RE match."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["url", "text"])
+    ex = pdf["text"].str.extractall(COORD_RE)
+    out = []
+    for (i, k), (a, b) in ex.iterrows():
+        lat, lon = float(a), float(b)
+        if abs(lat) <= 90.0 and abs(lon) <= 180.0:
+            out.append((pdf["url"][i], int(k), lat, lon))
+    return sorted(out)
+
+
+def _mined(spark, rows):
+    df = spark.createDataFrame(rows, "url string, text string")
+    return sorted((r["url"], r["mention_idx"], r["lat"], r["lon"])
+                  for r in mine_coords(df).collect())
+
+
+SEPARATORS = [",", ", ", ",\t", ",\n", ",\xa0", ",\u3000", ", \u2009 ",
+              ",\x1c", ",\x85", ",\u2028", ",\u205f", ",,", ", -"]
+
+
+def test_coord_re_whitespace_is_python_whitespace():
+    """COORD_RE's explicit whitespace class matches exactly the code
+    points Python's Unicode `\\s` matches."""
+    import re
+    import sys
+
+    from proj_4_spark.sources.pages import _WS
+
+    ws, py = re.compile(_WS), re.compile(r"\s")
+    diff = [hex(c) for c in range(sys.maxunicode + 1)
+            if bool(ws.fullmatch(chr(c))) != bool(py.fullmatch(chr(c)))]
+    assert diff == []
+
+
+def test_mine_coords_matches_extractall_reference(spark):
+    """Seeded texts with several mentions, out-of-range pairs between
+    in-range ones, negatives, glued digits, long fractions and every
+    kind of separator: same rows as the pandas reference."""
+    rng = np.random.default_rng(20261017)
+
+    def num(int_digits, frac_digits):
+        s = "".join(rng.choice(list("0123456789"), int_digits))
+        f = "".join(rng.choice(list("0123456789"), frac_digits))
+        return ("-" if rng.random() < 0.3 else "") + s + "." + f
+
+    rows = []
+    for i in range(400):
+        parts = []
+        for _ in range(rng.integers(0, 6)):
+            glue = str(rng.integers(0, 999)) if rng.random() < 0.2 else ""
+            sep = SEPARATORS[rng.integers(len(SEPARATORS))]
+            parts.append(glue + num(rng.integers(1, 4), rng.integers(0, 12))
+                         + sep + num(rng.integers(1, 5), rng.integers(1, 12)))
+        rows.append((f"u{i}", " word ".join(parts)))
+    fixed = [
+        ("multi", "a 1.5, 2.5 b 95.5, 3.5 c 4.5,\t5.5 d -10.25, -170.125"),
+        ("lonmax", "edge 90.0, 180.0 and -90.0, -180.0 and 90.0, 180.00001"),
+        ("glued", "x123.456, 7.8 y"),
+        ("longfrac", "1.123456789012, 2.5 and 3.25, 4.1234567891"),
+        ("nbsp", "at 48.858844,\xa02.294351"),
+        ("ideo", "at 35.6812,\u300039.7671 and 1.0,\n2.0 and 3.0,4.0"),
+        ("none", "no coordinates at all, 1, 2"),
+        ("empty", ""),
+        ("null", None),
+    ]
+    rows += fixed
+    ref = _reference_mine(rows)
+    got = _mined(spark, rows)
+    assert got == ref
+    # the fixed cases say what they are for
+    by_url = {}
+    for u, k, lat, lon in got:
+        by_url.setdefault(u, []).append((k, lat, lon))
+    assert by_url["multi"] == [(0, 1.5, 2.5), (2, 4.5, 5.5),
+                               (3, -10.25, -170.125)]
+    assert by_url["glued"] == [(0, 23.456, 7.8)]
+    assert [k for k, _, _ in by_url["lonmax"]] == [0, 1]
+    assert by_url["nbsp"] == [(0, 48.858844, 2.294351)]
+    assert [k for k, _, _ in by_url["ideo"]] == [0, 1, 2]
+    assert not {"none", "empty", "null"} & set(by_url)
+    assert len(got) > 200  # the seeded texts hold many mentions
+
+
+def test_mine_coords_empty_frame_and_schema(spark):
+    p = spark.createDataFrame([], "url string, n int, text string")
+    out = mine_coords(p)
+    assert out.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("url", "string"), ("n", "int"), ("mention_idx", "int"),
+        ("lat", "double"), ("lon", "double")]
+
+
+def test_mine_coords_ascii_digits_only(spark):
+    """Non-ASCII digits are not mined (Java regex classes are ASCII)."""
+    rows = [("arabic", "٤٨.٥, ٢.٣"),  # Arabic-Indic digits
+            ("fullwidth", "４８.５, ２.３"),
+            ("ascii", "48.5, 2.3")]
+    assert _mined(spark, rows) == [("ascii", 0, 48.5, 2.3)]
+
+
+def test_mine_coords_plan_is_catalyst(spark, sf_dir):
+    """The job's miner plan has no Python node and prunes `html`."""
+    p = synthesize_pages(spark, sf_dir)
+    job = mine_coords(p).select("url", "doc_id", "mention_idx", "lon", "lat")
+    plan = job._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert "html" not in plan, plan
+    assert [f.name for f in mine_coords(p).schema] == [
+        "url", "warc_ts", "html", "lang", "doc_id", "mention_idx",
+        "lat", "lon"]
