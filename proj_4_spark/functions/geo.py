@@ -7,7 +7,10 @@ over by an Arrow-batched pandas UDF — the Spark restatement of
 double arrays in, strided double arrays out, per-point in-band errors
 (NaN instead of HUGE_VAL).
 
-No per-row Python anywhere: every UDF maps NumPy float64 arrays.
+Every NumPy-kernel UDF is built by :func:`kernel_udf`, the one Arrow
+boundary: Series in as NumPy arrays, the kernel in CHUNK-row blocks,
+integer outputs (cells, faces, zones) null for a non-finite or null
+float input.  No per-row Python anywhere.
 """
 
 from __future__ import annotations
@@ -17,10 +20,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DataType, StructType
 
 from ..index import s2 as s2idx
 from ..kernels import geodesic as k_geod
-from ..proj import Transform, compile_projstring
+from ..proj import compile_projstring
 
 
 CHUNK = 65536
@@ -52,42 +56,71 @@ def run_chunked(kernel, *arrays):
     return outs[0] if single else outs
 
 
+_INT_WIDTH = {"integer": np.int32, "long": np.int64}
+
+
+def kernel_udf(return_type: str, kernel, dtypes=(np.float64, np.float64)):
+    """pandas UDF over ``kernel``: argument k arrives as a NumPy
+    ``dtypes[k]`` array, and the kernel runs through :func:`run_chunked`.
+
+    ``kernel`` returns one array for a scalar ``return_type`` or one per
+    struct field, in field order.  An integer output is cast to its
+    declared width and is null on every row where a float argument is
+    NaN, infinite or null; float outputs keep NaN as the in-band error.
+    """
+    rt = DataType.fromDDL(return_type)
+    fields = rt.fields if isinstance(rt, StructType) else None
+    widths = [_INT_WIDTH.get(t.typeName())
+              for t in ([f.dataType for f in fields] if fields else [rt])]
+    has_int = any(w is not None for w in widths)
+
+    # the hints only select the scalar pandas UDF; a struct returns a frame
+    @pandas_udf(return_type)
+    def _udf(*cols: pd.Series) -> pd.Series:
+        args = [c.to_numpy(dt) for c, dt in zip(cols, dtypes, strict=True)]
+        outs = run_chunked(kernel, *args)
+        if fields is None:
+            outs = (outs,)
+        if has_int:
+            bad = np.zeros(len(args[0]), dtype=bool)
+            for a in args:
+                if a.dtype.kind == "f":
+                    bad |= ~np.isfinite(a)
+        res = []
+        for o, w in zip(outs, widths):
+            if w is not None:
+                o = np.asarray(o, dtype=w)
+                if bad.any():
+                    o = pd.arrays.IntegerArray(o, bad)
+            res.append(o)
+        if fields is None:
+            return pd.Series(res[0])
+        return pd.DataFrame({f.name: o for f, o in zip(fields, res)})
+
+    return _udf
+
+
 def project_udf(projstr_or_transform, direction: str = "fwd"):
     """pandas UDF (lon,lat[,z,t] degrees) -> struct<x,y,z double>.
 
     Angular edges are degrees (gie convention); projected edges meters.
     """
-    tr = (projstr_or_transform if isinstance(projstr_or_transform, Transform)
-          else compile_projstring(projstr_or_transform))
+    tr = compile_projstring(projstr_or_transform)
 
-    @pandas_udf("struct<x: double, y: double, z: double>")
-    def _project(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        def k(aa, bb):
-            x, y, z, _ = tr.transform_deg(aa, bb, direction=direction)
-            return x, y, z
+    def k(lon, lat):
+        return tr.transform_deg(lon, lat, direction=direction)[:3]
 
-        x, y, z = run_chunked(k, a.to_numpy(np.float64),
-                              b.to_numpy(np.float64))
-        return pd.DataFrame({"x": x, "y": y, "z": z})
-
-    return _project
+    return kernel_udf("struct<x: double, y: double, z: double>", k)
 
 
 def project_select_udf(selector):
     """pandas UDF (lon, lat degrees) -> struct<x, y, z double, op int>:
     per-point candidate-operation selection (plans/candidates.py,
     trans.cpp:44-173 semantics).  ``op`` is the chosen candidate index
-    (-1 = no candidate / all failed -> NaN)."""
-
-    @pandas_udf("struct<x: double, y: double, z: double, op: int>")
-    def _project(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        x, y, z, op = run_chunked(
-            selector.transform_deg, a.to_numpy(np.float64),
-            b.to_numpy(np.float64))
-        return pd.DataFrame({"x": x, "y": y, "z": z,
-                             "op": op.astype(np.int32)})
-
-    return _project
+    (-1 = no candidate / all failed -> NaN; null for a non-finite or
+    null lon/lat)."""
+    return kernel_udf("struct<x: double, y: double, z: double, op: int>",
+                      selector.transform_deg)
 
 
 def with_projected(df: DataFrame, projstr: str, lon: str = "lon",
@@ -105,18 +138,7 @@ def with_projected(df: DataFrame, projstr: str, lon: str = "lon",
 def s2_cell_udf(level: int):
     """pandas UDF (lon_deg, lat_deg) -> int64 S2 cell id at ``level``;
     a NaN, infinite or null coordinate gives a null cell."""
-
-    @pandas_udf("long")
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        a = lon.to_numpy(np.float64)
-        b = lat.to_numpy(np.float64)
-        cid = run_chunked(lambda x, y: s2idx.cell_id(x, y, level), a, b)
-        finite = np.isfinite(a) & np.isfinite(b)
-        if finite.all():
-            return pd.Series(cid)
-        return pd.Series(pd.arrays.IntegerArray(cid, ~finite))
-
-    return _cell
+    return kernel_udf("long", lambda lon, lat: s2idx.cell_id(lon, lat, level))
 
 
 def s2_parent(cell: Column, level: int) -> Column:
@@ -135,18 +157,11 @@ def s2_face_ij_udf(level: int):
     assignment: it is bijective with the Hilbert cell id."""
     shift = s2idx.MAX_LEVEL - level
 
-    @pandas_udf("struct<face: int, i: long, j: long>")
-    def _fij(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        def k(a, b):
-            cid = s2idx.cell_id(a, b, level)
-            face, i, j = s2idx.to_face_ij(cid)
-            return face.astype(np.int32), i >> shift, j >> shift
+    def k(lon, lat):
+        face, i, j = s2idx.to_face_ij(s2idx.cell_id(lon, lat, level))
+        return face, i >> shift, j >> shift
 
-        face, i, j = run_chunked(k, lon.to_numpy(np.float64),
-                                 lat.to_numpy(np.float64))
-        return pd.DataFrame({"face": face, "i": i, "j": j})
-
-    return _fij
+    return kernel_udf("struct<face: int, i: long, j: long>", k)
 
 
 def s2_cell_to_face_ij_udf(level: int):
@@ -155,13 +170,11 @@ def s2_cell_to_face_ij_udf(level: int):
     composed with :func:`s2_cell_udf`)."""
     shift = s2idx.MAX_LEVEL - level
 
-    @pandas_udf("struct<face: int, i: long, j: long>")
-    def _decode(cid: pd.Series) -> pd.DataFrame:
-        face, i, j = s2idx.to_face_ij(cid.to_numpy(np.int64))
-        return pd.DataFrame({"face": face.astype(np.int32),
-                             "i": i >> shift, "j": j >> shift})
+    def k(cid):
+        face, i, j = s2idx.to_face_ij(cid)
+        return face, i >> shift, j >> shift
 
-    return _decode
+    return kernel_udf("struct<face: int, i: long, j: long>", k, (np.int64,))
 
 
 def a7hex_cell_udf(res: int):
@@ -170,13 +183,7 @@ def a7hex_cell_udf(res: int):
     is named a7hex to make that explicit; see index/hexdggs.py."""
     from ..index import hexdggs as hx
 
-    @pandas_udf("long")
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(run_chunked(
-            lambda a, b: hx.encode(a, b, res),
-            lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
-
-    return _cell
+    return kernel_udf("long", lambda lon, lat: hx.encode(lon, lat, res))
 
 
 def a7hex_parent_udf(parent_res: int):
@@ -184,13 +191,8 @@ def a7hex_parent_udf(parent_res: int):
     (center re-encode, aperture-7 approximate containment)."""
     from ..index import hexdggs as hx
 
-    @pandas_udf("long")
-    def _parent(cell: pd.Series) -> pd.Series:
-        return pd.Series(run_chunked(
-            lambda c: hx.parent(c, parent_res),
-            cell.to_numpy(np.int64)))
-
-    return _parent
+    return kernel_udf("long", lambda c: hx.parent(c, parent_res),
+                      (np.int64,))
 
 
 def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
@@ -199,16 +201,10 @@ def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
     (kernels/geodesic.py::vincenty_inverse_fixed), the SQL-mirrorable
     geodesic used by the driver gate (oracle:
     plans/oracles.py::vincenty_sql)."""
-
-    @pandas_udf("struct<s12: double, azi1: double>")
-    def _inv(lat1: pd.Series, lon1: pd.Series) -> pd.DataFrame:
-        s12, azi1 = run_chunked(
-            lambda a, b: k_geod.vincenty_inverse_fixed(
-                a, b, lat2, lon2, n_iter=n_iter),
-            lat1.to_numpy(np.float64), lon1.to_numpy(np.float64))
-        return pd.DataFrame({"s12": s12, "azi1": azi1})
-
-    return _inv
+    return kernel_udf(
+        "struct<s12: double, azi1: double>",
+        lambda lat1, lon1: k_geod.vincenty_inverse_fixed(
+            lat1, lon1, lat2, lon2, n_iter=n_iter))
 
 
 def geodesic_inverse_udf(a: float | None = None, f: float | None = None):
@@ -218,20 +214,9 @@ def geodesic_inverse_udf(a: float | None = None, f: float | None = None):
     ga = 6378137.0 if a is None else a
     gf = 1 / 298.257223563 if f is None else f
     g = k_geod.Geodesic.init(ga, gf)
-
-    @pandas_udf("struct<s12: double, azi1: double, azi2: double>")
-    def _inv(lat1: pd.Series, lon1: pd.Series,
-             lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-        def k(a, b, c, d):
-            s12, azi1, azi2, _ = k_geod.inverse(g, a, b, c, d)
-            return s12, azi1, azi2
-
-        s12, azi1, azi2 = run_chunked(
-            k, lat1.to_numpy(np.float64), lon1.to_numpy(np.float64),
-            lat2.to_numpy(np.float64), lon2.to_numpy(np.float64))
-        return pd.DataFrame({"s12": s12, "azi1": azi1, "azi2": azi2})
-
-    return _inv
+    return kernel_udf(
+        "struct<s12: double, azi1: double, azi2: double>",
+        lambda *p: k_geod.inverse(g, *p)[:3], (np.float64,) * 4)
 
 
 def geodesic_direct_udf(a: float | None = None, f: float | None = None):
@@ -241,17 +226,9 @@ def geodesic_direct_udf(a: float | None = None, f: float | None = None):
     ga = 6378137.0 if a is None else a
     gf = 1 / 298.257223563 if f is None else f
     g = k_geod.Geodesic.init(ga, gf)
-
-    @pandas_udf("struct<lat2: double, lon2: double, azi2: double>")
-    def _dir(lat1: pd.Series, lon1: pd.Series,
-             azi1: pd.Series, s12: pd.Series) -> pd.DataFrame:
-        lat2, lon2, azi2 = run_chunked(
-            lambda a_, b, c, d: k_geod.direct(g, a_, b, c, d),
-            lat1.to_numpy(np.float64), lon1.to_numpy(np.float64),
-            azi1.to_numpy(np.float64), s12.to_numpy(np.float64))
-        return pd.DataFrame({"lat2": lat2, "lon2": lon2, "azi2": azi2})
-
-    return _dir
+    return kernel_udf(
+        "struct<lat2: double, lon2: double, azi2: double>",
+        lambda *p: k_geod.direct(g, *p), (np.float64,) * 4)
 
 
 # ----------------- pure-Catalyst (JVM codegen) expressions ---------------
@@ -268,32 +245,6 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column,
     dlon = F.radians(lon2 - lon1) / 2.0
     h = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
     return F.lit(2.0 * radius) * F.asin(F.sqrt(h))
-
-
-def webmerc_x(lon: Column, radius: float = 6378137.0) -> Column:
-    """Spherical web-mercator x as a Catalyst expression
-    (semantics of /root/reference/src/projections/merc.cpp:76-84)."""
-    return F.radians(lon) * F.lit(radius)
-
-
-def webmerc_y(lat: Column, radius: float = 6378137.0) -> Column:
-    rl = F.radians(lat)
-    # asinh(tan φ) = ln(tan φ + sqrt(tan²φ + 1))
-    t = F.tan(rl)
-    return F.log(t + F.sqrt(t * t + F.lit(1.0))) * F.lit(radius)
-
-
-def slippy_tile(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
-    """Web-mercator slippy tile (tx, ty) at ``zoom`` — Catalyst only."""
-    n = float(1 << zoom)
-    tx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    rl = F.radians(lat)
-    t = F.tan(rl)
-    y = F.log(t + F.sqrt(t * t + F.lit(1.0)))
-    ty = F.floor((F.lit(1.0) - y / F.lit(float(np.pi))) / F.lit(2.0) * F.lit(n))
-    tx = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), tx))
-    ty = F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), ty))
-    return tx.cast("long"), ty.cast("long")
 
 
 def utm_all_zones_udf(approx: bool = True):
@@ -314,24 +265,18 @@ def utm_all_zones_udf(approx: bool = True):
     C = k_tmerc.setup(params, ell, 0.9996, 0.0)
     a = ell.a
 
-    @pandas_udf("struct<zone: int, easting: double, northing: double>")
-    def _utm(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        def k(lo_c, la_c):
-            zone = (np.floor((lo_c + 180.0) / 6.0).astype(np.int64) % 60 + 1)
-            lam0 = np.radians((zone * 6 - 183).astype(np.float64))
-            lam = np.radians(lo_c) - lam0
-            phi = np.radians(la_c)
-            xk, yk = k_tmerc.fwd(lam, phi, C)
-            e = a * xk + 500000.0
-            n = a * yk + np.where(la_c < 0, 1.0e7, 0.0)
-            return zone.astype(np.int32), e, n
+    def k(lon, lat):
+        zone = (np.floor((lon + 180.0) / 6.0).astype(np.int64) % 60 + 1)
+        lam0 = np.radians((zone * 6 - 183).astype(np.float64))
+        lam = np.radians(lon) - lam0
+        phi = np.radians(lat)
+        xk, yk = k_tmerc.fwd(lam, phi, C)
+        e = a * xk + 500000.0
+        n = a * yk + np.where(lat < 0, 1.0e7, 0.0)
+        return zone, e, n
 
-        zone, e, n = run_chunked(k, lo, la)
-        return pd.DataFrame({"zone": zone, "easting": e, "northing": n})
-
-    return _utm
+    return kernel_udf(
+        "struct<zone: int, easting: double, northing: double>", k)
 
 
 def utm_zone(lon: Column) -> Column:
@@ -345,61 +290,37 @@ def factors_udf(projstr_or_transform):
     meridional/parallel/areal scale via proj_factors semantics
     (src/factors.cpp:111-240 central differences)."""
     from ..kernels.factors import factors as k_factors
-    from ..proj import Transform, compile_projstring
 
-    tr = (projstr_or_transform if isinstance(projstr_or_transform, Transform)
-          else compile_projstring(projstr_or_transform))
+    tr = compile_projstring(projstr_or_transform)
 
-    @pandas_udf("struct<h: double, k: double, s: double>")
-    def _factors(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        def k(lo, la):
-            f = k_factors(tr, lo, la)
-            return f["h"], f["k"], f["s"]
+    def k(lon, lat):
+        f = k_factors(tr, lon, lat)
+        return f["h"], f["k"], f["s"]
 
-        h, kk, s = run_chunked(k, lon.to_numpy(np.float64),
-                               lat.to_numpy(np.float64))
-        return pd.DataFrame({"h": h, "k": kk, "s": s})
-
-    return _factors
+    return kernel_udf("struct<h: double, k: double, s: double>", k)
 
 
 def unitconvert_time_udf(t_in: str, t_out: str):
     """pandas UDF over the time channel of +proj=unitconvert
     (src/conversions/unitconvert.cpp time units: mjd, decimalyear,
     gps_week, yyyymmdd)."""
-    from ..proj import compile_projstring
-
     tr = compile_projstring(f"+proj=unitconvert +t_in={t_in} +t_out={t_out}")
-    t_fwd = tr.ops[0].t_fwd
-
-    @pandas_udf("double")
-    def _conv(t: pd.Series) -> pd.Series:
-        out = run_chunked(lambda a: t_fwd(a), t.to_numpy(np.float64))
-        return pd.Series(out)
-
-    return _conv
+    return kernel_udf("double", tr.ops[0].t_fwd, (np.float64,))
 
 
 def transform4d_udf(projstr_or_transform, direction: str = "fwd"):
     """pandas UDF (lon_deg, lat_deg, t) -> struct<lon_out, lat_out,
     z_out double> for 4D (kinematic) pipelines such as +proj=defmodel;
     z starts at 0."""
-    tr = (projstr_or_transform if isinstance(projstr_or_transform, Transform)
-          else compile_projstring(projstr_or_transform))
+    tr = compile_projstring(projstr_or_transform)
 
-    @pandas_udf("struct<lon_out: double, lat_out: double, z_out: double>")
-    def _t4d(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.DataFrame:
-        def k(lo, la, tt):
-            x, y, z, _ = tr.transform_deg(lo, la, z=np.zeros_like(lo),
-                                          t=tt, direction=direction)
-            return x, y, z
+    def k(lon, lat, t):
+        return tr.transform_deg(lon, lat, z=np.zeros_like(lon), t=t,
+                                direction=direction)[:3]
 
-        x, y, z = run_chunked(k, a.to_numpy(np.float64),
-                              b.to_numpy(np.float64),
-                              c.to_numpy(np.float64))
-        return pd.DataFrame({"lon_out": x, "lat_out": y, "z_out": z})
-
-    return _t4d
+    return kernel_udf(
+        "struct<lon_out: double, lat_out: double, z_out: double>", k,
+        (np.float64,) * 3)
 
 
 def dms_expr(deg: Column, pos: str, neg: str) -> Column:
@@ -430,18 +351,12 @@ def roundtrip_udf(projstr_or_transform):
     (the fwd/inv pair shares a batch, so Newton-fallback inverses —
     src/generic_inverse.cpp — are exercised without a second
     exchange)."""
-    tr = (projstr_or_transform if isinstance(projstr_or_transform, Transform)
-          else compile_projstring(projstr_or_transform))
+    tr = compile_projstring(projstr_or_transform)
 
-    @pandas_udf("struct<x: double, y: double, lon2: double, lat2: double>")
-    def _rt(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        def k(aa, bb):
-            x, y, _, _ = tr.transform_deg(aa, bb)
-            lo, la, _, _ = tr.transform_deg(x, y, direction="inv")
-            return x, y, lo, la
+    def k(lon, lat):
+        x, y, _, _ = tr.transform_deg(lon, lat)
+        lo, la, _, _ = tr.transform_deg(x, y, direction="inv")
+        return x, y, lo, la
 
-        x, y, lo, la = run_chunked(k, a.to_numpy(np.float64),
-                                   b.to_numpy(np.float64))
-        return pd.DataFrame({"x": x, "y": y, "lon2": lo, "lat2": la})
-
-    return _rt
+    return kernel_udf(
+        "struct<x: double, y: double, lon2: double, lat2: double>", k)

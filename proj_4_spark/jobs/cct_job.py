@@ -23,7 +23,6 @@ import argparse
 import json
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +34,21 @@ ERRNO_OK = 0
 ERRNO_COORD_TRANSFM = 2049
 
 
+def transform_udf(projstr, direction: str = "fwd"):
+    """pandas UDF (x, y, z, t) -> struct<x, y, z double> running the
+    compiled pipeline (a proj-string or a Transform)."""
+    from proj_4_spark.functions.geo import kernel_udf
+    from proj_4_spark.proj import compile_projstring
+
+    tr = compile_projstring(projstr)
+
+    def k(x, y, z, t):
+        return tr.transform_deg(x, y, z=z, t=t, direction=direction)[:3]
+
+    return kernel_udf("struct<x: double, y: double, z: double>", k,
+                      (np.float64,) * 4)
+
+
 def transform_frame(df: DataFrame, projstr, direction: str = "fwd",
                     x_col: str = "x", y_col: str = "y",
                     z_col: str | None = None,
@@ -43,32 +57,11 @@ def transform_frame(df: DataFrame, projstr, direction: str = "fwd",
     compiled pipeline over (x, y[, z[, t]]) columns.  ``projstr`` may
     be a proj-string or an already-built Transform (the cs2cs path
     passes crs.crs_to_crs output)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from proj_4_spark.functions.geo import run_chunked
-    from proj_4_spark.proj import Transform, compile_projstring
-
-    tr = (projstr if isinstance(projstr, Transform)
-          else compile_projstring(projstr))
-
-    @pandas_udf("struct<x: double, y: double, z: double>")
-    def _t(a: pd.Series, b: pd.Series, c: pd.Series,
-           d: pd.Series) -> pd.DataFrame:
-        def k(xx, yy, zz, tt):
-            xo, yo, zo, _ = tr.transform_deg(xx, yy, z=zz, t=tt,
-                                             direction=direction)
-            return xo, yo, zo
-
-        x, y, z = run_chunked(k, a.to_numpy(np.float64),
-                              b.to_numpy(np.float64),
-                              c.to_numpy(np.float64),
-                              d.to_numpy(np.float64))
-        return pd.DataFrame({"x": x, "y": y, "z": z})
-
     zc = F.col(z_col) if z_col else F.lit(0.0)
     tc = F.col(t_col) if t_col else F.lit(float("inf"))
-    st = _t(F.col(x_col).cast("double"), F.col(y_col).cast("double"),
-            zc.cast("double"), tc.cast("double"))
+    st = transform_udf(projstr, direction)(
+        F.col(x_col).cast("double"), F.col(y_col).cast("double"),
+        zc.cast("double"), tc.cast("double"))
     out = (df.withColumn("_o", st)
              .withColumn("x_out", F.col("_o.x"))
              .withColumn("y_out", F.col("_o.y"))

@@ -50,15 +50,6 @@ def aasin(v) -> np.ndarray:
     return np.where(av > _ONE_TOL, np.nan, out)
 
 
-def aacos(v) -> np.ndarray:
-    """arccos twin of aasin (src/aasincos.cpp:23-33)."""
-    v = np.asarray(v, dtype=np.float64)
-    av = np.abs(v)
-    out = np.arccos(np.clip(v, -1.0, 1.0))
-    out = np.where(av >= 1.0, np.where(v < 0, np.pi, 0.0), out)
-    return np.where(av > _ONE_TOL, np.nan, out)
-
-
 def tsfn(phi: np.ndarray, sinphi: np.ndarray, e: float) -> np.ndarray:
     """Snyder (7-10): ts = exp(-psi), psi the isometric latitude."""
     cosphi = np.cos(phi)

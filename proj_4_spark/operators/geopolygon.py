@@ -23,12 +23,11 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from ..functions.geo import run_chunked
+from ..functions.geo import kernel_udf
 from ..kernels import geodesic as k_geod
 
 
@@ -38,23 +37,13 @@ def edge_terms_udf(a: float, f: float):
     between edge and equator, and prime-meridian crossing direction."""
     g = k_geod.Geodesic.init(a, f)
 
-    @pandas_udf("struct<dist: double, aseg: double, transit: double>")
-    def _edge(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series,
-              lon2: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def k(lat1, lon1, lat2, lon2):
+        s12, _, _, _, S12 = k_geod.inverse(g, lat1, lon1, lat2, lon2,
+                                           want_area=True)
+        return s12, S12, k_geod._transit(lon1, lon2).astype(np.float64)
 
-        def k(la1, lo1, la2, lo2):
-            s12, _, _, _, S12 = k_geod.inverse(g, la1, lo1, la2, lo2,
-                                               want_area=True)
-            tr = k_geod._transit(lo1, lo2).astype(np.float64)
-            return s12, S12, tr
-
-        s12, S12, tr = run_chunked(
-            k, lat1.to_numpy(float), lon1.to_numpy(float),
-            lat2.to_numpy(float), lon2.to_numpy(float))
-        return pd.DataFrame({"dist": s12, "aseg": S12, "transit": tr})
-
-    return _edge
+    return kernel_udf("struct<dist: double, aseg: double, transit: double>",
+                      k, (np.float64,) * 4)
 
 
 def _area_correct(raw: Column, crossings: Column, area0: float) -> Column:

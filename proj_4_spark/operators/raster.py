@@ -10,10 +10,10 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions.geo import kernel_udf
 
 
 def grid_cell(lon, lat, dlon: float = 1.0, dlat: float = 1.0):
@@ -49,10 +49,9 @@ def bilinear_udf(grid: np.ndarray, lon0: float = -180.0, lat0: float = -90.0,
     g = np.asarray(grid, dtype=np.float64)
     h, w = g.shape
 
-    @pandas_udf("double")
-    def _sample(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        fx = (lon.to_numpy(np.float64) - lon0) / dlon
-        fy = (lat.to_numpy(np.float64) - lat0) / dlat
+    def k(lon, lat):
+        fx = (lon - lon0) / dlon
+        fy = (lat - lat0) / dlat
         ix = np.clip(np.floor(fx).astype(np.int64), 0, w - 2)
         iy = np.clip(np.floor(fy).astype(np.int64), 0, h - 2)
         tx = fx - ix
@@ -61,8 +60,7 @@ def bilinear_udf(grid: np.ndarray, lon0: float = -180.0, lat0: float = -90.0,
         v10 = g[iy, ix + 1]
         v01 = g[iy + 1, ix]
         v11 = g[iy + 1, ix + 1]
-        out = ((1.0 - tx) * (1.0 - ty) * v00 + tx * (1.0 - ty) * v10
-               + (1.0 - tx) * ty * v01 + tx * ty * v11)
-        return pd.Series(out)
+        return ((1.0 - tx) * (1.0 - ty) * v00 + tx * (1.0 - ty) * v10
+                + (1.0 - tx) * ty * v01 + tx * ty * v11)
 
-    return _sample
+    return kernel_udf("double", k)

@@ -28,13 +28,12 @@ polygon.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast, pandas_udf
+from pyspark.sql.functions import broadcast
 
-from ..functions.geo import run_chunked, s2_cell_udf, s2_parent
+from ..functions.geo import kernel_udf, s2_cell_udf, s2_parent
 from ..index import s2 as s2idx
 
 _BBOX = ("lon_min", "lat_min", "lon_max", "lat_max")
@@ -98,13 +97,7 @@ def ray_cast_udf(polygon_rows: list[dict]):
         out[srt] = inside
         return out & known
 
-    @pandas_udf("boolean")
-    def _inside(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        return pd.Series(run_chunked(kernel, lon.to_numpy(np.float64),
-                                     lat.to_numpy(np.float64),
-                                     pid.to_numpy(np.int64)))
-
-    return _inside
+    return kernel_udf("boolean", kernel, (np.float64, np.float64, np.int64))
 
 
 def pip_join(points: DataFrame, polygon_rows: list[dict], level: int = 10,

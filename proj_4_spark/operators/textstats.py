@@ -94,20 +94,6 @@ def marker_fold(toks: Column) -> Column:
 #                  full marker_fold+bind 0.969 s | unbound filters
 #                  1.153 s (r04-shipped regexp was 1.4-1.6 s here)
 
-def marker_count(text: Column, words: tuple[str, ...]) -> Column:
-    """Single-traversal count of tokens in ``words`` (duplicates in
-    ``words`` count multiply).  Callers composing several counts into
-    one expression must _bind the results (see cost model above)."""
-    from collections import Counter
-
-    mult = Counter(words)
-    m = F.create_map(*[x for word, k in sorted(mult.items())
-                       for x in (F.lit(word), F.lit(k))])
-    return F.aggregate(
-        tokens(text), F.lit(0),
-        lambda acc, t: acc + F.coalesce(F.element_at(m, t), F.lit(0)))
-
-
 def lang_guess(text: Column) -> Column:
     """argmax over marker counts; tie-break by language code order
     ('und' when no markers hit).  All five counts come from ONE
@@ -170,13 +156,6 @@ def _derive_quality(s: Column) -> Column:
         (stop / n).alias("stop_ratio"),
         (F.lit(0.4) * s1 + F.lit(0.4) * s2 + F.lit(0.2) * s3)
         .alias("quality"))
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic quality heuristic in [0,1]:
-    0.4·min(tokens/100,1) + 0.4·min(stopword_ratio·5,1)
-    + 0.2·(mean token length in [3,8])."""
-    return _bind(_quality_parts_struct(text), _derive_quality)["quality"]
 
 
 def quality_stats(text: Column) -> Column:

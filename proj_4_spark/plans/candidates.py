@@ -57,11 +57,8 @@ class CandidateOp:
 
 def candidate(projstr_or_transform, bbox=None, accuracy=float("inf"),
               name: str = "") -> CandidateOp:
-    tr = (projstr_or_transform
-          if isinstance(projstr_or_transform, Transform)
-          else compile_projstring(projstr_or_transform))
-    return CandidateOp(transform=tr, bbox=bbox,
-                       accuracy=float(accuracy), name=name)
+    return CandidateOp(transform=compile_projstring(projstr_or_transform),
+                       bbox=bbox, accuracy=float(accuracy), name=name)
 
 
 class CandidateSelector:

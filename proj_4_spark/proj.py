@@ -2574,12 +2574,15 @@ def invert_step_dict(d: dict) -> dict:
     return out
 
 
-def compile_projstring(s: str) -> Transform:
+def compile_projstring(s: str | Transform) -> Transform:
     """proj-string -> Transform (single op or pipeline, rewrites applied).
 
     Also accepts ``urn:ogc:def:coordinateOperation:NKG::*`` names,
     resolved through the curated registry table (sources/nkg_ops.py)
-    the way the reference resolves them through proj.db."""
+    the way the reference resolves them through proj.db.  A Transform
+    is returned unchanged."""
+    if isinstance(s, Transform):
+        return s
     if s.lstrip().startswith("urn:ogc:def:coordinateOperation:NKG"):
         from .sources.nkg_ops import resolve_nkg_urn
 

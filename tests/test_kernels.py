@@ -170,6 +170,11 @@ def test_unitconvert_linear():
     assert abs(x[0] - 1.0) < 1e-15
 
 
+def test_compile_projstring_returns_transform_unchanged():
+    tr = compile_projstring("+proj=merc +ellps=GRS80")
+    assert compile_projstring(tr) is tr
+
+
 def test_axisswap():
     tr = compile_projstring("+proj=axisswap +order=2,1")
     x, y, _, _ = tr.transform(np.array([1.0]), np.array([2.0]))
