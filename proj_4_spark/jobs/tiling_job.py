@@ -1,9 +1,26 @@
-"""The flagship end-to-end job: pages -> mined coords -> projected ->
-S2 cells -> PIP tile assignments -> per-polygon/per-cell aggregates.
+"""The flagship end-to-end job: pages -> mined coords -> S2 cells ->
+PIP tile assignments -> per-polygon/per-cell aggregates, plus the
+mined coords projected to UTM.
 
 Every stage is checkpointed (plans/checkpoint.py — parquet snapshot +
 completion marker + lineage metrics; Iceberg snapshots on a real
-deployment), so a killed job resumes from the last complete stage.
+deployment), and a stage's build reads only the stage outputs it uses.
+The stages form a DAG, not a chain:
+
+    mined -> encoded -> tile_assignments -> polygon_counts   (main thread)
+    encoded -> cell_counts;  mined -> projected              (side thread)
+
+`encoded` is `mined` plus its cell, and no stage reads `projected` or
+`cell_counts`, so those two run one at a time on a single inheritable
+thread beside the main chain (at most two stages in flight):
+`cell_counts` beside `tile_assignments`, `projected` beside
+`polygon_counts`.  `projected` runs a pandas UDF, as `encoded` and
+`tile_assignments` do, so it is submitted after them: two UDF tasks
+at once need a second Python worker, ~130 MB of peak RSS.  `run`
+waits for the side stages and re-raises a side failure before it
+returns.  A rerun on the same output directory reruns every stage
+without a completion marker and reads the others back.
+
 Each point is S2-encoded once; the join key and the roll-up are its
 Catalyst parent.  Hot cells (Zipf head) need no salting: the counts
 partially aggregate map-side before the shuffle, plus AQE.
@@ -19,7 +36,9 @@ from __future__ import annotations
 
 import argparse
 import json
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -50,49 +69,66 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
 
     cp = CheckpointedPipeline(spark, out_dir)
 
-    # 1. pages (input contract shape) -> mined coordinate mentions
-    mined = cp.stage(
-        "mined",
-        lambda: mine_coords(synthesize_pages(spark, sf_dir))
-        .select("url", "doc_id", "mention_idx", "lon", "lat"))
+    # Side stages: nothing downstream reads them, so they run on one
+    # worker thread while the main chain goes on.  The wrapper hands the
+    # thread the caller's job group, description and tags.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        def side(name, build):
+            # with unpinned threads (PYSPARK_PIN_THREAD=false) there is
+            # nothing to inherit, and pyspark returns the session itself
+            wrap = inheritable_thread_target(spark)
+            target = cp.stage if wrap is spark else wrap(cp.stage)
+            return pool.submit(target, name, build)
 
-    # 2. projection enrichment: per-point UTM (vectorized auto-zone)
-    def _project():
-        u = utm_all_zones_udf(approx=True)
-        st = u(F.col("lon"), F.col("lat"))
-        return (mined.withColumn("_u", st)
-                     .select("url", "doc_id", "mention_idx", "lon", "lat",
-                             F.col("_u.zone").alias("utm_zone"),
-                             F.col("_u.easting").alias("easting"),
-                             F.col("_u.northing").alias("northing")))
+        # 1. pages (input contract shape) -> mined coordinate mentions
+        mined = cp.stage(
+            "mined",
+            lambda: mine_coords(synthesize_pages(spark, sf_dir))
+            .select("url", "doc_id", "mention_idx", "lon", "lat"))
 
-    projected = cp.stage("projected", _project)
+        # 2. S2 cell encode (narrow)
+        encoded = cp.stage(
+            "encoded",
+            lambda: mined.withColumn(
+                "cell", s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))))
 
-    # 3. S2 cell encode (narrow)
-    def _encode():
-        cell = s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))
-        return projected.withColumn("cell", cell)
+        # 3. (side) per-cell histogram at the coarser roll-up level
+        cell_counts = side(
+            "cell_counts",
+            lambda: encoded.groupBy(
+                s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
+            .agg(F.count("*").alias("n_mentions")))
 
-    encoded = cp.stage("encoded", _encode)
+        # 4. PIP tile assignments (broadcast cover + exact ray cast)
+        tiles = cp.stage(
+            "tile_assignments",
+            lambda: pip_join(encoded, polygon_rows(), level=COVER_LEVEL,
+                             cell="cell")
+            .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
 
-    # 4. PIP tile assignments (broadcast cover + exact ray cast)
-    tiles = cp.stage(
-        "tile_assignments",
-        lambda: pip_join(encoded, polygon_rows(), level=COVER_LEVEL,
-                         cell="cell")
-        .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
+        # 5. (side) projection enrichment: per-point UTM, auto-zone;
+        # submitted after the main chain's last pandas-UDF stage, as
+        # two UDF tasks at once would start a second Python worker
+        def _project():
+            u = utm_all_zones_udf(approx=True)
+            st = u(F.col("lon"), F.col("lat"))
+            return (mined.withColumn("_u", st)
+                         .select("url", "doc_id", "mention_idx", "lon", "lat",
+                                 F.col("_u.zone").alias("utm_zone"),
+                                 F.col("_u.easting").alias("easting"),
+                                 F.col("_u.northing").alias("northing")))
 
-    # 5a. per-polygon counts
-    cp.stage(
-        "polygon_counts",
-        lambda: tiles.groupBy("polygon_id").agg(F.count("*").alias("n_docs")))
+        projected = side("projected", _project)
 
-    # 5b. per-cell histogram at the coarser roll-up level
-    cp.stage(
-        "cell_counts",
-        lambda: encoded.groupBy(
-            s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
-        .agg(F.count("*").alias("n_mentions")))
+        # 6. per-polygon counts
+        cp.stage(
+            "polygon_counts",
+            lambda: tiles.groupBy("polygon_id")
+            .agg(F.count("*").alias("n_docs")))
+
+        # a side failure raises here, after the main chain has finished
+        cell_counts.result()
+        projected.result()
 
     stages = cp.metrics()
     return {"stages": stages, "rows": {m["stage"]: m["rows"] for m in stages}}

@@ -125,3 +125,76 @@ def test_tiling_job_one_s2_crossing_per_point(job):
     assert n_udf("encoded") == 1
     assert n_udf("tile_assignments") == 1
     assert n_udf("cell_counts") == 0
+
+
+def test_tiling_job_side_stage_failure_raises_and_resumes(
+        spark, sf_dir, tmp_path, monkeypatch, job):
+    """A failing side stage (`projected`) fails the run once the main
+    chain is written; the rerun recomputes that stage alone."""
+    from proj_4_spark.functions import geo
+
+    def broken(*a, **k):
+        raise RuntimeError("utm down")
+
+    out = str(tmp_path / "job4")
+    monkeypatch.setattr(geo, "utm_all_zones_udf", broken)
+    with pytest.raises(RuntimeError, match="utm down"):
+        tiling_job.run(spark, sf_dir, out)
+    monkeypatch.undo()
+
+    done = {st: os.path.exists(os.path.join(out, st, "_GRAFT_DONE"))
+            for st in ("mined", "projected", "encoded", "tile_assignments",
+                       "polygon_counts", "cell_counts")}
+    assert not done.pop("projected")
+    assert all(done.values()), done
+    mtimes = {st: os.path.getmtime(os.path.join(out, "_metrics", f"{st}.json"))
+              for st in done}
+
+    summary = tiling_job.run(spark, sf_dir, out)
+    assert os.path.exists(os.path.join(out, "projected", "_GRAFT_DONE"))
+    for st, t in mtimes.items():
+        assert os.path.getmtime(
+            os.path.join(out, "_metrics", f"{st}.json")) == t, st
+    clean = CheckpointedPipeline(spark, job[0]).metrics()
+    assert summary["rows"] == {m["stage"]: m["rows"] for m in clean}
+
+
+def test_tiling_job_side_jobs_inherit_job_group(spark, sf_dir, tmp_path):
+    """The side-thread stages run under the caller's job group: no job
+    that `run` starts is left without one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("tiling-g", "tiling job under a caller's group")
+    try:
+        tiling_job.run(spark, sf_dir, str(tmp_path / "job5"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    # one write job per stage at least, the side stages' included
+    assert len(tracker.getJobIdsForGroup("tiling-g")) >= 6
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+def test_tiling_job_unpinned_threads(spark, sf_dir, tmp_path, monkeypatch,
+                                     job):
+    """Without pinned threads pyspark's `inheritable_thread_target`
+    returns the session it was given; the side stages still run."""
+    monkeypatch.setattr(tiling_job, "inheritable_thread_target",
+                        lambda session: session)
+    summary = tiling_job.run(spark, sf_dir, str(tmp_path / "job6"))
+    clean = CheckpointedPipeline(spark, job[0]).metrics()
+    assert summary["rows"] == {m["stage"]: m["rows"] for m in clean}
+
+
+def test_tiling_job_encoded_reads_mined(job):
+    """`encoded` is `mined` plus the cell: its plan scans the mined
+    checkpoint and not the projected one."""
+    out, built = job
+    files = built["encoded"].inputFiles()
+    assert files
+    mined = "file://" + os.path.join(os.path.abspath(out), "mined") + "/"
+    assert all(f.startswith(mined) for f in files), files
