@@ -12,21 +12,27 @@ not contain the cell-id integer encoding, only the projection math.
 Cell ids are int64 (faces 4-5 set the top bit, so they are negative).
 Level 0..30.  Every id has its sentinel bit set, so 0 is never a cell.
 
-Bbox covers (:func:`cover_bboxes`).  Inside one face chart a bbox's
-u/v extremes lie on its boundary.  Face u/v are gnomonic coordinates,
-so a meridian is a straight line in u/v and the bbox's meridian edges
-reach their u/v extremes at the corners.  Along a parallel, u and v
-are tan or cot of lon, or a constant times cos, sin, 1/cos or 1/sin of
-lon (face 0: u = tan(lon), v = tan(lat)/cos(lon); face 2:
-u = -cos(lon)/tan(lat)), so their only interior extremes sit where lon
-is a multiple of 90°.  The exact u/v bounding box of a bbox inside one
-face chart therefore comes from its 4 corners plus at most 5 points on
-each of its two parallels, and its i/j range at the level is the
-cover.  A bbox counts as inside the chart of its first corner's face
-when all these points have a positive (face-signed) denominator and
-u/v within [-1, 1] after a 1e-9 widening.  Every other bbox (across a
-face edge or the antimeridian, or outside the lon/lat range) falls
-back to the rasterised :func:`cover_bbox`.
+Bbox covers (:func:`cover_bboxes`).  Inside the open hemisphere of a
+face's axis, a bbox's u/v extremes in that face's chart lie on its
+boundary.  Face u/v are gnomonic coordinates, so a meridian is a
+straight line in u/v and the bbox's meridian edges reach their u/v
+extremes at the corners.  Along a parallel, u and v are tan or cot of
+lon, or a constant times cos, sin, 1/cos or 1/sin of lon (face 0:
+u = tan(lon), v = tan(lat)/cos(lon); face 2: u = -cos(lon)/tan(lat)),
+so their only interior extremes sit where lon is a multiple of 90°.
+The exact u/v bounding box therefore comes from the 4 corners plus at
+most 5 points on each of the two parallels.
+
+Every bbox is cut into pieces that each lie in such a hemisphere for
+every face they can touch: by the equatorial faces' longitude sectors
+(edges -180/-135/-45/45/135/180 for faces 3, 4, 0, 1, 3) and by
+latitude bands at ±35°.  No point below atan(1/√2) = 35.26° lies on a
+polar face, so within |lat| <= 35° every point of a sector lies on
+that sector's face; above 35° (below -35°) a piece can also touch face
+2 (face 5).  A piece's cover on a face is the i/j range of its u/v box
+clamped to [-1, 1].  A pole is outside its sector faces' hemispheres,
+but deg2rad(±90) leaves cos(lat) = 6e-17 > 0, so there it gives a huge
+finite v that the clamp absorbs.
 """
 
 from __future__ import annotations
@@ -241,48 +247,43 @@ def cell_center(cell_id_arr):
     return lon, lat
 
 
-def cover_bbox(lon_min, lat_min, lon_max, lat_max, level, pad_cells=1.0):
-    """Conservative cell cover of a lon/lat bbox at `level`: every
-    level-`level` cell intersecting the bbox is returned (a superset
-    cover; exactness of the PIP join is restored by the ray-cast test).
-
-    Strategy: rasterize the padded bbox at a step smaller than the
-    minimum cell extent and dedupe cell ids.  Replaces PROJ's quadtree
-    rectangle search (/root/reference/src/quadtree.hpp:60+) with
-    cell-prefix partitioning, per SURVEY.md §2.2.
-    """
-    # min cell extent in degrees: S2 min edge ~ 0.21 * 2^-level rad
-    min_edge_deg = 0.21 * (2.0 ** -level) * 180.0 / np.pi
-    coslat = max(0.05, np.cos(np.deg2rad(min(abs(lat_min), abs(lat_max))
-                                         if lat_min * lat_max > 0 else 0.0)))
-    pad = pad_cells * min_edge_deg
-    lo_step = min_edge_deg / 2.0 / coslat
-    la_step = min_edge_deg / 2.0
-    lons = np.arange(lon_min - pad, lon_max + pad + lo_step, lo_step)
-    lats = np.arange(max(-90.0, lat_min - pad), min(90.0, lat_max + pad) + la_step, la_step)
-    LO, LA = np.meshgrid(lons, lats)
-    ids = cell_id(LO.ravel(), LA.ravel(), level)
-    return np.unique(ids)
-
-
+_SECTORS = np.array([-180.0, -135.0, -45.0, 45.0, 135.0, 180.0])
+_BANDS = np.array([-90.0, -35.0, 35.0, 90.0])
+# (sector, band, face) of every piece chart: the sector's equatorial
+# face, plus the polar face (5 south, 2 north) outside the middle band
+_PIECES = np.array([(s, b, f) for s, face in enumerate((3, 4, 0, 1, 3))
+                    for b, polar in enumerate((5, None, 2))
+                    for f in (face, polar) if f is not None]).T
 _QUADRANTS = np.array([-180.0, -90.0, 0.0, 90.0, 180.0])
 _UV_EPS = 1e-9
 
 
 def cover_bboxes(lon_min, lat_min, lon_max, lat_max, level):
     """Cell covers of many lon/lat bboxes at `level` in one call ->
-    (bbox_idx, cell) int64 arrays: every level-`level` cell holding a
-    point of the closed bbox is listed with that bbox's index.
+    (bbox_idx, cell) int64 arrays, one row per distinct pair: every
+    level-`level` cell holding a point of the closed bbox is listed
+    with that bbox's index.
 
-    A bbox whose u/v extremes all lie inside the face chart of its
-    (lon_min, lat_min) corner is covered by the i/j range of its u/v
-    bounding box (widened by 1e-9), enumerated with from_face_ij +
-    parent.  The other bboxes (across a face edge or the antimeridian,
-    or outside the lon/lat range) fall back to :func:`cover_bbox`.
+    Each bbox is cut into pieces by sector and band (see the module
+    docstring); each piece is covered in the chart of every face it can
+    touch by the i/j range of its u/v bounding box, widened by 1e-9 and
+    clamped to the face, enumerated with from_face_ij + parent.  An
+    inverted, NaN or out-of-range bbox covers only its part inside the
+    lon/lat range, which may be nothing.
     """
     lo0, la0, lo1, la1 = (np.atleast_1d(np.asarray(a, dtype=np.float64))
                           for a in (lon_min, lat_min, lon_max, lat_max))
-    n = len(lo0)
+    sector, band, face = _PIECES
+    # np.maximum/np.minimum keep a NaN bound, which then fails both tests
+    p_lo0 = np.maximum(lo0[:, None], _SECTORS[sector])
+    p_lo1 = np.minimum(lo1[:, None], _SECTORS[sector + 1])
+    p_la0 = np.maximum(la0[:, None], _BANDS[band])
+    p_la1 = np.minimum(la1[:, None], _BANDS[band + 1])
+    box, piece = np.nonzero((p_lo0 <= p_lo1) & (p_la0 <= p_la1))
+    lo0, lo1 = p_lo0[box, piece], p_lo1[box, piece]
+    la0, la1 = p_la0[box, piece], p_la1[box, piece]
+    face = face[piece]
+    n = len(box)
     # the u/v extremes: 4 corners plus each parallel's multiples of 90°
     # (see the module docstring), as (n, 2 parallels, 7 lons) points
     on = (_QUADRANTS >= lo0[:, None]) & (_QUADRANTS <= lo1[:, None])
@@ -291,35 +292,31 @@ def cover_bboxes(lon_min, lat_min, lon_max, lat_max, level):
     lons = np.broadcast_to(lons[:, None, :], (n, 2, 7))
     lats = np.broadcast_to(np.stack([la0, la1], axis=1)[:, :, None], (n, 2, 7))
     x, y, z = lonlat_to_xyz(np.deg2rad(lons), np.deg2rad(lats))
-    face = xyz_to_face_uv(x[:, 0, 0], y[:, 0, 0], z[:, 0, 0])[0]
     u_num, v_num, den = _face_frame(face[:, None, None], x, y, z)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        u = u_num / den
-        v = v_num / den
+    u = u_num / den
+    v = v_num / den
     pts = (1, 2)
     u_lo, u_hi = u.min(axis=pts) - _UV_EPS, u.max(axis=pts) + _UV_EPS
     v_lo, v_hi = v.min(axis=pts) - _UV_EPS, v.max(axis=pts) + _UV_EPS
-    sign = np.where(face < 3, 1.0, -1.0)[:, None, None]
-    fast = ((-180.0 <= lo0) & (lo0 <= lo1) & (lo1 <= 180.0)
-            & (-90.0 <= la0) & (la0 <= la1) & (la1 <= 90.0)
-            & (den * sign > 0).all(axis=pts)
-            & (u_lo >= -1.0) & (u_hi <= 1.0) & (v_lo >= -1.0) & (v_hi <= 1.0))
+    k = np.flatnonzero((u_lo <= 1.0) & (u_hi >= -1.0)
+                       & (v_lo <= 1.0) & (v_hi >= -1.0))
 
     shift = MAX_LEVEL - level
-    k = np.flatnonzero(fast)
-    i_lo = st_to_ij(uv_to_st(u_lo[k])) >> shift
-    j_lo = st_to_ij(uv_to_st(v_lo[k])) >> shift
-    ni = (st_to_ij(uv_to_st(u_hi[k])) >> shift) - i_lo + 1
-    nj = (st_to_ij(uv_to_st(v_hi[k])) >> shift) - j_lo + 1
+    # st_to_ij clamps a u/v beyond the face edge to the edge's i/j
+    i_lo, i_hi, j_lo, j_hi = (st_to_ij(uv_to_st(b[k])) >> shift
+                              for b in (u_lo, u_hi, v_lo, v_hi))
+    ni = i_hi - i_lo + 1
+    nj = j_hi - j_lo + 1
     cnt = ni * nj
     rep = np.repeat(np.arange(len(k)), cnt)
     off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
     i = (i_lo[rep] + off // nj[rep]) << shift
     j = (j_lo[rep] + off % nj[rep]) << shift
-    idx = [k[rep]]
-    cells = [parent(from_face_ij(face[k][rep], i, j), level)]
-    for b in np.flatnonzero(~fast):
-        c = cover_bbox(lo0[b], la0[b], lo1[b], la1[b], level)
-        idx.append(np.full(len(c), b, dtype=np.int64))
-        cells.append(c)
-    return np.concatenate(idx), np.concatenate(cells)
+    idx = box[k][rep]
+    cells = parent(from_face_ij(face[k][rep], i, j), level)
+    # pieces of one bbox meet on a face: keep one row per (bbox, cell)
+    order = np.lexsort((cells, idx))
+    idx, cells = idx[order], cells[order]
+    first = np.ones(len(idx), dtype=bool)
+    first[1:] = (idx[1:] != idx[:-1]) | (cells[1:] != cells[:-1])
+    return idx[first], cells[first]

@@ -8,15 +8,14 @@ deployment), and a stage's build reads only the stage outputs it uses.
 The stages form a DAG, not a chain:
 
     mined -> encoded -> tile_assignments -> polygon_counts   (main thread)
-    encoded -> cell_counts;  mined -> projected              (side thread)
+    encoded -> cell_counts;  encoded -> projected            (side thread)
 
-`encoded` is `mined` plus its cell, and no stage reads `projected` or
-`cell_counts`, so those two run one at a time on a single inheritable
-thread beside the main chain (at most two stages in flight):
-`cell_counts` beside `tile_assignments`, `projected` beside
-`polygon_counts`.  `projected` runs a pandas UDF, as `encoded` and
-`tile_assignments` do, so it is submitted after them: two UDF tasks
-at once need a second Python worker, ~130 MB of peak RSS.  `run`
+`encoded` is `mined` plus its S2 cell and UTM projection: both pandas
+UDFs sit in one projection, so Spark evaluates them in one Arrow pass
+and each point crosses into Python once.  No stage reads `projected` or
+`cell_counts`, and both are Catalyst-only selections of `encoded`, so
+they run one at a time on a single inheritable thread beside the main
+chain (at most two stages in flight, never two Python workers).  `run`
 waits for the side stages and re-raises a side failure before it
 returns.  A rerun on the same output directory reruns every stage
 without a completion marker and reads the others back.
@@ -86,11 +85,20 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
             lambda: mine_coords(synthesize_pages(spark, sf_dir))
             .select("url", "doc_id", "mention_idx", "lon", "lat"))
 
-        # 2. S2 cell encode (narrow)
+        # 2. S2 cell encode and UTM projection, auto-zone (narrow): one
+        # projection, so one ArrowEvalPython node evaluates both UDFs
         encoded = cp.stage(
             "encoded",
-            lambda: mined.withColumn(
-                "cell", s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))))
+            lambda: mined.select(
+                "*",
+                s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))
+                .alias("cell"),
+                utm_all_zones_udf(approx=True)(F.col("lon"), F.col("lat"))
+                .alias("_u"))
+            .select(*mined.columns, "cell",
+                    F.col("_u.zone").alias("utm_zone"),
+                    F.col("_u.easting").alias("easting"),
+                    F.col("_u.northing").alias("northing")))
 
         # 3. (side) per-cell histogram at the coarser roll-up level
         cell_counts = side(
@@ -99,26 +107,18 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                 s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
             .agg(F.count("*").alias("n_mentions")))
 
-        # 4. PIP tile assignments (broadcast cover + exact ray cast)
+        # 4. (side) projection enrichment: per-point UTM
+        projected = side(
+            "projected",
+            lambda: encoded.select("url", "doc_id", "mention_idx", "lon",
+                                   "lat", "utm_zone", "easting", "northing"))
+
+        # 5. PIP tile assignments (broadcast cover + exact ray cast)
         tiles = cp.stage(
             "tile_assignments",
             lambda: pip_join(encoded, polygon_rows(), level=COVER_LEVEL,
                              cell="cell")
             .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
-
-        # 5. (side) projection enrichment: per-point UTM, auto-zone;
-        # submitted after the main chain's last pandas-UDF stage, as
-        # two UDF tasks at once would start a second Python worker
-        def _project():
-            u = utm_all_zones_udf(approx=True)
-            st = u(F.col("lon"), F.col("lat"))
-            return (mined.withColumn("_u", st)
-                         .select("url", "doc_id", "mention_idx", "lon", "lat",
-                                 F.col("_u.zone").alias("utm_zone"),
-                                 F.col("_u.easting").alias("easting"),
-                                 F.col("_u.northing").alias("northing")))
-
-        projected = side("projected", _project)
 
         # 6. per-polygon counts
         cp.stage(

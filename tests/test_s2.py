@@ -76,18 +76,6 @@ def test_leaf_center_accuracy():
     assert chord_m.max() < 0.02
 
 
-def test_cover_bbox_superset():
-    """Every point in the bbox must fall in a covered cell."""
-    rng = np.random.RandomState(7)
-    for (lo0, la0, lo1, la1) in [(2.0, 48.5, 2.6, 49.0), (-74.5, 40.4, -73.6, 41.0)]:
-        for lvl in (8, 10):
-            cover = set(s2.cover_bbox(lo0, la0, lo1, la1, lvl).tolist())
-            lon = rng.uniform(lo0, lo1, 3000)
-            lat = rng.uniform(la0, la1, 3000)
-            cells = s2.cell_id(lon, lat, lvl)
-            assert set(cells.tolist()) <= cover
-
-
 def _bbox_points(rng, lo0, la0, lo1, la1, n=30):
     """Corners, edge midpoints and `n` random interior points."""
     lon = np.concatenate([[lo0, lo1, lo0, lo1, (lo0 + lo1) / 2, lo0,
@@ -97,21 +85,31 @@ def _bbox_points(rng, lo0, la0, lo1, la1, n=30):
     return lon, lat
 
 
-def test_cover_bboxes_property(monkeypatch):
+def _check_covers(rng, lo0, la0, lo1, la1, level, n=30):
+    """Cover the bboxes at `level` and check each against its points;
+    returns the bboxes' covers and how many of them span several faces."""
+    idx, cells = s2.cover_bboxes(lo0, la0, lo1, la1, level)
+    assert (s2.level_of(cells) == level).all()
+    assert len(set(zip(idx.tolist(), cells.tolist()))) == len(idx)
+    covers, n_multi = [], 0
+    for b in range(len(lo0)):
+        cover = set(cells[idx == b].tolist())
+        lon, lat = _bbox_points(rng, lo0[b], la0[b], lo1[b], la1[b], n)
+        assert set(s2.cell_id(lon, lat, level).tolist()) <= cover, (
+            level, lo0[b], la0[b], lo1[b], la1[b])
+        x, y, z = s2.lonlat_to_xyz(np.deg2rad(lon), np.deg2rad(lat))
+        n_multi += len(set(s2.xyz_to_face_uv(x, y, z)[0].tolist())) > 1
+        covers.append(cover)
+    return covers, n_multi
+
+
+def test_cover_bboxes_property():
     """Every corner and random interior point of a bbox lies in a cell
-    of that bbox's cover, anywhere on the globe, across face edges and
-    at the poles; a bbox spanning several faces takes the cover_bbox
-    fallback."""
+    of that bbox's cover, anywhere on the globe: across face edges, the
+    sector meridians, the ±35° bands and the ±35.26° polar-face limit,
+    up to ±180°, at the poles and over the whole globe.  No (bbox,
+    cell) pair repeats; an inverted or NaN bbox covers nothing."""
     rng = np.random.default_rng(11)
-    fallback = []
-    cover_bbox = s2.cover_bbox
-
-    def spy(*args):
-        fallback.append(args[:4])
-        return cover_bbox(*args)
-
-    monkeypatch.setattr(s2, "cover_bbox", spy)
-    # fallback covers rasterise, so straddlers shrink as the level grows
     for level, max_deg in ((6, 5.0), (8, 2.0), (10, 0.5), (12, 0.1)):
         k = 12
         clon = np.concatenate([
@@ -138,21 +136,42 @@ def test_cover_bboxes_property(monkeypatch):
                                      1.0 / (line[2] + 1e-7)]))
         lo0, lo1 = np.append(lo0, mid - 1.0), np.append(lo1, mid + 1.0)
         la0, la1 = np.append(la0, edge), np.append(la1, edge + 0.05)
-        fallback.clear()
-        idx, cells = s2.cover_bboxes(lo0, la0, lo1, la1, level)
-        assert (s2.level_of(cells) == level).all()
-        slow = set(fallback)
-        n_multi = 0
-        for b in range(len(lo0)):
-            cover = set(cells[idx == b].tolist())
-            lon, lat = _bbox_points(rng, lo0[b], la0[b], lo1[b], la1[b])
-            assert set(s2.cell_id(lon, lat, level).tolist()) <= cover, (
-                level, lo0[b], la0[b], lo1[b], la1[b])
-            x, y, z = s2.lonlat_to_xyz(np.deg2rad(lon), np.deg2rad(lat))
-            if len(set(s2.xyz_to_face_uv(x, y, z)[0].tolist())) > 1:
-                n_multi += 1
-                assert (lo0[b], la0[b], lo1[b], la1[b]) in slow
-        assert n_multi and len(slow) < len(lo0), level
+        # Paris and New York; boxes across the band edges and the
+        # polar-face limit, across each sector meridian (equator and
+        # both polar faces), at ±180° and around the globe at the equator
+        w = max_deg / 2
+        fixed = [(2.0, 48.5, 2.6, 49.0), (-74.5, 40.4, -73.6, 41.0)]
+        fixed += [(10 - w, e - w, 10 + w, e + w)
+                  for e in (-35.26, -35.0, 35.0, 35.26)]
+        fixed += [(e - w, c - w, e + w, c + w)
+                  for e in (-135.0, -45.0, 45.0, 135.0)
+                  for c in (-50.0, 0.0, 50.0)]
+        fixed += [(180 - w, 10.0, 180.0, 10 + w),
+                  (-180.0, -10 - w, -180 + w, -10.0),
+                  (-180.0, 0.0, 180.0, 0.1)]
+        f0, f1, f2, f3 = np.array(fixed).T
+        lo0, la0 = np.append(lo0, f0), np.append(la0, f1)
+        lo1, la1 = np.append(lo1, f2), np.append(la1, f3)
+        _, n_multi = _check_covers(rng, lo0, la0, lo1, la1, level)
+        assert n_multi, level
+
+    # the whole globe and polar caps
+    for level in (2, 3, 4):
+        lo0, la0, lo1, la1 = np.array([
+            (-180.0, -90.0, 180.0, 90.0), (-180.0, 80.0, 180.0, 90.0),
+            (-180.0, -90.0, 180.0, -60.0), (-30.0, 50.0, 150.0, 90.0)]).T
+        covers, _ = _check_covers(rng, lo0, la0, lo1, la1, level, n=2000)
+        assert len(covers[0]) == 6 * 4**level
+
+    # inverted bboxes and NaN bounds cover nothing, without a
+    # floating-point error, beside a normal bbox
+    nan = np.nan
+    with np.errstate(all="raise"):
+        idx, cells = s2.cover_bboxes([5.0, nan, 0.0, 0.0, 0.0, 2.0],
+                                     [0.0, 0.0, nan, 10.0, 0.0, 48.5],
+                                     [4.0, 1.0, 1.0, 1.0, nan, 2.6],
+                                     [1.0, 1.0, 1.0, 5.0, 1.0, 49.0], 12)
+    assert len(cells) and set(idx.tolist()) == {5}
 
 
 def test_s2_parent_expression_matches_index(spark):

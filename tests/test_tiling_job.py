@@ -2,6 +2,7 @@
 oracle parity of the aggregates and the shape of the stage plans."""
 
 import os
+import re
 
 import duckdb
 import numpy as np
@@ -113,31 +114,63 @@ def test_tiling_job_cell_counts_match_oracle(job):
 
 
 def test_tiling_job_one_s2_crossing_per_point(job):
-    """Only `encoded` runs the S2 UDF: the join key and the roll-up are
-    Catalyst parents, so cell_counts has no Python UDF and
+    """Each point crosses into Python once: `encoded` evaluates the S2
+    and UTM UDFs in one ArrowEvalPython node.  The join key and the
+    roll-up are Catalyst parents and `projected` is a selection of
+    `encoded`, so cell_counts and projected have no Python UDF and
     tile_assignments has just the ray cast."""
     _, built = job
 
-    def n_udf(stage):
+    def udf_nodes(stage):
         plan = built[stage]._jdf.queryExecution().optimizedPlan().toString()
-        return plan.count("ArrowEvalPython")
+        return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
 
-    assert n_udf("encoded") == 1
-    assert n_udf("tile_assignments") == 1
-    assert n_udf("cell_counts") == 0
+    (enc,) = udf_nodes("encoded")
+    assert len(set(re.findall(r"pythonUDF\d+", enc))) == 2, enc
+    assert len(udf_nodes("tile_assignments")) == 1
+    assert udf_nodes("cell_counts") == []
+    assert udf_nodes("projected") == []
+
+
+def test_tiling_job_projected_matches_utm_kernel(job):
+    """`projected` is bit-identical to the UTM UDF's function applied
+    to the mined lon/lat."""
+    from proj_4_spark.functions.geo import utm_all_zones_udf
+
+    out, _ = job
+    keys = "url, doc_id, mention_idx, lon, lat"
+    want = duckdb.sql(
+        f"SELECT {keys} FROM read_parquet('{out}/mined/*.parquet')").df()
+    utm = utm_all_zones_udf(approx=True).func(want["lon"], want["lat"])
+    want["utm_zone"] = utm["zone"].to_numpy(np.int32)
+    want["easting"] = utm["easting"].to_numpy(np.float64)
+    want["northing"] = utm["northing"].to_numpy(np.float64)
+    con = duckdb.connect()
+    con.register("want", want)
+    got = (f"SELECT {keys}, utm_zone, easting, northing "
+           f"FROM read_parquet('{out}/projected/*.parquet')")
+    n_got, n_diff = con.sql(
+        f"SELECT (SELECT count(*) FROM ({got})), "
+        f"(SELECT count(*) FROM (({got}) EXCEPT ALL (FROM want))) "
+        f"+ (SELECT count(*) FROM ((FROM want) EXCEPT ALL ({got})))"
+    ).fetchone()
+    assert n_got == len(want) > 0 and n_diff == 0
 
 
 def test_tiling_job_side_stage_failure_raises_and_resumes(
         spark, sf_dir, tmp_path, monkeypatch, job):
     """A failing side stage (`projected`) fails the run once the main
     chain is written; the rerun recomputes that stage alone."""
-    from proj_4_spark.functions import geo
+    orig = CheckpointedPipeline.stage
 
-    def broken(*a, **k):
-        raise RuntimeError("utm down")
+    def stage(cp, name, build, partition_by=None):
+        if name == "projected":
+            def build():
+                raise RuntimeError("utm down")
+        return orig(cp, name, build, partition_by)
 
     out = str(tmp_path / "job4")
-    monkeypatch.setattr(geo, "utm_all_zones_udf", broken)
+    monkeypatch.setattr(CheckpointedPipeline, "stage", stage)
     with pytest.raises(RuntimeError, match="utm down"):
         tiling_job.run(spark, sf_dir, out)
     monkeypatch.undo()
@@ -157,6 +190,23 @@ def test_tiling_job_side_stage_failure_raises_and_resumes(
             os.path.join(out, "_metrics", f"{st}.json")) == t, st
     clean = CheckpointedPipeline(spark, job[0]).metrics()
     assert summary["rows"] == {m["stage"]: m["rows"] for m in clean}
+
+
+def test_tiling_job_utm_failure_fails_encoded(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """UTM runs in `encoded` on the main chain: a broken UTM UDF fails
+    the run and leaves `encoded` without its completion marker."""
+    from proj_4_spark.functions import geo
+
+    def broken(*a, **k):
+        raise RuntimeError("utm down")
+
+    out = str(tmp_path / "job7")
+    monkeypatch.setattr(geo, "utm_all_zones_udf", broken)
+    with pytest.raises(RuntimeError, match="utm down"):
+        tiling_job.run(spark, sf_dir, out)
+    assert os.path.exists(os.path.join(out, "mined", "_GRAFT_DONE"))
+    assert not os.path.exists(os.path.join(out, "encoded", "_GRAFT_DONE"))
 
 
 def test_tiling_job_side_jobs_inherit_job_group(spark, sf_dir, tmp_path):
