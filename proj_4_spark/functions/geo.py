@@ -1,26 +1,30 @@
-"""Geo column functions: projection, geodesic, S2-cell pandas UDFs.
+"""Geo column functions: projection, geodesic, S2-cell Arrow UDFs.
 
 The compiled :class:`~proj_4_spark.proj.Transform` is built once on the
 driver (PROJ's parse/analyze/setup, src/create.cpp:206-303) and closed
-over by an Arrow-batched pandas UDF — the Spark restatement of
+over by an Arrow UDF — the Spark restatement of
 ``proj_trans_generic`` (/root/reference/src/trans.cpp:418-566): strided
 double arrays in, strided double arrays out, per-point in-band errors
 (NaN instead of HUGE_VAL).
 
 Every NumPy-kernel UDF is built by :func:`kernel_udf`, the one Arrow
-boundary: Series in as NumPy arrays, the kernel in CHUNK-row blocks,
-integer outputs (cells, faces, zones) null for a non-finite or null
-float input.  No per-row Python anywhere.
+boundary: ``pa.Array`` arguments in as NumPy arrays, the kernel in
+CHUNK-row blocks, ``pa.Array`` outputs built from the kernel's arrays
+(a list output from per-row lengths and flat values).  Integer outputs
+(cells, faces, zones) are null for a non-finite or null float input.
+A batch never passes through pandas, and no Python runs per row.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, DataType, StructType
 
 from ..index import s2 as s2idx
 from ..kernels import geodesic as k_geod
@@ -35,73 +39,105 @@ blocks: large temporaries cause mmap/page-fault churn that costs ~6x
 
 
 def run_chunked(kernel, *arrays):
-    """kernel(*arrays) -> tuple/list of result arrays, evaluated in
-    CHUNK-row blocks (dtypes inferred from the first block)."""
+    """kernel(*arrays) -> one result array or a tuple/list of them,
+    evaluated in CHUNK-row blocks.  Each result is the concatenation of
+    its blocks, so it need not have one value per row (a list output's
+    flat values)."""
     n = len(arrays[0])
-    first = kernel(*(a[:CHUNK] for a in arrays))
-    single = not isinstance(first, (tuple, list))
-    if single:
-        first = (first,)
-    if n <= CHUNK:
-        return first[0] if single else first
-    outs = [np.empty(n, dtype=np.asarray(r).dtype) for r in first]
-    for o, r in zip(outs, first):
-        o[:CHUNK] = r
-    for i in range(CHUNK, n, CHUNK):
-        res = kernel(*(a[i:i + CHUNK] for a in arrays))
-        if single:
-            res = (res,)
-        for o, r in zip(outs, res):
-            o[i:i + CHUNK] = r
-    return outs[0] if single else outs
+    parts = [kernel(*(a[i:i + CHUNK] for a in arrays))
+             for i in range(0, max(n, 1), CHUNK)]
+    if len(parts) == 1:
+        return parts[0]
+    if not isinstance(parts[0], (tuple, list)):
+        return np.concatenate(parts)
+    return [np.concatenate(p) for p in zip(*parts)]
 
 
 _INT_WIDTH = {"integer": np.int32, "long": np.int64}
 
 
+def _numpy_arg(col, dtype):
+    """One UDF argument (``pa.Array``, or a pandas Series when ``.func``
+    is called directly) -> (NumPy ``dtype`` array, null mask or None).
+    A float null reads as NaN, the in-band error; an integer null has no
+    in-band value, so it reads as 0 plus its mask."""
+    if isinstance(col, pd.Series):
+        col = pa.Array.from_pandas(col)
+    null = None
+    if col.null_count and np.dtype(dtype).kind != "f":
+        null = col.is_null().to_numpy(zero_copy_only=False)
+        col = col.fill_null(0)
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=dtype), null
+
+
+def _any(masks):
+    """Row-wise OR of boolean masks (None entries skipped), or None if
+    no row is set."""
+    out = None
+    for m in masks:
+        if m is not None:
+            out = m if out is None else out | m
+    return out if out is not None and out.any() else None
+
+
 def kernel_udf(return_type: str, kernel, dtypes=(np.float64, np.float64)):
-    """pandas UDF over ``kernel``: argument k arrives as a NumPy
+    """Arrow UDF over ``kernel``: argument k arrives as a NumPy
     ``dtypes[k]`` array, and the kernel runs through :func:`run_chunked`.
 
     ``kernel`` returns one array for a scalar ``return_type`` or one per
-    struct field, in field order.  An integer output is cast to its
-    declared width and is null on every row where a float argument is
-    NaN, infinite or null; float outputs keep NaN as the in-band error.
+    struct field, in field order; an ``array<...>`` output takes two,
+    the per-row lengths and the flat values.  An integer or list output
+    is cast to its declared type and is null on every row where a float
+    argument is NaN, infinite or null.  A float output is null where it
+    is NaN (the in-band error, as Spark has always received it).  Every
+    output is null on a row where an integer argument is null.
+
+    ``.func`` also takes pandas Series; it always returns a ``pa.Array``.
     """
     rt = DataType.fromDDL(return_type)
-    fields = rt.fields if isinstance(rt, StructType) else None
-    widths = [_INT_WIDTH.get(t.typeName())
-              for t in ([f.dataType for f in fields] if fields else [rt])]
-    has_int = any(w is not None for w in widths)
+    fields = list(rt.fields) if isinstance(rt, StructType) else None
+    types = [f.dataType for f in fields] if fields else [rt]
+    # per output: (arrow type, int width, list element arrow type)
+    plan = [(to_arrow_type(t), _INT_WIDTH.get(t.typeName()),
+             to_arrow_type(t.elementType) if isinstance(t, ArrayType)
+             else None) for t in types]
+    has_int = any(w is not None or e is not None for _, w, e in plan)
+    struct = to_arrow_type(rt) if fields else None
 
-    # the hints only select the scalar pandas UDF; a struct returns a frame
-    @pandas_udf(return_type)
-    def _udf(*cols: pd.Series) -> pd.Series:
-        args = [c.to_numpy(dt) for c, dt in zip(cols, dtypes, strict=True)]
-        outs = run_chunked(kernel, *args)
-        if fields is None:
-            outs = (outs,)
+    def _udf(*cols):
+        args, nulls = zip(*(_numpy_arg(c, dt)
+                            for c, dt in zip(cols, dtypes, strict=True)))
+        void = _any(nulls)  # a null integer argument: no value at all
+        bad = void
         if has_int:
-            bad = np.zeros(len(args[0]), dtype=bool)
-            for a in args:
-                if a.dtype.kind == "f":
-                    bad |= ~np.isfinite(a)
+            bad = _any([void] + [~np.isfinite(a) for a in args
+                                 if a.dtype.kind == "f"])
+        outs = run_chunked(kernel, *args)
+        outs = iter(outs if isinstance(outs, (tuple, list)) else (outs,))
         res = []
-        for o, w in zip(outs, widths):
-            if w is not None:
-                o = np.asarray(o, dtype=w)
-                if bad.any():
-                    o = pd.arrays.IntegerArray(o, bad)
-            res.append(o)
+        for t, w, elem in plan:
+            if elem is not None:
+                lengths, values = next(outs), next(outs)
+                offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+                np.cumsum(lengths, out=offsets[1:])
+                res.append(pa.ListArray.from_arrays(
+                    offsets, pa.array(values, elem), type=t,
+                    mask=None if bad is None else pa.array(bad)))
+            elif w is not None:
+                res.append(pa.array(np.asarray(next(outs), dtype=w),
+                                    mask=bad))
+            else:
+                res.append(pa.array(next(outs), t, mask=void,
+                                    from_pandas=True))
         if fields is None:
-            return pd.Series(res[0])
-        return pd.DataFrame({f.name: o for f, o in zip(fields, res)})
+            return res[0]
+        return pa.StructArray.from_arrays(res, fields=list(struct))
 
-    return _udf
+    return arrow_udf(_udf, rt)
 
 
 def project_udf(projstr_or_transform, direction: str = "fwd"):
-    """pandas UDF (lon,lat[,z,t] degrees) -> struct<x,y,z double>.
+    """Arrow UDF (lon,lat[,z,t] degrees) -> struct<x,y,z double>.
 
     Angular edges are degrees (gie convention); projected edges meters.
     """
@@ -114,7 +150,7 @@ def project_udf(projstr_or_transform, direction: str = "fwd"):
 
 
 def project_select_udf(selector):
-    """pandas UDF (lon, lat degrees) -> struct<x, y, z double, op int>:
+    """Arrow UDF (lon, lat degrees) -> struct<x, y, z double, op int>:
     per-point candidate-operation selection (plans/candidates.py,
     trans.cpp:44-173 semantics).  ``op`` is the chosen candidate index
     (-1 = no candidate / all failed -> NaN; null for a non-finite or
@@ -136,7 +172,7 @@ def with_projected(df: DataFrame, projstr: str, lon: str = "lon",
 
 
 def s2_cell_udf(level: int):
-    """pandas UDF (lon_deg, lat_deg) -> int64 S2 cell id at ``level``;
+    """Arrow UDF (lon_deg, lat_deg) -> int64 S2 cell id at ``level``;
     a NaN, infinite or null coordinate gives a null cell."""
     return kernel_udf("long", lambda lon, lat: s2idx.cell_id(lon, lat, level))
 
@@ -151,7 +187,7 @@ def s2_parent(cell: Column, level: int) -> Column:
 
 
 def s2_face_ij_udf(level: int):
-    """pandas UDF (lon, lat) -> struct<face int, i long, j long> at
+    """Arrow UDF (lon, lat) -> struct<face int, i long, j long> at
     ``level`` (i/j are the leaf coordinates truncated to the level grid).
     This integer triple is the SQL-checkable core of the tile
     assignment: it is bijective with the Hilbert cell id."""
@@ -165,7 +201,7 @@ def s2_face_ij_udf(level: int):
 
 
 def s2_cell_to_face_ij_udf(level: int):
-    """pandas UDF cell_id -> struct<face int, i long, j long> with i/j
+    """Arrow UDF cell_id -> struct<face int, i long, j long> with i/j
     truncated to the ``level`` grid (inverse of :func:`s2_face_ij_udf`
     composed with :func:`s2_cell_udf`)."""
     shift = s2idx.MAX_LEVEL - level
@@ -178,7 +214,7 @@ def s2_cell_to_face_ij_udf(level: int):
 
 
 def a7hex_cell_udf(res: int):
-    """pandas UDF (lon, lat) -> int64 aperture-7 icosahedral hex cell
+    """Arrow UDF (lon, lat) -> int64 aperture-7 icosahedral hex cell
     (index/hexdggs.py).  NOT canonical-H3-bit-compatible — the surface
     is named a7hex to make that explicit; see index/hexdggs.py."""
     from ..index import hexdggs as hx
@@ -187,7 +223,7 @@ def a7hex_cell_udf(res: int):
 
 
 def a7hex_parent_udf(parent_res: int):
-    """pandas UDF int64 a7hex cell -> ancestor cell at parent_res
+    """Arrow UDF int64 a7hex cell -> ancestor cell at parent_res
     (center re-encode, aperture-7 approximate containment)."""
     from ..index import hexdggs as hx
 
@@ -196,7 +232,7 @@ def a7hex_parent_udf(parent_res: int):
 
 
 def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
-    """pandas UDF (lat1, lon1 degrees) -> struct<s12 double, azi1
+    """Arrow UDF (lat1, lon1 degrees) -> struct<s12 double, azi1
     double>: fixed-iteration Vincenty inverse to a constant point
     (kernels/geodesic.py::vincenty_inverse_fixed), the SQL-mirrorable
     geodesic used by the driver gate (oracle:
@@ -208,7 +244,7 @@ def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
 
 
 def geodesic_inverse_udf(a: float | None = None, f: float | None = None):
-    """pandas UDF (lat1,lon1,lat2,lon2 degrees) ->
+    """Arrow UDF (lat1,lon1,lat2,lon2 degrees) ->
     struct<s12 double, azi1 double, azi2 double>  (Karney inverse,
     /root/reference/src/geodesic.c:1080)."""
     ga = 6378137.0 if a is None else a
@@ -220,7 +256,7 @@ def geodesic_inverse_udf(a: float | None = None, f: float | None = None):
 
 
 def geodesic_direct_udf(a: float | None = None, f: float | None = None):
-    """pandas UDF (lat1,lon1,azi1 degrees, s12 m) ->
+    """Arrow UDF (lat1,lon1,azi1 degrees, s12 m) ->
     struct<lat2 double, lon2 double, azi2 double>  (Karney direct,
     /root/reference/src/geodesic.c:686)."""
     ga = 6378137.0 if a is None else a
@@ -248,7 +284,7 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column,
 
 
 def utm_all_zones_udf(approx: bool = True):
-    """pandas UDF (lon,lat) -> struct<zone int, easting double,
+    """Arrow UDF (lon,lat) -> struct<zone int, easting double,
     northing double> — per-point UTM with the zone derived from the
     longitude (tmerc.cpp:737-779) and a vectorized TM kernel.
 
@@ -286,7 +322,7 @@ def utm_zone(lon: Column) -> Column:
 
 
 def factors_udf(projstr_or_transform):
-    """pandas UDF (lon, lat degrees) -> struct<h, k, s double>:
+    """Arrow UDF (lon, lat degrees) -> struct<h, k, s double>:
     meridional/parallel/areal scale via proj_factors semantics
     (src/factors.cpp:111-240 central differences)."""
     from ..kernels.factors import factors as k_factors
@@ -301,7 +337,7 @@ def factors_udf(projstr_or_transform):
 
 
 def unitconvert_time_udf(t_in: str, t_out: str):
-    """pandas UDF over the time channel of +proj=unitconvert
+    """Arrow UDF over the time channel of +proj=unitconvert
     (src/conversions/unitconvert.cpp time units: mjd, decimalyear,
     gps_week, yyyymmdd)."""
     tr = compile_projstring(f"+proj=unitconvert +t_in={t_in} +t_out={t_out}")
@@ -309,7 +345,7 @@ def unitconvert_time_udf(t_in: str, t_out: str):
 
 
 def transform4d_udf(projstr_or_transform, direction: str = "fwd"):
-    """pandas UDF (lon_deg, lat_deg, t) -> struct<lon_out, lat_out,
+    """Arrow UDF (lon_deg, lat_deg, t) -> struct<lon_out, lat_out,
     z_out double> for 4D (kinematic) pipelines such as +proj=defmodel;
     z starts at 0."""
     tr = compile_projstring(projstr_or_transform)
@@ -346,7 +382,7 @@ def dms_expr(deg: Column, pos: str, neg: str) -> Column:
 
 
 def roundtrip_udf(projstr_or_transform):
-    """pandas UDF (lon,lat degrees) -> struct<x,y,lon2,lat2 double>:
+    """Arrow UDF (lon,lat degrees) -> struct<x,y,lon2,lat2 double>:
     forward projection plus the inverse of the result, one Arrow hop
     (the fwd/inv pair shares a batch, so Newton-fallback inverses —
     src/generic_inverse.cpp — are exercised without a second

@@ -4,7 +4,7 @@ The reference's primary batch UX is the ``cct`` filter app
 (src/apps/cct.cpp:63-198: read coordinate tuples, apply a proj-string
 pipeline, emit transformed tuples with per-line error reporting).
 This job is its cluster-scale equivalent: read a parquet table of
-coordinate columns, run the compiled pipeline as a chunked pandas UDF,
+coordinate columns, run the compiled pipeline as a chunked Arrow UDF,
 and write projected parquet with a per-row ``errno`` column (0 = ok;
 ``coord_transfm_outside_grid``-style failures surface as the NaN
 in-band signal, recorded as errno 2049 like
@@ -35,7 +35,7 @@ ERRNO_COORD_TRANSFM = 2049
 
 
 def transform_udf(projstr, direction: str = "fwd"):
-    """pandas UDF (x, y, z, t) -> struct<x, y, z double> running the
+    """Arrow UDF (x, y, z, t) -> struct<x, y, z double> running the
     compiled pipeline (a proj-string or a Transform)."""
     from proj_4_spark.functions.geo import kernel_udf
     from proj_4_spark.proj import compile_projstring
@@ -68,7 +68,7 @@ def transform_frame(df: DataFrame, projstr, direction: str = "fwd",
              .withColumn("z_out", F.col("_o.z"))
              .drop("_o"))
     def _bad(c):
-        # NaN produced inside the pandas UDF arrives as NULL through
+        # NaN produced inside the Arrow UDF arrives as NULL through
         # Arrow; inputs may carry literal NaN — treat both as missing
         return F.isnull(c) | F.isnan(c)
 

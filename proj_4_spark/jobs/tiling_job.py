@@ -10,19 +10,22 @@ The stages form a DAG, not a chain:
     mined -> encoded -> tile_assignments -> polygon_counts   (main thread)
     encoded -> cell_counts;  encoded -> projected            (side thread)
 
-`encoded` is `mined` plus its S2 cell and UTM projection: both pandas
-UDFs sit in one projection, so Spark evaluates them in one Arrow pass
-and each point crosses into Python once.  No stage reads `projected` or
-`cell_counts`, and both are Catalyst-only selections of `encoded`, so
+`encoded` is `mined` plus its S2 cell, UTM projection and the ids of
+the polygons containing it: the three Arrow UDFs sit in one projection,
+so Spark evaluates them in one Arrow pass and each point crosses into
+Python once.  Every later stage is Catalyst-only: `tile_assignments`
+explodes the polygon ids, `polygon_counts` counts them, and no stage
+reads `projected` or `cell_counts`, both selections of `encoded`, so
 they run one at a time on a single inheritable thread beside the main
 chain (at most two stages in flight, never two Python workers).  `run`
 waits for the side stages and re-raises a side failure before it
 returns.  A rerun on the same output directory reruns every stage
 without a completion marker and reads the others back.
 
-Each point is S2-encoded once; the join key and the roll-up are its
-Catalyst parent.  Hot cells (Zipf head) need no salting: the counts
-partially aggregate map-side before the shuffle, plus AQE.
+Each point is S2-encoded at the cell level and, inside the PIP UDF, at
+the cover level; the roll-up is the cell's Catalyst parent.  Hot cells
+(Zipf head) need no salting: the counts partially aggregate map-side
+before the shuffle, plus AQE.
 
 Run under spark-submit (scripts/run_tiling_job.sh packages the
 module with --py-files) or directly:
@@ -55,13 +58,13 @@ def build_session(master: str | None = None, shuffle_partitions: int = 32):
 
 
 CELL_LEVEL = 12  # the per-point S2 encode
-COVER_LEVEL = 8  # PIP join key and cell-count roll-up; <= CELL_LEVEL
+COVER_LEVEL = 8  # PIP cover and cell-count roll-up; <= CELL_LEVEL
 
 
 def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     from proj_4_spark.functions.geo import (s2_cell_udf, s2_parent,
                                             utm_all_zones_udf)
-    from proj_4_spark.operators.spatial_join import pip_join
+    from proj_4_spark.operators.spatial_join import pip_udf
     from proj_4_spark.plans.checkpoint import CheckpointedPipeline
     from proj_4_spark.sources.pages import mine_coords, synthesize_pages
     from proj_4_spark.sources.polygons import polygon_rows
@@ -85,20 +88,24 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
             lambda: mine_coords(synthesize_pages(spark, sf_dir))
             .select("url", "doc_id", "mention_idx", "lon", "lat"))
 
-        # 2. S2 cell encode and UTM projection, auto-zone (narrow): one
-        # projection, so one ArrowEvalPython node evaluates both UDFs
+        # 2. S2 cell encode, UTM projection (auto-zone) and the ids of
+        # the polygons holding each point (cover lookup + exact ray
+        # cast): one projection, so one ArrowEvalPython node evaluates
+        # the three UDFs
+        lon, lat = F.col("lon"), F.col("lat")
         encoded = cp.stage(
             "encoded",
             lambda: mined.select(
                 "*",
-                s2_cell_udf(CELL_LEVEL)(F.col("lon"), F.col("lat"))
-                .alias("cell"),
-                utm_all_zones_udf(approx=True)(F.col("lon"), F.col("lat"))
-                .alias("_u"))
+                s2_cell_udf(CELL_LEVEL)(lon, lat).alias("cell"),
+                utm_all_zones_udf(approx=True)(lon, lat).alias("_u"),
+                pip_udf(polygon_rows(), COVER_LEVEL)(lon, lat)
+                .alias("polygon_ids"))
             .select(*mined.columns, "cell",
                     F.col("_u.zone").alias("utm_zone"),
                     F.col("_u.easting").alias("easting"),
-                    F.col("_u.northing").alias("northing")))
+                    F.col("_u.northing").alias("northing"),
+                    "polygon_ids"))
 
         # 3. (side) per-cell histogram at the coarser roll-up level
         cell_counts = side(
@@ -113,12 +120,12 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
             lambda: encoded.select("url", "doc_id", "mention_idx", "lon",
                                    "lat", "utm_zone", "easting", "northing"))
 
-        # 5. PIP tile assignments (broadcast cover + exact ray cast)
+        # 5. PIP tile assignments: one row per (point, polygon)
         tiles = cp.stage(
             "tile_assignments",
-            lambda: pip_join(encoded, polygon_rows(), level=COVER_LEVEL,
-                             cell="cell")
-            .select("url", "doc_id", "mention_idx", "cell", "polygon_id"))
+            lambda: encoded.select(
+                "url", "doc_id", "mention_idx", "cell",
+                F.explode("polygon_ids").alias("polygon_id")))
 
         # 6. per-polygon counts
         cp.stage(

@@ -8,7 +8,7 @@ geod_polygon_addpoint + compute, /root/reference/src/geodesic.c
    edge comes from ``first_value`` over the full partition frame);
 2. ONE vectorized kernel pass over the flat edge table producing the
    per-edge contributions (s12 distance, S12 equator-segment area,
-   prime-meridian transit direction) — an Arrow-batched pandas UDF
+   prime-meridian transit direction) — an Arrow UDF
    over :func:`proj_4_spark.kernels.geodesic.inverse` with
    ``want_area=True``;
 3. a hash aggregation per polygon plus the pure-Catalyst
@@ -32,7 +32,7 @@ from ..kernels import geodesic as k_geod
 
 
 def edge_terms_udf(a: float, f: float):
-    """pandas UDF (lat1, lon1, lat2, lon2 degrees) ->
+    """Arrow UDF (lat1, lon1, lat2, lon2 degrees) ->
     struct<dist, aseg, transit double>: geodesic edge length, area
     between edge and equator, and prime-meridian crossing direction."""
     g = k_geod.Geodesic.init(a, f)

@@ -43,7 +43,7 @@ def analytic_grid(width: int = 360, height: int = 180) -> np.ndarray:
 
 def bilinear_udf(grid: np.ndarray, lon0: float = -180.0, lat0: float = -90.0,
                  dlon: float = 1.0, dlat: float = 1.0):
-    """pandas UDF (lon, lat) -> double: 4-corner bilinear interpolation
+    """Arrow UDF (lon, lat) -> double: 4-corner bilinear interpolation
     with node (ix,iy) at (lon0+ix*dlon, lat0+iy*dlat); clamped to the
     grid edge (grids.cpp:3322-3393 weight formula)."""
     g = np.asarray(grid, dtype=np.float64)

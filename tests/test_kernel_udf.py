@@ -1,10 +1,12 @@
 """functions.geo.kernel_udf, the one Arrow boundary of every NumPy-kernel
 UDF: each factory's ``.func`` takes an empty batch, gives the same
 answer for any CHUNK block size, and nulls its integer outputs for a
-NaN, infinite or null float input."""
+NaN, infinite or null float input; a NaN float output reaches Spark as
+null, and a null integer argument nulls the row."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from proj_4_spark.functions import geo as G
@@ -33,7 +35,7 @@ def _factories():
     from proj_4_spark.jobs.cct_job import transform_udf
     from proj_4_spark.operators.geopolygon import edge_terms_udf
     from proj_4_spark.operators.raster import analytic_grid, bilinear_udf
-    from proj_4_spark.operators.spatial_join import ray_cast_udf
+    from proj_4_spark.operators.spatial_join import pip_udf, ray_cast_udf
     from proj_4_spark.sources.polygons import polygon_rows
 
     return {
@@ -61,6 +63,7 @@ def _factories():
             lambda: edge_terms_udf(6378137.0, 1 / 298.257223563), "yxyx"),
         "bilinear_udf": (lambda: bilinear_udf(analytic_grid()), "xy"),
         "ray_cast_udf": (lambda: ray_cast_udf(polygon_rows()), "xyp"),
+        "pip_udf": (lambda: pip_udf(polygon_rows(), 8), "xy"),
     }
 
 
@@ -95,26 +98,42 @@ def _column(kind: str, n: int, rng) -> pd.Series:
                      else np.float64)
 
 
-_NUMPY_OF = {"double": np.float64, "integer": np.int32, "long": np.int64,
-             "boolean": np.bool_}
+_ARROW_OF = {"double": pa.float64(), "integer": pa.int32(),
+             "long": pa.int64(), "boolean": pa.bool_()}
+
+
+def _arrow_of(t):
+    """Declared Spark type -> the Arrow type of its values (a list as
+    ("list", element type))."""
+    if t.typeName() == "array":
+        return ("list", _arrow_of(t.elementType))
+    return _ARROW_OF[t.typeName()]
+
+
+def _type_of(at):
+    if pa.types.is_list(at):
+        return ("list", _type_of(at.value_type))
+    return at
 
 
 @pytest.mark.parametrize("name", sorted(_factories()))
 def test_empty_batch_gives_declared_columns_and_dtypes(spark, name):
+    from pyspark.sql.pandas.types import to_arrow_type
+
     build, kinds = _factories()[name]
     u = build()
     out = u.func(*[pd.Series([], dtype=np.int64 if k in _INT_KINDS
                              else np.float64) for k in kinds])
     rt = u.returnType
+    assert isinstance(out, pa.Array) and out.type == to_arrow_type(rt)
     if rt.typeName() == "struct":
-        assert list(out.columns) == rt.fieldNames()
-        got = [out[f.name].dtype for f in rt.fields]
-        want = [_NUMPY_OF[f.dataType.typeName()] for f in rt.fields]
+        assert [f.name for f in out.type] == rt.fieldNames()
+        got = [_type_of(f.type) for f in out.type]
+        want = [_arrow_of(f.dataType) for f in rt.fields]
     else:
-        assert isinstance(out, pd.Series)
-        got, want = [out.dtype], [_NUMPY_OF[rt.typeName()]]
+        got, want = [_type_of(out.type)], [_arrow_of(rt)]
     assert len(out) == 0
-    assert got == [np.dtype(w) for w in want]
+    assert got == want
 
 
 @pytest.mark.parametrize("name", sorted(_factories()))
@@ -126,10 +145,8 @@ def test_chunk_size_does_not_change_output(spark, monkeypatch, name):
     whole = u.func(*cols)
     monkeypatch.setattr(G, "CHUNK", 7)
     blocks = u.func(*cols)
-    if isinstance(whole, pd.DataFrame):
-        pd.testing.assert_frame_equal(blocks, whole, check_exact=True)
-    else:
-        pd.testing.assert_series_equal(blocks, whole, check_exact=True)
+    assert blocks.type == whole.type
+    assert blocks.to_pylist() == whole.to_pylist()
 
 
 def test_kernel_runs_in_chunk_blocks(spark, monkeypatch):
@@ -143,7 +160,73 @@ def test_kernel_runs_in_chunk_blocks(spark, monkeypatch):
     a = pd.Series(np.arange(20.0))
     out = G.kernel_udf("double", spy).func(a, a)
     assert seen == [7, 7, 6]
-    assert out.tolist() == (2 * a).tolist()
+    assert out.to_pylist() == (2 * a).tolist()
+
+
+@pytest.mark.parametrize("name", sorted(
+    n for n in _factories() if n not in
+    {"s2_cell_udf", "s2_face_ij_udf", "s2_cell_to_face_ij_udf",
+     "a7hex_cell_udf", "a7hex_parent_udf", "ray_cast_udf", "pip_udf"}))
+def test_nan_float_output_arrives_as_null(spark, name):
+    """Every factory with a double output: through Spark, an all-NaN
+    input row gives null (never NaN) in its NaN double outputs, an
+    all-null row gives the same outputs as the all-NaN row, and no row
+    carries a NaN."""
+    from pyspark.sql import functions as F
+
+    build, kinds = _factories()[name]
+    u = build()
+    rng = np.random.default_rng(5)
+    finite = [_column(k, 3, rng) for k in kinds]
+    names = [f"c{i}" for i in range(len(kinds))]
+    null = np.array([False, True] + [False] * 3)
+    data = pa.table({c: pa.array(np.concatenate([[np.nan, 0.0], col]),
+                                 mask=null)
+                     for c, col in zip(names, finite)})
+    df = spark.createDataFrame(data).withColumn(
+        "k", F.monotonically_increasing_id())
+    got = df.select("k", u(*names).alias("o")).orderBy("k").collect()
+    rt = u.returnType
+    doubles = ([f.name for f in rt.fields
+                if f.dataType.typeName() == "double"]
+               if rt.typeName() == "struct" else None)
+    assert doubles != []
+
+    def values(o):
+        return [o] if doubles is None else [o[f] for f in doubles]
+
+    assert None in values(got[0].o), got[0]
+    assert got[1].o == got[0].o, got[:2]
+    for r in got:
+        assert not any(v != v for v in values(r.o) if v is not None), r
+
+
+def test_null_long_argument_nulls_the_row(spark):
+    """A null in a long argument gives null outputs, not the kernel's
+    answer for 0; the kernel sees the other ids of its batch exactly."""
+    ids = [1153886944535511040, None, 5180951437578483365]
+    # one partition, so the null shares an Arrow batch with the ids
+    df = spark.createDataFrame([(c,) for c in ids], "cell long").coalesce(1)
+    got = [r.o for r in df.select(
+        G.s2_cell_to_face_ij_udf(12)("cell").alias("o")).collect()]
+    assert got[1] is None or list(got[1]) == [None, None, None], got
+    for c, o in zip(ids, got):
+        if c is not None:
+            face, i, j = s2.to_face_ij(np.array([c], dtype=np.int64))
+            assert tuple(o) == (face[0], i[0] >> 18, j[0] >> 18), c
+
+    seen = []
+
+    def spy(c):
+        seen.append(c.copy())
+        return c
+
+    u = G.kernel_udf("long", spy, (np.int64,))
+    out = u.func(pa.array(ids, pa.int64()))
+    assert out.to_pylist() == ids
+    assert seen[0][2] == 5180951437578483365
+    # the same identity kernel through Spark's Arrow batches
+    assert [r.o for r in df.select(u("cell").alias("o")).collect()] == ids
 
 
 def _utm_reference(lon, lat):

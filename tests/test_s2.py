@@ -200,7 +200,7 @@ def test_s2_parent_expression_matches_index(spark):
 
 def test_s2_cell_udf_non_finite_gives_null(spark):
     """NaN, infinite or null lon/lat -> null cell; the null survives
-    s2_parent and never matches in pip_join on either key path."""
+    s2_parent, and such a point never matches in pip_join."""
     from pyspark.sql import functions as F
 
     from proj_4_spark.functions.geo import s2_cell_udf, s2_parent
@@ -221,33 +221,9 @@ def test_s2_cell_udf_non_finite_gives_null(spark):
                       int(s2.cell_id(inside_lon, inside_lat, 8)))
     for k in range(1, 6):
         assert got[k] == (None, None), k
-    for kw in ({}, {"cell": "cell"}):
-        ids = {r.doc_id for r in pip_join(enc, polys, level=8, **kw)
-               .select("doc_id").collect()}
-        assert ids == {0}, kw
-
-
-def test_pip_join_cell_column_matches_lonlat(spark, sf_dir):
-    """Keying on the parent of an existing level-12 cell column gives
-    the same rows as encoding lon/lat at the join level."""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.functions.geo import s2_cell_udf
-    from proj_4_spark.operators.spatial_join import pip_join
-    from proj_4_spark.sources.coords import coords_df
-    from proj_4_spark.sources.polygons import polygon_rows
-
-    polys = polygon_rows()
-    pts = coords_df(spark, sf_dir).withColumn(
-        "cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
-
-    def rows(df):
-        return sorted(tuple(r) for r in
-                      df.select("doc_id", "polygon_id", "cell").collect())
-
-    by_lonlat = rows(pip_join(pts, polys, level=8))
-    by_cell = rows(pip_join(pts, polys, level=8, cell="cell"))
-    assert by_lonlat and by_cell == by_lonlat
+    ids = {r.doc_id for r in pip_join(enc, polys, level=8)
+           .select("doc_id").collect()}
+    assert ids == {0}
 
 
 def _ray_cast_reference(rows, px, py, pid):
@@ -309,14 +285,15 @@ def test_ray_cast_udf_bit_identical_to_per_polygon_loop(spark):
     assert len(lon) > CHUNK
 
     inside = ray_cast_udf(rows).func
-    got = inside(pd.Series(lon), pd.Series(lat), pd.Series(pid)).to_numpy()
+    got = inside(pd.Series(lon), pd.Series(lat), pd.Series(pid)).to_numpy(
+        zero_copy_only=False)
     want = _ray_cast_reference(rows, lon, lat, pid)
     assert got.dtype == bool and want.any()
     assert np.array_equal(got, want)
     empty = pd.Series([], dtype=np.float64)
     assert len(inside(empty, empty, pd.Series([], dtype=np.int64))) == 0
     unknown = inside(pd.Series([0.5]), pd.Series([0.5]), pd.Series([-6]))
-    assert not unknown.any()
+    assert not any(unknown.to_pylist())
 
 
 def _n_python_evals(df):
@@ -325,28 +302,20 @@ def _n_python_evals(df):
     return plan.count("ArrowEvalPython"), plan
 
 
-def test_pip_join_plan_one_encode_bbox_in_join(spark, sf_dir):
-    """Both key paths run exactly two Python evaluations (the encode and
-    the ray cast), and the polygon bbox test sits in the join."""
-    from pyspark.sql import functions as F
-
-    from proj_4_spark.functions.geo import s2_cell_udf
+def test_pip_join_plan_one_python_eval_no_join(spark, sf_dir):
+    """The whole PIP join is one Python evaluation (encode, cover
+    lookup, bbox test and ray cast in one Arrow UDF) under a Generate:
+    no join, no exchange."""
     from proj_4_spark.operators.spatial_join import pip_join
     from proj_4_spark.sources.coords import coords_df
     from proj_4_spark.sources.polygons import polygon_rows
 
-    polys = polygon_rows()
-    pts = coords_df(spark, sf_dir)
-    enc = pts.withColumn("cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
-    for df in (pip_join(pts, polys, level=8),
-               pip_join(enc, polys, level=8, cell="cell")):
-        n, plan = _n_python_evals(df)
-        assert n == 2, plan
-        join = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
-        assert len(join) == 1, plan
-        for bound in ("lon#", "_lon_min", "_lon_max", "lat#", "_lat_min",
-                      "_lat_max"):
-            assert bound in join[0], join[0]
+    n, plan = _n_python_evals(pip_join(coords_df(spark, sf_dir),
+                                       polygon_rows(), level=8))
+    assert n == 1, plan
+    assert "Generate explode" in plan, plan
+    for op in ("Join", "Exchange"):
+        assert op not in plan, plan
 
 
 def test_pip_join_no_polygons(spark, sf_dir):
@@ -358,3 +327,116 @@ def test_pip_join_no_polygons(spark, sf_dir):
     out = pip_join(pts, [], level=8)
     assert out.columns == pts.columns + ["polygon_id"]
     assert out.count() == 0
+
+
+def _pip_polygons(rng):
+    """Star rings (3-24 vertices, not all convex) with non-contiguous
+    ids: overlapping rings around shared centres, and bboxes across the
+    S2 face edges at lon 45/-135 and at lat 35.26."""
+    centres = [(2.35, 48.85), (2.35, 48.85), (2.5, 48.9), (45.0, 0.0),
+               (-135.0, 10.0), (100.0, 35.26), (-70.0, -35.26),
+               (10.0, 60.0), (-45.0, 20.0)]
+    rows = []
+    for q, (cx, cy) in enumerate(centres):
+        nv = 3 + (7 * q) % 22
+        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
+        rad = rng.uniform(0.3, 1.5, nv) * (1 + q % 3)
+        rows.append(dict(polygon_id=int(1000 - 97 * q),
+                         ring_lon=(cx + rad * np.cos(ang)).tolist(),
+                         ring_lat=(cy + rad * np.sin(ang)).tolist()))
+    return rows
+
+
+def _pip_points(rng, polys, m):
+    """Per polygon: its vertices, points on its bbox edges and ``m``
+    points in and around its bbox; then global points."""
+    lon, lat = [], []
+    for r in polys:
+        rx, ry = np.asarray(r["ring_lon"]), np.asarray(r["ring_lat"])
+        x0, x1, y0, y1 = rx.min(), rx.max(), ry.min(), ry.max()
+        u, v = rng.uniform(x0, x1, m), rng.uniform(y0, y1, m)
+        lon += [rx, np.full(m, x0), np.full(m, x1), u, u,
+                rng.uniform(x0 - 0.5, x1 + 0.5, m)]
+        lat += [ry, v, v, np.full(m, y0), np.full(m, y1),
+                rng.uniform(y0 - 0.5, y1 + 0.5, m)]
+    lon.append(rng.uniform(-180, 180, m))
+    lat.append(rng.uniform(-90, 90, m))
+    return np.concatenate(lon), np.concatenate(lat)
+
+
+def _pip_reference(polys, lon, lat, level):
+    """Sorted (point index, polygon_id) pairs from the definition: the
+    point's cell is in the polygon's bbox cover, the point is in the
+    closed bbox, and the per-polygon even-odd loop puts it inside."""
+    with np.errstate(invalid="ignore"):
+        cell = s2.cell_id(lon, lat, level)
+    pairs = []
+    for r in polys:
+        rx, ry = np.asarray(r["ring_lon"]), np.asarray(r["ring_lat"])
+        x0, x1, y0, y1 = rx.min(), rx.max(), ry.min(), ry.max()
+        _, cover = s2.cover_bboxes(x0, y0, x1, y1, level)
+        k = np.nonzero(np.isin(cell, cover) & (x0 <= lon) & (lon <= x1)
+                       & (y0 <= lat) & (lat <= y1))[0]
+        ins = _ray_cast_reference([r], lon[k], lat[k],
+                                  np.full(len(k), r["polygon_id"]))
+        pairs += [(int(i), r["polygon_id"]) for i in k[ins]]
+    return sorted(pairs)
+
+
+def test_pip_join_matches_reference(spark):
+    """pip_join gives exactly the reference's (point, polygon) multiset:
+    NaN, null and +-inf coordinates, points on vertices and bbox edges,
+    overlapping rings, bboxes across face edges; a 0-row frame gives 0
+    rows."""
+    import pyarrow as pa
+
+    from proj_4_spark.operators.spatial_join import pip_join
+
+    rng = np.random.default_rng(91)
+    polys = _pip_polygons(rng)
+    lon, lat = _pip_points(rng, polys, 60)
+    nan, inf = np.nan, np.inf
+    lon = np.concatenate([lon, [nan, 2.35, inf, -inf, 2.35, 0.0, 0.0]])
+    lat = np.concatenate([lat, [48.85, nan, 48.85, 48.85, inf, 0.0, 0.0]])
+    null = np.zeros(len(lon), dtype=bool)
+    null[-2:] = [True, False]
+    lon_null = null.copy()
+    lon_null[-1] = True  # null lon with a finite lat
+    pts = spark.createDataFrame(pa.table({
+        "doc_id": np.arange(len(lon)),
+        "lon": pa.array(lon, mask=lon_null),
+        "lat": pa.array(lat, mask=null)}))
+    for level in (8, 5):
+        got = sorted(tuple(r) for r in pip_join(pts, polys, level=level)
+                     .select("doc_id", "polygon_id").collect())
+        lo = np.where(lon_null, nan, lon)
+        la = np.where(null, nan, lat)
+        want = _pip_reference(polys, lo, la, level)
+        assert len(want) > 500 and got == want, level
+        assert len({p for _, p in want}) == len(polys)
+    empty = pip_join(pts.limit(0), polys, level=8)
+    assert empty.columns == pts.columns + ["polygon_id"]
+    assert empty.count() == 0
+
+
+def test_pip_udf_more_than_one_chunk(spark):
+    """The PIP UDF's function over more than one CHUNK of points gives
+    the reference's pairs in point order, and null lists exactly for
+    the NaN or infinite points."""
+    import pandas as pd
+
+    from proj_4_spark.functions.geo import CHUNK
+    from proj_4_spark.operators.spatial_join import pip_udf
+
+    rng = np.random.default_rng(92)
+    polys = _pip_polygons(rng)
+    lon, lat = _pip_points(rng, polys, CHUNK // 40)
+    lon[::1000], lat[1::1000] = np.nan, np.inf
+    assert len(lon) > CHUNK
+    got = pip_udf(polys, 8).func(pd.Series(lon), pd.Series(lat))
+    lists = got.to_pylist()
+    bad = ~(np.isfinite(lon) & np.isfinite(lat))
+    assert [x is None for x in lists] == bad.tolist()
+    pairs = sorted((i, p) for i, x in enumerate(lists) for p in x or [])
+    want = _pip_reference(polys, lon, lat, 8)
+    assert len(want) > 1000 and pairs == want

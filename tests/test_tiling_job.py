@@ -114,11 +114,11 @@ def test_tiling_job_cell_counts_match_oracle(job):
 
 
 def test_tiling_job_one_s2_crossing_per_point(job):
-    """Each point crosses into Python once: `encoded` evaluates the S2
-    and UTM UDFs in one ArrowEvalPython node.  The join key and the
-    roll-up are Catalyst parents and `projected` is a selection of
-    `encoded`, so cell_counts and projected have no Python UDF and
-    tile_assignments has just the ray cast."""
+    """Each point crosses into Python once: `encoded` evaluates the S2,
+    UTM and PIP UDFs in one ArrowEvalPython node.  Every later stage is
+    Catalyst over checkpoints (the roll-up is a Catalyst parent, the
+    tile assignments an explode of `encoded`'s polygon ids), so none
+    has a Python UDF."""
     _, built = job
 
     def udf_nodes(stage):
@@ -126,10 +126,10 @@ def test_tiling_job_one_s2_crossing_per_point(job):
         return [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
 
     (enc,) = udf_nodes("encoded")
-    assert len(set(re.findall(r"pythonUDF\d+", enc))) == 2, enc
-    assert len(udf_nodes("tile_assignments")) == 1
-    assert udf_nodes("cell_counts") == []
-    assert udf_nodes("projected") == []
+    assert len(set(re.findall(r"pythonUDF\d+", enc))) == 3, enc
+    for stage in ("tile_assignments", "projected", "cell_counts",
+                  "polygon_counts"):
+        assert udf_nodes(stage) == [], stage
 
 
 def test_tiling_job_projected_matches_utm_kernel(job):
@@ -142,9 +142,10 @@ def test_tiling_job_projected_matches_utm_kernel(job):
     want = duckdb.sql(
         f"SELECT {keys} FROM read_parquet('{out}/mined/*.parquet')").df()
     utm = utm_all_zones_udf(approx=True).func(want["lon"], want["lat"])
-    want["utm_zone"] = utm["zone"].to_numpy(np.int32)
-    want["easting"] = utm["easting"].to_numpy(np.float64)
-    want["northing"] = utm["northing"].to_numpy(np.float64)
+    for col, f, dt in (("utm_zone", "zone", np.int32),
+                       ("easting", "easting", np.float64),
+                       ("northing", "northing", np.float64)):
+        want[col] = utm.field(f).to_numpy(zero_copy_only=False).astype(dt)
     con = duckdb.connect()
     con.register("want", want)
     got = (f"SELECT {keys}, utm_zone, easting, northing "
