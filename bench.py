@@ -27,7 +27,7 @@ HEADLINE = [
     "knn_top5",               # broadcast kNN window top-k
     "lsh_candidate_pairs",    # MinHash LSH dedup join
     "text_quality",           # catalyst text metrics
-    "embed_cosine_top5",      # BLAS-batched similarity
+    "embed_cosine_top5",      # Catalyst cosine similarity
     "tpch_q1_pricing",        # relational agg baseline
     "ivf_cosine_top5",        # IVF ANN (inverted-list probe)
     "krovak_fwd",             # national-grid projection kernel

@@ -12,7 +12,7 @@ capabilities of PROJ (proj4-bot/proj.4, studied read-only at
   fused, immutable, broadcastable transform closure (the analogue of
   an instantiated ``PJ``; cf. /root/reference/src/init.cpp,
   src/pipeline.cpp).
-- ``spark``    — pandas/Arrow UDF bindings, coordinate mining,
+- ``spark``    — Arrow UDF bindings, coordinate mining,
   Spark session helpers.
 - ``index``    — S2 / H3 discrete-global-grid cell encoders
   (vectorized NumPy; cf. src/projections/s2.cpp for the cube-face

@@ -5,7 +5,7 @@ filter app solving the direct or inverse geodesic problem per input
 line on a chosen ellipsoid.  This job is its cluster-scale
 equivalent: read a parquet table of point rows, solve the requested
 problem with the Karney solver (kernels/geodesic.py,
-src/geodesic.c:686 direct / :1080 inverse) as a chunked pandas UDF,
+src/geodesic.c:686 direct / :1080 inverse) as a chunked Arrow UDF,
 and write the augmented table back as parquet under the
 checkpoint/metrics machinery.
 

@@ -1,22 +1,23 @@
-"""Embedding similarity search.
+"""Embedding similarity search, as Catalyst expressions only.
 
 - cosine_topk: exact brute-force top-k for a broadcast query set —
-  the correctness baseline.  Dot products run in a vectorized pandas
-  UDF (one BLAS matmul per Arrow batch against the broadcast query
-  matrix) — the scalable layout for 10^12 x small-k.
+  the correctness baseline.  Every (vector, query) pair of a
+  broadcast nested-loop join takes `cosine_expr`, dot products summed
+  in element order (the DuckDB oracle's `list_sum` order).
 - hyperplane_bucket: SimHash-for-vectors LSH — sign bits against B
   fixed random hyperplanes (deterministic seed), as a pure Catalyst
   expression; near-dup pairs are found within equal buckets only
   (candidate generation), then exact-cosine-verified.
+- ivf_topk: nearest-centroid inverted lists (a Catalyst argmin over
+  the squared distances) probed per query.  Only the k-means codebook
+  and the probe choice run on the driver, over collected rows.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def hyperplanes(dim: int = 64, n: int = 8, seed: int = 42) -> np.ndarray:
@@ -26,30 +27,70 @@ def hyperplanes(dim: int = 64, n: int = 8, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n, dim)).round(6)
 
 
-def dot_expr(vec: Column, w: list[float]) -> Column:
-    """<vec, w> as a Catalyst aggregate over the array column."""
+def dot_expr(a: Column, b: Column) -> Column:
+    """<a, b> of two array columns, summed in element order.  A constant
+    vector is ``F.array(*[F.lit(float(x)) for x in w])``."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def cosine_expr(a: Column, b: Column, norm_a: Column,
+                norm_b: Column) -> Column:
+    """cos(a, b) = <a, b> / (|a| |b|) given both norms (computed once
+    per vector, not once per pair); null when a norm is 0."""
+    return F.try_divide(dot_expr(a, b), norm_a * norm_b)
+
+
+def _normed(vectors: DataFrame, vec_col: str, id_col: str,
+            *keep: Column) -> DataFrame:
+    """(id, _v, _n, *keep): the vector as array<double> (a float
+    element would otherwise multiply in single precision) and its norm
+    sqrt(<v, v>)."""
+    v = F.col(vec_col).cast("array<double>")
+    return vectors.select(id_col, v.alias("_v"),
+                          F.sqrt(dot_expr(v, v)).alias("_n"), *keep)
+
+
+def _const_matrix(mat: np.ndarray) -> Column:
+    """A constant array<array<double>> parsed from one SQL string: one
+    JVM call, not one per element (1,024 elements took ~0.5 s to
+    build).  `repr` + `D` reads back as the same double."""
+    rows = (", ".join(f"{x!r}D" for x in row) for row in mat.tolist())
+    return F.expr("array(" + ", ".join(f"array({r})" for r in rows) + ")")
+
+
+def _rows_expr(vec: Column, mat: np.ndarray, term) -> Column:
+    """[sum_j term(vec[j], mat[k][j]) for each row k] in ONE traversal
+    of the array: the constant matrix is embedded TRANSPOSED, so each
+    vector element folds into every row's partial sum as it streams by
+    (vs one aggregate pass per row).  Per-row summation order is
+    element order, as in dot_expr."""
+    mat = np.asarray(mat, dtype=np.float64)
+    terms = F.zip_with(vec, _const_matrix(mat.T),
+                       lambda x, ws: F.transform(ws, lambda w: term(x, w)))
+    zero = F.array_repeat(F.lit(0.0), len(mat))
     return F.aggregate(
-        F.zip_with(vec, F.array(*[F.lit(float(x)) for x in w]),
-                   lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x)
+        terms, zero, lambda a, t: F.zip_with(a, t, lambda s, p: s + p))
 
 
 def dots_expr(vec: Column, planes: np.ndarray) -> Column:
-    """All <vec, plane_k> dot products in ONE traversal of the array:
-    the constant plane matrix is embedded TRANSPOSED, so each vector
-    element multiplies into every plane's partial sum as it streams by
-    (vs one aggregate pass per plane).  Per-plane summation order is
-    element order, identical to dot_expr — results are bit-equal."""
-    planes = np.asarray(planes, dtype=np.float64)
-    n_planes, dim = planes.shape
-    wt = F.array(*[F.array(*[F.lit(float(planes[k][j]))
-                             for k in range(n_planes)])
-                   for j in range(dim)])
-    prods = F.zip_with(vec, wt,
-                       lambda x, ws: F.transform(ws, lambda w: x * w))
-    zero = F.array(*[F.lit(0.0) for _ in range(n_planes)])
-    return F.aggregate(
-        prods, zero, lambda a, pr: F.zip_with(a, pr, lambda s, p: s + p))
+    """All <vec, plane_k> dot products, bit-equal to dot_expr per
+    plane."""
+    return _rows_expr(vec, planes, lambda x, w: x * w)
+
+
+def nearest_centroid_expr(vec: Column, centroids: np.ndarray) -> Column:
+    """Nearest-centroid id (int): argmin of the squared euclidean
+    distances, first minimum on ties (the oracle's ORDER BY dist, cid).
+
+    The distances are bound once through a one-element transform, and
+    the id is never null (-1, in no list, for a null vector), so
+    Catalyst neither repeats the fold for `array_min` nor re-runs it
+    in an inferred `isnotnull` join filter."""
+    d = _rows_expr(vec, centroids, lambda x, c: (x - c) * (x - c))
+    argmin = F.element_at(F.transform(
+        F.array(d), lambda ds: F.array_position(ds, F.array_min(ds)) - 1), 1)
+    return F.coalesce(argmin, F.lit(-1)).cast("int")
 
 
 def _sign_bits(dots: Column, start: int, rows: int) -> Column:
@@ -71,44 +112,41 @@ def banded_buckets_expr(vec: Column, planes: np.ndarray, bands: int,
         1)
 
 
-def cosine_topk(vectors: DataFrame, query_ids: list[int], k: int,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                round_to: int = 9) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (excluding
-    self).  Ranking key is the ROUNDED similarity (+ id tie-break) so
-    the result is invariant to FP summation order."""
-    spark = vectors.sparkSession
-    qrows = (vectors.where(F.col(id_col).isin(query_ids))
-                    .select(F.col(id_col).alias("query_id"), vec_col)
-                    .collect())
-    qmat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-
-    @pandas_udf("array<double>")
-    def _sims(vec: pd.Series) -> pd.Series:
-        m = np.array(vec.tolist(), dtype=np.float64)
-        nrm = np.sqrt((m * m).sum(axis=1))
-        sims = (m @ qmat.T) / np.outer(nrm, qnorm)
-        return pd.Series(list(sims))
-
-    qid_arr = F.array(*[F.lit(int(q)) for q in qids.tolist()])
-    sims = (vectors.select(id_col, _sims(F.col(vec_col)).alias("s"))
-                   .select(id_col,
-                           F.explode(F.arrays_zip(qid_arr.alias("query_id"),
-                                                  F.col("s").alias("sim")))
-                           .alias("z"))
-                   .select(F.col("z.query_id").cast("long").alias("query_id"),
-                           F.col(id_col),
-                           F.round(F.col("z.sim"), round_to).alias("sim"))
-                   .where(F.col("query_id") != F.col(id_col)))
-    from pyspark.sql import Window
-
+def _top_k(sims: DataFrame, k: int, id_col: str) -> DataFrame:
+    """(query_id, rank, id, sim): the k best of each query, ranked on
+    the ROUNDED similarity, then id, so the result is invariant to FP
+    summation order."""
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("sim").desc(), F.col(id_col).asc()))
     return (sims.withColumn("rank", F.row_number().over(w).cast("long"))
                 .where(F.col("rank") <= k)
                 .select("query_id", "rank", id_col, "sim"))
+
+
+def _queries(v: DataFrame, query_ids: list[int], id_col: str) -> DataFrame:
+    """(query_id long, _q, _qn): the query rows of a `_normed` frame."""
+    return (v.where(F.col(id_col).isin(list(query_ids)))
+             .select(F.col(id_col).cast("long").alias("query_id"),
+                     F.col("_v").alias("_q"), F.col("_n").alias("_qn")))
+
+
+def _cos_sim(round_to: int) -> Column:
+    """`sim`: the rounded cosine of vector (_v, norm _n) against vector
+    (_q, norm _qn)."""
+    return F.round(cosine_expr(F.col("_v"), F.col("_q"), F.col("_n"),
+                               F.col("_qn")), round_to).alias("sim")
+
+
+def cosine_topk(vectors: DataFrame, query_ids: list[int], k: int,
+                vec_col: str = "embedding", id_col: str = "vec_id",
+                round_to: int = 9) -> DataFrame:
+    """Exact top-k cosine neighbors for each query vector (excluding
+    self): the query rows are broadcast against every vector."""
+    v = _normed(vectors, vec_col, id_col)
+    q = _queries(v, query_ids, id_col)
+    sims = (v.join(F.broadcast(q), F.col("query_id") != F.col(id_col))
+             .select("query_id", id_col, _cos_sim(round_to)))
+    return _top_k(sims, k, id_col)
 
 
 def neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
@@ -126,13 +164,10 @@ def neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
     bucket (near-constant embeddings, zero vectors) would otherwise
     contribute O(m^2) pairs at web scale.  The windowed count shuffles
     on the same (band, bucket) key the join needs."""
-    from pyspark.sql import Window
-
     planes = hyperplanes(n=bands * rows) if planes is None else planes
     band_buckets = banded_buckets_expr(F.col(vec_col), planes, bands, rows)
-    b = vectors.select(
-        id_col, vec_col,
-        F.posexplode(band_buckets).alias("band", "bucket"))
+    b = _normed(vectors, vec_col, id_col,
+                F.posexplode(band_buckets).alias("band", "bucket"))
     bucket_n = F.count("*").over(Window.partitionBy("band", "bucket"))
     b = (b.withColumn("_bn", bucket_n)
           .where(F.col("_bn") <= max_bucket).drop("_bn"))
@@ -143,21 +178,11 @@ def neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
                     & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
               .select(F.col(f"a.{id_col}").alias("vec_a"),
                       F.col(f"b.{id_col}").alias("vec_b"),
-                      F.col(f"a.{vec_col}").alias("va"),
-                      F.col(f"b.{vec_col}").alias("vb"))
+                      "a._v", "a._n", F.col("b._v").alias("_q"),
+                      F.col("b._n").alias("_qn"))
               .dropDuplicates(["vec_a", "vec_b"]))
-
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.array(va.tolist(), dtype=np.float64)
-        mb = np.array(vb.tolist(), dtype=np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.sqrt((ma * ma).sum(axis=1)) * np.sqrt((mb * mb).sum(axis=1))
-        return pd.Series(num / den)
-
-    return (pairs.withColumn("sim", F.round(_cos("va", "vb"), round_to))
-                 .where(F.col("sim") >= threshold)
-                 .select("vec_a", "vec_b", "sim"))
+    return (pairs.select("vec_a", "vec_b", _cos_sim(round_to))
+                 .where(F.col("sim") >= threshold))
 
 
 # ------------------------------------------------------------------- IVF
@@ -184,21 +209,6 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int = 16,
     return C
 
 
-def assign_centroid_udf(centroids: np.ndarray):
-    """pandas UDF: nearest-centroid id (squared-euclidean argmin,
-    first-min on ties — matches the SQL oracle's strict-less chain)."""
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("int")
-    def _assign(vec: pd.Series) -> pd.Series:
-        m = np.array(vec.tolist(), dtype=np.float64)
-        d = np.stack([((m - C[j]) ** 2).sum(axis=1)
-                      for j in range(len(C))], axis=1)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    return _assign
-
-
 def ivf_topk(vectors: DataFrame, query_ids: list[int], k: int,
              centroids: np.ndarray | None = None, nprobe: int = 4,
              n_centroids: int = 16, vec_col: str = "embedding",
@@ -209,52 +219,24 @@ def ivf_topk(vectors: DataFrame, query_ids: list[int], k: int,
 
     The scan touches ~nprobe/n_centroids of the data per query — the
     sub-linear 100 TB path; cosine_topk remains the exact baseline.
+    The probe choice runs on the driver over the collected query
+    vectors, which ride in the broadcast probe rows to the candidates.
     Returns (query_id, rank, vec_id, sim)."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    spark = vectors.sparkSession
     if centroids is None:
         centroids = kmeans_centroids(vectors, n_centroids=n_centroids,
                                      vec_col=vec_col, id_col=id_col)
     C = np.asarray(centroids, dtype=np.float64)
-    qrows = (vectors.where(F.col(id_col).isin(list(query_ids)))
-                    .select(F.col(id_col).alias("query_id"), vec_col)
-                    .collect())
-    qmat = {int(r["query_id"]): np.array(r[vec_col], dtype=np.float64)
-            for r in qrows}
+    v = _normed(vectors, vec_col, id_col)
     probe_rows = []
-    for qid, qv in qmat.items():
-        d = ((C - qv) ** 2).sum(axis=1)
+    for r in _queries(v, query_ids, id_col).collect():
+        d = ((C - np.array(r["_q"], dtype=np.float64)) ** 2).sum(axis=1)
         for cid in np.argsort(d, kind="stable")[:nprobe]:
-            probe_rows.append((qid, int(cid)))
-    probes = spark.createDataFrame(probe_rows, "query_id long, cid int")
+            probe_rows.append((r["query_id"], int(cid), r["_q"], r["_qn"]))
+    probes = vectors.sparkSession.createDataFrame(
+        probe_rows, "query_id long, cid int, _q array<double>, _qn double")
 
-    assigned = vectors.withColumn(
-        "cid", assign_centroid_udf(C)(F.col(vec_col)))
-    cand = (assigned.join(broadcast(probes), "cid")
-                    .where(F.col("query_id") != F.col(id_col)))
-
-    qid_order = sorted(qmat)
-    QM = np.stack([qmat[q] for q in qid_order])
-    Qn = np.sqrt((QM * QM).sum(axis=1))
-    qindex = {q: i for i, q in enumerate(qid_order)}
-
-    @pandas_udf("double")
-    def _cos_q(vec: pd.Series, qid: pd.Series) -> pd.Series:
-        m = np.array(vec.tolist(), dtype=np.float64)
-        idx = qid.map(qindex).to_numpy(np.int64)
-        qm = QM[idx]
-        num = (m * qm).sum(axis=1)
-        den = np.sqrt((m * m).sum(axis=1)) * Qn[idx]
-        return pd.Series(num / den)
-
-    sims = cand.select(
-        "query_id", id_col,
-        F.round(_cos_q(F.col(vec_col), F.col("query_id")), round_to)
-         .alias("sim"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("sim").desc(), F.col(id_col).asc()))
-    return (sims.withColumn("rank", F.row_number().over(w).cast("long"))
-                .where(F.col("rank") <= k)
-                .select("query_id", "rank", id_col, "sim"))
+    assigned = v.withColumn("cid", nearest_centroid_expr(F.col("_v"), C))
+    sims = (assigned.join(F.broadcast(probes), "cid")
+                    .where(F.col("query_id") != F.col(id_col))
+                    .select("query_id", id_col, _cos_sim(round_to)))
+    return _top_k(sims, k, id_col)

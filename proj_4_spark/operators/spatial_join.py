@@ -117,6 +117,8 @@ def ray_cast_udf(polygon_rows: list[dict]):
     ids, n, start = ids[order], n[order], start[order]
 
     def kernel(px, py, pid):
+        if not len(ids):
+            return np.zeros(len(px), dtype=bool)
         pos = np.minimum(np.searchsorted(ids, pid), len(ids) - 1)
         known = ids[pos] == pid
         return _ray_cast(edges, px, py, n[pos], start[pos]) & known

@@ -117,17 +117,6 @@ def _stop_map() -> Column:
                           for x in (F.lit(wd), F.lit(1))])
 
 
-def stopword_ratio(text: Column) -> Column:
-    def derive(s: Column) -> Column:
-        return s["stop"].cast("double") / s["n"].cast("double")
-
-    w = tokens(text)
-    stop = F.aggregate(w, F.lit(0), lambda acc, t: acc + F.coalesce(
-        F.element_at(_stop_map(), t), F.lit(0)))
-    return _bind(F.struct(F.size(w).alias("n"), stop.alias("stop")),
-                 derive)
-
-
 def _quality_parts_struct(text: Column) -> Column:
     """struct(n, stop, tl): token count, stopword count, total token
     length — ONE stop-map fold; total length is the codegen

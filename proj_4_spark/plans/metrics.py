@@ -1,17 +1,12 @@
 """Pipeline observability: row-count/latency metrics via df.observe
-(Spark's native metric channel — no extra jobs) plus per-partition
-lineage rows.
+(Spark's native metric channel — no extra jobs).
 
-SURVEY.md §2.5 / M5: per-partition lineage + row-count/latency
-metrics written alongside outputs.
+SURVEY.md §2.5 / M5: row-count/latency metrics written alongside
+outputs.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -22,38 +17,3 @@ def observed(df: DataFrame, name: str, *metrics) -> tuple[DataFrame, Observation
     obs = Observation(name)
     base = [F.count(F.lit(1)).alias("rows")]
     return df.observe(obs, *base, *metrics), obs
-
-
-def with_partition_lineage(df: DataFrame) -> DataFrame:
-    """Append (part_id, part_rows) lineage columns via mapInPandas —
-    the per-partition lineage record the north rule asks to persist
-    alongside outputs."""
-    cols = df.columns
-    schema = df.schema.simpleString()[7:-1]  # struct<...> -> ...
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema += ", part_id int, part_rows long"
-
-    def _tag(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        buf = list(it)
-        total = sum(len(p) for p in buf)
-        for pdf in buf:
-            pdf = pdf.copy()
-            pdf["part_id"] = pid
-            pdf["part_rows"] = total
-            yield pdf
-
-    return df.mapInPandas(_tag, schema)
-
-
-def partition_histogram(df: DataFrame) -> list[tuple[int, int]]:
-    """(partition_id, rows) — the skew diagnostic used to pick
-    salting candidates."""
-    from pyspark.sql.functions import spark_partition_id
-
-    rows = (df.groupBy(spark_partition_id().alias("pid")).count()
-              .orderBy("pid").collect())
-    return [(r["pid"], r["count"]) for r in rows]

@@ -1,19 +1,13 @@
-"""Explicit skew handling: salting for hot cells.
+"""Explicit skew handling: two-stage aggregation for hot cells.
 
 The page distribution is Zipf over city cells (the top CBD cell holds
-~20-26%% of all points — sources/coords.py), so a naive
-``groupBy(cell)`` or cell equi-join puts a quarter of the data in one
-shuffle partition.  Two mitigations, composable with AQE
-(`spark.sql.adaptive.skewJoin.enabled`):
-
-- `salted_agg`: two-stage aggregation — append a random salt in
-  [0, n_salt), partially aggregate on (key, salt), then finally
-  aggregate on key.  The first shuffle spreads the hot key over
-  n_salt reducers; the second handles only n_salt rows per key.
-
-- `salted_join_hot`: replicate the small side's hot keys n_salt times
-  and salt the big side's matching rows, so a hot join key fans out
-  over n_salt tasks.  Cold keys keep salt 0 (no replication cost).
+~20-26% of all points — sources/coords.py), so a naive
+``groupBy(cell)`` puts a quarter of the data in one shuffle
+partition.  `salted_agg` appends a salt in [0, n_salt), partially
+aggregates on (key, salt), then finally aggregates on key: the first
+shuffle spreads the hot key over n_salt reducers; the second handles
+only n_salt rows per key.  Skewed joins are left to AQE
+(`spark.sql.adaptive.skewJoin.enabled`).
 
 Salts are derived from a hash of a stable id column, not rand(), so
 the plan stays deterministic and resumable.
@@ -39,35 +33,3 @@ def salted_agg(df: DataFrame, key_cols: list[str], id_col: str,
                      .agg(F.count("*").alias("_pc")))
     return (partial.groupBy(*key_cols)
                    .agg(F.sum("_pc").alias(count_alias)))
-
-
-def salted_join_hot(big: DataFrame, small: DataFrame, key: str,
-                    hot_keys: list, id_col: str,
-                    n_salt: int = 16) -> DataFrame:
-    """Equi-join with hot-key fanout.
-
-    `small` rows whose key is in `hot_keys` are replicated n_salt
-    times with salts 0..n_salt-1; all other rows get salt 0.  `big`
-    rows of hot keys get a deterministic salt, others 0.  The join is
-    then on (key, salt).
-    """
-    hot = F.array(*[F.lit(k) for k in hot_keys])
-    salts = F.when(F.array_contains(hot, F.col(key)),
-                   F.sequence(F.lit(0), F.lit(n_salt - 1))
-                   ).otherwise(F.array(F.lit(0)))
-    small_s = (small.withColumn("_salt", F.explode(salts)))
-    big_s = big.withColumn(
-        "_salt",
-        F.when(F.array_contains(hot, F.col(key)),
-               det_salt(F.col(id_col), n_salt)).otherwise(F.lit(0)))
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
-
-
-def top_hot_keys(df: DataFrame, key: str, top_n: int = 8,
-                 min_share: float = 0.01) -> list:
-    """Driver helper: find keys holding more than `min_share` of rows
-    (sampled) — candidates for explicit salting."""
-    total = df.count()
-    rows = (df.groupBy(key).count()
-              .orderBy(F.desc("count")).limit(top_n).collect())
-    return [r[key] for r in rows if r["count"] / max(total, 1) >= min_share]

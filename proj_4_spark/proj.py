@@ -4,7 +4,7 @@ The Spark-first restatement of PROJ's query lifecycle
 (/root/reference/src/create.cpp:206-303, src/init.cpp:434-714,
 src/pipeline.cpp): parsing + analysis + constant setup all happen once
 on the driver, producing an immutable, picklable ``Transform`` that is
-broadcast to executors and applied to NumPy batches inside pandas UDFs.
+broadcast to executors and applied to NumPy batches inside Arrow UDFs.
 
 Execution semantics (prepare / kernel / finalize) mirror
 /root/reference/src/fwd.cpp:40-174 and src/inv.cpp:39-141:

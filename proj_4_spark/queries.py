@@ -76,7 +76,7 @@ FROM coords ORDER BY doc_id
 """)
 def q_webmerc_fwd(spark, sf_dir):
     """Spherical web-mercator forward (merc.cpp:76-84) via the fused
-    projection pandas UDF."""
+    projection Arrow UDF."""
     df = G.with_projected(_coords(spark, sf_dir), "+proj=webmerc")
     return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
                      (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
@@ -240,7 +240,7 @@ FROM geocent ORDER BY doc_id
 """)
 def q_cart_helmert_pipeline(spark, sf_dir):
     """Fused pipeline: cart -> 7-param Helmert (helmert.cpp:161-456),
-    one pandas-UDF invocation for the whole step list (operator fusion
+    one Arrow-UDF invocation for the whole step list (operator fusion
     — the Spark analogue of src/pipeline.cpp:163-193)."""
     df = _coords(spark, sf_dir)
     pstr = ("+proj=pipeline +step +proj=cart +ellps=GRS80 +step "
@@ -819,9 +819,10 @@ SELECT query_id, rank, vec_id, sim FROM r WHERE rank <= 5
 ORDER BY query_id, rank
 """)
 def q_embed_cosine_top5(spark, sf_dir):
-    """Exact brute-force cosine top-5 for 10 query vectors: one BLAS
-    matmul per Arrow batch against the broadcast query matrix, ranked
-    on ROUNDED similarity (summation-order invariant)."""
+    """Exact brute-force cosine top-5 for 10 query vectors: the query
+    rows are broadcast against every vector and each pair takes one
+    Catalyst cosine expression (dot products summed in element order);
+    ranked on ROUNDED similarity (summation-order invariant)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return (SIM.cosine_topk(e, list(range(10)), 5)
                .orderBy("query_id", "rank"))
@@ -1012,7 +1013,7 @@ FROM documents ORDER BY doc_id
 """)
 def q_multimodal_meta(spark, sf_dir):
     """Multimodal plumbing: text -> opaque binary column ->
-    mapInPandas metadata extraction (byte length + deterministic fake
+    Arrow-batched metadata extraction (byte length + deterministic fake
     decode dims).  Real image/audio decode is stubbed (libs absent);
     the Spark-side schema/batching/partitioning is real — see
     operators/multimodal.py."""
@@ -1412,7 +1413,7 @@ FROM coords ORDER BY doc_id
 def q_axisswap_unitconvert(spark, sf_dir):
     """Pipeline webmerc -> axisswap order=2,1 -> unitconvert
     xy_out=us-ft (axisswap.cpp, unitconvert.cpp linear units), fused
-    into one pandas-UDF step list."""
+    into one Arrow-UDF step list."""
     df = _coords(spark, sf_dir)
     u = G.project_udf("+proj=pipeline +step +proj=webmerc "
                       "+step +proj=axisswap +order=2,1 "
@@ -2023,8 +2024,9 @@ FROM documents ORDER BY doc_id
 def q_mined_coords_dms(spark, sf_dir):
     """DMS-mention miner check (dmstor.cpp:18-84 forms): embed a
     deterministic 48°51'24.5"N-style mention per document, run the
-    vectorized DMS extractall miner, and the decimal degrees it
-    returns must equal the arithmetic the generator used."""
+    Catalyst DMS miner (one regex scan of the text per row), and the
+    decimal degrees it returns must equal the arithmetic the generator
+    used."""
     from .sources.pages import mine_coords_dms
 
     d = _docs(spark, sf_dir)

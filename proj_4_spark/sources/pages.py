@@ -7,16 +7,15 @@ lang string)`.  Two hard rules implemented here:
 - **`text` is never rewritten** — every transformation projects it
   through untouched (byte-identical per url); derived columns ride
   alongside.
-- **no per-row Python** — the decimal coordinate miner is one
-  Catalyst expression (`regexp_extract_all` + `zip_with` +
+- **no per-row Python** — both coordinate miners (decimal and DMS)
+  are one Catalyst expression each (`regexp_extract_all` +
   `posexplode`), so nothing crosses into Python and columns no output
-  uses (the `html` copy) are pruned; the DMS miner is a vectorized
-  pandas-str regex over Arrow batches.
+  uses (the `html` copy) are pruned.
 
-The decimal miner's regex runs in Java, whose `\d` and `\s` are
-ASCII only, so `COORD_RE` spells both out: digits are ASCII `[0-9]`,
-and the whitespace class lists exactly the characters Python's `\s`
-matches (a NBSP or U+3000 after the comma still matches).  Non-ASCII
+The miners' regexes run in Java, whose `\d` and `\s` are ASCII only,
+so `COORD_RE` and `DMS_RE` spell both out: digits are ASCII `[0-9]`,
+and the whitespace class `_WS` lists exactly the characters Python's
+`\s` matches (a NBSP or U+3000 separator still matches).  Non-ASCII
 digits (e.g. Arabic-Indic "٤٨.٥, ٢.٣") are not mined.
 
 `synthesize_pages` builds a deterministic pages table from the driver
@@ -26,8 +25,7 @@ mentions per FIXTURES.md §1.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .coords import lonlat_sql
@@ -72,6 +70,23 @@ def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _explode_mentions(pages: DataFrame, text_col: str,
+                      mentions: Column) -> DataFrame:
+    """Every input column but `text_col`, then (mention_idx int, lat
+    double, lon double) for each in-range element of `mentions` (an
+    array of struct(lat, lon) per row).  `posexplode` numbers the
+    mentions before the range filter, so `mention_idx` is the match
+    position (as pandas `extractall` numbers it); lat must lie in
+    [-90, 90] and lon in [-180, 180]."""
+    cols = [c for c in pages.columns if c != text_col]
+    m = pages.select(*[pages[c] for c in cols],
+                     F.posexplode(mentions).alias("mention_idx", "_m"))
+    lat, lon = F.col("_m.lat"), F.col("_m.lon")
+    return (m.where((F.abs(lat) <= 90.0) & (F.abs(lon) <= 180.0))
+             .select(*[m[c] for c in cols], "mention_idx",
+                     lat.alias("lat"), lon.alias("lon")))
+
+
 def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """Extract every 'lat, lon' mention of `COORD_RE`: every input
     column but `text_col`, then (mention_idx int, lat double,
@@ -79,70 +94,49 @@ def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
 
     One Catalyst expression, no Python UDF: `regexp_extract_all` per
     group, zipped into (lat, lon) pairs and numbered by `posexplode`
-    before the range filter, so `mention_idx` is the match position
-    (as pandas `extractall` numbers it).  Out-of-range pairs are
-    dropped (lat in [-90,90], lon in [-180,180]); a null or empty text
-    gives no row.  Only ASCII digits are mined (see the module
-    docstring)."""
-    cols = [c for c in pages.columns if c != text_col]
+    before the range filter.  A null or empty text gives no row.  Only
+    ASCII digits are mined (see the module docstring)."""
     text, pat = pages[text_col], F.lit(COORD_RE)
     pairs = F.zip_with(
         F.regexp_extract_all(text, pat, F.lit(1)),
         F.regexp_extract_all(text, pat, F.lit(2)),
         lambda a, b: F.struct(a.cast("double").alias("lat"),
                               b.cast("double").alias("lon")))
-    m = pages.select(*[pages[c] for c in cols],
-                     F.posexplode(pairs).alias("mention_idx", "_m"))
-    lat, lon = F.col("_m.lat"), F.col("_m.lon")
-    return (m.where((F.abs(lat) <= 90.0) & (F.abs(lon) <= 180.0))
-             .select(*[m[c] for c in cols], "mention_idx",
-                     lat.alias("lat"), lon.alias("lon")))
+    return _explode_mentions(pages, text_col, pairs)
 
 
 # DMS mentions: 48°51'24.5"N 2°21'03"E — ASCII d/'/" and the unicode
 # °/′/″ marks both accepted, hemisphere letter mandatory (the same
-# forms proj_dmstor parses, src/dmstor.cpp:18-84)
-DMS_RE = ("(\\d{1,2})[°d](\\d{1,2})['′](\\d{1,2}(?:\\.\\d+)?)[\"″]([NS])"
-          "[,;\\s]+"
-          "(\\d{1,3})[°d](\\d{1,2})['′](\\d{1,2}(?:\\.\\d+)?)[\"″]([EW])")
+# forms proj_dmstor parses, src/dmstor.cpp:18-84).  ASCII digits and
+# `_WS`, as in COORD_RE.
+DMS_RE = ("([0-9]{1,2})[°d]([0-9]{1,2})['′]"
+          "([0-9]{1,2}(?:\\.[0-9]+)?)[\"″]([NS])"
+          "(?:[,;]|" + _WS + ")+"
+          "([0-9]{1,3})[°d]([0-9]{1,2})['′]"
+          "([0-9]{1,2}(?:\\.[0-9]+)?)[\"″]([EW])")
+
+
+def _dms_degrees(d: Column, m: Column, s: Column, hemi: Column,
+                 neg: str) -> Column:
+    """deg + min/60 + sec/3600 in that order, negated for S/W."""
+    v = (d.cast("double") + m.cast("double") / 60.0
+         + s.cast("double") / 3600.0)
+    return F.when(hemi == neg, -v).otherwise(v)
 
 
 def mine_coords_dms(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """Extract every DMS 'lat lon' mention: (…, mention_idx, lat, lon)
-    in signed decimal degrees (deg + min/60 + sec/3600, S/W negative).
+    in signed decimal degrees (deg + min/60 + sec/3600, S/W negative),
+    the columns and types of :func:`mine_coords`.
 
-    Vectorized pandas `str.extractall` over Arrow batches inside
-    mapInPandas — no per-row Python; out-of-range pairs dropped."""
-    cols = [c for c in pages.columns if c != text_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pages.schema.fields if f.name != text_col
-    ) + ", mention_idx int, lat double, lon double"
+    One Catalyst expression: one `regexp_extract_all` scans the text,
+    and each match is split into its 8 groups by `regexp_extract` on
+    the match alone.  Out-of-range pairs are dropped; a null or empty
+    text gives no row.  Only ASCII digits are mined."""
+    def pair(match: Column) -> Column:
+        g = [F.regexp_extract(match, DMS_RE, i) for i in range(1, 9)]
+        return F.struct(_dms_degrees(*g[:4], "S").alias("lat"),
+                        _dms_degrees(*g[4:], "W").alias("lon"))
 
-    def _mine(batches):
-        for pdf in batches:
-            ex = pdf[text_col].str.extractall(DMS_RE)
-            if len(ex) == 0:
-                continue
-            ex.columns = ["latd", "latm", "lats", "lath",
-                          "lond", "lonm", "lons", "lonh"]
-            lat = (ex.latd.astype("float64")
-                   + ex.latm.astype("float64") / 60.0
-                   + ex.lats.astype("float64") / 3600.0)
-            lat = np.where(ex.lath.to_numpy() == "S", -lat, lat)
-            lon = (ex.lond.astype("float64")
-                   + ex.lonm.astype("float64") / 60.0
-                   + ex.lons.astype("float64") / 3600.0)
-            lon = np.where(ex.lonh.to_numpy() == "W", -lon, lon)
-            ex = ex.reset_index()
-            ex.rename(columns={"level_0": "_row", "match": "mention_idx"},
-                      inplace=True)
-            ok = (np.abs(lat) <= 90.0) & (np.abs(lon) <= 180.0)
-            base = pdf[cols].reset_index(drop=True)
-            out = base.iloc[ex["_row"].to_numpy()[ok]].reset_index(drop=True)
-            out["mention_idx"] = ex["mention_idx"].to_numpy()[ok].astype("int32")
-            out["lat"] = lat[ok]
-            out["lon"] = lon[ok]
-            yield out
-
-    return pages.mapInPandas(_mine, schema)
+    matches = F.regexp_extract_all(pages[text_col], F.lit(DMS_RE), F.lit(0))
+    return _explode_mentions(pages, text_col, F.transform(matches, pair))

@@ -2,7 +2,7 @@
 document/page stream.
 
 The streaming counterpart of queries.q_s2_cell_counts_l8 — the
-north-star tiling aggregation as readStream -> pandas-UDF cell encode
+north-star tiling aggregation as readStream -> Arrow-UDF cell encode
 -> groupBy(cell) -> writeStream.  The S2 encode is the same
 Arrow-batched UDF the batch path uses (functions/geo.py), so a
 production deployment can point the same code at a Kafka/files source

@@ -12,18 +12,9 @@ PROJSTR="${3:?proj-string}"
 DIRECTION="${4:-fwd}"
 MASTER="${5:-local[8]}"
 
-ZIP=/tmp/proj_4_spark.zip
-rm -f "$ZIP"
-python - <<EOF
-import zipfile, pathlib
-z = zipfile.ZipFile("$ZIP", "w")
-for p in pathlib.Path("proj_4_spark").rglob("*.py"):
-    z.write(p, p.as_posix())
-z.close()
-print("packaged", "$ZIP")
-EOF
+source scripts/package_py_files.sh
 
-exec spark-submit \
+spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --conf spark.sql.adaptive.enabled=true \

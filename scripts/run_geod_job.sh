@@ -13,18 +13,9 @@ OUT="${2:?output dir}"
 MODE="${3:-inverse}"
 MASTER="${4:-local[8]}"
 
-ZIP=/tmp/proj_4_spark.zip
-rm -f "$ZIP"
-python - <<EOF
-import zipfile, pathlib
-z = zipfile.ZipFile("$ZIP", "w")
-for p in pathlib.Path("proj_4_spark").rglob("*.py"):
-    z.write(p, p.as_posix())
-z.close()
-print("packaged", "$ZIP")
-EOF
+source scripts/package_py_files.sh
 
-exec spark-submit \
+spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --conf spark.sql.adaptive.enabled=true \

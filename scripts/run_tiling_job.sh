@@ -10,18 +10,9 @@ MASTER="${1:-local[8]}"
 SF_DIR="${2:-/root/testdata/sf0.001}"
 OUT_DIR="${3:-/tmp/tiling_out}"
 
-ZIP=/tmp/proj_4_spark.zip
-rm -f "$ZIP"
-python - <<EOF
-import zipfile, pathlib
-z = zipfile.ZipFile("$ZIP", "w")
-for p in pathlib.Path("proj_4_spark").rglob("*.py"):
-    z.write(p, p.as_posix())
-z.close()
-print("packaged", "$ZIP")
-EOF
+source scripts/package_py_files.sh
 
-exec spark-submit \
+spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --conf spark.sql.adaptive.enabled=true \

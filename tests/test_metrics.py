@@ -1,7 +1,6 @@
 from pyspark.sql import functions as F
 
-from proj_4_spark.plans.metrics import (
-    observed, partition_histogram, with_partition_lineage)
+from proj_4_spark.plans.metrics import observed
 from proj_4_spark.sources.coords import coords_df
 
 
@@ -12,21 +11,3 @@ def test_observe_counts(spark, sf_dir):
     m = obs.get
     assert m["rows"] == 500
     assert -90 <= m["avg_lat"] <= 90
-
-
-def test_partition_lineage(spark, sf_dir):
-    df = coords_df(spark, sf_dir).repartition(4)
-    tagged = with_partition_lineage(df)
-    rows = tagged.collect()
-    assert len(rows) == 500
-    by_pid = {}
-    for r in rows:
-        by_pid.setdefault(r["part_id"], set()).add(r["part_rows"])
-    # each partition reports one consistent row count; totals add up
-    assert sum(next(iter(v)) for v in by_pid.values()) == 500
-
-
-def test_partition_histogram(spark, sf_dir):
-    df = coords_df(spark, sf_dir).repartition(4)
-    hist = partition_histogram(df)
-    assert sum(n for _, n in hist) == 500

@@ -185,3 +185,110 @@ def test_mine_coords_plan_is_catalyst(spark, sf_dir):
     assert [f.name for f in mine_coords(p).schema] == [
         "url", "warc_ts", "html", "lang", "doc_id", "mention_idx",
         "lat", "lon"]
+
+
+def _reference_mine_dms(rows):
+    """The pandas `extractall` DMS miner the Catalyst one must equal:
+    (url, mention_idx, lat, lon) of every in-range DMS_RE match, in
+    decimal degrees (deg + min/60 + sec/3600, negated for S/W)."""
+    import pandas as pd
+
+    from proj_4_spark.sources.pages import DMS_RE
+
+    pdf = pd.DataFrame(rows, columns=["url", "text"])
+    ex = pdf["text"].str.extractall(DMS_RE)
+    out = []
+    for (i, k), g in ex.iterrows():
+        lat = float(g[0]) + float(g[1]) / 60.0 + float(g[2]) / 3600.0
+        lon = float(g[4]) + float(g[5]) / 60.0 + float(g[6]) / 3600.0
+        lat = -lat if g[3] == "S" else lat
+        lon = -lon if g[7] == "W" else lon
+        if abs(lat) <= 90.0 and abs(lon) <= 180.0:
+            out.append((pdf["url"][i], int(k), lat, lon))
+    return sorted(out)
+
+
+def _mined_dms(spark, rows):
+    from proj_4_spark.sources.pages import mine_coords_dms
+
+    df = spark.createDataFrame(rows, "url string, text string")
+    return sorted((r["url"], r["mention_idx"], r["lat"], r["lon"])
+                  for r in mine_coords_dms(df).collect())
+
+
+DMS_SEPARATORS = [" ", ",", ", ", ";", "; ", "\t", "\xa0", "\u3000", ",\n",
+                  " ; ", "\x85"]
+
+
+def test_mine_coords_dms_matches_extractall_reference(spark):
+    """Seeded DMS texts (both mark forms, every kind of separator,
+    out-of-range degrees and minutes, glued digits, fractional seconds)
+    plus fixed cases: exactly the rows of the pandas reference."""
+    rng = np.random.default_rng(20261018)
+
+    def digits(n):
+        return "".join(rng.choice(list("0123456789"), n))
+
+    def part(deg_digits, hemi):
+        marks = ("°", "′", "″") if rng.random() < 0.5 else ("d", "'", '"')
+        sec = digits(rng.integers(1, 3))
+        if rng.random() < 0.4:
+            sec += "." + digits(rng.integers(1, 6))
+        return (digits(rng.integers(1, deg_digits + 1)) + marks[0]
+                + digits(rng.integers(1, 3)) + marks[1] + sec + marks[2]
+                + rng.choice(list(hemi)))
+
+    rows = []
+    for i in range(400):
+        parts = []
+        for _ in range(rng.integers(0, 5)):
+            glue = digits(rng.integers(1, 3)) if rng.random() < 0.2 else ""
+            sep = DMS_SEPARATORS[rng.integers(len(DMS_SEPARATORS))]
+            parts.append(glue + part(2, "NS") + sep + part(3, "EW"))
+        rows.append((f"u{i}", " word ".join(parts)))
+    fixed = [
+        ("marks", "Eiffel 48°51′24.5″N 2°21′03″E and "
+                  "48d51'24.5\"N 2d21'03\"E"),
+        ("seps", "1°2'3\"N,4°5'6\"E 1°2'3\"N;4°5'6\"E 1°2'3\"N\t4°5'6\"E "
+                 "1°2'3\"N\xa04°5'6\"E 1°2'3\"N\u30004°5'6\"E"),
+        ("multi", "a 10°30'00\"N 20°00'00\"E b 95°00'00\"N 20°00'00\"E "
+                  "c 89°99'00\"N 1°0'0\"E d 12°0'0\"S 181°0'0\"W "
+                  "e 5°06'07.2\"S 3°02'01\"W"),
+        ("signs", "33d52'04\"S, 151d12'36\"W"),
+        ("empty", ""),
+        ("null", None),
+    ]
+    rows += fixed
+    ref = _reference_mine_dms(rows)
+    got = _mined_dms(spark, rows)
+    assert got == ref
+    by_url = {}
+    for u, k, lat, lon in got:
+        by_url.setdefault(u, []).append((k, lat, lon))
+    eiffel = (48 + 51 / 60 + 24.5 / 3600, 2 + 21 / 60 + 3 / 3600)
+    assert by_url["marks"] == [(0, *eiffel), (1, *eiffel)]
+    assert [k for k, _, _ in by_url["seps"]] == [0, 1, 2, 3, 4]
+    assert [k for k, _, _ in by_url["multi"]] == [0, 4]
+    assert by_url["multi"][1][1:] == (-(5 + 6 / 60 + 7.2 / 3600),
+                                      -(3 + 2 / 60 + 1 / 3600))
+    assert by_url["signs"] == [(0, -(33 + 52 / 60 + 4 / 3600),
+                                -(151 + 12 / 60 + 36 / 3600))]
+    assert not {"empty", "null"} & set(by_url)
+    assert len(got) > 200  # the seeded texts hold many mentions
+
+
+def test_mine_coords_dms_ascii_digits_only_and_schema(spark):
+    """Non-ASCII digits are not mined; the output has mine_coords'
+    columns and types, also for an empty frame."""
+    from proj_4_spark.sources.pages import mine_coords_dms
+
+    rows = [("arabic", "٤٨°٥١'٢٤\"N ٢°٢١'٠٣\"E"),  # Arabic-Indic digits
+            ("fullwidth", "４８°５１'２４\"N ２°２１'０３\"E"),
+            ("ascii", "48°51'24\"N 2°21'03\"E")]
+    assert [r[:2] for r in _mined_dms(spark, rows)] == [("ascii", 0)]
+    p = spark.createDataFrame([], "url string, n int, text string")
+    out = mine_coords_dms(p)
+    assert out.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("url", "string"), ("n", "int"), ("mention_idx", "int"),
+        ("lat", "double"), ("lon", "double")]

@@ -249,7 +249,7 @@ def test_ray_cast_udf_bit_identical_to_per_polygon_loop(spark):
     """The edge-slot kernel gives the per-polygon loop's answer
     bit for bit: 3-32-vertex star rings with non-contiguous ids, points
     exactly on vertices, on edge midpoints and on vertex rows, more rows
-    than one run_chunked block, and a 0-row batch."""
+    than one run_chunked block, a 0-row batch, and no polygons."""
     import pandas as pd
 
     from proj_4_spark.functions.geo import CHUNK
@@ -294,6 +294,11 @@ def test_ray_cast_udf_bit_identical_to_per_polygon_loop(spark):
     assert len(inside(empty, empty, pd.Series([], dtype=np.int64))) == 0
     unknown = inside(pd.Series([0.5]), pd.Series([0.5]), pd.Series([-6]))
     assert not any(unknown.to_pylist())
+    # no polygons at all: every id is unknown, also on a 0-row batch
+    none = ray_cast_udf([]).func
+    assert none(pd.Series(lon[:5]), pd.Series(lat[:5]),
+                pd.Series(pid[:5])).to_pylist() == [False] * 5
+    assert len(none(empty, empty, pd.Series([], dtype=np.int64))) == 0
 
 
 def _n_python_evals(df):
