@@ -210,17 +210,20 @@ def level_of(cell_id):
 
 
 def cell_id(lon_deg, lat_deg, level=MAX_LEVEL):
-    """lon/lat degrees -> S2 cell id at `level` (the headline encoder)."""
-    lon = np.asarray(lon_deg, dtype=np.float64) * (np.pi / 180.0)
-    lat = np.asarray(lat_deg, dtype=np.float64) * (np.pi / 180.0)
-    x, y, z = lonlat_to_xyz(lon, lat)
-    face, u, v = xyz_to_face_uv(x, y, z)
-    i = st_to_ij(uv_to_st(u))
-    j = st_to_ij(uv_to_st(v))
-    leaf = from_face_ij(face, i, j)
-    if level >= MAX_LEVEL:
-        return leaf
-    return parent(leaf, level)
+    """lon/lat degrees -> S2 cell id at `level` (the headline encoder);
+    0, S2's invalid id, where lon or lat is NaN or infinite."""
+    lon = np.asarray(lon_deg, dtype=np.float64)
+    lat = np.asarray(lat_deg, dtype=np.float64)
+    with np.errstate(invalid="ignore"):  # non-finite points, masked below
+        x, y, z = lonlat_to_xyz(lon * (np.pi / 180.0), lat * (np.pi / 180.0))
+        face, u, v = xyz_to_face_uv(x, y, z)
+        i = st_to_ij(uv_to_st(u))
+        j = st_to_ij(uv_to_st(v))
+    cell = from_face_ij(face, i, j)
+    if level < MAX_LEVEL:
+        cell = parent(cell, level)
+    # masked after parent(): parent(0, level) is not 0; [()] unwraps 0-d
+    return np.where(np.isfinite(lon) & np.isfinite(lat), cell, 0)[()]
 
 
 def cell_center(cell_id_arr):

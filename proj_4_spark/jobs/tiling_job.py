@@ -45,9 +45,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
-def build_session(master: str | None = None, shuffle_partitions: int = 32):
+SHUFFLE_PARTITIONS = 32
+
+
+def build_session(master: str | None = None):
     b = (SparkSession.builder.appName("proj4spark-tiling")
-         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+         .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -50,12 +50,3 @@ def merge_latest(snapshot: DataFrame, delta: DataFrame,
     d = latest_state(delta, key_cols, seq_cols)
     return latest_state(snapshot.unionByName(d), key_cols, seq_cols)
 
-
-def merge_counts(base: DataFrame, delta: DataFrame,
-                 key_cols: Sequence[str], count_col: str) -> DataFrame:
-    """Additive-metric merge (the incremental tile-rollup path): per-key
-    counts of the base snapshot plus a delta batch's counts.  union +
-    re-aggregate — map-side combinable, one shuffle on the key."""
-    return (base.unionByName(delta)
-            .groupBy(*key_cols)
-            .agg(F.sum(count_col).alias(count_col)))

@@ -112,13 +112,6 @@ def lonlat_sql(id_col: str = "doc_id") -> tuple[str, str]:
     return ladder(0, jlon, bg_lon), ladder(1, jlat, bg_lat)
 
 
-def coords_cte(table: str = "documents", id_col: str = "doc_id") -> str:
-    """A SQL CTE body selecting (doc_id, lon, lat) from ``table``."""
-    lon, lat = lonlat_sql(id_col)
-    return (f"SELECT {id_col} AS doc_id, {lon} AS lon, {lat} AS lat "
-            f"FROM {table}")
-
-
 def coords_df(spark, sf_dir: str):
     """Spark DataFrame (doc_id, lon, lat) from the documents table,
     built from the *same* SQL expressions as the DuckDB oracle."""

@@ -13,12 +13,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .events import EVENTS_SCHEMA
+
 OUT_SCHEMA = ("user_id long, n_events long, sum_value double, "
               "last_ts timestamp")
 STATE_SCHEMA = "n long, s double, last long"
-
-EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                 "event_type string, value double, props string")
 
 
 def _update(key, pdfs: Iterator[pd.DataFrame],

@@ -200,7 +200,8 @@ def test_s2_parent_expression_matches_index(spark):
 
 def test_s2_cell_udf_non_finite_gives_null(spark):
     """NaN, infinite or null lon/lat -> null cell; the null survives
-    s2_parent, and such a point never matches in pip_join."""
+    s2_parent, and such a point never matches in pip_join.  NumPy's
+    cell_id gives it 0 at every level, with no floating-point error."""
     from pyspark.sql import functions as F
 
     from proj_4_spark.functions.geo import s2_cell_udf, s2_parent
@@ -213,6 +214,10 @@ def test_s2_cell_udf_non_finite_gives_null(spark):
     nan, inf = float("nan"), float("inf")
     rows = [(0, inside_lon, inside_lat), (1, nan, nan), (2, None, None),
             (3, inside_lon, nan), (4, inf, inside_lat), (5, None, 1.0)]
+    bad = np.array([r[1:] for r in rows[1:]], dtype=np.float64)
+    with np.errstate(all="raise"):
+        for lvl in (30, 12, 8):
+            assert (s2.cell_id(bad[:, 0], bad[:, 1], lvl) == 0).all(), lvl
     pts = spark.createDataFrame(rows, "doc_id long, lon double, lat double")
     enc = pts.withColumn("cell", s2_cell_udf(12)(F.col("lon"), F.col("lat")))
     got = {r.doc_id: (r.cell, r.p8) for r in enc.select(
