@@ -10,6 +10,12 @@ The stages form a DAG, not a chain:
     mined -> encoded -> tile_assignments -> polygon_counts   (main thread)
     encoded -> cell_counts;  encoded -> projected            (side thread)
 
+`mined` (page synthesis + the regex miner, Catalyst only) runs in one
+task per core: `synthesize_pages` hash-partitions the documents over
+`defaultParallelism`.  `encoded` reads `mined` coalesced to one
+partition, because every Python task pays a fixed worker start-up
+cost that outweighs the UDF work of a share of the points.
+
 `encoded` is `mined` plus its S2 cell, UTM projection and the ids of
 the polygons containing it: the three Arrow UDFs sit in one projection,
 so Spark evaluates them in one Arrow pass and each point crosses into
@@ -94,11 +100,12 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         # 2. S2 cell encode, UTM projection (auto-zone) and the ids of
         # the polygons holding each point (cover lookup + exact ray
         # cast): one projection, so one ArrowEvalPython node evaluates
-        # the three UDFs
+        # the three UDFs, over `mined` coalesced to one partition, so
+        # one Python worker
         lon, lat = F.col("lon"), F.col("lat")
         encoded = cp.stage(
             "encoded",
-            lambda: mined.select(
+            lambda: mined.coalesce(1).select(
                 "*",
                 s2_cell_udf(CELL_LEVEL)(lon, lat).alias("cell"),
                 utm_all_zones_udf(approx=True)(lon, lat).alias("_u"),

@@ -171,7 +171,6 @@ def neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
     bucket_n = F.count("*").over(Window.partitionBy("band", "bucket"))
     b = (b.withColumn("_bn", bucket_n)
           .where(F.col("_bn") <= max_bucket).drop("_bn"))
-    b = b.persist()  # avoid recomputing the dot products per join side
     a, c = b.alias("a"), b.alias("b")
     pairs = (a.join(c, (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.bucket") == F.col("b.bucket"))

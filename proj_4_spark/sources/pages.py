@@ -8,9 +8,11 @@ lang string)`.  Two hard rules implemented here:
   through untouched (byte-identical per url); derived columns ride
   alongside.
 - **no per-row Python** — both coordinate miners (decimal and DMS)
-  are one Catalyst expression each (`regexp_extract_all` +
-  `posexplode`), so nothing crosses into Python and columns no output
-  uses (the `html` copy) are pruned.
+  are Catalyst expressions with no higher-order function (no
+  `lambdafunction` in the plan): one `regexp_extract_all` pass over
+  each text, `posexplode` of the whole matches, and each group cut
+  out of its short match by `regexp_extract`.  Nothing crosses into
+  Python, and columns no output uses (the `html` copy) are pruned.
 
 The miners' regexes run in Java, whose `\d` and `\s` are ASCII only,
 so `COORD_RE` and `DMS_RE` spell both out: digits are ASCII `[0-9]`,
@@ -19,11 +21,17 @@ and the whitespace class `_WS` lists exactly the characters Python's
 digits (e.g. Arabic-Indic "٤٨.٥, ٢.٣") are not mined.
 
 `synthesize_pages` builds a deterministic pages table from the driver
-documents table (or `spark.range`) with 0-3 embedded coordinate
-mentions per FIXTURES.md §1.
+documents table, appending one coordinate mention to each text
+(FIXTURES.md §1).  It reads the documents with a declared schema, so
+no parquet footer is inferred on the driver, and hash-partitions them
+by `doc_id` over every core before synthesis: the input is one file
+with one row group, and the synthesis and the miner behind it would
+otherwise run as one task.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +40,8 @@ from .coords import lonlat_sql
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
+# the columns of the driver documents table that synthesis reads
+DOCUMENTS_SCHEMA = "doc_id long, text string, lang string"
 
 # "lat, lon" decimal-degree mentions, e.g. "48.858844, 2.294351".
 # The same pattern in Java and Python regex: ASCII digits, and the
@@ -48,43 +58,55 @@ def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     'located at <lat>, <lon>' mention so the regex miner has real work.
     The ORIGINAL text bytes are preserved in `html`-wrapped form and
     the mention is appended (the driver documents table has no
-    coordinates of its own)."""
+    coordinates of its own).
+
+    The documents are hash-partitioned by `doc_id` into
+    `defaultParallelism` partitions first, so synthesis and whatever
+    reads the pages run in one task per core.  The lon/lat CASE
+    ladders are computed once, in an inner projection that `text` and
+    `html` both read."""
     lon, lat = lonlat_sql("doc_id")
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # fixed %.6f formatting: never scientific notation, always >= 1
+    # SQL text, one parse per projection: through the Column API each
+    # function call is several py4j round trips (~550 more in all).
+    # Fixed %.6f formatting: never scientific notation, always >= 1
     # decimal digit, and reproducible in DuckDB via printf('%.6f', x)
-    txt = F.concat(F.col("text"), F.lit(" located at "),
-                   F.format_string("%.6f", F.expr(lat)), F.lit(", "),
-                   F.format_string("%.6f", F.expr(lon)))
-    return d.select(
-        F.concat(F.lit("https://host"), (F.col("doc_id") % 10000)
-                 .cast("string"), F.lit(".example/"),
-                 F.md5(F.col("doc_id").cast("string"))).alias("url"),
-        (F.lit("2024-01-01 00:00:00").cast("timestamp")
-         + F.make_interval(secs=(F.col("doc_id") % 31536000))).alias("warc_ts"),
-        F.encode(F.concat(F.lit("<html><body>"), txt,
-                          F.lit("</body></html>")), "UTF-8").alias("html"),
-        txt.alias("text"),
-        F.col("lang"),
-        F.col("doc_id"),
-    )
+    txt = ("concat(text, ' located at ', format_string('%.6f', _lat), "
+           "', ', format_string('%.6f', _lon))")
+    return (spark.read.schema(DOCUMENTS_SCHEMA)
+            .parquet(f"{sf_dir}/documents.parquet")
+            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+            .selectExpr("doc_id", "text", "lang", f"{lon} AS _lon",
+                        f"{lat} AS _lat")
+            .selectExpr(
+                "concat('https://host', CAST(doc_id % 10000 AS STRING), "
+                "'.example/', md5(CAST(doc_id AS STRING))) AS url",
+                "CAST('2024-01-01 00:00:00' AS TIMESTAMP) + make_interval("
+                "0, 0, 0, 0, 0, 0, doc_id % 31536000) AS warc_ts",
+                f"encode(concat('<html><body>', {txt}, '</body></html>'), "
+                "'UTF-8') AS html",
+                f"{txt} AS text", "lang", "doc_id"))
 
 
-def _explode_mentions(pages: DataFrame, text_col: str,
-                      mentions: Column) -> DataFrame:
+def _mine_matches(pages: DataFrame, text_col: str, pattern: str,
+                  lat_lon) -> DataFrame:
     """Every input column but `text_col`, then (mention_idx int, lat
-    double, lon double) for each in-range element of `mentions` (an
-    array of struct(lat, lon) per row).  `posexplode` numbers the
-    mentions before the range filter, so `mention_idx` is the match
-    position (as pandas `extractall` numbers it); lat must lie in
-    [-90, 90] and lon in [-180, 180]."""
-    cols = [c for c in pages.columns if c != text_col]
-    m = pages.select(*[pages[c] for c in cols],
-                     F.posexplode(mentions).alias("mention_idx", "_m"))
-    lat, lon = F.col("_m.lat"), F.col("_m.lon")
-    return (m.where((F.abs(lat) <= 90.0) & (F.abs(lon) <= 180.0))
-             .select(*[m[c] for c in cols], "mention_idx",
-                     lat.alias("lat"), lon.alias("lon")))
+    double, lon double) for each in-range match of `pattern`.
+
+    One `regexp_extract_all` pass over each text; `posexplode` numbers
+    the whole matches before the range filter, so `mention_idx` is the
+    match position (as pandas `extractall` numbers it).  `lat_lon`
+    maps the pattern's groups, each cut out of the short match by
+    `regexp_extract`, to the (lat, lon) columns.  lat must lie in
+    [-90, 90] and lon in [-180, 180]; a null or empty text gives no
+    row."""
+    cols = [pages[c] for c in pages.columns if c != text_col]
+    matches = F.regexp_extract_all(pages[text_col], F.lit(pattern), F.lit(0))
+    m = pages.select(*cols, F.posexplode(matches).alias("mention_idx", "_m"))
+    match = F.col("_m")
+    lat, lon = lat_lon(*[F.regexp_extract(match, pattern, i)
+                         for i in range(1, re.compile(pattern).groups + 1)])
+    return (m.select(*cols, "mention_idx", lat.alias("lat"), lon.alias("lon"))
+             .where((F.abs("lat") <= 90.0) & (F.abs("lon") <= 180.0)))
 
 
 def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -92,17 +114,13 @@ def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
     column but `text_col`, then (mention_idx int, lat double,
     lon double).
 
-    One Catalyst expression, no Python UDF: `regexp_extract_all` per
-    group, zipped into (lat, lon) pairs and numbered by `posexplode`
-    before the range filter.  A null or empty text gives no row.  Only
-    ASCII digits are mined (see the module docstring)."""
-    text, pat = pages[text_col], F.lit(COORD_RE)
-    pairs = F.zip_with(
-        F.regexp_extract_all(text, pat, F.lit(1)),
-        F.regexp_extract_all(text, pat, F.lit(2)),
-        lambda a, b: F.struct(a.cast("double").alias("lat"),
-                              b.cast("double").alias("lon")))
-    return _explode_mentions(pages, text_col, pairs)
+    Catalyst expressions only, no Python UDF and no higher-order
+    function: one regex pass over the text, then groups 1 and 2 of
+    each match.  A null or empty text gives no row.  Only ASCII digits
+    are mined (see the module docstring)."""
+    return _mine_matches(
+        pages, text_col, COORD_RE,
+        lambda lat, lon: (lat.cast("double"), lon.cast("double")))
 
 
 # DMS mentions: 48°51'24.5"N 2°21'03"E — ASCII d/'/" and the unicode
@@ -129,14 +147,10 @@ def mine_coords_dms(pages: DataFrame, text_col: str = "text") -> DataFrame:
     in signed decimal degrees (deg + min/60 + sec/3600, S/W negative),
     the columns and types of :func:`mine_coords`.
 
-    One Catalyst expression: one `regexp_extract_all` scans the text,
-    and each match is split into its 8 groups by `regexp_extract` on
-    the match alone.  Out-of-range pairs are dropped; a null or empty
-    text gives no row.  Only ASCII digits are mined."""
-    def pair(match: Column) -> Column:
-        g = [F.regexp_extract(match, DMS_RE, i) for i in range(1, 9)]
-        return F.struct(_dms_degrees(*g[:4], "S").alias("lat"),
-                        _dms_degrees(*g[4:], "W").alias("lon"))
-
-    matches = F.regexp_extract_all(pages[text_col], F.lit(DMS_RE), F.lit(0))
-    return _explode_mentions(pages, text_col, F.transform(matches, pair))
+    The shape of :func:`mine_coords`: one regex pass over the text,
+    then the 8 groups of each match.  Out-of-range pairs are dropped;
+    a null or empty text gives no row.  Only ASCII digits are
+    mined."""
+    return _mine_matches(
+        pages, text_col, DMS_RE,
+        lambda *g: (_dms_degrees(*g[:4], "S"), _dms_degrees(*g[4:], "W")))

@@ -276,6 +276,18 @@ def test_neardup_hot_bucket_capped(spark):
     assert uncapped.count() >= 30 * 29 // 2
 
 
+def test_neardup_pairs_caches_nothing(spark, sf_dir):
+    """A call pins no cached copy of the vectors: Spark's cache
+    manager is as empty after the pairs are collected as before."""
+    from proj_4_spark.operators.similarity import neardup_pairs
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    neardup_pairs(e, threshold=0.6).collect()
+    assert cache.isEmpty()
+
+
 def test_vector_math_and_dms_miner_plans_have_no_python_node(spark, sf_dir):
     """Cosine top-k, near-dup verification, IVF assignment + cosine and
     the DMS miner are Catalyst expressions: no Python node in their

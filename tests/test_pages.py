@@ -175,13 +175,21 @@ def test_mine_coords_ascii_digits_only(spark):
 
 
 def test_mine_coords_plan_is_catalyst(spark, sf_dir):
-    """The job's miner plan has no Python node and prunes `html`."""
+    """The job's miner plan has no Python node and prunes `html`;
+    neither miner evaluates an interpreted lambda (each makes one
+    regex pass over the text and cuts the groups out of the match)."""
+    from proj_4_spark.sources.pages import mine_coords_dms
+
     p = synthesize_pages(spark, sf_dir)
     job = mine_coords(p).select("url", "doc_id", "mention_idx", "lon", "lat")
     plan = job._jdf.queryExecution().optimizedPlan().toString()
     for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert node not in plan, plan
     assert "html" not in plan, plan
+    for miner in (mine_coords, mine_coords_dms):
+        plan = miner(p)._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan, plan
+        assert plan.count("regexp_extract_all") == 1, plan
     assert [f.name for f in mine_coords(p).schema] == [
         "url", "warc_ts", "html", "lang", "doc_id", "mention_idx",
         "lat", "lon"]

@@ -1,6 +1,7 @@
 """End-to-end flagship job: stage checkpointing, resume, lineage,
 oracle parity of the aggregates and the shape of the stage plans."""
 
+import json
 import os
 import re
 
@@ -239,6 +240,19 @@ def test_tiling_job_unpinned_threads(spark, sf_dir, tmp_path, monkeypatch,
     summary = tiling_job.run(spark, sf_dir, str(tmp_path / "job6"))
     clean = CheckpointedPipeline(spark, job[0]).metrics()
     assert summary["rows"] == {m["stage"]: m["rows"] for m in clean}
+
+
+def test_tiling_job_mined_fans_out_encoded_does_not(spark, job):
+    """`mined` (synthesis + regex miner, Catalyst only) runs in one task
+    per core; `encoded` reads it coalesced to one partition, so its
+    Python UDFs run in one task and one worker."""
+    out, _ = job
+    with open(os.path.join(out, "_metrics", "mined.json")) as f:
+        mined = json.load(f)
+    assert mined["partitions"] == spark.sparkContext.defaultParallelism > 1
+    parts = [f for f in os.listdir(os.path.join(out, "encoded"))
+             if f.startswith("part-")]
+    assert len(parts) == 1, parts
 
 
 def test_tiling_job_encoded_reads_mined(job):
