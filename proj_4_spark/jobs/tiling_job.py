@@ -4,29 +4,27 @@ mined coords projected to UTM.
 
 Every stage is checkpointed (plans/checkpoint.py — parquet snapshot +
 completion marker + lineage metrics; Iceberg snapshots on a real
-deployment), and a stage's build reads only the stage outputs it uses.
-The stages form a DAG, not a chain:
+deployment), and a stage's build reads only the stage outputs it uses:
 
-    mined -> encoded -> tile_assignments -> polygon_counts   (main thread)
-    encoded -> cell_counts;  encoded -> projected            (side thread)
+    mined -> encoded -> {tile_assignments, polygon_counts,
+                         cell_counts, projected}
 
 `mined` (page synthesis + the regex miner, Catalyst only) runs in one
 task per core: `synthesize_pages` hash-partitions the documents over
 `defaultParallelism`.  `encoded` reads `mined` coalesced to one
 partition, because every Python task pays a fixed worker start-up
-cost that outweighs the UDF work of a share of the points.
+cost that outweighs the UDF work of a share of the points.  It is
+`mined` plus its S2 cell, UTM projection and the ids of the polygons
+containing it: the three Arrow UDFs sit in one projection, so Spark
+evaluates them in one Arrow pass and each point crosses into Python
+once.
 
-`encoded` is `mined` plus its S2 cell, UTM projection and the ids of
-the polygons containing it: the three Arrow UDFs sit in one projection,
-so Spark evaluates them in one Arrow pass and each point crosses into
-Python once.  Every later stage is Catalyst-only: `tile_assignments`
-explodes the polygon ids, `polygon_counts` counts them, and no stage
-reads `projected` or `cell_counts`, both selections of `encoded`, so
-they run one at a time on a single inheritable thread beside the main
-chain (at most two stages in flight, never two Python workers).  `run`
-waits for the side stages and re-raises a side failure before it
-returns.  A rerun on the same output directory reruns every stage
-without a completion marker and reads the others back.
+The four outputs are Catalyst selections and counts of `encoded` alone
+(`polygon_counts` counts its exploded polygon ids), so they start no
+Python worker and run at once, one pool thread each.  `run` waits for
+all four and re-raises the first failure.  A rerun on the same output
+directory reruns every stage without a completion marker and reads the
+others back.
 
 Each point is S2-encoded at the cell level and, inside the PIP UDF, at
 the cover level; the roll-up is the cell's Catalyst parent.  Hot cells
@@ -80,72 +78,63 @@ def run(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
 
     cp = CheckpointedPipeline(spark, out_dir)
 
-    # Side stages: nothing downstream reads them, so they run on one
-    # worker thread while the main chain goes on.  The wrapper hands the
-    # thread the caller's job group, description and tags.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        def side(name, build):
-            # with unpinned threads (PYSPARK_PIN_THREAD=false) there is
-            # nothing to inherit, and pyspark returns the session itself
+    # 1. pages (input contract shape) -> mined coordinate mentions
+    mined = cp.stage(
+        "mined",
+        lambda: mine_coords(synthesize_pages(spark, sf_dir))
+        .select("url", "doc_id", "mention_idx", "lon", "lat"))
+
+    # 2. S2 cell encode, UTM projection (auto-zone) and the ids of the
+    # polygons holding each point (cover lookup + exact ray cast): one
+    # projection, so one ArrowEvalPython node evaluates the three UDFs,
+    # over `mined` coalesced to one partition, so one Python worker
+    lon, lat = F.col("lon"), F.col("lat")
+    encoded = cp.stage(
+        "encoded",
+        lambda: mined.coalesce(1).select(
+            "*",
+            s2_cell_udf(CELL_LEVEL)(lon, lat).alias("cell"),
+            utm_all_zones_udf(approx=True)(lon, lat).alias("_u"),
+            pip_udf(polygon_rows(), COVER_LEVEL)(lon, lat)
+            .alias("polygon_ids"))
+        .select(*mined.columns, "cell",
+                F.col("_u.zone").alias("utm_zone"),
+                F.col("_u.easting").alias("easting"),
+                F.col("_u.northing").alias("northing"),
+                "polygon_ids"))
+
+    # 3. the outputs: Catalyst selections and counts of `encoded`
+    polygon_id = F.explode("polygon_ids").alias("polygon_id")
+    outputs = {
+        # PIP tile assignments: one row per (point, polygon)
+        "tile_assignments": lambda: encoded.select(
+            "url", "doc_id", "mention_idx", "cell", polygon_id),
+        "polygon_counts": lambda: encoded.select(polygon_id)
+        .groupBy("polygon_id").agg(F.count("*").alias("n_docs")),
+        # per-cell histogram at the coarser roll-up level
+        "cell_counts": lambda: encoded.groupBy(
+            s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
+        .agg(F.count("*").alias("n_mentions")),
+        # projection enrichment: per-point UTM
+        "projected": lambda: encoded.select(
+            "url", "doc_id", "mention_idx", "lon", "lat",
+            "utm_zone", "easting", "northing"),
+    }
+    # The wrapper hands its thread the caller's job group, description
+    # and tags.  One wrapper per stage: each one clones the local
+    # properties, so a stage that sets its own job group does not set
+    # it for the others.  With unpinned threads (PYSPARK_PIN_THREAD=
+    # false) there is nothing to inherit, and pyspark returns the
+    # session itself.
+    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+        futures = []
+        for name, build in outputs.items():
             wrap = inheritable_thread_target(spark)
             target = cp.stage if wrap is spark else wrap(cp.stage)
-            return pool.submit(target, name, build)
-
-        # 1. pages (input contract shape) -> mined coordinate mentions
-        mined = cp.stage(
-            "mined",
-            lambda: mine_coords(synthesize_pages(spark, sf_dir))
-            .select("url", "doc_id", "mention_idx", "lon", "lat"))
-
-        # 2. S2 cell encode, UTM projection (auto-zone) and the ids of
-        # the polygons holding each point (cover lookup + exact ray
-        # cast): one projection, so one ArrowEvalPython node evaluates
-        # the three UDFs, over `mined` coalesced to one partition, so
-        # one Python worker
-        lon, lat = F.col("lon"), F.col("lat")
-        encoded = cp.stage(
-            "encoded",
-            lambda: mined.coalesce(1).select(
-                "*",
-                s2_cell_udf(CELL_LEVEL)(lon, lat).alias("cell"),
-                utm_all_zones_udf(approx=True)(lon, lat).alias("_u"),
-                pip_udf(polygon_rows(), COVER_LEVEL)(lon, lat)
-                .alias("polygon_ids"))
-            .select(*mined.columns, "cell",
-                    F.col("_u.zone").alias("utm_zone"),
-                    F.col("_u.easting").alias("easting"),
-                    F.col("_u.northing").alias("northing"),
-                    "polygon_ids"))
-
-        # 3. (side) per-cell histogram at the coarser roll-up level
-        cell_counts = side(
-            "cell_counts",
-            lambda: encoded.groupBy(
-                s2_parent(F.col("cell"), COVER_LEVEL).alias("cell8"))
-            .agg(F.count("*").alias("n_mentions")))
-
-        # 4. (side) projection enrichment: per-point UTM
-        projected = side(
-            "projected",
-            lambda: encoded.select("url", "doc_id", "mention_idx", "lon",
-                                   "lat", "utm_zone", "easting", "northing"))
-
-        # 5. PIP tile assignments: one row per (point, polygon)
-        tiles = cp.stage(
-            "tile_assignments",
-            lambda: encoded.select(
-                "url", "doc_id", "mention_idx", "cell",
-                F.explode("polygon_ids").alias("polygon_id")))
-
-        # 6. per-polygon counts
-        cp.stage(
-            "polygon_counts",
-            lambda: tiles.groupBy("polygon_id")
-            .agg(F.count("*").alias("n_docs")))
-
-        # a side failure raises here, after the main chain has finished
-        cell_counts.result()
-        projected.result()
+            futures.append(pool.submit(target, name, build))
+    # every stage has finished; the first failure raises
+    for f in futures:
+        f.result()
 
     stages = cp.metrics()
     return {"stages": stages, "rows": {m["stage"]: m["rows"] for m in stages}}

@@ -126,7 +126,7 @@ def ray_cast_udf(polygon_rows: list[dict]):
     return kernel_udf("boolean", kernel, (np.float64, np.float64, np.int64))
 
 
-def pip_udf(polygon_rows: list[dict], level: int = 10):
+def pip_udf(polygon_rows: list[dict], level: int):
     """Arrow UDF (lon, lat) -> array<long>: the id of every polygon
     strictly containing the point (null for a NaN, infinite or null
     coordinate).  Candidates are the cover rows of the point's
@@ -156,9 +156,10 @@ def pip_udf(polygon_rows: list[dict], level: int = 10):
     return kernel_udf("array<long>", kernel)
 
 
-def pip_join(points: DataFrame, polygon_rows: list[dict], level: int = 10,
-             lon: str = "lon", lat: str = "lat") -> DataFrame:
+def pip_join(points: DataFrame, polygon_rows: list[dict],
+             level: int) -> DataFrame:
     """points × polygons -> (points.*, polygon_id) for every polygon
-    strictly containing the point: one Arrow UDF and an ``explode``."""
-    ids = pip_udf(polygon_rows, level)(F.col(lon), F.col(lat))
+    strictly containing the point's (``lon``, ``lat``): one Arrow UDF
+    and an ``explode``."""
+    ids = pip_udf(polygon_rows, level)(F.col("lon"), F.col("lat"))
     return points.select("*", F.explode(ids).alias("polygon_id"))

@@ -30,10 +30,9 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from .metrics import observed
 
 DONE = "_GRAFT_DONE"
 
@@ -59,8 +58,9 @@ class CheckpointedPipeline:
             return self.spark.read.parquet(out_dir)
         t0 = time.perf_counter()
         df = build()
-        counted, obs = observed(df, f"cp_{name}")
-        w = counted.write.mode("overwrite")
+        obs = Observation(f"cp_{name}")
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out_dir)

@@ -17,7 +17,5 @@ source scripts/package_py_files.sh
 spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
   proj_4_spark/jobs/cct_job.py \
   --in "$IN" --out "$OUT" --projstr "$PROJSTR" --direction "$DIRECTION"

@@ -18,7 +18,5 @@ source scripts/package_py_files.sh
 spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
   proj_4_spark/jobs/geod_job.py \
   --in "$IN" --out "$OUT" --mode "$MODE"

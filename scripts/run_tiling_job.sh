@@ -15,8 +15,5 @@ source scripts/package_py_files.sh
 spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
   proj_4_spark/jobs/tiling_job.py \
   --sf-dir "$SF_DIR" --out "$OUT_DIR"

@@ -4,6 +4,7 @@ oracle parity of the aggregates and the shape of the stage plans."""
 import json
 import os
 import re
+import subprocess
 
 import duckdb
 import numpy as np
@@ -15,6 +16,9 @@ from proj_4_spark.jobs import tiling_job
 from proj_4_spark.plans import oracles as O
 from proj_4_spark.plans.checkpoint import CheckpointedPipeline
 
+STAGES = ("mined", "projected", "encoded", "tile_assignments",
+          "polygon_counts", "cell_counts")
+
 
 def test_tiling_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     out = str(tmp_path / "job")
@@ -22,8 +26,7 @@ def test_tiling_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     assert summary["rows"]["mined"] == 500
     assert summary["rows"]["tile_assignments"] > 0
     stages = {m["stage"] for m in summary["stages"]}
-    assert {"mined", "projected", "encoded", "tile_assignments",
-            "polygon_counts", "cell_counts"} <= stages
+    assert set(STAGES) <= stages
     # lineage metrics recorded per stage
     for m in summary["stages"]:
         assert m["rows"] >= 0 and m["wall_s"] >= 0 and m["partitions"] >= 1
@@ -159,34 +162,35 @@ def test_tiling_job_projected_matches_utm_kernel(job):
     assert n_got == len(want) > 0 and n_diff == 0
 
 
-def test_tiling_job_side_stage_failure_raises_and_resumes(
-        spark, sf_dir, tmp_path, monkeypatch, job):
-    """A failing side stage (`projected`) fails the run once the main
-    chain is written; the rerun recomputes that stage alone."""
+@pytest.mark.parametrize("failing", ["projected", "tile_assignments"])
+def test_tiling_job_output_stage_failure_raises_and_resumes(
+        spark, sf_dir, tmp_path, monkeypatch, job, failing):
+    """A failing output stage fails the run after the other three
+    outputs are written and marked; the rerun recomputes that stage
+    alone."""
     orig = CheckpointedPipeline.stage
 
     def stage(cp, name, build, partition_by=None):
-        if name == "projected":
+        if name == failing:
             def build():
-                raise RuntimeError("utm down")
+                raise RuntimeError(f"{name} down")
         return orig(cp, name, build, partition_by)
 
     out = str(tmp_path / "job4")
     monkeypatch.setattr(CheckpointedPipeline, "stage", stage)
-    with pytest.raises(RuntimeError, match="utm down"):
+    with pytest.raises(RuntimeError, match=f"{failing} down"):
         tiling_job.run(spark, sf_dir, out)
     monkeypatch.undo()
 
     done = {st: os.path.exists(os.path.join(out, st, "_GRAFT_DONE"))
-            for st in ("mined", "projected", "encoded", "tile_assignments",
-                       "polygon_counts", "cell_counts")}
-    assert not done.pop("projected")
+            for st in STAGES}
+    assert not done.pop(failing)
     assert all(done.values()), done
     mtimes = {st: os.path.getmtime(os.path.join(out, "_metrics", f"{st}.json"))
               for st in done}
 
     summary = tiling_job.run(spark, sf_dir, out)
-    assert os.path.exists(os.path.join(out, "projected", "_GRAFT_DONE"))
+    assert os.path.exists(os.path.join(out, failing, "_GRAFT_DONE"))
     for st, t in mtimes.items():
         assert os.path.getmtime(
             os.path.join(out, "_metrics", f"{st}.json")) == t, st
@@ -196,8 +200,8 @@ def test_tiling_job_side_stage_failure_raises_and_resumes(
 
 def test_tiling_job_utm_failure_fails_encoded(spark, sf_dir, tmp_path,
                                               monkeypatch):
-    """UTM runs in `encoded` on the main chain: a broken UTM UDF fails
-    the run and leaves `encoded` without its completion marker."""
+    """UTM runs in `encoded` on the caller's thread: a broken UTM UDF
+    fails the run and leaves `encoded` without its completion marker."""
     from proj_4_spark.functions import geo
 
     def broken(*a, **k):
@@ -212,7 +216,7 @@ def test_tiling_job_utm_failure_fails_encoded(spark, sf_dir, tmp_path,
 
 
 def test_tiling_job_side_jobs_inherit_job_group(spark, sf_dir, tmp_path):
-    """The side-thread stages run under the caller's job group: no job
+    """The pool-thread stages run under the caller's job group: no job
     that `run` starts is left without one."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -226,7 +230,7 @@ def test_tiling_job_side_jobs_inherit_job_group(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
-    # one write job per stage at least, the side stages' included
+    # one write job per stage at least, the pool stages' included
     assert len(tracker.getJobIdsForGroup("tiling-g")) >= 6
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
@@ -234,7 +238,7 @@ def test_tiling_job_side_jobs_inherit_job_group(spark, sf_dir, tmp_path):
 def test_tiling_job_unpinned_threads(spark, sf_dir, tmp_path, monkeypatch,
                                      job):
     """Without pinned threads pyspark's `inheritable_thread_target`
-    returns the session it was given; the side stages still run."""
+    returns the session it was given; the pool stages still run."""
     monkeypatch.setattr(tiling_job, "inheritable_thread_target",
                         lambda session: session)
     summary = tiling_job.run(spark, sf_dir, str(tmp_path / "job6"))
@@ -255,11 +259,29 @@ def test_tiling_job_mined_fans_out_encoded_does_not(spark, job):
     assert len(parts) == 1, parts
 
 
-def test_tiling_job_encoded_reads_mined(job):
-    """`encoded` is `mined` plus the cell: its plan scans the mined
-    checkpoint and not the projected one."""
+def test_tiling_job_stages_read_only_their_inputs(job):
+    """`encoded` scans only the mined checkpoint, and each of the four
+    outputs scans only the encoded one."""
     out, built = job
-    files = built["encoded"].inputFiles()
-    assert files
-    mined = "file://" + os.path.join(os.path.abspath(out), "mined") + "/"
-    assert all(f.startswith(mined) for f in files), files
+    reads = {st: ("mined" if st == "encoded" else "encoded")
+             for st in STAGES if st != "mined"}
+    for st, src in reads.items():
+        files = built[st].inputFiles()
+        prefix = "file://" + os.path.join(os.path.abspath(out), src) + "/"
+        assert files and all(f.startswith(prefix) for f in files), (st, files)
+
+
+def test_tiling_job_spark_submit_matches_in_process(sf_dir, tmp_path, job):
+    """scripts/run_tiling_job.sh (spark-submit --py-files) exits 0 and
+    writes the aggregates of the in-process run."""
+    out = str(tmp_path / "submit")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        ["bash", os.path.join(repo, "scripts", "run_tiling_job.sh"),
+         "local[2]", sf_dir, out],
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    for stage, cols in (("polygon_counts", "polygon_id, n_docs"),
+                        ("cell_counts", "cell8, n_mentions")):
+        want = sorted(_job_rows(job[0], stage, cols))
+        assert want and sorted(_job_rows(out, stage, cols)) == want, stage
