@@ -15,9 +15,9 @@ from proj_4_spark import queries as _Q
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: point-in-polygon spatial join (S2 cell-cover
-    broadcast candidates + exact ray casting) over the sf0.001 pages,
-    aggregated per polygon."""
+    """Flagship: point-in-polygon spatial join (one Arrow UDF per point:
+    S2 cell-cover lookup + exact ray casting, then an ``explode``) over
+    the sf0.001 pages, aggregated per polygon."""
     return _Q.queries()["pip_polygon_counts"](spark, "/root/testdata/sf0.001")
 
 

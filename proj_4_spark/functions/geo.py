@@ -159,15 +159,13 @@ def project_select_udf(selector):
                       selector.transform_deg)
 
 
-def with_projected(df: DataFrame, projstr: str, lon: str = "lon",
-                   lat: str = "lat", prefix: str = "",
-                   direction: str = "fwd") -> DataFrame:
-    """Append projected columns ``{prefix}x, {prefix}y`` to ``df``."""
-    u = project_udf(projstr, direction)
-    st = u(F.col(lon), F.col(lat))
+def with_projected(df: DataFrame, projstr: str) -> DataFrame:
+    """Append the forward projection of ``lon, lat`` as columns ``x, y``
+    to ``df``."""
+    st = project_udf(projstr, "fwd")(F.col("lon"), F.col("lat"))
     return (df.withColumn("_pj", st)
-              .withColumn(prefix + "x", F.col("_pj.x"))
-              .withColumn(prefix + "y", F.col("_pj.y"))
+              .withColumn("x", F.col("_pj.x"))
+              .withColumn("y", F.col("_pj.y"))
               .drop("_pj"))
 
 
@@ -231,7 +229,7 @@ def a7hex_parent_udf(parent_res: int):
                       (np.int64,))
 
 
-def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
+def vincenty_fixed_udf(lat2: float, lon2: float):
     """Arrow UDF (lat1, lon1 degrees) -> struct<s12 double, azi1
     double>: fixed-iteration Vincenty inverse to a constant point
     (kernels/geodesic.py::vincenty_inverse_fixed), the SQL-mirrorable
@@ -240,7 +238,7 @@ def vincenty_fixed_udf(lat2: float, lon2: float, n_iter: int = 16):
     return kernel_udf(
         "struct<s12: double, azi1: double>",
         lambda lat1, lon1: k_geod.vincenty_inverse_fixed(
-            lat1, lon1, lat2, lon2, n_iter=n_iter))
+            lat1, lon1, lat2, lon2))
 
 
 def geodesic_inverse_udf(a: float | None = None, f: float | None = None):
@@ -272,15 +270,15 @@ def geodesic_direct_udf(a: float | None = None, f: float | None = None):
 _R_MEAN = 6371008.8  # IUGG mean earth radius
 
 
-def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column,
-                radius: float = _R_MEAN) -> Column:
+def haversine_m(lat1: Column, lon1: Column, lat2: Column,
+                lon2: Column) -> Column:
     """Great-circle distance in meters as a pure Catalyst expression
     (stays inside WholeStageCodegen — no Python)."""
     rl1, rl2 = F.radians(lat1), F.radians(lat2)
     dlat = F.radians(lat2 - lat1) / 2.0
     dlon = F.radians(lon2 - lon1) / 2.0
     h = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
-    return F.lit(2.0 * radius) * F.asin(F.sqrt(h))
+    return F.lit(2.0 * _R_MEAN) * F.asin(F.sqrt(h))
 
 
 def utm_all_zones_udf(approx: bool = True):
@@ -344,15 +342,14 @@ def unitconvert_time_udf(t_in: str, t_out: str):
     return kernel_udf("double", tr.ops[0].t_fwd, (np.float64,))
 
 
-def transform4d_udf(projstr_or_transform, direction: str = "fwd"):
+def transform4d_udf(projstr_or_transform):
     """Arrow UDF (lon_deg, lat_deg, t) -> struct<lon_out, lat_out,
     z_out double> for 4D (kinematic) pipelines such as +proj=defmodel;
     z starts at 0."""
     tr = compile_projstring(projstr_or_transform)
 
     def k(lon, lat, t):
-        return tr.transform_deg(lon, lat, z=np.zeros_like(lon), t=t,
-                                direction=direction)[:3]
+        return tr.transform_deg(lon, lat, z=np.zeros_like(lon), t=t)[:3]
 
     return kernel_udf(
         "struct<lon_out: double, lat_out: double, z_out: double>", k,

@@ -55,8 +55,6 @@ SHUFFLE_PARTITIONS = 32
 def build_session(master: str | None = None):
     b = (SparkSession.builder.appName("proj4spark-tiling")
          .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1048576"))
     if master:

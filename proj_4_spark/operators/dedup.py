@@ -26,13 +26,13 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles joined by '_' (empty if < n tokens)."""
+def shingles(text: Column) -> Column:
+    """Distinct 3-word shingles joined by '_' (empty if < 3 tokens)."""
     w = tokens(text)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(0))),
-            lambda i: F.concat_ws("_", F.slice(w, i, n)),
+            F.sequence(F.lit(1), F.greatest(F.size(w) - 2, F.lit(0))),
+            lambda i: F.concat_ws("_", F.slice(w, i, 3)),
         ))
 
 
@@ -53,17 +53,20 @@ MH_B = (275066853, 427954577, 2332920686, 3459618001,
         4114409705, 2530509838, 336367087, 685714874)
 
 
-def minhash_signature(sh: Column, k: int = 8) -> Column:
-    """K-permutation MinHash signature.
+BANDS, ROWS = 4, 2  # LSH: 4 bands of 2 signature rows
+
+
+def minhash_signature(sh: Column) -> Column:
+    """8-permutation MinHash signature.
 
     Each shingle is hashed ONCE (md5 -> 60-bit int -> mod MH_P), then
-    the k permutations are derived arithmetically as
-    (a_p*h + b_p) mod MH_P — ~k x fewer md5 calls than hashing per
+    the 8 permutations (MH_A, MH_B) are derived arithmetically as
+    (a_p*h + b_p) mod MH_P — ~8x fewer md5 calls than hashing per
     permutation, with algebra that DuckDB mirrors exactly.  The hashed
     array is bound through a single-element transform lambda so
     Catalyst evaluates the md5 pass exactly once per row."""
     hashed = F.transform(sh, lambda s: _h60(s) % F.lit(MH_P))
-    perms = list(zip(MH_A[:k], MH_B[:k]))
+    perms = list(zip(MH_A, MH_B))
     return F.element_at(
         F.transform(
             F.array(hashed),
@@ -74,26 +77,23 @@ def minhash_signature(sh: Column, k: int = 8) -> Column:
         1)
 
 
-def band_hashes(sig: Column, bands: int = 4, rows: int = 2) -> Column:
+def band_hashes(sig: Column) -> Column:
     """LSH band hashes: md5 over the concatenated band rows."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda b: F.md5(F.concat_ws(
             "_",
-            *[F.element_at(sig, b * rows + r + 1).cast("string")
-              for r in range(rows)])),
+            *[F.element_at(sig, b * ROWS + r + 1).cast("string")
+              for r in range(ROWS)])),
     )
 
 
-def doc_shingle_table(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    return (docs.select(id_col, shingles(F.col(text_col), n).alias("sh"))
+def doc_shingle_table(docs: DataFrame) -> DataFrame:
+    return (docs.select("doc_id", shingles(F.col("text")).alias("sh"))
                 .where(F.size("sh") > 0))
 
 
-def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3, k: int = 8,
-                        bands: int = 4, rows: int = 2,
+def lsh_candidate_pairs(docs: DataFrame,
                         max_bucket: int = 2000) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) sharing >=1 LSH band.
 
@@ -105,23 +105,22 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     self-join needs, so the cap adds no extra shuffle stage."""
     from pyspark.sql import Window
 
-    sh = doc_shingle_table(docs, text_col, id_col, n)
-    sig = sh.select(id_col, minhash_signature(F.col("sh"), k).alias("sig"))
-    b = (sig.select(id_col, F.posexplode(band_hashes(F.col("sig"), bands, rows))
+    sh = doc_shingle_table(docs)
+    sig = sh.select("doc_id", minhash_signature(F.col("sh")).alias("sig"))
+    b = (sig.select("doc_id", F.posexplode(band_hashes(F.col("sig")))
                     .alias("band", "bh")))
     bucket_n = F.count("*").over(Window.partitionBy("band", "bh"))
     b = (b.withColumn("_bn", bucket_n)
           .where(F.col("_bn") <= max_bucket).drop("_bn"))
-    # materialize before the self-join: otherwise both join sides
-    # recompute the full shingle->minhash lineage (2x the dominant cost)
-    b = b.persist()
+    # no cache: both join sides read one exchange (ReusedExchange), so
+    # the shingle->minhash lineage runs once
     left = b.alias("a")
     right = b.alias("b")
     return (left.join(right, (F.col("a.band") == F.col("b.band"))
                       & (F.col("a.bh") == F.col("b.bh"))
-                      & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                .select(F.col(f"a.{id_col}").alias("doc_a"),
-                        F.col(f"b.{id_col}").alias("doc_b"))
+                      & (F.col("a.doc_id") < F.col("b.doc_id")))
+                .select(F.col("a.doc_id").alias("doc_a"),
+                        F.col("b.doc_id").alias("doc_b"))
                 .distinct())
 
 
@@ -131,21 +130,25 @@ def jaccard(sh_a: Column, sh_b: Column) -> Column:
     return inter / union.cast("double")
 
 
-def simhash(text: Column, bits: int = 16) -> Column:
-    """B-bit SimHash over distinct tokens: bit k set iff
+SIMHASH_BITS = 16
+
+
+def simhash(text: Column) -> Column:
+    """SIMHASH_BITS-bit SimHash over distinct tokens: bit k set iff
     sum over tokens of (±1 by token-hash bit k) > 0.
 
     ONE pass over the token-hash array: the accumulator is the array
     of per-bit signed counts (zip_with against the constant mask
-    array), then a second tiny fold over the `bits` counts packs the
-    sign bits.  Per-token work is unchanged but the array is traversed
-    once instead of `bits` times (the round-2 O(bits x) constant
-    factor).  The packed value is bit-identical to the per-bit
-    formulation (integer arithmetic, same fold order)."""
+    array), then a second tiny fold over the SIMHASH_BITS counts packs
+    the sign bits.  Per-token work is unchanged but the array is
+    traversed once instead of SIMHASH_BITS times (the round-2
+    O(bits x) constant factor).  The packed value is bit-identical to
+    the per-bit formulation (integer arithmetic, same fold order)."""
     toks = F.array_distinct(tokens(text))
     hs = F.transform(toks, lambda t: _h60(t))
-    masks = F.array(*[F.lit(1 << k).cast("long") for k in range(bits)])
-    zero = F.array(*[F.lit(0).cast("long") for _ in range(bits)])
+    masks = F.array(*[F.lit(1 << k).cast("long")
+                      for k in range(SIMHASH_BITS)])
+    zero = F.array(*[F.lit(0).cast("long") for _ in range(SIMHASH_BITS)])
     sums = F.aggregate(
         hs, zero,
         lambda a, h: F.zip_with(

@@ -6,8 +6,8 @@ a7hex name): replace a group of child cells sharing a parent with the
 parent cell when the group is plausibly the parent's full child set.
 Canonical H3 requires exactly the 7 children; aperture-7 approximate
 containment (center re-encode) makes the child count per parent vary,
-so the rule here is >= full_set distinct observed children (default 7)
-— documented engine semantics, pinned by the a7hex_compact oracle.
+so the rule here is >= FULL_SET (7) distinct observed children —
+documented engine semantics, pinned by the a7hex_compact oracle.
 
 Plan shape: one Arrow-batched parent encode, one groupBy(parent) count
 (hash agg, map-side combinable), one broadcast-or-shuffle join back —
@@ -21,14 +21,15 @@ from pyspark.sql import functions as F
 
 from ..functions import geo as G
 
+FULL_SET = 7  # observed children that compact to their parent
 
-def compact(cells: DataFrame, parent_res: int, cell_col: str = "cell",
-            full_set: int = 7) -> DataFrame:
-    """cells: DataFrame with a distinct a7hex ``cell_col`` at one
+
+def compact(cells: DataFrame, parent_res: int) -> DataFrame:
+    """cells: DataFrame with a distinct a7hex ``cell`` at one
     resolution.  Returns (cell, level) where level is ``parent_res``
     for compacted parents and the child resolution for passthrough
     cells."""
-    d = cells.select(F.col(cell_col).alias("cell")).distinct()
+    d = cells.select("cell").distinct()
     child_level = (F.shiftrightunsigned(F.col("cell"), 59)
                    .cast("int"))
     d = d.withColumn(
@@ -36,11 +37,11 @@ def compact(cells: DataFrame, parent_res: int, cell_col: str = "cell",
     grp = (d.groupBy("parent")
             .agg(F.count("*").alias("n_children")))
     joined = d.join(grp, "parent")
-    parents = (joined.where(F.col("n_children") >= full_set)
+    parents = (joined.where(F.col("n_children") >= FULL_SET)
                .select(F.col("parent").alias("cell"))
                .distinct()
                .withColumn("level", F.lit(parent_res)))
-    children = (joined.where(F.col("n_children") < full_set)
+    children = (joined.where(F.col("n_children") < FULL_SET)
                 .select("cell")
                 .withColumn("level", child_level))
     return parents.unionByName(children)

@@ -61,28 +61,26 @@ def _area_correct(raw: Column, crossings: Column, area0: float) -> Column:
     return rem + F.lit(0.0)
 
 
-def polygon_area(df: DataFrame, poly_col: str = "poly_id",
-                 lat_col: str = "lat", lon_col: str = "lon",
-                 order_col: str = "vertex_id",
-                 a: float = 6378137.0, f: float = 1 / 298.257223563,
+def polygon_area(df: DataFrame, a: float = 6378137.0,
+                 f: float = 1 / 298.257223563,
                  polyline: bool = False) -> DataFrame:
-    """Per-polygon ``(n_vertices, perimeter_m, area_m2)``; area is
+    """Per-``poly_id`` ``(n_vertices, perimeter_m, area_m2)``; area is
     signed (counter-clockwise positive), matching geod_polygonarea.
     With ``polyline=True`` the closing edge is omitted and only the
     path length is returned."""
     g = k_geod.Geodesic.init(a, f)
     area0 = 4 * math.pi * k_geod.authalic_c2(g)
 
-    w = Window.partitionBy(poly_col).orderBy(order_col)
+    w = Window.partitionBy("poly_id").orderBy("vertex_id")
     wall = w.rowsBetween(Window.unboundedPreceding,
                          Window.unboundedFollowing)
     edges = df.select(
-        poly_col,
-        F.col(lat_col).alias("_la1"), F.col(lon_col).alias("_lo1"),
-        F.lead(lat_col).over(w).alias("_la2"),
-        F.lead(lon_col).over(w).alias("_lo2"),
-        F.first(lat_col).over(wall).alias("_laf"),
-        F.first(lon_col).over(wall).alias("_lof"))
+        "poly_id",
+        F.col("lat").alias("_la1"), F.col("lon").alias("_lo1"),
+        F.lead("lat").over(w).alias("_la2"),
+        F.lead("lon").over(w).alias("_lo2"),
+        F.first("lat").over(wall).alias("_laf"),
+        F.first("lon").over(wall).alias("_lof"))
     if polyline:
         edges = edges.where(F.col("_la2").isNotNull())
     else:
@@ -94,17 +92,17 @@ def polygon_area(df: DataFrame, poly_col: str = "poly_id",
     terms = edges.withColumn(
         "_t", u(F.col("_la1"), F.col("_lo1"), F.col("_la2"), F.col("_lo2")))
 
-    agg = terms.groupBy(poly_col).agg(
+    agg = terms.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.sum("_t.dist").alias("perimeter_m"),
         F.sum("_t.aseg").alias("_sumS"),
         F.sum("_t.transit").cast("long").alias("_cross"))
     if polyline:
         # n edges = n vertices - 1 when the closing edge is dropped
-        return agg.select(poly_col,
+        return agg.select("poly_id",
                           (F.col("n_vertices") + 1).alias("n_vertices"),
                           "perimeter_m")
     return agg.select(
-        poly_col, "n_vertices", "perimeter_m",
+        "poly_id", "n_vertices", "perimeter_m",
         _area_correct(-F.col("_sumS"), F.col("_cross"), area0)
         .alias("area_m2"))

@@ -35,30 +35,30 @@ def sq_degree_dist(lon1, lat1, lon2, lat2):
     return dx * dx + dy * dy
 
 
-def knn_broadcast(points: DataFrame, queries: DataFrame, k: int,
-                  lon: str = "lon", lat: str = "lat",
-                  id_col: str = "doc_id") -> DataFrame:
+GRID_DEG = 2.0  # knn_cell_pruned's lon/lat grid step
+
+
+def knn_broadcast(points: DataFrame, queries: DataFrame,
+                  k: int) -> DataFrame:
     """Exact kNN: (query_id, rank, doc_id, dist2)."""
     q = broadcast(queries.select(
         F.col("query_id"), F.col("q_lon"), F.col("q_lat")))
-    d2 = sq_degree_dist(F.col(lon), F.col(lat),
+    d2 = sq_degree_dist(F.col("lon"), F.col("lat"),
                         F.col("q_lon"), F.col("q_lat")).alias("dist2")
-    pairs = points.crossJoin(q).select("query_id", id_col, d2)
+    pairs = points.crossJoin(q).select("query_id", "doc_id", d2)
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                              F.col(id_col).asc())
+                                              F.col("doc_id").asc())
     return (pairs.withColumn("rank", F.row_number().over(w))
                  .where(F.col("rank") <= k)
-                 .select("query_id", "rank", id_col, "dist2"))
+                 .select("query_id", "rank", "doc_id", "dist2"))
 
 
-def knn_cell_pruned(points: DataFrame, queries: DataFrame, k: int,
-                    grid_deg: float = 2.0, lon: str = "lon", lat: str = "lat",
-                    id_col: str = "doc_id", max_ring: int | None = None
-                    ) -> DataFrame:
+def knn_cell_pruned(points: DataFrame, queries: DataFrame,
+                    k: int) -> DataFrame:
     """Scale path: EXACT kNN with cell-pruned candidates and a
     widening ring.
 
-    Points are bucketed once onto a ``grid_deg`` lon/lat grid
+    Points are bucketed once onto a ``GRID_DEG`` lon/lat grid
     (longitude cells wrap modulo 360).  Per ring r the candidate set is
     the points in all grid cells within Chebyshev distance r of each
     query's cell — a broadcast equi-join on the cell key, so the big
@@ -68,14 +68,13 @@ def knn_cell_pruned(points: DataFrame, queries: DataFrame, k: int,
     boundary), which makes the result provably equal to brute force.
     The per-ring driver check collects only #queries rows.
     """
-    g = float(grid_deg)
+    g = GRID_DEG
     nx = max(int(round(360.0 / g)), 1)
     pts = (points.withColumn(
-               "_ix", F.floor((F.col(lon) + 180.0) / g).cast("long") % nx)
-                 .withColumn("_iy", F.floor((F.col(lat) + 90.0) / g)
+               "_ix", F.floor((F.col("lon") + 180.0) / g).cast("long") % nx)
+                 .withColumn("_iy", F.floor((F.col("lat") + 90.0) / g)
                              .cast("long")))
-    if max_ring is None:
-        max_ring = int(180.0 / g) + 1
+    max_ring = int(180.0 / g) + 1
 
     # query cell + in-cell offsets, all Spark-side (no per-query driver
     # loop: thousands of queries x wide rings stay distributed)
@@ -92,10 +91,13 @@ def knn_cell_pruned(points: DataFrame, queries: DataFrame, k: int,
 
     def cover_df(r: int):
         # (2r+1)^2 cells per query via two explodes of a sequence —
-        # generated inside the engine, broadcast as a whole
+        # generated inside the engine, broadcast as a whole.  A ring
+        # wider than the globe takes each longitude column once: a
+        # repeated cell would repeat its points among the candidates.
+        dx0, dx1 = (-r, r) if 2 * r + 1 <= nx else (0, nx - 1)
         return (qcells
                 .select("query_id", "_qx", "_qy",
-                        F.explode(F.sequence(F.lit(-r), F.lit(r)))
+                        F.explode(F.sequence(F.lit(dx0), F.lit(dx1)))
                          .alias("_dx"))
                 .select("query_id", "_qy", "_dx",
                         F.explode(F.sequence(F.lit(-r), F.lit(r)))
@@ -105,34 +107,36 @@ def knn_cell_pruned(points: DataFrame, queries: DataFrame, k: int,
                 .select("query_id", "_ix",
                         (F.col("_qy") + F.col("_dy")).alias("_iy")))
 
-    d2 = sq_degree_dist(F.col(lon), F.col(lat),
+    d2 = sq_degree_dist(F.col("lon"), F.col("lat"),
                         F.col("q_lon"), F.col("q_lat")).alias("dist2")
     qdf = queries.select("query_id", "q_lon", "q_lat")
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                              F.col(id_col).asc())
-    for r in range(1, max_ring + 1):
-        cand = (pts.join(broadcast(cover_df(r)), ["_ix", "_iy"])
-                   .join(broadcast(qdf), "query_id")
-                   .select("query_id", id_col, d2))
-        ranked = (cand.withColumn("rank", F.row_number().over(w))
-                      .where(F.col("rank") <= k))
-        if r >= max_ring:
-            return ranked.select("query_id", "rank", id_col, "dist2")
-        # exactness check, reduced to ONE driver scalar: every query
-        # has >= k candidates and its k-th distance is inside the
-        # guaranteed in-ring radius (distance to the covered-square
-        # boundary)
-        agg = ranked.groupBy("query_id").agg(
-            F.count("*").alias("_n"), F.max("dist2").alias("_kd"))
-        bound = F.least(F.col("_qlx") + r * g,
-                        (r + 1) * g - F.col("_qlx"),
-                        F.col("_qly") + r * g,
-                        (r + 1) * g - F.col("_qly"))
-        bad = (qcells.join(agg, "query_id", "left")
-                     .where(F.col("_n").isNull() | (F.col("_n") < k)
-                            | (F.col("_kd") > bound * bound))
-                     .limit(1).count())
-        if bad == 0:
-            qcells.unpersist()
-            return ranked.select("query_id", "rank", id_col, "dist2")
-    raise AssertionError("unreachable")
+                                              F.col("doc_id").asc())
+    try:
+        for r in range(1, max_ring + 1):
+            cand = (pts.join(broadcast(cover_df(r)), ["_ix", "_iy"])
+                       .join(broadcast(qdf), "query_id")
+                       .select("query_id", "doc_id", d2))
+            ranked = (cand.withColumn("rank", F.row_number().over(w))
+                          .where(F.col("rank") <= k))
+            if r == max_ring:
+                break
+            # exactness check, reduced to ONE driver scalar: every query
+            # has >= k candidates and its k-th distance is inside the
+            # guaranteed in-ring radius (distance to the covered-square
+            # boundary)
+            agg = ranked.groupBy("query_id").agg(
+                F.count("*").alias("_n"), F.max("dist2").alias("_kd"))
+            bound = F.least(F.col("_qlx") + r * g,
+                            (r + 1) * g - F.col("_qlx"),
+                            F.col("_qly") + r * g,
+                            (r + 1) * g - F.col("_qly"))
+            bad = (qcells.join(agg, "query_id", "left")
+                         .where(F.col("_n").isNull() | (F.col("_n") < k)
+                                | (F.col("_kd") > bound * bound))
+                         .limit(1).count())
+            if bad == 0:
+                break
+    finally:
+        qcells.unpersist()
+    return ranked.select("query_id", "rank", "doc_id", "dist2")

@@ -52,8 +52,7 @@ def _decode_dims(payload: bytes, image_mod) -> tuple[int, int]:
     return _decode_stub(payload)
 
 
-def extract_meta(blobs: DataFrame, id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
+def extract_meta(blobs: DataFrame) -> DataFrame:
     """mapInPandas metadata extraction over binary payloads.  With PIL
     on the executors, real images get true dimensions; everything else
     takes the vectorized deterministic-stub path."""
@@ -61,19 +60,19 @@ def extract_meta(blobs: DataFrame, id_col: str = "doc_id",
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         image_mod = _pil_image_module()
         for pdf in batches:
-            lens = pdf[payload_col].map(len)
+            lens = pdf["payload"].map(len)
             if image_mod is None:
                 width = (lens % 640).astype("int64")
                 height = ((lens * 7) % 480).astype("int64")
             else:
                 dims = [_decode_dims(p, image_mod)
-                        for p in pdf[payload_col]]
+                        for p in pdf["payload"]]
                 width = pd.Series([d[0] for d in dims], index=pdf.index,
                                   dtype="int64")
                 height = pd.Series([d[1] for d in dims], index=pdf.index,
                                    dtype="int64")
             yield pd.DataFrame({
-                "doc_id": pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "n_bytes": lens.astype("int64"),
                 "width": width,
                 "height": height,
@@ -82,9 +81,7 @@ def extract_meta(blobs: DataFrame, id_col: str = "doc_id",
     return blobs.mapInPandas(_extract, META_SCHEMA)
 
 
-def frame_sample(blobs: DataFrame, every_n: int = 10,
-                 id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
+def frame_sample(blobs: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling plumbing: emits (doc_id, frame_idx,
     frame_bytes) rows; frame extraction itself is the stub (slices of
     the payload stand in for decoded frames)."""
@@ -93,14 +90,14 @@ def frame_sample(blobs: DataFrame, every_n: int = 10,
         import numpy as np
 
         for pdf in batches:
-            payloads = pdf[payload_col].to_numpy()
+            payloads = pdf["payload"].to_numpy()
             n_rows = len(payloads)
             lens = np.fromiter((len(p) for p in payloads),
                                dtype=np.int64, count=n_rows)
             counts = np.minimum(every_n, lens)
             steps = np.maximum(1, lens // max(1, every_n))
             rep_row = np.repeat(np.arange(n_rows), counts)
-            rep_doc = np.repeat(pdf[id_col].to_numpy(), counts)
+            rep_doc = np.repeat(pdf["doc_id"].to_numpy(), counts)
             total = int(counts.sum())
             # per-frame index within each doc: global arange minus the
             # repeated per-doc offset (vectorized grouped cumcount)
@@ -121,9 +118,9 @@ def frame_sample(blobs: DataFrame, every_n: int = 10,
                              "doc_id long, frame_idx int, frame_bytes binary")
 
 
-def fake_embedding_cols(payload_col: str = "payload", dim: int = 4):
-    """Deterministic placeholder feature extractor over a binary
-    payload, built entirely from JVM-side expressions (md5 + conv —
+def fake_embedding_cols():
+    """Four deterministic placeholder features of the binary
+    ``payload``, built entirely from JVM-side expressions (md5 + conv —
     whole-stage codegen, no Python in the hot path).  On a real
     cluster the md5-derived features are replaced by a model forward
     pass (Arrow-batched pandas UDF); the column shape (binary ->
@@ -135,8 +132,8 @@ def fake_embedding_cols(payload_col: str = "payload", dim: int = 4):
     from pyspark.sql import functions as F
 
     cols = []
-    for k in range(dim):
-        h = F.md5(F.concat(F.col(payload_col),
+    for k in range(4):
+        h = F.md5(F.concat(F.col("payload"),
                            F.lit(str(k)).cast("binary")))
         v = (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
              % 1000000) / 1000000.0

@@ -16,42 +16,33 @@ from pyspark.sql import functions as F
 from ..functions.geo import kernel_udf
 
 
-def grid_cell(lon, lat, dlon: float = 1.0, dlat: float = 1.0):
-    """Integer raster cell indices (Catalyst expressions)."""
-    ix = F.floor((lon + F.lit(180.0)) / F.lit(dlon)).cast("long")
-    iy = F.floor((lat + F.lit(90.0)) / F.lit(dlat)).cast("long")
-    return ix, iy
+def rasterize(points: DataFrame) -> DataFrame:
+    """Point count per 1-degree cell (ix, iy) of ``lon, lat``, counted
+    from (-180, -90) (Catalyst expressions)."""
+    ix = F.floor(F.col("lon") + F.lit(180.0)).cast("long")
+    iy = F.floor(F.col("lat") + F.lit(90.0)).cast("long")
+    return (points.groupBy(ix.alias("ix"), iy.alias("iy"))
+                  .agg(F.count("*").alias("n_pts")))
 
 
-def rasterize(points: DataFrame, value_col: str | None = None,
-              lon: str = "lon", lat: str = "lat",
-              dlon: float = 1.0, dlat: float = 1.0) -> DataFrame:
-    ix, iy = grid_cell(F.col(lon), F.col(lat), dlon, dlat)
-    g = points.groupBy(ix.alias("ix"), iy.alias("iy"))
-    aggs = [F.count("*").alias("n_pts")]
-    if value_col:
-        aggs.append(F.avg(value_col).alias("avg_val"))
-    return g.agg(*aggs)
-
-
-def analytic_grid(width: int = 360, height: int = 180) -> np.ndarray:
-    """Deterministic smooth test field; value(ix,iy)=sin(.7ix)cos(.3iy)."""
-    ix = np.arange(width, dtype=np.float64)
-    iy = np.arange(height, dtype=np.float64)
+def analytic_grid() -> np.ndarray:
+    """Deterministic smooth 1-degree 360x180 test field;
+    value(ix,iy)=sin(.7ix)cos(.3iy)."""
+    ix = np.arange(360, dtype=np.float64)
+    iy = np.arange(180, dtype=np.float64)
     return np.sin(0.7 * ix)[None, :] * np.cos(0.3 * iy[:, None])
 
 
-def bilinear_udf(grid: np.ndarray, lon0: float = -180.0, lat0: float = -90.0,
-                 dlon: float = 1.0, dlat: float = 1.0):
+def bilinear_udf(grid: np.ndarray):
     """Arrow UDF (lon, lat) -> double: 4-corner bilinear interpolation
-    with node (ix,iy) at (lon0+ix*dlon, lat0+iy*dlat); clamped to the
-    grid edge (grids.cpp:3322-3393 weight formula)."""
+    of a 1-degree grid with node (ix,iy) at (ix - 180, iy - 90);
+    clamped to the grid edge (grids.cpp:3322-3393 weight formula)."""
     g = np.asarray(grid, dtype=np.float64)
     h, w = g.shape
 
     def k(lon, lat):
-        fx = (lon - lon0) / dlon
-        fy = (lat - lat0) / dlat
+        fx = lon + 180.0
+        fy = lat + 90.0
         ix = np.clip(np.floor(fx).astype(np.int64), 0, w - 2)
         iy = np.clip(np.floor(fy).astype(np.int64), 0, h - 2)
         tx = fx - ix

@@ -19,12 +19,15 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+BANDS, ROWS = 2, 8  # neardup_pairs' LSH: 2 bands of 8 sign bits
+NPROBE = 4  # inverted lists ivf_topk searches per query
 
-def hyperplanes(dim: int = 64, n: int = 8, seed: int = 42) -> np.ndarray:
-    """Deterministic pseudo-random hyperplanes (fixed literal values —
-    shared verbatim by engine and oracle)."""
+
+def hyperplanes(n: int = 8, seed: int = 42) -> np.ndarray:
+    """``n`` deterministic pseudo-random hyperplanes in 64 dimensions
+    (fixed literal values — shared verbatim by engine and oracle)."""
     rng = np.random.RandomState(seed)
-    return rng.standard_normal((n, dim)).round(6)
+    return rng.standard_normal((n, 64)).round(6)
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -41,13 +44,12 @@ def cosine_expr(a: Column, b: Column, norm_a: Column,
     return F.try_divide(dot_expr(a, b), norm_a * norm_b)
 
 
-def _normed(vectors: DataFrame, vec_col: str, id_col: str,
-            *keep: Column) -> DataFrame:
-    """(id, _v, _n, *keep): the vector as array<double> (a float
+def _normed(vectors: DataFrame, *keep: Column) -> DataFrame:
+    """(vec_id, _v, _n, *keep): the embedding as array<double> (a float
     element would otherwise multiply in single precision) and its norm
     sqrt(<v, v>)."""
-    v = F.col(vec_col).cast("array<double>")
-    return vectors.select(id_col, v.alias("_v"),
+    v = F.col("embedding").cast("array<double>")
+    return vectors.select("vec_id", v.alias("_v"),
                           F.sqrt(dot_expr(v, v)).alias("_n"), *keep)
 
 
@@ -93,112 +95,104 @@ def nearest_centroid_expr(vec: Column, centroids: np.ndarray) -> Column:
     return F.coalesce(argmin, F.lit(-1)).cast("int")
 
 
-def _sign_bits(dots: Column, start: int, rows: int) -> Column:
+def _sign_bits(dots: Column, start: int) -> Column:
     acc = F.lit(0)
-    for k in range(rows):
+    for k in range(ROWS):
         acc = acc + F.when(F.element_at(dots, start + k + 1) > 0,
                            F.lit(1 << k)).otherwise(F.lit(0))
     return acc
 
 
-def banded_buckets_expr(vec: Column, planes: np.ndarray, bands: int,
-                        rows: int) -> Column:
+def banded_buckets_expr(vec: Column) -> Column:
     """array<int> of per-band bucket ids from ONE dot-product pass over
-    the embedding (bands*rows planes), binding the dots array once."""
+    the embedding (BANDS*ROWS planes), binding the dots array once."""
+    planes = hyperplanes(n=BANDS * ROWS)
     return F.element_at(
         F.transform(F.array(dots_expr(vec, planes)),
-                    lambda d: F.array(*[_sign_bits(d, b * rows, rows)
-                                        for b in range(bands)])),
+                    lambda d: F.array(*[_sign_bits(d, b * ROWS)
+                                        for b in range(BANDS)])),
         1)
 
 
-def _top_k(sims: DataFrame, k: int, id_col: str) -> DataFrame:
-    """(query_id, rank, id, sim): the k best of each query, ranked on
-    the ROUNDED similarity, then id, so the result is invariant to FP
-    summation order."""
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, vec_id, sim): the k best of each query, ranked
+    on the ROUNDED similarity, then id, so the result is invariant to
+    FP summation order."""
     w = (Window.partitionBy("query_id")
-         .orderBy(F.col("sim").desc(), F.col(id_col).asc()))
+         .orderBy(F.col("sim").desc(), F.col("vec_id").asc()))
     return (sims.withColumn("rank", F.row_number().over(w).cast("long"))
                 .where(F.col("rank") <= k)
-                .select("query_id", "rank", id_col, "sim"))
+                .select("query_id", "rank", "vec_id", "sim"))
 
 
-def _queries(v: DataFrame, query_ids: list[int], id_col: str) -> DataFrame:
+def _queries(v: DataFrame, query_ids: list[int]) -> DataFrame:
     """(query_id long, _q, _qn): the query rows of a `_normed` frame."""
-    return (v.where(F.col(id_col).isin(list(query_ids)))
-             .select(F.col(id_col).cast("long").alias("query_id"),
+    return (v.where(F.col("vec_id").isin(list(query_ids)))
+             .select(F.col("vec_id").cast("long").alias("query_id"),
                      F.col("_v").alias("_q"), F.col("_n").alias("_qn")))
 
 
-def _cos_sim(round_to: int) -> Column:
-    """`sim`: the rounded cosine of vector (_v, norm _n) against vector
-    (_q, norm _qn)."""
+def _cos_sim() -> Column:
+    """`sim`: the cosine of vector (_v, norm _n) against vector (_q,
+    norm _qn), rounded to 9 places."""
     return F.round(cosine_expr(F.col("_v"), F.col("_q"), F.col("_n"),
-                               F.col("_qn")), round_to).alias("sim")
+                               F.col("_qn")), 9).alias("sim")
 
 
-def cosine_topk(vectors: DataFrame, query_ids: list[int], k: int,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                round_to: int = 9) -> DataFrame:
+def cosine_topk(vectors: DataFrame, query_ids: list[int],
+                k: int) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (excluding
     self): the query rows are broadcast against every vector."""
-    v = _normed(vectors, vec_col, id_col)
-    q = _queries(v, query_ids, id_col)
-    sims = (v.join(F.broadcast(q), F.col("query_id") != F.col(id_col))
-             .select("query_id", id_col, _cos_sim(round_to)))
-    return _top_k(sims, k, id_col)
+    v = _normed(vectors)
+    q = _queries(v, query_ids)
+    sims = (v.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
+             .select("query_id", "vec_id", _cos_sim()))
+    return _top_k(sims, k)
 
 
 def neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
-                  vec_col: str = "embedding", id_col: str = "vec_id",
-                  planes: np.ndarray | None = None,
-                  round_to: int = 9, bands: int = 2, rows: int = 8,
                   max_bucket: int = 2000) -> DataFrame:
     """Near-duplicate pairs via BANDED sign-hyperplane LSH with exact
     cosine verification.
 
-    ``bands`` independent 2^rows-bucket partitions: a pair is a
+    ``BANDS`` independent 2^ROWS-bucket partitions: a pair is a
     candidate if it collides in ANY band (union -> higher recall than
     a single partition), and every (band, bucket) with more than
     ``max_bucket`` members is dropped before the self-join — one hot
     bucket (near-constant embeddings, zero vectors) would otherwise
     contribute O(m^2) pairs at web scale.  The windowed count shuffles
     on the same (band, bucket) key the join needs."""
-    planes = hyperplanes(n=bands * rows) if planes is None else planes
-    band_buckets = banded_buckets_expr(F.col(vec_col), planes, bands, rows)
-    b = _normed(vectors, vec_col, id_col,
-                F.posexplode(band_buckets).alias("band", "bucket"))
+    band_buckets = banded_buckets_expr(F.col("embedding"))
+    b = _normed(vectors, F.posexplode(band_buckets).alias("band", "bucket"))
     bucket_n = F.count("*").over(Window.partitionBy("band", "bucket"))
     b = (b.withColumn("_bn", bucket_n)
           .where(F.col("_bn") <= max_bucket).drop("_bn"))
     a, c = b.alias("a"), b.alias("b")
     pairs = (a.join(c, (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-              .select(F.col(f"a.{id_col}").alias("vec_a"),
-                      F.col(f"b.{id_col}").alias("vec_b"),
+                    & (F.col("a.vec_id") < F.col("b.vec_id")))
+              .select(F.col("a.vec_id").alias("vec_a"),
+                      F.col("b.vec_id").alias("vec_b"),
                       "a._v", "a._n", F.col("b._v").alias("_q"),
                       F.col("b._n").alias("_qn"))
               .dropDuplicates(["vec_a", "vec_b"]))
-    return (pairs.select("vec_a", "vec_b", _cos_sim(round_to))
+    return (pairs.select("vec_a", "vec_b", _cos_sim())
                  .where(F.col("sim") >= threshold))
 
 
 # ------------------------------------------------------------------- IVF
 
 def kmeans_centroids(vectors: DataFrame, n_centroids: int = 16,
-                     n_iter: int = 8, sample_n: int = 2048,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> np.ndarray:
-    """Deterministic Lloyd k-means on an id-ordered sample, run
-    driver-side — the coarse quantizer of an IVF index.  At 10^12 rows
-    the sample is a tiny bounded collect; the expensive step
-    (assignment) runs distributed in ivf_topk."""
-    rows = (vectors.orderBy(id_col).limit(sample_n)
-                   .select(vec_col).collect())
+                     sample_n: int = 2048) -> np.ndarray:
+    """Deterministic Lloyd k-means (8 iterations) on an id-ordered
+    sample, run driver-side — the coarse quantizer of an IVF index.
+    At 10^12 rows the sample is a tiny bounded collect; the expensive
+    step (assignment) runs distributed in ivf_topk."""
+    rows = (vectors.orderBy("vec_id").limit(sample_n)
+                   .select("embedding").collect())
     X = np.array([r[0] for r in rows], dtype=np.float64)
     C = X[:n_centroids].copy()
-    for _ in range(n_iter):
+    for _ in range(8):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
         a = d.argmin(1)
         for j in range(n_centroids):
@@ -209,33 +203,30 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int = 16,
 
 
 def ivf_topk(vectors: DataFrame, query_ids: list[int], k: int,
-             centroids: np.ndarray | None = None, nprobe: int = 4,
-             n_centroids: int = 16, vec_col: str = "embedding",
-             id_col: str = "vec_id", round_to: int = 9) -> DataFrame:
+             centroids: np.ndarray | None = None) -> DataFrame:
     """IVF-style ANN top-k: assign every vector to its nearest
-    centroid (inverted lists), probe only the ``nprobe`` lists nearest
+    centroid (inverted lists), probe only the NPROBE lists nearest
     each query, exact cosine + top-k inside the probed lists.
 
-    The scan touches ~nprobe/n_centroids of the data per query — the
+    The scan touches ~NPROBE/n_centroids of the data per query — the
     sub-linear 100 TB path; cosine_topk remains the exact baseline.
     The probe choice runs on the driver over the collected query
     vectors, which ride in the broadcast probe rows to the candidates.
     Returns (query_id, rank, vec_id, sim)."""
     if centroids is None:
-        centroids = kmeans_centroids(vectors, n_centroids=n_centroids,
-                                     vec_col=vec_col, id_col=id_col)
+        centroids = kmeans_centroids(vectors)
     C = np.asarray(centroids, dtype=np.float64)
-    v = _normed(vectors, vec_col, id_col)
+    v = _normed(vectors)
     probe_rows = []
-    for r in _queries(v, query_ids, id_col).collect():
+    for r in _queries(v, query_ids).collect():
         d = ((C - np.array(r["_q"], dtype=np.float64)) ** 2).sum(axis=1)
-        for cid in np.argsort(d, kind="stable")[:nprobe]:
+        for cid in np.argsort(d, kind="stable")[:NPROBE]:
             probe_rows.append((r["query_id"], int(cid), r["_q"], r["_qn"]))
     probes = vectors.sparkSession.createDataFrame(
         probe_rows, "query_id long, cid int, _q array<double>, _qn double")
 
     assigned = v.withColumn("cid", nearest_centroid_expr(F.col("_v"), C))
     sims = (assigned.join(F.broadcast(probes), "cid")
-                    .where(F.col("query_id") != F.col(id_col))
-                    .select("query_id", id_col, _cos_sim(round_to)))
-    return _top_k(sims, k, id_col)
+                    .where(F.col("query_id") != F.col("vec_id"))
+                    .select("query_id", "vec_id", _cos_sim()))
+    return _top_k(sims, k)

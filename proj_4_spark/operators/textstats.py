@@ -289,8 +289,10 @@ def repetition_signals(docs) -> "DataFrame":
                          * 3.0 / n, 6) + 0.0).alias("top_3gram_frac")))
 
 
-def bm25_scores(docs, terms: tuple[str, ...],
-                k1: float = 1.2, b: float = 0.75) -> "DataFrame":
+BM25_K1, BM25_B = 1.2, 0.75  # term-frequency saturation, length norm
+
+
+def bm25_scores(docs, terms: tuple[str, ...]) -> "DataFrame":
     """Okapi BM25 score of every document against a fixed term set
     (Robertson et al.; the Lucene idf variant
     ln(1 + (N - df + 0.5)/(df + 0.5))).  Corpus statistics (N, avgdl,
@@ -321,8 +323,9 @@ def bm25_scores(docs, terms: tuple[str, ...],
         def term_score(idf):
             # single-arg lambda: a 2-arg lambda would make transform
             # pass the array INDEX as the second argument
-            return lambda tf: idf * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+            return lambda tf: idf * tf * (BM25_K1 + 1.0) / (
+                tf + BM25_K1 * (1.0 - BM25_B
+                                + BM25_B * F.col("dl") / F.col("avgdl")))
 
         score = score + _bind(
             F.size(F.filter("toks", lambda x: x == F.lit(t)))

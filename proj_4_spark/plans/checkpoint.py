@@ -10,7 +10,10 @@ snapshot-completeness check maps 1:1 onto Iceberg's
 `snapshot_id`/`summary` metadata on a real deployment.
 
 Also records per-stage lineage/metrics rows (row counts, wall time,
-partition count) in `<root>/_metrics/<stage>.json`.
+partition count) in `<root>/_metrics/<stage>.json`.  `wall_s` is the
+stage's own wall clock, from build to read-back.  Stages that run at
+once (the tiling job's four outputs) overlap in it, so for them it is
+not the stage's cost.
 
 A stage that runs is one Spark job: the write.  Its row count is an
 `Observation` filled in during that write, `partitions` is the number

@@ -5,8 +5,6 @@ values (columns sorted by name, rows sorted)."""
 
 from __future__ import annotations
 
-import math
-
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -20,10 +18,10 @@ def duckdb_run(sql: str, sf_dir: str):
     return con.sql(sql).df()
 
 
-def compare(spark_df, oracle_df, float_rtol: float = 0.0) -> list[str]:
-    """Returns a list of mismatch descriptions (empty = pass)."""
+def compare(spark_df, oracle_df) -> list[str]:
+    """Returns a list of mismatch descriptions (empty = pass).  Floats
+    must match exactly, sign of zero included."""
     import numpy as np
-    import pandas as pd
 
     problems = []
     s = spark_df.toPandas() if hasattr(spark_df, "toPandas") else spark_df
@@ -42,14 +40,10 @@ def compare(spark_df, oracle_df, float_rtol: float = 0.0) -> list[str]:
         if sv.dtype.kind == "f" or ov.dtype.kind == "f":
             sv = sv.astype(np.float64)
             ov = ov.astype(np.float64)
-            both_nan = np.isnan(sv) & np.isnan(ov)
-            if float_rtol == 0.0:
-                # driver hashes the byte/string representation, so -0.0
-                # vs 0.0 is a mismatch there — be equally strict here
-                ok = (sv == ov) & (np.signbit(sv) == np.signbit(ov))
-                ok |= both_nan
-            else:
-                ok = np.isclose(sv, ov, rtol=float_rtol, atol=0.0) | both_nan
+            # driver hashes the byte/string representation, so -0.0
+            # vs 0.0 is a mismatch there — be equally strict here
+            ok = (sv == ov) & (np.signbit(sv) == np.signbit(ov))
+            ok |= np.isnan(sv) & np.isnan(ov)
             if not ok.all():
                 k = int(np.argmin(ok))
                 problems.append(

@@ -310,7 +310,7 @@ def q_stream_tile_rollup_batchpar(spark, sf_dir):
 
     stage = tempfile.mkdtemp(prefix="stream_tiles_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{stage}/part-0.parquet")
-    agg = run_to_memory(spark, stage, level=8, name="gate_stream_tiles")
+    agg = run_to_memory(spark, stage, name="gate_stream_tiles")
     fij = G.s2_cell_to_face_ij_udf(8)(F.col("cell"))
     return (agg.withColumn("_f", fij)
                .select(F.col("_f.face").alias("face"),
@@ -399,9 +399,10 @@ WHERE {P.convex_inside_sql("c.lon", "c.lat")}
 ORDER BY c.doc_id, polys.polygon_id
 """)
 def q_pip_join(spark, sf_dir):
-    """Point-in-polygon join: S2 cell-cover candidate generation
-    (broadcast) + exact ray casting.  Oracle: unrolled convex
-    cross-product containment over the same literal vertices."""
+    """Point-in-polygon join: one Arrow UDF per point looks up its S2
+    cell-cover candidates and ray-casts them exactly, then Catalyst
+    explodes the polygon ids.  Oracle: unrolled convex cross-product
+    containment over the same literal vertices."""
     pts = _coords(spark, sf_dir)
     out = SJ.pip_join(pts, _POLY_ROWS, level=8)
     return out.select("doc_id", "polygon_id").orderBy("doc_id", "polygon_id")
@@ -560,7 +561,7 @@ def q_minhash_signatures(spark, sf_dir):
     per (doc, permutation)."""
     d = _docs(spark, sf_dir)
     sh = DD.doc_shingle_table(d)
-    sig = sh.select("doc_id", DD.minhash_signature(F.col("sh"), 8).alias("sig"))
+    sig = sh.select("doc_id", DD.minhash_signature(F.col("sh")).alias("sig"))
     return (sig.select("doc_id", F.posexplode("sig").alias("perm", "minhash"))
                .select("doc_id", F.col("perm").cast("long").alias("perm"),
                        "minhash")
@@ -638,10 +639,10 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
              .orderBy("doc_a", "doc_b"))
 
 
-def _simhash_sql(bits: int = 16) -> str:
+def _simhash_sql() -> str:
     h = _H60.format(s="t")
     terms = []
-    for k in range(bits):
+    for k in range(DD.SIMHASH_BITS):
         bs = (f"list_sum(list_transform(toks, t -> "
               f"CASE WHEN ({h} & {1 << k}) != 0 THEN 1 ELSE -1 END))")
         terms.append(f"(CASE WHEN {bs} > 0 THEN {1 << k} ELSE 0 END)")
@@ -653,14 +654,14 @@ WITH toks AS (
   SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
   FROM documents
 )
-SELECT doc_id, CAST({_simhash_sql(16)} AS BIGINT) AS simhash
+SELECT doc_id, CAST({_simhash_sql()} AS BIGINT) AS simhash
 FROM toks ORDER BY doc_id
 """)
 def q_simhash16(spark, sf_dir):
     """16-bit SimHash fingerprint from keyed 60-bit token hashes."""
     d = _docs(spark, sf_dir)
     return (d.select("doc_id",
-                     DD.simhash(F.col("text"), 16).cast("long")
+                     DD.simhash(F.col("text")).cast("long")
                        .alias("simhash"))
              .orderBy("doc_id"))
 
@@ -828,7 +829,7 @@ def q_embed_cosine_top5(spark, sf_dir):
                .orderBy("query_id", "rank"))
 
 
-_PLANES = SIM.hyperplanes(n=16)  # 2 bands x 8 planes
+_PLANES = SIM.hyperplanes(n=SIM.BANDS * SIM.ROWS)  # 2 bands x 8 planes
 
 
 def _bucket_sql(vec: str, planes) -> str:
@@ -878,15 +879,15 @@ def q_embed_neardup_pairs(spark, sf_dir):
     planes — union of band collisions, hot buckets above 2000 members
     dropped before the self-join), exact cosine verify >= 0.6."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return (SIM.neardup_pairs(e, threshold=0.6, planes=_PLANES)
+    return (SIM.neardup_pairs(e, threshold=0.6)
                .orderBy("vec_a", "vec_b"))
 
 
-_IVF_CENTROIDS = SIM.hyperplanes(dim=64, n=16, seed=7)  # fixed codebook
+_IVF_CENTROIDS = SIM.hyperplanes(n=16, seed=7)  # fixed codebook
 
 
 @register("ivf_cosine_top5", O.ivf_sql(_IVF_CENTROIDS, n_queries=10,
-                                       nprobe=4, k=5))
+                                       nprobe=SIM.NPROBE, k=5))
 def q_ivf_cosine_top5(spark, sf_dir):
     """IVF-style ANN top-5: nearest-centroid inverted lists over a
     fixed deterministic codebook, nprobe=4 of 16 lists searched per
@@ -894,8 +895,7 @@ def q_ivf_cosine_top5(spark, sf_dir):
     baseline; kmeans_centroids trains a data-adapted codebook, tested
     in pytest)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = SIM.ivf_topk(e, list(range(10)), 5, centroids=_IVF_CENTROIDS,
-                       nprobe=4)
+    out = SIM.ivf_topk(e, list(range(10)), 5, centroids=_IVF_CENTROIDS)
     return (out.select("query_id", "rank", "vec_id",
                        (F.col("sim") + 0.0).alias("sim"))
                .orderBy("query_id", "rank"))
@@ -2398,20 +2398,21 @@ def q_repetition_signals(spark, sf_dir):
 _BM25_TERMS = ("spark", "join", "window")
 
 
-def _bm25_sql(terms=_BM25_TERMS) -> str:
+def _bm25_sql() -> str:
     dfs = ",\n    ".join(
         f"sum(CASE WHEN list_contains(toks, '{t}') THEN 1.0 ELSE 0.0 END)"
-        f" AS df_{j}" for j, t in enumerate(terms))
+        f" AS df_{j}" for j, t in enumerate(_BM25_TERMS))
     # mirrors operators/textstats.py::bm25_scores term-by-term with the
-    # same association order (Python folds 1.0-b to 0.25 before the
-    # Column graph, so the SQL uses the folded literal too)
+    # same association order (Python folds 1.0-b before the Column
+    # graph, so the SQL uses the folded literal too)
+    k1, b = TS.BM25_K1, TS.BM25_B
     parts = []
-    for j, t in enumerate(terms):
+    for j, t in enumerate(_BM25_TERMS):
         tf = (f"CAST(len(list_filter(toks, x -> x = '{t}')) AS DOUBLE)")
         parts.append(
             f"(ln(1.0 + (n_docs - df_{j} + 0.5)/(df_{j} + 0.5))"
-            f" * {tf} * (1.2 + 1.0)"
-            f" / ({tf} + 1.2*(0.25 + 0.75*dl/avgdl)))")
+            f" * {tf} * ({k1} + 1.0)"
+            f" / ({tf} + {k1}*({1.0 - b} + {b}*dl/avgdl)))")
     score = " + ".join(parts)
     return f"""
 WITH t AS (

@@ -7,8 +7,8 @@ so the correctness suite instead derives a deterministic (lon, lat)
 per ``doc_id`` using *pure integer arithmetic + IEEE double ops* that
 evaluate bit-identically in Spark SQL and DuckDB.  This reproduces the
 skew model of FIXTURES.md §1: a Zipf-weighted mixture of ~25 "city"
-centers (top city ≈20%% of points — the hot-cell case the north rule
-requires salting for) plus a uniform global background.
+centers (top city ≈20%% of points — a hot cell, which the tiling job
+counts without salting, README "Skew") plus a uniform global background.
 
 Everything here is emitted as a *SQL expression string* consumed by
 BOTH engines (``F.expr`` on the Spark side, verbatim in the DuckDB
@@ -16,8 +16,6 @@ oracle), so there is exactly one definition of the data.
 """
 
 from __future__ import annotations
-
-import math
 
 # 25 metro centers (lon, lat) — public, coarse CBD coordinates.
 CITIES: list[tuple[str, float, float]] = [
@@ -51,6 +49,7 @@ CITIES: list[tuple[str, float, float]] = [
 ZIPF_ALPHA = 1.1
 BACKGROUND_FRAC = 0.10  # uniform global background share
 SPREAD_DEG = 0.5  # jitter half-width around a city center, degrees
+SLOTS = 100_000  # a doc_id hashes to one of SLOTS mixture slots
 
 # Knuth multiplicative-hash constants (fit in int64 for doc_id < ~7e9)
 H_CITY = 2654435761
@@ -58,21 +57,20 @@ H_JLON = 48271
 H_JLAT = 69621
 
 
-def zipf_thresholds(n: int = len(CITIES), alpha: float = ZIPF_ALPHA,
-                    scale: int = 100_000) -> list[int]:
-    """Cumulative integer thresholds over [0, scale) for the city mixture.
+def zipf_thresholds() -> list[int]:
+    """Cumulative integer thresholds over [0, SLOTS) for the mixture.
 
-    The first ``round(scale * BACKGROUND_FRAC)`` slots are the uniform
-    background; the rest split Zipf(alpha) across the cities.
+    The first ``round(SLOTS * BACKGROUND_FRAC)`` slots are the uniform
+    background; the rest split Zipf(ZIPF_ALPHA) across the cities.
     """
-    bg = round(scale * BACKGROUND_FRAC)
-    w = [1.0 / (i + 1) ** alpha for i in range(n)]
+    bg = round(SLOTS * BACKGROUND_FRAC)
+    w = [1.0 / (i + 1) ** ZIPF_ALPHA for i in range(len(CITIES))]
     tot = sum(w)
     cum, acc = [], bg
-    for i in range(n):
-        acc += (scale - bg) * w[i] / tot
-        cum.append(min(scale, round(acc)))
-    cum[-1] = scale
+    for wi in w:
+        acc += (SLOTS - bg) * wi / tot
+        cum.append(min(SLOTS, round(acc)))
+    cum[-1] = SLOTS
     return cum
 
 
@@ -89,8 +87,8 @@ def lonlat_sql(id_col: str = "doc_id") -> tuple[str, str]:
     (same IEEE ops in both engines ⇒ bit-identical results).
     """
     thresholds = zipf_thresholds()
-    bg = round(100_000 * BACKGROUND_FRAC)
-    sel = f"(({id_col} * {H_CITY}) % 100000)"
+    bg = round(SLOTS * BACKGROUND_FRAC)
+    sel = f"(({id_col} * {H_CITY}) % {SLOTS})"
     jlon = _jitter_expr(id_col, H_JLON, SPREAD_DEG)
     jlat = _jitter_expr(id_col, H_JLAT, SPREAD_DEG * 0.5)
     # uniform background: lon in [-180,180), lat in (-66,66) (clear of poles)
@@ -129,8 +127,8 @@ def lonlat_numpy(doc_id):
 
     doc_id = np.asarray(doc_id, dtype=np.int64)
     thresholds = zipf_thresholds()
-    bg = round(100_000 * BACKGROUND_FRAC)
-    sel = (doc_id * H_CITY) % 100_000
+    bg = round(SLOTS * BACKGROUND_FRAC)
+    sel = (doc_id * H_CITY) % SLOTS
     jlon = ((doc_id * H_JLON) % 20001 - 10000).astype(np.float64) / 10000.0 * SPREAD_DEG
     jlat = ((doc_id * H_JLAT) % 20001 - 10000).astype(np.float64) / 10000.0 * (SPREAD_DEG * 0.5)
     bg_lon = ((doc_id * 179424673) % 360000).astype(np.float64) / 1000.0 - 180.0

@@ -87,9 +87,8 @@ def synthesize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{txt} AS text", "lang", "doc_id"))
 
 
-def _mine_matches(pages: DataFrame, text_col: str, pattern: str,
-                  lat_lon) -> DataFrame:
-    """Every input column but `text_col`, then (mention_idx int, lat
+def _mine_matches(pages: DataFrame, pattern: str, lat_lon) -> DataFrame:
+    """Every input column but `text`, then (mention_idx int, lat
     double, lon double) for each in-range match of `pattern`.
 
     One `regexp_extract_all` pass over each text; `posexplode` numbers
@@ -99,8 +98,8 @@ def _mine_matches(pages: DataFrame, text_col: str, pattern: str,
     `regexp_extract`, to the (lat, lon) columns.  lat must lie in
     [-90, 90] and lon in [-180, 180]; a null or empty text gives no
     row."""
-    cols = [pages[c] for c in pages.columns if c != text_col]
-    matches = F.regexp_extract_all(pages[text_col], F.lit(pattern), F.lit(0))
+    cols = [pages[c] for c in pages.columns if c != "text"]
+    matches = F.regexp_extract_all(pages["text"], F.lit(pattern), F.lit(0))
     m = pages.select(*cols, F.posexplode(matches).alias("mention_idx", "_m"))
     match = F.col("_m")
     lat, lon = lat_lon(*[F.regexp_extract(match, pattern, i)
@@ -109,9 +108,9 @@ def _mine_matches(pages: DataFrame, text_col: str, pattern: str,
              .where((F.abs("lat") <= 90.0) & (F.abs("lon") <= 180.0)))
 
 
-def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def mine_coords(pages: DataFrame) -> DataFrame:
     """Extract every 'lat, lon' mention of `COORD_RE`: every input
-    column but `text_col`, then (mention_idx int, lat double,
+    column but `text`, then (mention_idx int, lat double,
     lon double).
 
     Catalyst expressions only, no Python UDF and no higher-order
@@ -119,7 +118,7 @@ def mine_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
     each match.  A null or empty text gives no row.  Only ASCII digits
     are mined (see the module docstring)."""
     return _mine_matches(
-        pages, text_col, COORD_RE,
+        pages, COORD_RE,
         lambda lat, lon: (lat.cast("double"), lon.cast("double")))
 
 
@@ -142,7 +141,7 @@ def _dms_degrees(d: Column, m: Column, s: Column, hemi: Column,
     return F.when(hemi == neg, -v).otherwise(v)
 
 
-def mine_coords_dms(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def mine_coords_dms(pages: DataFrame) -> DataFrame:
     """Extract every DMS 'lat lon' mention: (…, mention_idx, lat, lon)
     in signed decimal degrees (deg + min/60 + sec/3600, S/W negative),
     the columns and types of :func:`mine_coords`.
@@ -152,5 +151,5 @@ def mine_coords_dms(pages: DataFrame, text_col: str = "text") -> DataFrame:
     a null or empty text gives no row.  Only ASCII digits are
     mined."""
     return _mine_matches(
-        pages, text_col, DMS_RE,
+        pages, DMS_RE,
         lambda *g: (_dms_degrees(*g[:4], "S"), _dms_degrees(*g[4:], "W")))

@@ -12,9 +12,11 @@ import math
 
 from .coords import CITIES
 
+N_VERTICES = 6  # every fixture polygon is a hexagon
 
-def polygon_rows(n_vertices: int = 6) -> list[dict]:
-    """One convex CCW n-gon per city; radius 20..180 km, jittered."""
+
+def polygon_rows() -> list[dict]:
+    """One convex CCW hexagon per city; radius 20..180 km, jittered."""
     rows = []
     for pid, (name, clon, clat) in enumerate(CITIES):
         r_km = 20.0 + 15.0 * (pid % 5) + 5.0 * (pid % 3)
@@ -22,16 +24,16 @@ def polygon_rows(n_vertices: int = 6) -> list[dict]:
         coslat = math.cos(math.radians(clat))
         phase = 0.37 * (pid + 1)
         ring_lon, ring_lat = [], []
-        for v in range(n_vertices):
-            ang = 2.0 * math.pi * v / n_vertices + phase
+        for v in range(N_VERTICES):
+            ang = 2.0 * math.pi * v / N_VERTICES + phase
             # slight per-vertex radius jitter keeps polygons non-regular
             rj = r_deg * (1.0 + 0.15 * math.sin(3.0 * ang + pid))
             ring_lon.append(clon + rj * math.cos(ang) / coslat)
             ring_lat.append(clat + rj * math.sin(ang))
         # ensure CCW (positive shoelace area)
         area = 0.0
-        for i in range(n_vertices):
-            j = (i + 1) % n_vertices
+        for i in range(N_VERTICES):
+            j = (i + 1) % N_VERTICES
             area += ring_lon[i] * ring_lat[j] - ring_lon[j] * ring_lat[i]
         if area < 0:
             ring_lon.reverse()
@@ -50,19 +52,18 @@ def polygons_values_sql() -> str:
     for r in polygon_rows():
         vs = ", ".join(
             f"{repr(r['ring_lon'][i])}, {repr(r['ring_lat'][i])}"
-            for i in range(len(r["ring_lon"])))
+            for i in range(N_VERTICES))
         rows.append(f"({r['polygon_id']}, {vs})")
-    cols = ", ".join(f"v{i}x, v{i}y" for i in range(6))
+    cols = ", ".join(f"v{i}x, v{i}y" for i in range(N_VERTICES))
     return (f"(VALUES {', '.join(rows)}) AS polys(polygon_id, {cols})")
 
 
-def convex_inside_sql(lon: str = "lon", lat: str = "lat",
-                      n_vertices: int = 6) -> str:
+def convex_inside_sql(lon: str = "lon", lat: str = "lat") -> str:
     """WHERE clause: point strictly inside the convex CCW polygon —
     all edge cross-products positive."""
     conds = []
-    for i in range(n_vertices):
-        j = (i + 1) % n_vertices
+    for i in range(N_VERTICES):
+        j = (i + 1) % N_VERTICES
         conds.append(
             f"((v{j}x - v{i}x)*({lat} - v{i}y) "
             f"- (v{j}y - v{i}y)*({lon} - v{i}x)) > 0")

@@ -13,17 +13,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drain import drain
+
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
 
 
-def hourly_stream(spark: SparkSession, events_dir: str,
-                  watermark: str = "2 hours") -> DataFrame:
-    """readStream over a parquet dir -> watermarked hourly windows."""
+def hourly_stream(spark: SparkSession, events_dir: str) -> DataFrame:
+    """readStream over a parquet dir -> hourly windows under a 2-hour
+    watermark."""
     src = (spark.readStream.schema(EVENTS_SCHEMA)
            .option("maxFilesPerTrigger", 1)
            .parquet(events_dir))
-    return (src.withWatermark("ts", watermark)
+    return (src.withWatermark("ts", "2 hours")
                .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
                .agg(F.count("*").alias("n_events"),
                     F.round(F.sum("value"), 4).alias("sum_value"))
@@ -32,13 +34,7 @@ def hourly_stream(spark: SparkSession, events_dir: str,
 
 
 def run_to_memory(spark: SparkSession, events_dir: str,
-                  name: str = "hourly_events",
-                  timeout_s: float = 120.0) -> DataFrame:
+                  name: str = "hourly_events") -> DataFrame:
     """Drain the stream into an in-memory sink (complete mode) and
     return the result table."""
-    q = (hourly_stream(spark, events_dir)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(timeout_s)
-    q.stop()
-    return spark.table(name)
+    return drain(hourly_stream(spark, events_dir), name, "complete")

@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .drain import drain
 from .events import EVENTS_SCHEMA
 
 OUT_SCHEMA = ("user_id long, n_events long, sum_value double, "
@@ -49,10 +50,5 @@ def user_running_totals(spark: SparkSession, events_dir: str) -> DataFrame:
 
 
 def run_to_memory(spark: SparkSession, events_dir: str,
-                  name: str = "user_totals", timeout_s: float = 120.0):
-    q = (user_running_totals(spark, events_dir)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(timeout_s)
-    q.stop()
-    return spark.table(name)
+                  name: str = "user_totals") -> DataFrame:
+    return drain(user_running_totals(spark, events_dir), name, "update")

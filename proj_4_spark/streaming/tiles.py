@@ -18,33 +18,28 @@ from pyspark.sql import functions as F
 
 from ..functions import geo as G
 from ..sources.coords import lonlat_sql
+from .drain import drain
 
 DOCS_SCHEMA = ("doc_id long, text string, lang string, "
                "source string, n_chars long")
 
 
-def cell_counts_stream(spark: SparkSession, docs_dir: str,
-                       level: int = 8) -> DataFrame:
+def cell_counts_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
     """readStream over the documents parquet dir -> deterministic
-    per-doc coordinates -> S2 cell encode -> per-cell counts."""
+    per-doc coordinates -> level-8 S2 cell encode -> per-cell
+    counts."""
     src = (spark.readStream.schema(DOCS_SCHEMA)
            .option("maxFilesPerTrigger", 1)
            .parquet(docs_dir))
     lon, lat = lonlat_sql("doc_id")
     pts = src.select("doc_id", F.expr(lon).alias("lon"),
                      F.expr(lat).alias("lat"))
-    cell = G.s2_cell_udf(level)(F.col("lon"), F.col("lat")).alias("cell")
+    cell = G.s2_cell_udf(8)(F.col("lon"), F.col("lat")).alias("cell")
     return (pts.withColumn("cell", cell)
                .groupBy("cell")
                .agg(F.count("*").alias("n_docs")))
 
 
-def run_to_memory(spark: SparkSession, docs_dir: str, level: int = 8,
-                  name: str = "cell_counts_stream",
-                  timeout_s: float = 120.0) -> DataFrame:
-    q = (cell_counts_stream(spark, docs_dir, level)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(timeout_s)
-    q.stop()
-    return spark.table(name)
+def run_to_memory(spark: SparkSession, docs_dir: str,
+                  name: str = "cell_counts_stream") -> DataFrame:
+    return drain(cell_counts_stream(spark, docs_dir), name, "complete")

@@ -207,7 +207,7 @@ def test_knn_ring_boundary_query(spark):
     qs = spark.createDataFrame([(0, 0.01, 0.5)],
                                "query_id long, q_lon double, q_lat double")
     exact = knn_broadcast(pts, qs, k=3).collect()
-    pruned = knn_cell_pruned(pts, qs, k=3, grid_deg=2.0).collect()
+    pruned = knn_cell_pruned(pts, qs, k=3).collect()
     ex = {(r["query_id"], r["rank"]): r["doc_id"] for r in exact}
     pr = {(r["query_id"], r["rank"]): r["doc_id"] for r in pruned}
     assert ex == pr == {(0, 1): 1, (0, 2): 2, (0, 3): 3}
@@ -245,7 +245,7 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
     qids = list(range(8))
     exact = cosine_topk(e, qids, 5).collect()
     C = kmeans_centroids(e, n_centroids=8, sample_n=512)
-    approx = ivf_topk(e, qids, 5, centroids=C, nprobe=4).collect()
+    approx = ivf_topk(e, qids, 5, centroids=C).collect()
     ex = {(r["query_id"], r["vec_id"]) for r in exact}
     ap = {(r["query_id"], r["vec_id"]) for r in approx}
     recall = len(ex & ap) / len(ex)
@@ -276,15 +276,45 @@ def test_neardup_hot_bucket_capped(spark):
     assert uncapped.count() >= 30 * 29 // 2
 
 
-def test_neardup_pairs_caches_nothing(spark, sf_dir):
-    """A call pins no cached copy of the vectors: Spark's cache
-    manager is as empty after the pairs are collected as before."""
+def _neardup_pairs(spark, sf_dir, monkeypatch):
     from proj_4_spark.operators.similarity import neardup_pairs
 
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return neardup_pairs(e, threshold=0.6)
+
+
+def _lsh_candidate_pairs(spark, sf_dir, monkeypatch):
+    from proj_4_spark.operators.dedup import lsh_candidate_pairs
+
+    return lsh_candidate_pairs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+
+
+def _knn_last_ring(spark, sf_dir, monkeypatch):
+    """kNN asking for more neighbors than there are points: no ring
+    passes the exactness check, so the search returns at its last ring
+    (ring 3 on a 90-degree grid)."""
+    from proj_4_spark.operators import knn
+
+    monkeypatch.setattr(knn, "GRID_DEG", 90.0)
+    pts = spark.createDataFrame([(1, 0.5, 0.5), (2, 100.0, -40.0)],
+                                "doc_id long, lon double, lat double")
+    qs = spark.createDataFrame([(0, 0.0, 0.0)],
+                               "query_id long, q_lon double, q_lat double")
+    got = knn.knn_cell_pruned(pts, qs, k=5)
+    assert [r["doc_id"] for r in got.orderBy("rank").collect()] == [1, 2]
+    return got
+
+
+@pytest.mark.parametrize(
+    "op", [_neardup_pairs, _lsh_candidate_pairs, _knn_last_ring],
+    ids=["neardup_pairs", "lsh_candidate_pairs", "knn_cell_pruned"])
+def test_operator_caches_nothing(spark, sf_dir, monkeypatch, op):
+    """A call pins no cached copy of its input: Spark's cache manager
+    is as empty after the result is collected as before."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    neardup_pairs(e, threshold=0.6).collect()
+    op(spark, sf_dir, monkeypatch).collect()
     assert cache.isEmpty()
 
 

@@ -28,3 +28,21 @@ def test_user_running_totals(spark, sf_dir, tmp_path):
     exp = {r["user_id"]: (r["n_events"], r["sum_value"])
            for r in batch.collect()}
     assert got == exp
+
+
+def test_drain_timeout_raises_and_stops(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain that does not finish in time stops its query and raises,
+    instead of returning the partial memory table."""
+    import pytest
+
+    from proj_4_spark.streaming import drain, events
+
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", events_dir / "part-0.parquet")
+    spark.conf.set("spark.sql.streaming.checkpointLocation",
+                   str(tmp_path / "ck"))
+    monkeypatch.setattr(drain, "TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        events.run_to_memory(spark, str(events_dir), name="t_drain_timeout")
+    assert spark.streams.active == []

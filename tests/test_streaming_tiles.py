@@ -6,14 +6,13 @@ requirement, streaming edition)."""
 def test_stream_cell_counts_match_batch(spark, sf_dir, tmp_path):
     import shutil
 
-    from proj_4_spark import queries as Q
     from proj_4_spark.streaming import tiles
 
     docs_dir = tmp_path / "docs"
     docs_dir.mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet",
                 docs_dir / "part-0.parquet")
-    got = tiles.run_to_memory(spark, str(docs_dir), level=8)
+    got = tiles.run_to_memory(spark, str(docs_dir))
     # batch counterpart over the same deterministic coordinates
     from pyspark.sql import functions as F
 
