@@ -12,13 +12,21 @@ capabilities of PROJ (proj4-bot/proj.4, studied read-only at
   fused, immutable, broadcastable transform closure (the analogue of
   an instantiated ``PJ``; cf. /root/reference/src/init.cpp,
   src/pipeline.cpp).
-- ``spark``    — Arrow UDF bindings, coordinate mining,
-  Spark session helpers.
-- ``index``    — S2 / H3 discrete-global-grid cell encoders
-  (vectorized NumPy; cf. src/projections/s2.cpp for the cube-face
-  math present in the reference).
-- ``ops``      — spatial join (point-in-polygon), kNN,
+- ``functions`` — Arrow UDF and Catalyst column bindings of the
+  kernels (projection, geodesic, S2 / hex cells).
+- ``index``    — S2 and aperture-7 hexagonal discrete-global-grid cell
+  encoders (vectorized NumPy; cf. src/projections/s2.cpp for the
+  cube-face math present in the reference).  The hex index is
+  H3-style but not H3-bit-compatible.
+- ``operators`` — spatial join (point-in-polygon), kNN,
   raster<->vector aggregation, dedup, similarity, text analysis.
+- ``sources``  — page synthesis and coordinate mining, polygon
+  fixtures, grid/init/gie file readers and the NKG operation registry.
+- ``plans``    — checkpointed stages, salting, candidate selection and
+  the DuckDB oracles of the query registry (``queries``).
+- ``streaming`` — Structured Streaming tile rollups, event windows and
+  a custom stateful per-user operator.
+- ``jobs``     — spark-submit jobs (tiling, cct/cs2cs, geod).
 """
 
 __version__ = "0.1.0"

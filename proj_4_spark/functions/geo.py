@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
@@ -157,16 +157,6 @@ def project_select_udf(selector):
     null lon/lat)."""
     return kernel_udf("struct<x: double, y: double, z: double, op: int>",
                       selector.transform_deg)
-
-
-def with_projected(df: DataFrame, projstr: str) -> DataFrame:
-    """Append the forward projection of ``lon, lat`` as columns ``x, y``
-    to ``df``."""
-    st = project_udf(projstr, "fwd")(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_pj", st)
-              .withColumn("x", F.col("_pj.x"))
-              .withColumn("y", F.col("_pj.y"))
-              .drop("_pj"))
 
 
 def s2_cell_udf(level: int):

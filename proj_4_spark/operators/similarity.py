@@ -23,7 +23,7 @@ BANDS, ROWS = 2, 8  # neardup_pairs' LSH: 2 bands of 8 sign bits
 NPROBE = 4  # inverted lists ivf_topk searches per query
 
 
-def hyperplanes(n: int = 8, seed: int = 42) -> np.ndarray:
+def hyperplanes(n: int, seed: int = 42) -> np.ndarray:
     """``n`` deterministic pseudo-random hyperplanes in 64 dimensions
     (fixed literal values — shared verbatim by engine and oracle)."""
     rng = np.random.RandomState(seed)
@@ -203,7 +203,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int = 16,
 
 
 def ivf_topk(vectors: DataFrame, query_ids: list[int], k: int,
-             centroids: np.ndarray | None = None) -> DataFrame:
+             centroids: np.ndarray) -> DataFrame:
     """IVF-style ANN top-k: assign every vector to its nearest
     centroid (inverted lists), probe only the NPROBE lists nearest
     each query, exact cosine + top-k inside the probed lists.
@@ -213,8 +213,6 @@ def ivf_topk(vectors: DataFrame, query_ids: list[int], k: int,
     The probe choice runs on the driver over the collected query
     vectors, which ride in the broadcast probe rows to the candidates.
     Returns (query_id, rank, vec_id, sim)."""
-    if centroids is None:
-        centroids = kmeans_centroids(vectors)
     C = np.asarray(centroids, dtype=np.float64)
     v = _normed(vectors)
     probe_rows = []

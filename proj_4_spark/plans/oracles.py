@@ -4,8 +4,12 @@ Each function emits a SQL expression/CTE mirroring one engine kernel,
 with all projection constants computed by the *same* driver-side setup
 code the engine uses (``compile_projstring``) and embedded as full-
 precision double literals (``repr`` round-trips exactly).  Outputs are
-rounded (default 1e-6, micrometer) in BOTH engines so last-ulp libm
-differences between NumPy and DuckDB cannot flip the comparison.
+rounded in BOTH engines so last-ulp libm differences between NumPy and
+DuckDB cannot flip the comparison.  Whatever both sides of a gate must
+agree on (projection string, filter, target point, output names and
+digits) is an argument: ``queries.py`` writes it once and passes it to
+its Spark side too; ``cols`` is that module's ``(alias, field, digits)``
+output spec (:func:`select_doc`).
 
 These oracles exist to make every operator independently checkable by
 the driver's DuckDB-vs-Spark harness; they are NOT the engine.
@@ -29,12 +33,20 @@ def L(v: float) -> str:
 
 # ----------------------------------------------------------------- helpers
 
-def coords_cte(limit: int | None = None) -> str:
+def coords_cte() -> str:
     lon, lat = lonlat_sql("doc_id")
-    q = f"SELECT doc_id, {lon} AS lon, {lat} AS lat FROM documents"
-    if limit:
-        q += f" ORDER BY doc_id LIMIT {limit}"
-    return q
+    return f"SELECT doc_id, {lon} AS lon, {lat} AS lat FROM documents"
+
+
+def select_doc(cols, exprs, src: str) -> str:
+    """The tail of a per-document oracle: ``SELECT doc_id, ... FROM src
+    ORDER BY doc_id`` with one SQL expression of ``exprs`` per ``(alias,
+    field, digits)`` of ``cols`` (the Spark side's column spec), rounded
+    to ``digits`` (``+ 0.0`` folds -0.0; None: as it is)."""
+    sel = ",\n  ".join(
+        f"{e} AS {a}" if d is None else f"(round({e}, {d}) + 0.0) AS {a}"
+        for (a, _, d), e in zip(cols, exprs, strict=True))
+    return f"SELECT doc_id,\n  {sel}\nFROM {src} ORDER BY doc_id\n"
 
 
 def clenshaw_sin2k_ctes(prefix: str, s: str, c: str, coeffs) -> tuple[list[str], str]:
@@ -60,29 +72,28 @@ def clenshaw_sin2k_ctes(prefix: str, s: str, c: str, coeffs) -> tuple[list[str],
 
 # ------------------------------------------------------------ projections
 
-def webmerc_xy(lon: str = "lon", lat: str = "lat") -> tuple[str, str]:
+def webmerc_xy() -> tuple[str, str]:
     """Spherical web-mercator (merc.cpp:76-84): R=6378137, k0=1."""
     a = 6378137.0
-    x = f"({L(a)} * radians({lon}))"
-    t = f"tan(radians({lat}))"
+    x = f"({L(a)} * radians(lon))"
+    t = "tan(radians(lat))"
     y = f"({L(a)} * ln({t} + sqrt({t}*{t} + 1.0)))"
     return x, y
 
 
-def merc_ell_xy(projstr: str = "+proj=merc +ellps=GRS80",
-                lon: str = "lon", lat: str = "lat") -> tuple[str, str]:
+def merc_ell_xy(projstr: str) -> tuple[str, str]:
     """Ellipsoidal Mercator fwd (merc.cpp:13-43):
     y = k0·(asinh(tanφ) − e·atanh(e·sinφ)), scaled by a."""
     tr = compile_projstring(projstr)
     op = tr.ops[0]
     C = op.consts
     a, k0, e = op.ell.a, C.k0, C.e
-    rl = f"radians({lat})"
+    rl = "radians(lat)"
     s, c = f"sin({rl})", f"cos({rl})"
     tphi = f"({s}/{c})"
     asinh_t = f"ln({tphi} + sqrt({tphi}*{tphi} + 1.0))"
     atanh_es = f"(0.5*ln((1.0+{L(e)}*{s})/(1.0-{L(e)}*{s})))"
-    x = f"({L(a)} * ({L(k0)} * radians({lon})))"
+    x = f"({L(a)} * ({L(k0)} * radians(lon)))"
     y = f"({L(a)} * ({L(k0)} * ({asinh_t} - {L(e)}*{atanh_es})))"
     return x, y
 
@@ -110,17 +121,16 @@ def lcc_xy(projstr: str, lon: str = "lon", lat: str = "lat") -> tuple[str, str]:
     return x, y
 
 
-def cart_xyz(projstr: str = "+proj=cart +ellps=GRS80", lon: str = "lon",
-             lat: str = "lat", h: str = "0.0") -> tuple[str, str, str]:
-    """Geodetic→geocentric fwd (cart.cpp:139-153)."""
+def cart_xyz(projstr: str) -> tuple[str, str, str]:
+    """Geodetic→geocentric fwd (cart.cpp:139-153) at h = 0."""
     tr = compile_projstring(projstr)
     C = tr.ops[0].consts
-    rl, rlam = f"radians({lat})", f"radians({lon})"
+    rl, rlam = "radians(lat)", "radians(lon)"
     s, c = f"sin({rl})", f"cos({rl})"
     N = f"({L(C.a)}/sqrt(1.0 - {L(C.es)}*{s}*{s}))"
-    X = f"(({N} + {h})*{c}*cos({rlam}))"
-    Y = f"(({N} + {h})*{c}*sin({rlam}))"
-    Z = f"(({N}*(1.0-{L(C.es)}) + {h})*{s})"
+    X = f"(({N} + 0.0)*{c}*cos({rlam}))"
+    Y = f"(({N} + 0.0)*{c}*sin({rlam}))"
+    Z = f"(({N}*(1.0-{L(C.es)}) + 0.0)*{s})"
     return X, Y, Z
 
 
@@ -150,7 +160,7 @@ def mlfn_cols(prefix: str, rl: str, en) -> tuple[list[str], str]:
     return cols, f"({L(en[0])}*(({rl}) + {cexpr}))"
 
 
-def utm_snyder_sql(round_to: int = 6) -> str:
+def utm_snyder_sql(cols) -> str:
     """Full oracle query: per-doc UTM (Evenden/Snyder TM, auto zone,
     GRS80, k0=0.9996, x0=500km, southern false northing 10^7 m).
 
@@ -210,13 +220,9 @@ xy AS (
     lat
   FROM tm
 )
-SELECT doc_id, zone,
-       (round({L(a)}*xk + 500000.0, {round_to}) + 0.0) AS easting,
-       (round({L(a)}*yk + (CASE WHEN lat < 0 THEN 10000000.0 ELSE 0.0 END),
-             {round_to}) + 0.0) AS northing
-FROM xy
-ORDER BY doc_id
-"""
+{select_doc(cols, ("zone", f"{L(a)}*xk + 500000.0",
+                   f"{L(a)}*yk + (CASE WHEN lat < 0 THEN 10000000.0 ELSE 0.0 END)"),
+            "xy")}"""
 
 
 def _wrap(raw: str) -> str:
@@ -231,35 +237,34 @@ def _qsfn_sql(s: str, e: float, one_es: float) -> str:
             f" - (0.5/{L(e)})*ln((1.0 - {con})/(1.0 + {con}))))")
 
 
-def eqc_xy(projstr: str = "+proj=eqc +ellps=GRS80", lon: str = "lon",
-           lat: str = "lat") -> tuple[str, str]:
+def eqc_xy(projstr: str) -> tuple[str, str]:
     """Equidistant cylindrical: x = a·rc·λ, y = a·(φ - φ0)."""
     tr = compile_projstring(projstr)
     op = tr.ops[0]
     rc = op.consts.rc
     a = op.ell.a
-    lam = _wrap(f"(radians({lon}) - {L(op.lam0)})")
+    lam = _wrap(f"(radians(lon) - {L(op.lam0)})")
     return (f"({L(a)} * ({L(rc)} * {lam}))",
-            f"({L(a)} * (radians({lat}) - {L(op.consts.phi0)}))")
+            f"({L(a)} * (radians(lat) - {L(op.consts.phi0)}))")
 
 
-def aea_xy(projstr: str, lon: str = "lon", lat: str = "lat") -> tuple[str, str]:
+def aea_xy(projstr: str) -> tuple[str, str]:
     """Albers equal-area conic fwd (aea.cpp e_forward) with the
     driver-computed n/c/rho0/dd constants."""
     tr = compile_projstring(projstr)
     op = tr.ops[0]
     C = op.consts
     a = op.ell.a
-    s = f"sin(radians({lat}))"
+    s = "sin(radians(lat))"
     q = _qsfn_sql(s, C.e, C.one_es)
     rho = f"({L(C.dd)} * sqrt({L(C.c)} - {L(C.n)}*{q}))"
-    lam = _wrap(f"(radians({lon}) - {L(op.lam0)})")
+    lam = _wrap(f"(radians(lon) - {L(op.lam0)})")
     lamn = f"({lam} * {L(C.n)})"
     return (f"({L(a)} * ({rho} * sin({lamn})))",
             f"({L(a)} * ({L(C.rho0)} - {rho} * cos({lamn})))")
 
 
-def laea_xy(projstr: str, lon: str = "lon", lat: str = "lat") -> tuple[str, str]:
+def laea_xy(projstr: str) -> tuple[str, str]:
     """Lambert azimuthal equal-area fwd, oblique ellipsoidal branch
     (laea.cpp e_forward)."""
     tr = compile_projstring(projstr)
@@ -267,8 +272,8 @@ def laea_xy(projstr: str, lon: str = "lon", lat: str = "lat") -> tuple[str, str]
     C = op.consts
     assert C.mode == "obliq" and not C.spherical
     a = op.ell.a
-    lam = _wrap(f"(radians({lon}) - {L(op.lam0)})")
-    s = f"sin(radians({lat}))"
+    lam = _wrap(f"(radians(lon) - {L(op.lam0)})")
+    s = "sin(radians(lat))"
     sinb = f"({_qsfn_sql(s, C.e, C.one_es)} / {L(C.qp)})"
     cosb = f"sqrt(1.0 - {sinb}*{sinb})"
     b = (f"sqrt(2.0/(1.0 + {L(C.sinb1)}*{sinb}"
@@ -370,13 +375,11 @@ def _clenS_cols(prefix: str, a, sr: str, cr: str, shi: str,
     return cols, R, I
 
 
-def etmerc_sql(projstr: str = "+proj=etmerc +ellps=GRS80 +lon_0=109",
-               lon_lo: float = 59.0, lon_hi: float = 159.0,
-               round_to: int = 2) -> str:
+def etmerc_sql(projstr: str, where: str, cols) -> str:
     """Full oracle for the Poder/Engsager exact TM forward
-    (tmerc.cpp:328-412): Gauss latitude via gatg, complex Clenshaw
-    correction via clenS, unrolled as chained CTEs with lateral column
-    aliases.  Constants computed by the engine's own setup
+    (tmerc.cpp:328-412) over the coords rows that pass ``where``: Gauss
+    latitude via gatg, complex Clenshaw correction via clenS, unrolled
+    as chained CTEs with lateral column aliases.  Constants computed by the engine's own setup
     (tmerc.cpp:487-596) and embedded as full-precision literals."""
     tr = compile_projstring(projstr)
     op = tr.ops[0]
@@ -390,7 +393,7 @@ def etmerc_sql(projstr: str = "+proj=etmerc +ellps=GRS80 +lon_0=109",
 WITH coords AS ({coords_cte()}),
 fil AS (
   SELECT doc_id, lon, lat FROM coords
-  WHERE lon > {L(lon_lo)} AND lon < {L(lon_hi)}
+  WHERE {where}
 ),
 prep AS (
   SELECT doc_id, (radians(lon) - {L(lam0)}) AS lam, radians(lat) AS phi
@@ -434,16 +437,13 @@ c AS (
     {ccols_s}
   FROM w
 )
-SELECT doc_id,
-  (round({L(a)}*({L(Q.Qn)}*(Ce0 + {I})), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*({L(Q.Qn)}*(Cn1 + {R}) + {L(Q.Zb)}), {round_to}) + 0.0) AS y_m
-FROM c ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*({L(Q.Qn)}*(Ce0 + {I}))",
+                   f"{L(a)}*({L(Q.Qn)}*(Cn1 + {R}) + {L(Q.Zb)})"), "c")}"""
 
 
 # --------------------------------------------- hgridshift + webmerc pipeline
 
-def hgridshift_webmerc_sql(round_to: int = 2) -> str:
+def hgridshift_webmerc_sql(cols) -> str:
     """Oracle for the hgridshift(bench_h)+webmerc pipeline: the
     synthetic grid's node values are the analytic field
     amp*sin(3λ)cos(2φ) / amp*cos(2λ)sin(3φ) evaluated at the node
@@ -507,15 +507,12 @@ s AS (
                 ELSE 0.0 END) AS phi_s
   FROM n
 )
-SELECT doc_id,
-  (round({L(a)}*lam_s, {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*ln(tan(phi_s) + sqrt(tan(phi_s)*tan(phi_s) + 1.0)),
-         {round_to}) + 0.0) AS y_m
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*lam_s",
+                   f"{L(a)}*ln(tan(phi_s) + sqrt(tan(phi_s)*tan(phi_s) + 1.0))"),
+            "s")}"""
 
 
-def multiregion_select_sql(round_to: int = 2) -> str:
+def multiregion_select_sql(cols) -> str:
     """Oracle for crs_multiregion_select: per-point candidate dispatch
     as a CASE over area-of-use bboxes (trans.cpp:44-173 semantics).
     Candidate 0 = west regional grid (closed-form bilinear shift),
@@ -621,13 +618,9 @@ sel AS (
     CASE WHEN {in_w} THEN wphi WHEN {in_e} THEN ephi ELSE hphi END AS fphi
   FROM llh
 )
-SELECT doc_id,
-  (round({L(a)}*flam, {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*ln(tan(fphi) + sqrt(tan(fphi)*tan(fphi) + 1.0)),
-         {round_to}) + 0.0) AS y_m,
-  op
-FROM sel ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*flam",
+                   f"{L(a)}*ln(tan(fphi) + sqrt(tan(fphi)*tan(fphi) + 1.0))",
+                   "op"), "sel")}"""
 
 
 # ------------------------------------------------- tsfn + polar stere
@@ -641,8 +634,7 @@ def _tsfn_sql(rl: str, s: str, e: float) -> str:
             f" * {base})")
 
 
-def stere_polar_xy(projstr: str, lon: str = "lon",
-                   lat: str = "lat") -> tuple[str, str]:
+def stere_polar_xy(projstr: str) -> tuple[str, str]:
     """Polar ellipsoidal stereographic forward (stere.cpp e_forward
     N_POLE/S_POLE branches) with the engine's akm1 (k0 pre-folded)."""
     tr = compile_projstring(projstr)
@@ -650,9 +642,8 @@ def stere_polar_xy(projstr: str, lon: str = "lon",
     C = op.consts
     assert C.mode in ("n_pole", "s_pole") and not C.spherical
     a = op.ell.a
-    raw = f"(radians({lon}) - {L(op.lam0)})"
-    lam = _wrap(raw)
-    rl = f"radians({lat})"
+    lam = _wrap(f"(radians(lon) - {L(op.lam0)})")
+    rl = "radians(lat)"
     if C.mode == "n_pole":
         ts = _tsfn_sql(rl, f"sin({rl})", C.e)
         coslamv = f"(-cos({lam}))"
@@ -664,8 +655,7 @@ def stere_polar_xy(projstr: str, lon: str = "lon",
             f"({L(a)} * ({r} * {coslamv}))")
 
 
-def aeqd_sph_xy(projstr: str, lon: str = "lon",
-                lat: str = "lat") -> tuple[str, str]:
+def aeqd_sph_xy(projstr: str) -> tuple[str, str]:
     """Spherical azimuthal equidistant forward (aeqd.cpp spherical
     branch as re-derived in kernels/azimuthal.py::aeqd_fwd)."""
     tr = compile_projstring(projstr)
@@ -674,9 +664,8 @@ def aeqd_sph_xy(projstr: str, lon: str = "lon",
     assert C.es == 0
     a = op.ell.a
     p0 = C.phi0
-    raw = f"(radians({lon}) - {L(op.lam0)})"
-    lam = _wrap(raw)
-    rl = f"radians({lat})"
+    lam = _wrap(f"(radians(lon) - {L(op.lam0)})")
+    rl = "radians(lat)"
     cosc = (f"least(greatest({L(math.sin(p0))}*sin({rl})"
             f" + {L(math.cos(p0))}*cos({rl})*cos({lam}), -1.0), 1.0)")
     c = f"acos({cosc})"
@@ -687,8 +676,7 @@ def aeqd_sph_xy(projstr: str, lon: str = "lon",
             f"({L(a)} * ({c} * cos({az})))")
 
 
-def sinu_sql(projstr: str = "+proj=sinu +ellps=GRS80",
-             round_to: int = 2) -> str:
+def sinu_sql(projstr: str, cols) -> str:
     """Ellipsoidal sinusoidal forward (sinu.cpp e_forward): y = mlfn
     (Clenshaw unrolled), x = lam*cos(phi)/sqrt(1 - es sin^2 phi)."""
     tr = compile_projstring(projstr)
@@ -709,18 +697,13 @@ m AS (
     {mcols_s}
   FROM p
 )
-SELECT doc_id,
-  (round({L(a)}*(lam*ml_c/sqrt(1.0 - {L(es)}*ml_s*ml_s)), {round_to}) + 0.0)
-    AS x_m,
-  (round({L(a)}*{mexpr}, {round_to}) + 0.0) AS y_m
-FROM m ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*(lam*ml_c/sqrt(1.0 - {L(es)}*ml_s*ml_s))",
+                   f"{L(a)}*{mexpr}"), "m")}"""
 
 
-def moll_sql(projstr: str = "+proj=moll +ellps=GRS80",
-             round_to: int = 2, n_iter: int = 10) -> str:
+def moll_sql(projstr: str, cols) -> str:
     """Mollweide forward (moll.cpp): theta Newton solve unrolled a
-    fixed n_iter times (the engine's early-break leaves theta within
+    fixed 10 times (the engine's early-break leaves theta within
     ~1e-14 of the fixed-iteration value — far below cm rounding).
 
     One CTE per Newton step: a lateral-alias chain would make DuckDB
@@ -731,7 +714,7 @@ def moll_sql(projstr: str = "+proj=moll +ellps=GRS80",
     a = op.ell.a
     ctes = []
     th = "rphi"
-    for i in range(n_iter):
+    for i in range(10):
         nxt = f"th{i}"
         ctes.append(
             f"n{i} AS (\n  SELECT doc_id, lam, rphi, kk,\n"
@@ -754,16 +737,13 @@ t AS (
     0.5*(CASE WHEN (1.0 + cos({th})) = 0.0
               THEN (CASE WHEN rphi < 0.0 THEN -pi()/2 ELSE pi()/2 END)
               ELSE {th} END) AS theta
-  FROM n{n_iter - 1}
+  FROM n9
 )
-SELECT doc_id,
-  (round({L(a)}*({L(C.C_x)}*lam*cos(theta)), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*({L(C.C_y)}*sin(theta)), {round_to}) + 0.0) AS y_m
-FROM t ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*({L(C.C_x)}*lam*cos(theta))",
+                   f"{L(a)}*({L(C.C_y)}*sin(theta))"), "t")}"""
 
 
-def factors_sql(projstr: str, round_to: int = 4) -> str:
+def factors_sql(projstr: str, cols) -> str:
     """proj_factors h/k/s oracle (factors.cpp:111-240): central
     differences of the closed-form LCC forward at +-1e-7 rad, scaled
     by the ellipsoidal curvature radii."""
@@ -794,21 +774,16 @@ r AS (
     (1.0 - {L(es)}*s*s) AS t, c
   FROM d
 )
-SELECT doc_id,
-  (round(sqrt(dxdp*dxdp + dydp*dydp)
-         / ({L(a * (1.0 - es))}*pow(t, -1.5)), {round_to}) + 0.0) AS h,
-  (round(sqrt(dxdl*dxdl + dydl*dydl)
-         / ({L(a)}*c/sqrt(t)), {round_to}) + 0.0) AS k,
-  (round((dxdl*dydp - dxdp*dydl)
-         / (({L(a * (1.0 - es))}*pow(t, -1.5)) * ({L(a)}*c/sqrt(t))),
-         {round_to}) + 0.0) AS s_areal
-FROM r ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"sqrt(dxdp*dxdp + dydp*dydp) / ({L(a * (1.0 - es))}*pow(t, -1.5))",
+    f"sqrt(dxdl*dxdl + dydl*dydl) / ({L(a)}*c/sqrt(t))",
+    f"(dxdl*dydp - dxdp*dydl) / (({L(a * (1.0 - es))}*pow(t, -1.5))"
+    f" * ({L(a)}*c/sqrt(t)))"), "r")}"""
 
 
 # --------------------------------------------- national grids (natgrid.py)
 
-def sterea_sql(projstr: str, round_to: int = 2) -> str:
+def sterea_sql(projstr: str, cols) -> str:
     """Oblique stereographic alternative forward (sterea.cpp:44-63 on
     the Gauss conformal sphere, gauss.cpp:89-99) — fully closed-form."""
     tr = compile_projstring(projstr)
@@ -836,18 +811,13 @@ k AS (
         + {L(C.cosc0)}*cos(sphi)*cos(slam))) AS kk
   FROM g
 )
-SELECT doc_id,
-  (round({L(a)}*(kk*cos(sphi)*sin(slam)) + {L(op.x0)}, {round_to}) + 0.0)
-    AS x_m,
-  (round({L(a)}*(kk*({L(C.cosc0)}*sin(sphi)
-                     - {L(C.sinc0)}*cos(sphi)*cos(slam))) + {L(op.y0)},
-         {round_to}) + 0.0) AS y_m
-FROM k ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*(kk*cos(sphi)*sin(slam)) + {L(op.x0)}",
+    f"{L(a)}*(kk*({L(C.cosc0)}*sin(sphi)"
+    f" - {L(C.sinc0)}*cos(sphi)*cos(slam))) + {L(op.y0)}"), "k")}"""
 
 
-def krovak_sql(projstr: str = "+proj=krovak +ellps=GRS80",
-               round_to: int = 2) -> str:
+def krovak_sql(projstr: str, cols) -> str:
     """Krovak forward (krovak.cpp:145-206) — closed-form conic on the
     conformal sphere with the hardcoded pseudo-standard parallel."""
     from ..kernels.natgrid import S0
@@ -888,16 +858,12 @@ r AS (
      / pow(tan(ss/2.0 + pi()/4), {L(C.n)})) AS rho
   FROM d
 )
-SELECT doc_id,
-  (round({L(a)}*(-(rho*sin(eps)) - {L(2.0 * C.x0 / C.a)}) + {L(op.x0)},
-         {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*(-(rho*cos(eps)) - {L(2.0 * C.y0 / C.a)}) + {L(op.y0)},
-         {round_to}) + 0.0) AS y_m
-FROM r ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*(-(rho*sin(eps)) - {L(2.0 * C.x0 / C.a)}) + {L(op.x0)}",
+    f"{L(a)}*(-(rho*cos(eps)) - {L(2.0 * C.y0 / C.a)}) + {L(op.y0)}"), "r")}"""
 
 
-def somerc_sql(projstr: str, round_to: int = 2) -> str:
+def somerc_sql(projstr: str, cols) -> str:
     """Swiss oblique Mercator forward (somerc.cpp:35-52) —
     closed-form."""
     tr = compile_projstring(projstr)
@@ -928,18 +894,14 @@ r AS (
     asin(least(greatest(cos(phip)*sin(lamp)/cos(phipp), -1.0), 1.0)) AS lampp
   FROM q
 )
-SELECT doc_id,
-  (round({L(a)}*({L(C.kR)}*lampp) + {L(op.x0)}, {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*({L(C.kR)}*ln(tan(pi()/4 + 0.5*phipp))) + {L(op.y0)},
-         {round_to}) + 0.0) AS y_m
-FROM r ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*({L(C.kR)}*lampp) + {L(op.x0)}",
+    f"{L(a)}*({L(C.kR)}*ln(tan(pi()/4 + 0.5*phipp))) + {L(op.y0)}"), "r")}"""
 
 
 # ------------------------------------------------------------------- IVF
 
-def ivf_sql(centroids, n_queries: int = 10, nprobe: int = 4, k: int = 5,
-            round_to: int = 9) -> str:
+def ivf_sql(centroids, n_queries: int, nprobe: int, k: int) -> str:
     """Oracle for the IVF ANN path: the fixed codebook is embedded as
     a VALUES table of list literals; nearest-centroid assignment and
     query probing are row_number() windows ordered by (distance, cid)
@@ -988,7 +950,7 @@ cand AS (
 s AS (
   SELECT cand.query_id, cand.vec_id,
     (round({dot} / ({norm.format(v="cand.e")} * {norm.format(v="q.qe")}),
-           {round_to}) + 0.0) AS sim
+           9) + 0.0) AS sim
   FROM cand JOIN q ON q.query_id = cand.query_id
 ),
 r AS (
@@ -1004,8 +966,7 @@ ORDER BY query_id, rank
 
 # ------------------------------------------------------------ molodensky
 
-def molodensky_sql(projstr: str, round_deg: int = 9,
-                   round_h: int = 4) -> str:
+def molodensky_sql(projstr: str, cols) -> str:
     """Standard (non-abridged) Molodensky forward at z=0
     (molodensky.cpp:120-172) — closed-form."""
     tr = compile_projstring(projstr)
@@ -1039,15 +1000,10 @@ d AS (
      + nu*{L(1.0 - f)}*{s}*{s}*({L(C.df)})) AS dh
   FROM r
 )
-SELECT doc_id,
-  (round(degrees(rlam + dlam), {round_deg}) + 0.0) AS lon_out,
-  (round(degrees(rl + dphi), {round_deg}) + 0.0) AS lat_out,
-  (round(dh, {round_h}) + 0.0) AS dh_m
-FROM d ORDER BY doc_id
-"""
+{select_doc(cols, ("degrees(rlam + dlam)", "degrees(rl + dphi)", "dh"), "d")}"""
 
 
-def eqdc_sql(projstr: str, round_to: int = 2) -> str:
+def eqdc_sql(projstr: str, cols) -> str:
     """Equidistant conic forward (eqdc.cpp:54-66): rho = c - mlfn(phi),
     with the meridional arc unrolled via the Clenshaw CTE."""
     tr = compile_projstring(projstr)
@@ -1071,16 +1027,11 @@ m AS (
 r AS (
   SELECT doc_id, lam, ({L(C.c)} - {mexpr}) AS rho FROM m
 )
-SELECT doc_id,
-  (round({L(a)}*(rho*sin(lam*{L(C.n)})), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*({L(C.rho0)} - rho*cos(lam*{L(C.n)})), {round_to}) + 0.0)
-    AS y_m
-FROM r ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*(rho*sin(lam*{L(C.n)}))",
+                   f"{L(a)}*({L(C.rho0)} - rho*cos(lam*{L(C.n)}))"), "r")}"""
 
 
-def hammer_sql(projstr: str = "+proj=hammer +R=6371000",
-               round_to: int = 2) -> str:
+def hammer_sql(projstr: str, cols) -> str:
     """Hammer forward (hammer.cpp:19-35) — closed-form."""
     from ..kernels.azimuthal import hammer_setup
 
@@ -1100,14 +1051,11 @@ d AS (
     sqrt(2.0/(1.0 + cos(rphi)*cos(lamw))) AS dd
   FROM p
 )
-SELECT doc_id,
-  (round({L(a)}*({L(m)}*dd*cos(rphi)*sin(lamw)), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*({L(rm)}*dd*sin(rphi)), {round_to}) + 0.0) AS y_m
-FROM d ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*({L(m)}*dd*cos(rphi)*sin(lamw))",
+                   f"{L(a)}*({L(rm)}*dd*sin(rphi))"), "d")}"""
 
 
-def cass_hyperbolic_sql(projstr: str, round_to: int = 2) -> str:
+def cass_hyperbolic_sql(projstr: str, cols) -> str:
     """Cassini-Soldner hyperbolic variant forward (cass.cpp:25-49 with
     the Vanua-Levu y^3 correction) — closed-form series (the
     non-hyperbolic engine path adds a numeric-Newton refinement that
@@ -1152,11 +1100,8 @@ s AS (
     (nu_sq*{L(1.0 - es)}*sqrt(nu_sq)) AS rho, nu
   FROM r
 )
-SELECT doc_id,
-  (round({L(a)}*xu, {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*(yu - yu*yu*yu/(6.0*rho*nu)), {round_to}) + 0.0) AS y_m
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*xu", f"{L(a)}*(yu - yu*yu*yu/(6.0*rho*nu))"),
+            "s")}"""
 
 
 def _cass_c(name: str) -> float:
@@ -1165,7 +1110,7 @@ def _cass_c(name: str) -> float:
     return {"C1": M._CASS_C1, "C2": M._CASS_C2, "C3": M._CASS_C3}[name]
 
 
-def poly_sql(projstr: str, round_to: int = 2) -> str:
+def poly_sql(projstr: str, cols) -> str:
     """American polyconic forward (poly.cpp:25-46) — closed-form
     (msfn + mlfn Clenshaw)."""
     tr = compile_projstring(projstr)
@@ -1193,17 +1138,13 @@ q AS (
     (lam*ml_s) AS E
   FROM m
 )
-SELECT doc_id,
-  (round({L(a)}*(CASE WHEN abs(rphi) <= 1e-10 THEN lam
-                      ELSE ms*sin(E) END), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*(CASE WHEN abs(rphi) <= 1e-10 THEN {L(-C.ml0)}
-                      ELSE (ml - {L(C.ml0)}) + ms*(1.0 - cos(E)) END),
-         {round_to}) + 0.0) AS y_m
-FROM q ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*(CASE WHEN abs(rphi) <= 1e-10 THEN lam ELSE ms*sin(E) END)",
+    f"{L(a)}*(CASE WHEN abs(rphi) <= 1e-10 THEN {L(-C.ml0)}"
+    f" ELSE (ml - {L(C.ml0)}) + ms*(1.0 - cos(E)) END)"), "q")}"""
 
 
-def bonne_sql(projstr: str, round_to: int = 2) -> str:
+def bonne_sql(projstr: str, cols) -> str:
     """Bonne ellipsoidal forward (bonne.cpp:21-42) — closed-form."""
     tr = compile_projstring(projstr)
     op = tr.ops[0]
@@ -1233,17 +1174,13 @@ r AS (
     (ml_c*lam/(rh*sqrt(1.0 - {L(es)}*ml_s*ml_s))) AS E
   FROM q
 )
-SELECT doc_id,
-  (round({L(a)}*(CASE WHEN abs(rh) <= 1e-10 THEN 0.0
-                      ELSE rh*sin(E) END), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*(CASE WHEN abs(rh) <= 1e-10 THEN 0.0
-                      ELSE {L(C.am1)} - rh*cos(E) END), {round_to}) + 0.0)
-    AS y_m
-FROM r ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*(CASE WHEN abs(rh) <= 1e-10 THEN 0.0 ELSE rh*sin(E) END)",
+    f"{L(a)}*(CASE WHEN abs(rh) <= 1e-10 THEN 0.0"
+    f" ELSE {L(C.am1)} - rh*cos(E) END)"), "r")}"""
 
 
-def igh_sql(round_to: int = 2) -> str:
+def igh_sql(projstr: str, cols) -> str:
     """Interrupted Goode homolosine forward (igh.cpp:57-93): zone CASE
     on (lam, phi), per-zone central meridians / offsets via 1-based
     list-literal indexing, Mollweide theta via the fixed-iteration
@@ -1251,7 +1188,7 @@ def igh_sql(round_to: int = 2) -> str:
     from ..kernels.misc_proj import IGH_PHI_B, igh_setup
 
     C = igh_setup()
-    a = 6400000.0  # engine query uses +a=6400000
+    a = compile_projstring(projstr).ops[0].ell.a
     d = {k: k * math.pi / 180.0 for k in (20, 40, 80, 100)}
     lam0s = "[" + ", ".join(L(z[1]) for z in C.zones) + "]"
     x0s = "[" + ", ".join(L(z[2]) for z in C.zones) + "]"
@@ -1307,18 +1244,14 @@ t AS (
               ELSE {th} END) AS theta
   FROM n9
 )
-SELECT doc_id,
-  (round({L(a)}*((CASE WHEN ismoll THEN {L(M.C_x)}*lrel*cos(theta)
-                       ELSE lrel*cos(rphi) END) + zx0), {round_to}) + 0.0)
-    AS x_m,
-  (round({L(a)}*((CASE WHEN ismoll THEN {L(M.C_y)}*sin(theta)
-                       ELSE rphi END) + zy0), {round_to}) + 0.0) AS y_m
-FROM t ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*((CASE WHEN ismoll THEN {L(M.C_x)}*lrel*cos(theta)"
+    f" ELSE lrel*cos(rphi) END) + zx0)",
+    f"{L(a)}*((CASE WHEN ismoll THEN {L(M.C_y)}*sin(theta)"
+    f" ELSE rphi END) + zy0)"), "t")}"""
 
 
-def horner_sql(projstr: str, e_expr: str, n_expr: str,
-               round_to: int = 4) -> str:
+def horner_sql(projstr: str, e_expr: str, n_expr: str, cols) -> str:
     """Real double-Horner polynomial forward (horner.cpp:155-181,
     232-288) unrolled symbolically — the same backward summation the
     kernel runs, emitted as one nested SQL expression per output."""
@@ -1358,15 +1291,10 @@ p AS (
     ({n_expr}) - {L(C.fwd_origin[1])} AS nn
   FROM coords
 )
-SELECT doc_id,
-  (round({E}, {round_to}) + 0.0) AS u_out,
-  (round({N}, {round_to}) + 0.0) AS v_out
-FROM p ORDER BY doc_id
-"""
+{select_doc(cols, (E, N), "p")}"""
 
 
-def qsc_sql(projstr: str = "+proj=qsc +ellps=GRS80",
-            round_to: int = 2) -> str:
+def qsc_sql(projstr: str, cols) -> str:
     """QSC front-face forward (qsc.cpp:66-180) — closed-form with the
     CASE area fold."""
     tr = compile_projstring(projstr)
@@ -1424,15 +1352,10 @@ t AS (
                     WHEN 3 THEN 3*pi()/2 ELSE 0.0 END) AS mu2
   FROM m
 )
-SELECT doc_id,
-  (round({L(a)}*(tt*cos(mu2)), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*(tt*sin(mu2)), {round_to}) + 0.0) AS y_m
-FROM t ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*(tt*cos(mu2))", f"{L(a)}*(tt*sin(mu2))"), "t")}"""
 
 
-def healpix_sql(projstr: str = "+proj=healpix +ellps=GRS80",
-                round_to: int = 2) -> str:
+def healpix_sql(projstr: str, cols) -> str:
     """HEALPix forward (healpix.cpp:181-202): authalic latitude shift
     (qsfn ratio) + equatorial strip / polar triangle CASE."""
     tr = compile_projstring(projstr)
@@ -1445,6 +1368,7 @@ def healpix_sql(projstr: str = "+proj=healpix +ellps=GRS80",
     else:
         q = _qsfn_sql("sin(radians(lat))", C.e, C.one_es)
         auth = f"asin(least(greatest({q}/{L(C.qp)}, -1.0), 1.0))"
+    polar = L(float(np.arcsin(2.0 / 3.0)))
     return f"""
 WITH coords AS ({coords_cte()}),
 p AS (
@@ -1456,22 +1380,15 @@ s AS (
     (-3.0*pi()/4 + (pi()/2)*least(floor(2.0*lam/pi() + 2.0), 3.0)) AS lamc
   FROM p
 )
-SELECT doc_id,
-  (round({L(a)}*(CASE WHEN abs(phi) <= {L(float(np.arcsin(2.0 / 3.0)))}
-                      THEN lam
-                      ELSE lamc + (lam - lamc)*sigma END), {round_to}) + 0.0)
-    AS x_m,
-  (round({L(a)}*(CASE WHEN abs(phi) <= {L(float(np.arcsin(2.0 / 3.0)))}
-                      THEN 3.0*pi()/8*sin(phi)
-                      ELSE (CASE WHEN phi < 0 THEN -1.0
-                                 WHEN phi > 0 THEN 1.0 ELSE 0.0 END)
-                           *(pi()/4)*(2.0 - sigma) END), {round_to}) + 0.0)
-    AS y_m
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"{L(a)}*(CASE WHEN abs(phi) <= {polar} THEN lam"
+    f" ELSE lamc + (lam - lamc)*sigma END)",
+    f"{L(a)}*(CASE WHEN abs(phi) <= {polar} THEN 3.0*pi()/8*sin(phi)"
+    f" ELSE (CASE WHEN phi < 0 THEN -1.0 WHEN phi > 0 THEN 1.0 ELSE 0.0 END)"
+    f"*(pi()/4)*(2.0 - sigma) END)"), "s")}"""
 
 
-def airocean_sql(round_to: int = 2) -> str:
+def airocean_sql(projstr: str, cols) -> str:
     """Fuller Airocean forward (airocean.cpp:726-772): geocentric
     latitude shift, 23-face triple-product location, gnomonic onto the
     face plane, per-face affine into the unfolded net.  The face's
@@ -1483,7 +1400,7 @@ def airocean_sql(round_to: int = 2) -> str:
                                          BASE_ICO_CENTERS, BASE_ICO_FACES,
                                          BASE_ICO_NORMALS)
 
-    tr = compile_projstring("+proj=airocean +ellps=GRS80")
+    tr = compile_projstring(projstr)
     op = tr.ops[0]
     C = op.consts
     a = op.ell.a
@@ -1533,13 +1450,8 @@ ico AS (
          z * (cdn/(x*nx + y*ny + z*nz)) AS iz
   FROM hit
 )
-SELECT doc_id,
-  (round({L(a)}*(m00*ix + m01*iy + m02*iz + m03), {round_to}) + 0.0)
-    AS x_m,
-  (round({L(a)}*(m10*ix + m11*iy + m12*iz + m13), {round_to}) + 0.0)
-    AS y_m
-FROM ico ORDER BY doc_id
-"""
+{select_doc(cols, (f"{L(a)}*(m00*ix + m01*iy + m02*iz + m03)",
+                   f"{L(a)}*(m10*ix + m11*iy + m12*iz + m13)"), "ico")}"""
 
 
 # --- defmodel driver query fixtures ------------------------------------
@@ -1599,7 +1511,7 @@ DEFMODEL_LONLAT_T = (
 )
 
 
-def defmodel_sql(round_deg: int = 9, round_z: int = 4) -> str:
+def defmodel_sql(cols) -> str:
     """defmodel forward oracle (defmodel_impl.hpp:822-1219 for the
     bilinear + addition + velocity path): cell-local bilinear of the
     VALUES node table, scaled by (t - 2000), converted to arc via
@@ -1657,27 +1569,21 @@ arc AS (
     tf*de_i AS de_t, tf*dn_i AS dn_t
   FROM bi
 )
-SELECT doc_id,
-  (round(degrees(radians(lon)
-     + de_t*sqrt(XX)/({L(a)}*cos(radians(lat)))), {round_deg}) + 0.0)
-    AS lon_out,
-  (round(degrees(radians(lat)
-     + dn_t*{L(a)}*sqrt(XX)*XX/({L(b * b)})), {round_deg}) + 0.0)
-    AS lat_out,
-  (round(tf*dz_i, {round_z}) + 0.0) AS z_out
-FROM arc ORDER BY doc_id
-"""
+{select_doc(cols, (
+    f"degrees(radians(lon) + de_t*sqrt(XX)/({L(a)}*cos(radians(lat))))",
+    f"degrees(radians(lat) + dn_t*{L(a)}*sqrt(XX)*XX/({L(b * b)}))",
+    "tf*dz_i"), "arc")}"""
 
 
-def crs_osgb_sql(round_to: int = 2, lon_lo: float = -58.0,
-                 lon_hi: float = 54.0) -> str:
+def crs_osgb_sql(where: str, cols) -> str:
     """Full oracle for crs_to_crs(EPSG:4326 -> EPSG:27700): cart WGS84
     forward (cart.cpp:139-153), 7-param Helmert inverse
     (helmert.cpp:402-436, small-angle position-vector matrix embedded
     as literals), Bowring cart inverse on Airy (cart.cpp:156-239,
     non-polar branch), then the Poder/Engsager exact TM forward with
-    OSGB36 false origin.  The longitude window keeps points inside
-    etmerc's convergence region and away from the +-pi wrap."""
+    OSGB36 false origin, over the coords rows that pass ``where`` (a
+    longitude window inside etmerc's convergence region and away from
+    the +-pi wrap)."""
     from ..crs import crs_to_crs
     from ..kernels.helmert import _rot_matrix
 
@@ -1701,7 +1607,7 @@ def crs_osgb_sql(round_to: int = 2, lon_lo: float = -58.0,
 WITH coords AS ({coords_cte()}),
 fil AS (
   SELECT doc_id, radians(lon) AS lam, radians(lat) AS phi FROM coords
-  WHERE lon > {L(lon_lo)} AND lon < {L(lon_hi)}
+  WHERE {where}
 ),
 cartf AS (
   SELECT doc_id,
@@ -1787,28 +1693,30 @@ w AS (
     (ccc*(ccc*two_inv_sq) - 1.0) AS car,
     (tanCe*two_inv) AS shi,
     (two_inv_sq - 1.0) AS chi
-  FROM w_src
+  FROM v
 ),
 c AS (
   SELECT doc_id, Cn1, Ce0, sar, car, shi, chi,
     {ccols_s}
   FROM w
 )
-SELECT doc_id,
-  (round({L(aA)}*({L(Q.Qn)}*(Ce0 + {I})) + {L(x_0)}, {round_to}) + 0.0)
-    AS x_m,
-  (round({L(aA)}*({L(Q.Qn)}*(Cn1 + {R}) + {L(Q.Zb)}) + {L(y_0)},
-         {round_to}) + 0.0) AS y_m
-FROM c ORDER BY doc_id
-""".replace("FROM w_src", "FROM v")
+{select_doc(cols, (f"{L(aA)}*({L(Q.Qn)}*(Ce0 + {I})) + {L(x_0)}",
+                   f"{L(aA)}*({L(Q.Qn)}*(Cn1 + {R}) + {L(Q.Zb)}) + {L(y_0)}"),
+            "c")}"""
 
 
-def vincenty_sql(lat2: float = 35.6895, lon2: float = 139.6917,
-                 a: float = 6378137.0, f: float = 1 / 298.257223563,
-                 n_iter: int = 16, max_hav_m: float = 19_500_000.0,
-                 round_s: int = 2, round_azi: int = 4) -> str:
-    """Vincenty (1975) inverse to a fixed point, unrolled a FIXED
-    n_iter times — term-for-term mirror of
+def haversine_sql(lat2: float, lon2: float) -> str:
+    """Great-circle metres from each row's (lat, lon) to the point
+    (lat2, lon2) on the 6371008.8 m sphere (functions.geo.haversine_m)."""
+    return (f"2.0*{L(6371008.8)}*asin(sqrt("
+            f"sin(radians({L(lat2)} - lat)/2)*sin(radians({L(lat2)} - lat)/2)"
+            f" + cos(radians(lat))*cos(radians({L(lat2)}))"
+            f"*sin(radians({L(lon2)} - lon)/2)*sin(radians({L(lon2)} - lon)/2)))")
+
+
+def vincenty_sql(lat2: float, lon2: float, max_hav_m: float, cols) -> str:
+    """Vincenty (1975) inverse on WGS84 to the point (lat2, lon2),
+    unrolled a FIXED 16 times — term-for-term mirror of
     kernels/geodesic.py::vincenty_inverse_fixed (the SQL-checkable face
     of the geodesic inverse; the Karney kernel it cross-validates
     against lives at kernels/geodesic.py::inverse / geodesic.c:1080).
@@ -1819,14 +1727,10 @@ def vincenty_sql(lat2: float = 35.6895, lon2: float = 139.6917,
     (bounded ~170-node expansion).  Rows inside the near-antipodal band
     (haversine > max_hav_m) are excluded on BOTH sides by the same
     closed-form haversine prefilter."""
+    a, f = 6378137.0, 1 / 298.257223563
     b = a * (1.0 - f)
     u2r = math.atan((1.0 - f) * math.tan(math.radians(lat2)))
     su2, cu2 = math.sin(u2r), math.cos(u2r)
-    R = 6371008.8
-    hav = (f"2.0*{L(R)}*asin(sqrt("
-           f"sin(radians({L(lat2)} - lat)/2)*sin(radians({L(lat2)} - lat)/2)"
-           f" + cos(radians(lat))*cos(radians({L(lat2)}))"
-           f"*sin(radians({L(lon2)} - lon)/2)*sin(radians({L(lon2)} - lon)/2)))")
 
     def step_cols(src_lam: str) -> str:
         # the shared per-iteration column ladder from a lambda value
@@ -1844,7 +1748,7 @@ def vincenty_sql(lat2: float = 35.6895, lon2: float = 139.6917,
 
     ctes = []
     prev = "p"
-    for k in range(n_iter):
+    for k in range(16):
         ctes.append(
             f"i{k} AS (\n"
             f"  SELECT doc_id, ll, su1, cu1,\n"
@@ -1865,7 +1769,7 @@ p AS (
     cos(atan({L(1.0 - f)}*tan(radians(lat)))) AS cu1,
     radians({L(lon2)} - lon) AS lam
   FROM coords
-  WHERE {hav} < {L(max_hav_m)}
+  WHERE {haversine_sql(lat2, lon2)} < {L(max_hav_m)}
 ),
 {ctes_s},
 fin AS (
@@ -1878,16 +1782,12 @@ fin AS (
       - bb/6.0*c2sm*(-3.0 + 4.0*ss*ss)*(-3.0 + 4.0*c2sm*c2sm))) AS dsig,
     {L(b)}*aa*(sg - dsig) AS s12,
     degrees(atan2({L(cu2)}*sl, cu1*{L(su2)} - su1*{L(cu2)}*cl)) AS azi1
-  FROM v{n_iter - 1}
+  FROM v15
 )
-SELECT doc_id,
-  (round(s12, {round_s}) + 0.0) AS s12_m,
-  (round(azi1, {round_azi}) + 0.0) AS azi1_deg
-FROM fin ORDER BY doc_id
-"""
+{select_doc(cols, ("s12", "azi1"), "fin")}"""
 
 
-def vgridshift_gtx_sql(round_to: int = 2) -> str:
+def vgridshift_gtx_sql(cols) -> str:
     """Oracle for the ``vgridshift_gtx`` query: the synthetic GTX byte
     payload (sources/gridfiles.py::synthetic_geoid_gtx_bytes) is parsed
     driver-side with the SAME parse_gtx the engine uses, and the parsed
@@ -1942,12 +1842,10 @@ s AS (
   JOIN gv g11 ON g11.iy = n.iy + 1 AND g11.ix = n.ix + 1
   WHERE n.ing
 )
-SELECT doc_id, (round(0.0 - u, {round_to}) + 0.0) AS z_m
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, ("0.0 - u",), "s")}"""
 
 
-def hex_cells_sql(res: int = 5, n_docs: int = 5000) -> str:
+def hex_cells_sql(res: int) -> str:
     """Oracle for hex_cell_counts_r5: the aperture-7 hex cell id of
     every possible doc_id is computed DRIVER-SIDE with the same NumPy
     kernel the executors run (index/hexdggs.py::encode over the
@@ -1960,7 +1858,7 @@ def hex_cells_sql(res: int = 5, n_docs: int = 5000) -> str:
     from ..index import hexdggs
     from ..sources.coords import lonlat_numpy
 
-    ids = np.arange(n_docs, dtype=np.int64)
+    ids = np.arange(5000, dtype=np.int64)
     lon, lat = lonlat_numpy(ids)
     cells = hexdggs.encode(lon, lat, res)
     vals = ",\n    ".join(f"({i}, {c})" for i, c in zip(ids, cells))
@@ -1973,18 +1871,18 @@ GROUP BY h.hex_cell ORDER BY h.hex_cell
 """
 
 
-def a7hex_compact_sql(res: int = 1, parent_res: int = 0,
-                      full_set: int = 7, n_docs: int = 5000) -> str:
+def a7hex_compact_sql(res: int, parent_res: int) -> str:
     """Oracle for a7hex_compact: child cell AND parent cell of every
     possible doc_id computed DRIVER-SIDE with the same NumPy kernels
     the executors run, embedded as a VALUES table; the compact rule
-    (>= full_set distinct observed children -> emit parent, else pass
+    (>= FULL_SET distinct observed children -> emit parent, else pass
     children through) is then plain SQL, so what the oracle certifies
     is the distributed groupBy/join plan AND the kernel consistency."""
     from ..index import hexdggs
+    from ..operators.dggs import FULL_SET
     from ..sources.coords import lonlat_numpy
 
-    ids = np.arange(n_docs, dtype=np.int64)
+    ids = np.arange(5000, dtype=np.int64)
     lon, lat = lonlat_numpy(ids)
     c = hexdggs.encode(lon, lat, res)
     p = hexdggs.parent(c, parent_res)
@@ -1999,15 +1897,15 @@ cells AS (
 g AS (SELECT cell_p, count(*) AS n FROM cells GROUP BY cell_p)
 SELECT cell, level FROM (
   SELECT DISTINCT g.cell_p AS cell, {parent_res} AS level
-  FROM g WHERE n >= {full_set}
+  FROM g WHERE n >= {FULL_SET}
   UNION ALL
   SELECT c.cell_c AS cell, {res} AS level
-  FROM cells c JOIN g ON c.cell_p = g.cell_p WHERE g.n < {full_set}
+  FROM cells c JOIN g ON c.cell_p = g.cell_p WHERE g.n < {FULL_SET}
 ) ORDER BY cell, level
 """
 
 
-def nadgrids_ctable2_sql(round_to: int = 6) -> str:
+def nadgrids_ctable2_sql(cols) -> str:
     """Oracle for the ``nadgrids_ctable2`` query: BOTH synthetic
     CTable2 byte payloads are parsed driver-side with the SAME
     parse_ctable2 the engine uses and their float32 node values
@@ -2092,10 +1990,7 @@ s AS (
   JOIN gc c01 ON c01.iy = t.iy_c + 1 AND c01.ix = t.ix_c
   JOIN gc c11 ON c11.iy = t.iy_c + 1 AND c11.ix = t.ix_c + 1
 )
-SELECT doc_id, (round(degrees(lam_s), {round_to}) + 0.0) AS lon_s,
-       (round(degrees(phi_s), {round_to}) + 0.0) AS lat_s
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, ("degrees(lam_s)", "degrees(phi_s)"), "s")}"""
 
 
 def synthetic_geotiff_3d_bytes() -> bytes:
@@ -2116,7 +2011,7 @@ def synthetic_geotiff_3d_bytes() -> bytes:
         0.5 * np.sin(LO + LA), interp="biquadratic")
 
 
-def gridshift_biquadratic_sql(round_to: int = 6) -> str:
+def gridshift_biquadratic_sql(cols) -> str:
     """Oracle for ``gridshift_biquadratic``: the synthetic GeoTIFF
     payload is parsed driver-side with the SAME parse_geotiff the
     engine uses; the float32 node values (radians/meters) are a
@@ -2196,15 +2091,11 @@ s AS (
   {joins}
   WHERE t.ing
 )
-SELECT doc_id, (round(degrees(lam_s), {round_to}) + 0.0) AS lon_s,
-       (round(degrees(phi_s), {round_to}) + 0.0) AS lat_s,
-       (round(z_s, 4) + 0.0) AS dz_m
-FROM s ORDER BY doc_id
-"""
+{select_doc(cols, ("degrees(lam_s)", "degrees(phi_s)", "z_s"), "s")}"""
 
 
-def helmert_kinematic_sql(params: dict, n_epochs: int = 21,
-                          epoch0: float = 2005.0) -> str:
+def helmert_kinematic_sql(params: dict, cart: str, n_epochs: int,
+                          epoch0: float, cols) -> str:
     """Oracle for ``itrf_kinematic``: cart (closed form) then the
     14-param Helmert evaluated at per-document epochs t = epoch0 +
     (doc_id % n_epochs).  The rotation matrix, translation, and scale
@@ -2224,7 +2115,7 @@ def helmert_kinematic_sql(params: dict, n_epochs: int = 21,
         vals += [T[0], T[1], T[2]]
         rows.append(f"({b}, " + ", ".join(L(v) for v in vals) + ")")
     vals_sql = ",\n    ".join(rows)
-    cx, cy, cz = cart_xyz("+proj=cart +ellps=GRS80")
+    cx, cy, cz = cart_xyz(cart)
     return f"""
 WITH coords AS ({coords_cte()}),
 hp(b, m00, m01, m02, m10, m11, m12, m20, m21, m22, t0, t1, t2) AS (VALUES
@@ -2234,16 +2125,11 @@ geocent AS (
          {cx} AS gx, {cy} AS gy, {cz} AS gz
   FROM coords
 )
-SELECT g.doc_id,
-  (round(hp.m00*g.gx + hp.m01*g.gy + hp.m02*g.gz + hp.t0, 2) + 0.0) AS hx,
-  (round(hp.m10*g.gx + hp.m11*g.gy + hp.m12*g.gz + hp.t1, 2) + 0.0) AS hy,
-  (round(hp.m20*g.gx + hp.m21*g.gy + hp.m22*g.gz + hp.t2, 2) + 0.0) AS hz
-FROM geocent g JOIN hp ON hp.b = g.b
-ORDER BY g.doc_id
-"""
+{select_doc(cols, [f"hp.m{i}0*g.gx + hp.m{i}1*g.gy + hp.m{i}2*g.gz + hp.t{i}"
+                   for i in range(3)], "geocent g JOIN hp ON hp.b = g.b")}"""
 
 
-def polygon_area_sphere_sql(r: float = 6370997.0) -> str:
+def polygon_area_sphere_sql(r: float) -> str:
     """Oracle for ``polygon_area_sphere``: spherical polygon area via
     the signed-excess fan from the north pole — one Oosterom-Strackee
     term 2*atan2(a.(b x c), 1 + a.b + b.c + c.a) with a = (0,0,1) per
@@ -2289,7 +2175,7 @@ FROM s ORDER BY poly_id
 """
 
 
-def geodesic_direct_sphere_sql(r: float = 6370997.0) -> str:
+def geodesic_direct_sphere_sql(r: float) -> str:
     """Oracle for ``geodesic_direct_sphere``: the closed-form
     spherical direct solution (destination point + forward azimuth at
     the destination from the spherical triangle identities) — fully
@@ -2330,11 +2216,9 @@ FROM q ORDER BY doc_id
 """
 
 
-def tmerc_auto_sql(projstr: str = "+proj=tmerc +algo=auto +ellps=GRS80"
-                                  " +lon_0=109",
-                   lon_lo: float = 59.0, lon_hi: float = 159.0,
-                   round_to: int = 2) -> str:
-    """Oracle for the tmerc AUTO hybrid (tmerc.cpp:598-603): rows with
+def tmerc_auto_sql(projstr: str, where: str, cols) -> str:
+    """Oracle for the tmerc AUTO hybrid (tmerc.cpp:598-603) over the
+    coords rows that pass ``where``: rows with
     |λ−λ0| ≤ 3° go through the Evenden/Snyder series (approx_e_fwd,
     tmerc.cpp:71-116), the rest through the Poder/Engsager exact
     solution (tmerc.cpp:328-412) — both regimes mirrored as chained
@@ -2369,7 +2253,7 @@ def tmerc_auto_sql(projstr: str = "+proj=tmerc +algo=auto +ellps=GRS80"
 WITH coords AS ({coords_cte()}),
 fil AS (
   SELECT doc_id, lon, lat FROM coords
-  WHERE lon > {L(lon_lo)} AND lon < {L(lon_hi)}
+  WHERE {where}
 ),
 prep AS (
   SELECT doc_id, (radians(lon) - {L(lam0)}) AS lam, radians(lat) AS phi
@@ -2452,16 +2336,11 @@ near AS (
       AS y_raw
   FROM tm2
 )
-SELECT doc_id,
-       (round(x_raw, {round_to}) + 0.0) AS x_m,
-       (round(y_raw, {round_to}) + 0.0) AS y_m
-FROM (SELECT * FROM far UNION ALL SELECT * FROM near)
-ORDER BY doc_id
-"""
+{select_doc(cols, ("x_raw", "y_raw"),
+            "(SELECT * FROM far UNION ALL SELECT * FROM near)")}"""
 
 
-def wintri_roundtrip_sql(projstr: str = "+proj=wintri",
-                         round_to: int = 2) -> str:
+def wintri_roundtrip_sql(projstr: str) -> str:
     """Oracle for ``newton_inverse_roundtrip``: Winkel Tripel forward
     (aitoff.cpp:26-53 — Aitoff averaged with equirectangular) is
     closed-form SQL; the inverse has NO closed form (the reference
@@ -2495,8 +2374,8 @@ xy AS (
   FROM d
 )
 SELECT doc_id,
-  (round({L(a)}*((xa + lam*{L(cosphi1)})*0.5), {round_to}) + 0.0) AS x_m,
-  (round({L(a)}*((ya + phi)*0.5), {round_to}) + 0.0) AS y_m,
+  (round({L(a)}*((xa + lam*{L(cosphi1)})*0.5), 2) + 0.0) AS x_m,
+  (round({L(a)}*((ya + phi)*0.5), 2) + 0.0) AS y_m,
   0.0 AS dlon_deg,
   0.0 AS dlat_deg
 FROM xy ORDER BY doc_id
@@ -2509,7 +2388,7 @@ DEFORMATION_LONLAT = (
 )
 
 
-def deformation_sql(dt: float = 5.0, round_to: int = 4) -> str:
+def deformation_sql(cart: str, dt: float, cols) -> str:
     """Oracle for the kinematic velocity-grid shift
     (transformations/deformation.cpp): geodetic→cartesian (cart fwd,
     closed-form at h=0), 4-corner bilinear of the analytic ENU
@@ -2522,7 +2401,7 @@ def deformation_sql(dt: float = 5.0, round_to: int = 4) -> str:
     g = synthetic_velgrid()
     h, w = g.values.shape[:2]
     lon_e, lat_e = DEFORMATION_LONLAT
-    X, Y, Z = cart_xyz(lon="lon", lat="lat")
+    X, Y, Z = cart_xyz(cart)
 
     def nx(i):
         return f"({L(g.lon0)} + ({i})*{L(g.dlon)})"
@@ -2576,12 +2455,8 @@ d AS (
     (cp*vn + sp*vu) AS dz
   FROM sh
 )
-SELECT doc_id,
-  (round({X} + {L(dt)}*dx, {round_to}) + 0.0) AS x_m,
-  (round({Y} + {L(dt)}*dy, {round_to}) + 0.0) AS y_m,
-  (round({Z} + {L(dt)}*dz, {round_to}) + 0.0) AS z_m
-FROM d ORDER BY doc_id
-"""
+{select_doc(cols, (f"{X} + {L(dt)}*dx", f"{Y} + {L(dt)}*dy",
+                   f"{Z} + {L(dt)}*dz"), "d")}"""
 
 
 TINSHIFT_XY = (
@@ -2590,7 +2465,7 @@ TINSHIFT_XY = (
 )
 
 
-def tinshift_sql(round_to: int = 6) -> str:
+def tinshift_sql(cols) -> str:
     """Oracle for the triangulation shift
     (transformations/tinshift.cpp): per-triangle barycentric weights
     (same determinant formulation and -1e-12 containment epsilon as
@@ -2633,15 +2508,11 @@ inside AS (
   FROM bary
   WHERE a >= -1e-12 AND b >= -1e-12 AND (1.0 - a - b) >= -1e-12
 )
-SELECT doc_id,
-  (round(a*tx0 + b*tx1 + c*tx2, {round_to}) + 0.0) AS x_out,
-  (round(a*ty0 + b*ty1 + c*ty2, {round_to}) + 0.0) AS y_out,
-  (round(a*dz0 + b*dz1 + c*dz2, {round_to}) + 0.0) AS z_out
-FROM inside WHERE rn = 1 ORDER BY doc_id
-"""
+{select_doc(cols, ("a*tx0 + b*tx1 + c*tx2", "a*ty0 + b*ty1 + c*ty2",
+                   "a*dz0 + b*dz1 + c*dz2"), "inside WHERE rn = 1")}"""
 
 
-def xyzgridshift_sql(mult: float = 0.01, round_to: int = 4) -> str:
+def xyzgridshift_sql(cart: str, mult: float, cols) -> str:
     """Oracle for the 3D cartesian grid shift
     (transformations/xyzgridshift.cpp, grid_ref=input_crs forward):
     cart fwd, bilinear (dx,dy,dz) sample at the input geodetic
@@ -2651,7 +2522,7 @@ def xyzgridshift_sql(mult: float = 0.01, round_to: int = 4) -> str:
     g = synthetic_velgrid()
     h, w = g.values.shape[:2]
     lon_e, lat_e = DEFORMATION_LONLAT
-    X, Y, Z = cart_xyz(lon="lon", lat="lat")
+    X, Y, Z = cart_xyz(cart)
 
     def nx(i):
         return f"({L(g.lon0)} + ({i})*{L(g.dlon)})"
@@ -2692,9 +2563,4 @@ d AS (
     {dx}*{L(mult)} AS dx, {dy}*{L(mult)} AS dy, {dz}*{L(mult)} AS dz
   FROM tt
 )
-SELECT doc_id,
-  (round({X} + dx, {round_to}) + 0.0) AS x_m,
-  (round({Y} + dy, {round_to}) + 0.0) AS y_m,
-  (round({Z} + dz, {round_to}) + 0.0) AS z_m
-FROM d ORDER BY doc_id
-"""
+{select_doc(cols, (f"{X} + dx", f"{Y} + dy", f"{Z} + dz"), "d")}"""

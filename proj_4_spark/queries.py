@@ -18,9 +18,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .crs import compile_crs, crs_to_crs, epsg_projstring
+from .crs_io import wkt_to_projstring
 from .functions import geo as G
 from .plans import oracles as O
-from .sources.coords import coords_df, lonlat_sql
+from .sources.coords import CITIES, coords_df, lonlat_sql
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
@@ -46,6 +48,41 @@ def _coords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COORDS_CTE = O.coords_cte()
 
+# Output specs: (alias, field of the UDF's struct, rounding digits or
+# None for the value as it is), one per output column, passed to
+# _per_point and to the oracle alike.
+_XY_M = (("x_m", "x", 2), ("y_m", "y", 2))
+_XYZ_M4 = (("x_m", "x", 4), ("y_m", "y", 4), ("z_m", "z", 4))
+_LONLAT_OUT = (("lon_out", "x", 9), ("lat_out", "y", 9))
+_LONLAT_S6 = (("lon_s", "x", 6), ("lat_s", "y", 6))
+
+
+def _per_point(spark, sf_dir, udf, cols, where=None, args=None):
+    """A per-point gate query: the coords rows that pass ``where`` (SQL
+    text or a Column), one UDF of ``args`` (Columns; lon, lat when
+    None) per row, then the ``cols`` spec of its struct, ordered by
+    doc_id.  A projection string or Transform for ``udf`` runs through
+    ``project_udf``."""
+    df = _coords(spark, sf_dir)
+    if where is not None:
+        df = df.where(where)
+    if not callable(udf):
+        udf = G.project_udf(udf)
+    st = udf(*(args or (F.col("lon"), F.col("lat"))))
+    out = [(F.col(f"_p.{f}") if d is None
+            else F.round(f"_p.{f}", d) + 0.0).alias(a) for a, f, d in cols]
+    return df.withColumn("_p", st).select("doc_id", *out).orderBy("doc_id")
+
+
+def _coords_sql(cols, exprs, **ctes) -> str:
+    """The oracle of a per-point query: the coords CTE, then ``ctes``
+    (name -> body) in order, then one SQL expression of ``exprs`` over
+    the last of them per ``cols`` entry (plans.oracles.select_doc)."""
+    withs = [f"coords AS ({_COORDS_CTE})"]
+    withs += [f"{name} AS (\n{body}\n)" for name, body in ctes.items()]
+    src = list(ctes)[-1] if ctes else "coords"
+    return "\nWITH " + ",\n".join(withs) + "\n" + O.select_doc(cols, exprs, src)
+
 
 # =====================================================================
 # Projection core (north-star kernels, SURVEY.md §2.1)
@@ -69,65 +106,41 @@ def q_utm_zone_counts(spark, sf_dir):
 _wx, _wy = O.webmerc_xy()
 
 
-@register("webmerc_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_wx}, 2) + 0.0) AS x_m, (round({_wy}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("webmerc_fwd", _coords_sql(_XY_M, (_wx, _wy)))
 def q_webmerc_fwd(spark, sf_dir):
     """Spherical web-mercator forward (merc.cpp:76-84) via the fused
     projection Arrow UDF."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=webmerc")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, "+proj=webmerc", _XY_M)
 
 
-_mx, _my = O.merc_ell_xy("+proj=merc +ellps=GRS80")
+_MERC = "+proj=merc +ellps=GRS80"
 
 
-@register("merc_ell_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_mx}, 2) + 0.0) AS x_m, (round({_my}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("merc_ell_fwd", _coords_sql(_XY_M, O.merc_ell_xy(_MERC)))
 def q_merc_ell_fwd(spark, sf_dir):
     """Ellipsoidal Mercator forward (merc.cpp:13-43), GRS80."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=merc +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _MERC, _XY_M)
 
 
 _LCC = "+proj=lcc +ellps=GRS80 +lat_1=33 +lat_2=45 +lat_0=39 +lon_0=-96"
-_lx, _ly = O.lcc_xy(_LCC)
 
 
-@register("lcc_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_lx}, 2) + 0.0) AS x_m, (round({_ly}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("lcc_fwd", _coords_sql(_XY_M, O.lcc_xy(_LCC)))
 def q_lcc_fwd(spark, sf_dir):
     """Lambert Conformal Conic 2SP forward (lcc.cpp:22-42),
     CONUS-style parameters."""
-    df = G.with_projected(_coords(spark, sf_dir), _LCC)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _LCC, _XY_M)
 
 
-def _epsg3950_sql() -> str:
-    from .crs import epsg_projstring
-
-    ps = epsg_projstring(3950)
-    gx, gy = O.lcc_xy(ps)
-    return f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({gx} + 1700000.0, 2) + 0.0) AS x_m,
-       (round({gy} + 9200000.0, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-"""
+def _lcc_sql(projstr: str, x0: float, y0: float) -> str:
+    """Closed-form lcc oracle of ``projstr`` with the false origin
+    (x0, y0) added."""
+    gx, gy = O.lcc_xy(projstr)
+    return _coords_sql(_XY_M, (f"{gx} + {x0!r}", f"{gy} + {y0!r}"))
 
 
-@register("epsg_generated_lcc", _epsg3950_sql())
+@register("epsg_generated_lcc",
+          _lcc_sql(epsg_projstring(3950), 1700000.0, 9200000.0))
 def q_epsg_generated_lcc(spark, sf_dir):
     """A GENERATED EPSG code end-to-end: EPSG:3950 (RGF93 / Lambert
     CC49) resolves from the registry's zone arithmetic
@@ -135,31 +148,17 @@ def q_epsg_generated_lcc(spark, sf_dir):
     VERDICT r03 ask #8), compiles to the lcc kernel with the zone's
     false origin, and matches the closed-form lcc SQL with the same
     generated parameters."""
-    from .crs import compile_crs
+    return _per_point(spark, sf_dir, compile_crs("EPSG:3950"), _XY_M)
 
-    tr = compile_crs("EPSG:3950")
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(tr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_p", st)
-              .select("doc_id", (F.round("_p.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_p.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+
+_XY_FTUS = (("x_ftus", "x", 2), ("y_ftus", "y", 2))
 
 
 def _epsg2225_sql() -> str:
-    from .crs import epsg_projstring
-
-    ps = epsg_projstring(2225)
-    gx, gy = O.lcc_xy(ps)
+    gx, gy = O.lcc_xy(epsg_projstring(2225))
     ftus = 1200.0 / 3937.0
-    return f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id,
-       (round(({gx} + 2000000.0001016003) / {ftus!r}, 2) + 0.0) AS x_ftus,
-       (round(({gy} + 500000.00010160013) / {ftus!r}, 2) + 0.0) AS y_ftus
-FROM coords ORDER BY doc_id
-"""
+    return _coords_sql(_XY_FTUS, (f"({gx} + 2000000.0001016003) / {ftus!r}",
+                                  f"({gy} + 500000.00010160013) / {ftus!r}"))
 
 
 @register("epsg_stateplane_ftus", _epsg2225_sql())
@@ -170,53 +169,31 @@ def q_epsg_stateplane_ftus(spark, sf_dir):
     4,506 codes), compiles to lcc 2SP with metre false origins and a
     +units=us-ft output scale, and matches the closed-form lcc SQL
     divided by the exact survey-foot factor."""
-    from .crs import compile_crs
-
-    tr = compile_crs("EPSG:2225")
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(tr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_p", st)
-              .select("doc_id",
-                      (F.round("_p.x", 2) + 0.0).alias("x_ftus"),
-                      (F.round("_p.y", 2) + 0.0).alias("y_ftus"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, compile_crs("EPSG:2225"), _XY_FTUS)
 
 
-@register("utm_snyder_fwd", O.utm_snyder_sql(round_to=2))
+_UTM_COLS = (("zone", "zone", None), ("easting", "easting", 2),
+             ("northing", "northing", 2))
+
+
+@register("utm_snyder_fwd", O.utm_snyder_sql(_UTM_COLS))
 def q_utm_snyder_fwd(spark, sf_dir):
     """Auto-zone UTM via the Evenden/Snyder TM series
     (tmerc.cpp:71-116 + 737-779); per-point central meridian handled
     vectorized (the Spark restatement of per-point op selection)."""
-    df = _coords(spark, sf_dir)
-    u = G.utm_all_zones_udf(approx=True)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_u", st)
-              .select("doc_id", F.col("_u.zone").alias("zone"),
-                      (F.round("_u.easting", 2) + 0.0).alias("easting"),
-                      (F.round("_u.northing", 2) + 0.0).alias("northing"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.utm_all_zones_udf(approx=True),
+                      _UTM_COLS)
 
 
-_cx, _cy, _cz = O.cart_xyz("+proj=cart +ellps=GRS80")
+_CART = "+proj=cart +ellps=GRS80"
+_cx, _cy, _cz = O.cart_xyz(_CART)
+_GXYZ = (("gx", "x", 2), ("gy", "y", 2), ("gz", "z", 2))
 
 
-@register("cart_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_cx}, 2) + 0.0) AS gx, (round({_cy}, 2) + 0.0) AS gy,
-       (round({_cz}, 2) + 0.0) AS gz
-FROM coords ORDER BY doc_id
-""")
+@register("cart_fwd", _coords_sql(_GXYZ, (_cx, _cy, _cz)))
 def q_cart_fwd(spark, sf_dir):
     """Geodetic -> geocentric cartesian (cart.cpp:139-153)."""
-    df = _coords(spark, sf_dir)
-    u = G.project_udf("+proj=cart +ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_c", st)
-              .select("doc_id", (F.round("_c.x", 2) + 0.0).alias("gx"),
-                      (F.round("_c.y", 2) + 0.0).alias("gy"),
-                      (F.round("_c.z", 2) + 0.0).alias("gz"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, _CART, _GXYZ)
 
 
 # 7-param Helmert (ED87 -> ED50 style arc-second rotations)
@@ -224,66 +201,49 @@ _HELM = dict(x=-82.981, y=-99.719, z=-110.709,
              rx=-0.5076, ry=0.1503, rz=0.3898, s=-0.3143)
 _HELM_STR = ("+proj=helmert +convention=position_vector "
              + " ".join(f"+{k}={v}" for k, v in _HELM.items()))
-_hx, _hy, _hz = O.helmert_xyz(
-    {**{k: str(v) for k, v in _HELM.items()},
-     "convention": "position_vector"}, "gx", "gy", "gz")
+_HXYZ = (("hx", "x", 2), ("hy", "y", 2), ("hz", "z", 2))
 
 
-@register("cart_helmert_pipeline", f"""
-WITH coords AS ({_COORDS_CTE}),
-geocent AS (
-  SELECT doc_id, {_cx} AS gx, {_cy} AS gy, {_cz} AS gz FROM coords
-)
-SELECT doc_id, (round({_hx}, 2) + 0.0) AS hx, (round({_hy}, 2) + 0.0) AS hy,
-       (round({_hz}, 2) + 0.0) AS hz
-FROM geocent ORDER BY doc_id
-""")
+@register("cart_helmert_pipeline", _coords_sql(
+    _HXYZ, O.helmert_xyz({**{k: str(v) for k, v in _HELM.items()},
+                          "convention": "position_vector"}, "gx", "gy", "gz"),
+    geocent=f"  SELECT doc_id, {_cx} AS gx, {_cy} AS gy, {_cz} AS gz"
+            " FROM coords"))
 def q_cart_helmert_pipeline(spark, sf_dir):
     """Fused pipeline: cart -> 7-param Helmert (helmert.cpp:161-456),
     one Arrow-UDF invocation for the whole step list (operator fusion
     — the Spark analogue of src/pipeline.cpp:163-193)."""
-    df = _coords(spark, sf_dir)
-    pstr = ("+proj=pipeline +step +proj=cart +ellps=GRS80 +step "
-            + _HELM_STR.replace("+proj=helmert", "+proj=helmert"))
-    u = G.project_udf(pstr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_h", st)
-              .select("doc_id", (F.round("_h.x", 2) + 0.0).alias("hx"),
-                      (F.round("_h.y", 2) + 0.0).alias("hy"),
-                      (F.round("_h.z", 2) + 0.0).alias("hz"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir,
+                      f"+proj=pipeline +step {_CART} +step {_HELM_STR}", _HXYZ)
 
 
 # =====================================================================
 # S2 tiling (SURVEY.md §2.2; s2.cpp:126-253 + public Hilbert layout)
 # =====================================================================
 
-@register("s2_face_ij_l12", O.s2_face_ij_sql(12))
+_FIJ_LEVEL = 12
+
+
+@register("s2_face_ij_l12", O.s2_face_ij_sql(_FIJ_LEVEL))
 def q_s2_face_ij(spark, sf_dir):
     """Exact tile assignment at S2 level 12 as (face, i, j) — the
     SQL-checkable bijection of the Hilbert cell id."""
-    df = _coords(spark, sf_dir)
-    u = G.s2_face_ij_udf(12)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_s", st)
-              .select("doc_id", F.col("_s.face").alias("face"),
-                      F.col("_s.i").alias("i"), F.col("_s.j").alias("j"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.s2_face_ij_udf(_FIJ_LEVEL),
+                      [(c, c, None) for c in ("face", "i", "j")])
 
 
-@register("s2_cell_counts_l8", f"""
-WITH fij AS ({O.s2_face_ij_sql(8)})
+_COUNTS_LEVEL = 8  # the streaming rollup's level (streaming/tiles.py)
+_S2_COUNTS_L8 = f"""
+WITH fij AS ({O.s2_face_ij_sql(_COUNTS_LEVEL)})
 SELECT face, i, j, count(*) AS n_docs
 FROM fij GROUP BY face, i, j ORDER BY face, i, j
-""")
-def q_s2_cell_counts(spark, sf_dir):
-    """Raster-style cell aggregation at level 8: encode to the Hilbert
-    cell id, groupBy cell (hash agg, map-side partial), then decode the
-    cell id back to (face,i,j) — exercising encode AND decode."""
-    df = _coords(spark, sf_dir)
-    cell = G.s2_cell_udf(8)(F.col("lon"), F.col("lat")).alias("cell")
-    agg = df.select(cell).groupBy("cell").agg(F.count("*").alias("n_docs"))
-    fij = G.s2_cell_to_face_ij_udf(8)(F.col("cell"))
+"""
+
+
+def _face_ij_counts(agg: DataFrame) -> DataFrame:
+    """(cell, n_docs) -> (face, i, j, n_docs) by decoding the cell id,
+    ordered like the oracle."""
+    fij = G.s2_cell_to_face_ij_udf(_COUNTS_LEVEL)(F.col("cell"))
     return (agg.withColumn("_f", fij)
                .select(F.col("_f.face").alias("face"),
                        F.col("_f.i").alias("i"), F.col("_f.j").alias("j"),
@@ -291,54 +251,65 @@ def q_s2_cell_counts(spark, sf_dir):
                .orderBy("face", "i", "j"))
 
 
-@register("stream_tile_rollup_batchpar", f"""
-WITH fij AS ({O.s2_face_ij_sql(8)})
-SELECT face, i, j, count(*) AS n_docs
-FROM fij GROUP BY face, i, j ORDER BY face, i, j
-""")
+@register("s2_cell_counts_l8", _S2_COUNTS_L8)
+def q_s2_cell_counts(spark, sf_dir):
+    """Raster-style cell aggregation at level 8: encode to the Hilbert
+    cell id, groupBy cell (hash agg, map-side partial), then decode the
+    cell id back to (face,i,j) — exercising encode AND decode."""
+    df = _coords(spark, sf_dir)
+    cell = (G.s2_cell_udf(_COUNTS_LEVEL)(F.col("lon"), F.col("lat"))
+            .alias("cell"))
+    return _face_ij_counts(
+        df.select(cell).groupBy("cell").agg(F.count("*").alias("n_docs")))
+
+
+@register("stream_tile_rollup_batchpar", _S2_COUNTS_L8)
 def q_stream_tile_rollup_batchpar(spark, sf_dir):
     """The STREAMING S2 tile rollup (streaming/tiles.py: readStream ->
     Arrow-batched cell encode -> stateful groupBy -> memory sink,
     availableNow trigger) gated against the same closed-form SQL oracle
     the batch path uses — batch/stream parity certified by the driver,
-    not just by pytest.  The parquet file is staged into a temp dir
-    because the file-stream source lists directories."""
+    not just by pytest.  The parquet file is staged into a temp dir,
+    because the file-stream source lists directories, and removed once
+    the memory sink holds the rollup."""
     import shutil
     import tempfile
 
     from .streaming.tiles import run_to_memory
 
     stage = tempfile.mkdtemp(prefix="stream_tiles_")
-    shutil.copy(f"{sf_dir}/documents.parquet", f"{stage}/part-0.parquet")
-    agg = run_to_memory(spark, stage, name="gate_stream_tiles")
-    fij = G.s2_cell_to_face_ij_udf(8)(F.col("cell"))
-    return (agg.withColumn("_f", fij)
-               .select(F.col("_f.face").alias("face"),
-                       F.col("_f.i").alias("i"), F.col("_f.j").alias("j"),
-                       "n_docs")
-               .orderBy("face", "i", "j"))
+    try:
+        shutil.copy(f"{sf_dir}/documents.parquet", f"{stage}/part-0.parquet")
+        agg = run_to_memory(spark, stage, name="gate_stream_tiles")
+    finally:
+        shutil.rmtree(stage)
+    return _face_ij_counts(agg)
 
 
-@register("haversine_to_tokyo", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id,
-  (round(2.0*6371008.8*asin(sqrt(
-    sin(radians(35.6895 - lat)/2)*sin(radians(35.6895 - lat)/2)
-    + cos(radians(lat))*cos(radians(35.6895))
-      *sin(radians(139.6917 - lon)/2)*sin(radians(139.6917 - lon)/2)
-  )), 2) + 0.0) AS dist_m
-FROM coords ORDER BY doc_id
-""")
+_TOKYO = (35.6895, 139.6917)  # lat, lon of the Tokyo center
+
+
+def _to_tokyo_m():
+    """Catalyst haversine metres from each coords row to ``_TOKYO``."""
+    return G.haversine_m(F.col("lat"), F.col("lon"), *map(F.lit, _TOKYO))
+
+
+@register("haversine_to_tokyo",
+          _coords_sql((("dist_m", None, 2),), (O.haversine_sql(*_TOKYO),)))
 def q_haversine_to_tokyo(spark, sf_dir):
     """Great-circle distance to the Tokyo center — pure Catalyst
     (WholeStageCodegen) trigonometry, no Python."""
-    df = _coords(spark, sf_dir)
-    d = G.haversine_m(F.col("lat"), F.col("lon"),
-                      F.lit(35.6895), F.lit(139.6917))
-    return df.select("doc_id", (F.round(d, 2) + 0.0).alias("dist_m")).orderBy("doc_id")
+    return (_coords(spark, sf_dir)
+            .select("doc_id", (F.round(_to_tokyo_m(), 2) + 0.0).alias("dist_m"))
+            .orderBy("doc_id"))
 
 
-@register("geodesic_to_tokyo", O.vincenty_sql())
+_ANTIPODAL_M = 19_500_000.0  # haversine cut-off of the Vincenty band
+_GEOD_COLS = (("s12_m", "s12", 2), ("azi1_deg", "azi1", 4))
+
+
+@register("geodesic_to_tokyo",
+          O.vincenty_sql(*_TOKYO, _ANTIPODAL_M, _GEOD_COLS))
 def q_geodesic_to_tokyo(spark, sf_dir):
     """Ellipsoidal geodesic inverse (distance + forward azimuth) to
     Tokyo, in the fixed-iteration Vincenty formulation whose recurrence
@@ -350,33 +321,23 @@ def q_geodesic_to_tokyo(spark, sf_dir):
     (tests/test_geodesic.py), and the near-antipodal band where
     Vincenty stalls is excluded on both sides by the same haversine
     prefilter (<19,500 km)."""
-    df = _coords(spark, sf_dir)
-    hav = G.haversine_m(F.col("lat"), F.col("lon"),
-                        F.lit(35.6895), F.lit(139.6917))
-    u = G.vincenty_fixed_udf(35.6895, 139.6917)
-    st = u(F.col("lat"), F.col("lon"))
-    return (df.where(hav < 19_500_000.0)
-              .withColumn("_g", st)
-              .select("doc_id", (F.round("_g.s12", 2) + 0.0).alias("s12_m"),
-                      (F.round("_g.azi1", 4) + 0.0).alias("azi1_deg"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.vincenty_fixed_udf(*_TOKYO),
+                      _GEOD_COLS, where=_to_tokyo_m() < _ANTIPODAL_M,
+                      args=(F.col("lat"), F.col("lon")))
 
 
-@register("etmerc_fwd", O.etmerc_sql())
+_ETMERC = "+proj=etmerc +ellps=GRS80 +lon_0=109"
+_TM109_WINDOW = "lon > 59.0 AND lon < 159.0"  # +-50 deg about lon_0
+
+
+@register("etmerc_fwd", O.etmerc_sql(_ETMERC, _TM109_WINDOW, _XY_M))
 def q_etmerc_fwd(spark, sf_dir):
     """Exact TM (Poder/Engsager 6th-order complex Clenshaw,
     tmerc.cpp:328-596); gie-golden-validated in tests/test_kernels.py.
     Clipped to |lon-lon0|<50° (the series' validity domain).  Oracle:
     gatg + complex Clenshaw unrolled as chained CTEs
     (plans/oracles.py::etmerc_sql)."""
-    df = _coords(spark, sf_dir).where(
-        (F.col("lon") > 59.0) & (F.col("lon") < 159.0))
-    u = G.project_udf("+proj=etmerc +ellps=GRS80 +lon_0=109")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_e", st)
-              .select("doc_id", (F.round("_e.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_e.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, _ETMERC, _XY_M, where=_TM109_WINDOW)
 
 
 # =====================================================================
@@ -425,14 +386,10 @@ def q_pip_polygon_counts(spark, sf_dir):
 
 
 _KNN_QUERIES = [(i, c[1] + 0.251, c[2] - 0.157)
-                for i, c in enumerate(__import__(
-                    "proj_4_spark.sources.coords", fromlist=["CITIES"]
-                ).CITIES[:10])]
+                for i, c in enumerate(CITIES[:10])]
 _KNN_VALUES = ", ".join(f"({i}, {repr(qlon)}, {repr(qlat)})"
                         for i, qlon, qlat in _KNN_QUERIES)
-
-
-@register("knn_top5", f"""
+_KNN_SQL = f"""
 WITH coords AS ({_COORDS_CTE}),
 q(query_id, q_lon, q_lat) AS (VALUES {_KNN_VALUES}),
 pairs AS (
@@ -449,7 +406,10 @@ r AS (
 )
 SELECT query_id, rank, doc_id, dist2 FROM r WHERE rank <= 5
 ORDER BY query_id, rank
-""")
+"""
+
+
+@register("knn_top5", _KNN_SQL)
 def q_knn_top5(spark, sf_dir):
     """Exact kNN (k=5) for 10 city-offset query points: broadcast the
     queries, Catalyst distance, windowed top-k (rank-filter windows
@@ -477,24 +437,18 @@ def q_raster_hist(spark, sf_dir):
                .orderBy("ix", "iy"))
 
 
-@register("bilinear_sample", f"""
-WITH coords AS ({_COORDS_CTE}),
-f AS (
-  SELECT doc_id, (lon + 180.0)/1.0 AS fx, (lat + 90.0)/1.0 AS fy FROM coords
-),
-i AS (
-  SELECT doc_id, fx, fy,
+@register("bilinear_sample", _coords_sql(
+    (("val", None, 9),),
+    ("(1.0-(fx-ix))*(1.0-(fy-iy))*(sin(0.7*ix)*cos(0.3*iy))"
+     " + (fx-ix)*(1.0-(fy-iy))*(sin(0.7*(ix+1))*cos(0.3*iy))"
+     " + (1.0-(fx-ix))*(fy-iy)*(sin(0.7*ix)*cos(0.3*(iy+1)))"
+     " + (fx-ix)*(fy-iy)*(sin(0.7*(ix+1))*cos(0.3*(iy+1)))",),
+    f="  SELECT doc_id, (lon + 180.0)/1.0 AS fx, (lat + 90.0)/1.0 AS fy"
+      " FROM coords",
+    i="""  SELECT doc_id, fx, fy,
     least(greatest(CAST(floor(fx) AS BIGINT), 0), 358) AS ix,
     least(greatest(CAST(floor(fy) AS BIGINT), 0), 178) AS iy
-  FROM f
-)
-SELECT doc_id, (round(
-   (1.0-(fx-ix))*(1.0-(fy-iy))*(sin(0.7*ix)*cos(0.3*iy))
- + (fx-ix)*(1.0-(fy-iy))*(sin(0.7*(ix+1))*cos(0.3*iy))
- + (1.0-(fx-ix))*(fy-iy)*(sin(0.7*ix)*cos(0.3*(iy+1)))
- + (fx-ix)*(fy-iy)*(sin(0.7*(ix+1))*cos(0.3*(iy+1))), 9) + 0.0) AS val
-FROM i ORDER BY doc_id
-""")
+  FROM f"""))
 def q_bilinear_sample(spark, sf_dir):
     """Raster -> vector: bilinear sampling of a broadcast analytic
     grid (grids.cpp:3322-3393 4-corner weights), vectorized."""
@@ -884,10 +838,11 @@ def q_embed_neardup_pairs(spark, sf_dir):
 
 
 _IVF_CENTROIDS = SIM.hyperplanes(n=16, seed=7)  # fixed codebook
+_IVF_QUERIES, _IVF_K = 10, 5  # vec_ids 0..9, each with its top 5
 
 
-@register("ivf_cosine_top5", O.ivf_sql(_IVF_CENTROIDS, n_queries=10,
-                                       nprobe=SIM.NPROBE, k=5))
+@register("ivf_cosine_top5",
+          O.ivf_sql(_IVF_CENTROIDS, _IVF_QUERIES, SIM.NPROBE, _IVF_K))
 def q_ivf_cosine_top5(spark, sf_dir):
     """IVF-style ANN top-5: nearest-centroid inverted lists over a
     fixed deterministic codebook, nprobe=4 of 16 lists searched per
@@ -895,7 +850,8 @@ def q_ivf_cosine_top5(spark, sf_dir):
     baseline; kmeans_centroids trains a data-adapted codebook, tested
     in pytest)."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = SIM.ivf_topk(e, list(range(10)), 5, centroids=_IVF_CENTROIDS)
+    out = SIM.ivf_topk(e, list(range(_IVF_QUERIES)), _IVF_K,
+                       centroids=_IVF_CENTROIDS)
     return (out.select("query_id", "rank", "vec_id",
                        (F.col("sim") + 0.0).alias("sim"))
                .orderBy("query_id", "rank"))
@@ -1049,45 +1005,28 @@ def q_multimodal_fake_embed(spark, sf_dir):
     return blobs.select("doc_id", *fake_embedding_cols()).orderBy("doc_id")
 
 
-_WMI_X = "degrees(x_m / 6378137.0)"
-_WMI_Y = "degrees(2.0*atan(exp(y_m / 6378137.0)) - pi()/2.0)"
+# forward spherical web-mercator in SQL text both engines run
+_WM_X = "radians(lon)*6378137.0"
+_WM_Y = "ln(tan(pi()/4.0 + radians(lat)/2.0))*6378137.0"
 
 
-@register("webmerc_inv", f"""
-WITH coords AS ({_COORDS_CTE}),
-p AS (
-  SELECT doc_id, (radians(lon)*6378137.0) AS x_m,
-    (ln(tan(pi()/4.0 + radians(lat)/2.0))*6378137.0) AS y_m
-  FROM coords
-)
-SELECT doc_id, (round({_WMI_X}, 9) + 0.0) AS lon_out,
-  (round({_WMI_Y}, 9) + 0.0) AS lat_out
-FROM p ORDER BY doc_id
-""")
+@register("webmerc_inv", _coords_sql(
+    _LONLAT_OUT, ("degrees(x_m / 6378137.0)",
+                  "degrees(2.0*atan(exp(y_m / 6378137.0)) - pi()/2.0)"),
+    p=f"  SELECT doc_id, ({_WM_X}) AS x_m, ({_WM_Y}) AS y_m FROM coords"))
 def q_webmerc_inv(spark, sf_dir):
     """Spherical web-mercator INVERSE (merc.cpp s_inverse) — the gate's
     inverse-direction coverage: project forward in SQL both sides,
     invert with the engine."""
-    d = _coords(spark, sf_dir)
-    p = d.select(
-        "doc_id",
-        F.expr("radians(lon)*6378137.0").alias("x_m"),
-        F.expr("ln(tan(pi()/4.0 + radians(lat)/2.0))*6378137.0")
-         .alias("y_m"))
-    u = G.project_udf("+proj=webmerc", direction="inv")
-    st = u(F.col("x_m"), F.col("y_m"))
-    return (p.withColumn("_i", st)
-             .select("doc_id",
-                     (F.round("_i.x", 9) + 0.0).alias("lon_out"),
-                     (F.round("_i.y", 9) + 0.0).alias("lat_out"))
-             .orderBy("doc_id"))
+    return _per_point(spark, sf_dir,
+                      G.project_udf("+proj=webmerc", direction="inv"),
+                      _LONLAT_OUT, args=(F.expr(_WM_X), F.expr(_WM_Y)))
 
 
 _TB_LON_MIN = "(lon - 0.5)"
 _TB_LON_MAX = "(lon + 0.5)"
 _TB_LAT_MIN = "(lat - 0.25)"
 _TB_LAT_MAX = "(lat + 0.25)"
-_TB_LCC = _LCC
 
 
 def _tb_edge_exprs():
@@ -1105,7 +1044,7 @@ def _tb_edge_exprs():
 
 
 _tb_lon, _tb_lat = _tb_edge_exprs()
-_tb_x, _tb_y = O.lcc_xy(_TB_LCC, lon="lon_e", lat="lat_e")
+_tb_x, _tb_y = O.lcc_xy(_LCC, lon="lon_e", lat="lat_e")
 
 
 @register("trans_bounds_lcc", f"""
@@ -1129,13 +1068,12 @@ def q_trans_bounds_lcc(spark, sf_dir):
     each per-doc bbox edge with 21 points, project (LCC CONUS), take
     the envelope — partition-pruning bounds as a distributed
     aggregate (map-side partial min/max, no skew)."""
-    lon_e, lat_e = _tb_edge_exprs()
     d = _coords(spark, sf_dir)
     pts = (d.crossJoin(spark.range(4).select(F.col("id").alias("edge")))
              .crossJoin(spark.range(21).select(F.col("id").alias("k")))
-             .select("doc_id", F.expr(lon_e).alias("lon_e"),
-                     F.expr(lat_e).alias("lat_e")))
-    u = G.project_udf(_TB_LCC)
+             .select("doc_id", F.expr(_tb_lon).alias("lon_e"),
+                     F.expr(_tb_lat).alias("lat_e")))
+    u = G.project_udf(_LCC)
     st = u(F.col("lon_e"), F.col("lat_e"))
     return (pts.withColumn("_p", st)
                .groupBy("doc_id")
@@ -1149,53 +1087,32 @@ def q_trans_bounds_lcc(spark, sf_dir):
 # ------- long-tail projections (kernels/misc_proj.py, SURVEY §2.3) ----
 
 _EQC = "+proj=eqc +ellps=GRS80 +lat_ts=30"
-_ex, _ey = O.eqc_xy(_EQC)
 _AEA = "+proj=aea +ellps=GRS80 +lat_1=29.5 +lat_2=45.5 +lat_0=23 +lon_0=-96"
-_ax, _ay = O.aea_xy(_AEA)
 _LAEA = "+proj=laea +ellps=GRS80 +lat_0=45 +lon_0=10"
-_px, _py = O.laea_xy(_LAEA)
 
 
-@register("eqc_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_ex}, 2) + 0.0) AS x_m, (round({_ey}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("eqc_fwd", _coords_sql(_XY_M, O.eqc_xy(_EQC)))
 def q_eqc_fwd(spark, sf_dir):
     """Equidistant cylindrical (eqc.cpp), lat_ts=30."""
-    df = G.with_projected(_coords(spark, sf_dir), _EQC)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _EQC, _XY_M)
 
 
-@register("aea_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_ax}, 2) + 0.0) AS x_m, (round({_ay}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("aea_fwd", _coords_sql(_XY_M, O.aea_xy(_AEA)))
 def q_aea_fwd(spark, sf_dir):
     """Albers equal-area conic (aea.cpp), CONUS parameters; the
     equal-area property is differentially verified in
     tests/test_misc_proj.py."""
-    df = G.with_projected(_coords(spark, sf_dir), _AEA)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _AEA, _XY_M)
 
 
-@register("laea_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_px}, 2) + 0.0) AS x_m, (round({_py}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("laea_fwd", _coords_sql(_XY_M, O.laea_xy(_LAEA)))
 def q_laea_fwd(spark, sf_dir):
     """Lambert azimuthal equal-area (laea.cpp), oblique Europe-style
     parameters."""
-    df = G.with_projected(_coords(spark, sf_dir), _LAEA)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _LAEA, _XY_M)
 
 
-@register("hgridshift_pipeline", O.hgridshift_webmerc_sql())
+@register("hgridshift_pipeline", O.hgridshift_webmerc_sql(_XY_M))
 def q_hgridshift_pipeline(spark, sf_dir):
     """hgridshift (synthetic correction grid, GRID_REGISTRY) fused
     with webmerc in one pipeline UDF; kernel validated against the
@@ -1207,17 +1124,14 @@ def q_hgridshift_pipeline(spark, sf_dir):
     from .kernels.gridshift import synthetic_hgrid
 
     P.GRID_REGISTRY.setdefault("bench_h", synthetic_hgrid())
-    df = _coords(spark, sf_dir)
-    u = G.project_udf("+proj=pipeline +step +proj=hgridshift "
-                      "+grids=bench_h +step +proj=webmerc")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_g", st)
-              .select("doc_id", (F.round("_g.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_g.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, "+proj=pipeline +step +proj=hgridshift "
+                      "+grids=bench_h +step +proj=webmerc", _XY_M)
 
 
-@register("vgridshift_gtx", O.vgridshift_gtx_sql())
+_Z_M = (("z_m", "z", 2),)
+
+
+@register("vgridshift_gtx", O.vgridshift_gtx_sql(_Z_M))
 def q_vgridshift_gtx(spark, sf_dir):
     """Vertical datum shift driven by a REAL GTX byte payload: the
     synthetic geoid is serialized to GTX bytes
@@ -1234,17 +1148,16 @@ def q_vgridshift_gtx(spark, sf_dir):
                           GF.synthetic_geoid_gtx_bytes())
     # out-of-grid points are a domain error (reference vgridshift
     # semantics) — the gate tests the in-grid sampling
-    df = _coords(spark, sf_dir).where(
-        "lon >= -30.0 AND lon <= 50.0 AND lat >= 20.0 AND lat <= 70.0")
-    u = G.project_udf("+proj=vgridshift +grids=synthetic_geoid.gtx "
-                      "+ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_g", st)
-              .select("doc_id", (F.round("_g.z", 2) + 0.0).alias("z_m"))
-              .orderBy("doc_id"))
+    return _per_point(
+        spark, sf_dir, "+proj=vgridshift +grids=synthetic_geoid.gtx "
+        "+ellps=GRS80", _Z_M,
+        where="lon >= -30.0 AND lon <= 50.0 AND lat >= 20.0 AND lat <= 70.0")
 
 
-@register("a7hex_compact", O.a7hex_compact_sql())
+_A7_RES, _A7_PARENT_RES = 1, 0
+
+
+@register("a7hex_compact", O.a7hex_compact_sql(_A7_RES, _A7_PARENT_RES))
 def q_a7hex_compact(spark, sf_dir):
     """Aperture-7 DGGS compact (operators/dggs.py — the H3-compact
     analogue on the a7hex index, which is NOT canonical-H3-bit-
@@ -1255,11 +1168,14 @@ def q_a7hex_compact(spark, sf_dir):
 
     df = _coords(spark, sf_dir)
     cells = df.select(
-        G.a7hex_cell_udf(1)(F.col("lon"), F.col("lat")).alias("cell"))
-    return compact(cells, 0).orderBy("cell", "level")
+        G.a7hex_cell_udf(_A7_RES)(F.col("lon"), F.col("lat")).alias("cell"))
+    return compact(cells, _A7_PARENT_RES).orderBy("cell", "level")
 
 
-@register("hex_cell_counts_r5", O.hex_cells_sql(5))
+_HEX_RES = 5
+
+
+@register("hex_cell_counts_r5", O.hex_cells_sql(_HEX_RES))
 def q_hex_cell_counts(spark, sf_dir):
     """Aperture-7 hex DGGS cell counts at res 5 (index/hexdggs.py —
     structurally H3-style but NOT H3-bit-compatible; the bit-exact
@@ -1268,7 +1184,8 @@ def q_hex_cell_counts(spark, sf_dir):
     a doc_id->cell VALUES join (plans/oracles.py::hex_cells_sql) — a
     distributed-vs-driver consistency gate, not canonical-H3 parity."""
     df = _coords(spark, sf_dir)
-    cell = G.a7hex_cell_udf(5)(F.col("lon"), F.col("lat")).alias("hex_cell")
+    cell = (G.a7hex_cell_udf(_HEX_RES)(F.col("lon"), F.col("lat"))
+            .alias("hex_cell"))
     return (df.select(cell).groupBy("hex_cell")
               .agg(F.count("*").alias("n_docs"))
               .orderBy("hex_cell"))
@@ -1348,81 +1265,60 @@ def oracle_sql() -> dict[str, str]:
 # =====================================================================
 
 _STERE = "+proj=stere +ellps=GRS80 +lat_0=90 +lat_ts=70 +lon_0=-45"
-_sx, _sy = O.stere_polar_xy(_STERE)
 
 
-@register("stere_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_sx}, 2) + 0.0) AS x_m, (round({_sy}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("stere_fwd", _coords_sql(_XY_M, O.stere_polar_xy(_STERE)))
 def q_stere_fwd(spark, sf_dir):
     """Polar ellipsoidal stereographic (stere.cpp e_forward N_POLE),
     EPSG:3413-style parameters (lat_ts=70, lon_0=-45)."""
-    df = G.with_projected(_coords(spark, sf_dir), _STERE)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _STERE, _XY_M)
 
 
 _AEQD = "+proj=aeqd +R=6371000 +lat_0=40 +lon_0=-100"
-_qx, _qy = O.aeqd_sph_xy(_AEQD)
 
 
-@register("aeqd_fwd", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({_qx}, 2) + 0.0) AS x_m, (round({_qy}, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-""")
+@register("aeqd_fwd", _coords_sql(_XY_M, O.aeqd_sph_xy(_AEQD)))
 def q_aeqd_fwd(spark, sf_dir):
     """Spherical azimuthal equidistant (aeqd.cpp s_forward),
     North-America-centered."""
-    df = G.with_projected(_coords(spark, sf_dir), _AEQD)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _AEQD, _XY_M)
 
 
-@register("sinu_fwd", O.sinu_sql())
+_SINU = "+proj=sinu +ellps=GRS80"
+
+
+@register("sinu_fwd", O.sinu_sql(_SINU, _XY_M))
 def q_sinu_fwd(spark, sf_dir):
     """Ellipsoidal sinusoidal (sinu.cpp e_forward): equal-area
     pseudocylindrical via the meridional-arc series (mlfn)."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=sinu +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _SINU, _XY_M)
 
 
-@register("moll_fwd", O.moll_sql())
+_MOLL = "+proj=moll +ellps=GRS80"
+
+
+@register("moll_fwd", O.moll_sql(_MOLL, _XY_M))
 def q_moll_fwd(spark, sf_dir):
     """Mollweide (moll.cpp): Newton solve for theta; the oracle
     unrolls a fixed 10 Newton steps (sub-nm from the engine's
     early-break iterate)."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=moll +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _MOLL, _XY_M)
 
 
 _USFT = 1.0 / (1200.0 / 3937.0)  # m -> US survey feet
+_XY_USFT = (("x_usft", "x", 2), ("y_usft", "y", 2))
 
 
-@register("axisswap_unitconvert", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id,
-  (round(({_wy}) * {O.L(_USFT)}, 2) + 0.0) AS x_usft,
-  (round(({_wx}) * {O.L(_USFT)}, 2) + 0.0) AS y_usft
-FROM coords ORDER BY doc_id
-""")
+@register("axisswap_unitconvert", _coords_sql(
+    _XY_USFT, (f"({_wy}) * {O.L(_USFT)}", f"({_wx}) * {O.L(_USFT)}")))
 def q_axisswap_unitconvert(spark, sf_dir):
     """Pipeline webmerc -> axisswap order=2,1 -> unitconvert
     xy_out=us-ft (axisswap.cpp, unitconvert.cpp linear units), fused
     into one Arrow-UDF step list."""
-    df = _coords(spark, sf_dir)
-    u = G.project_udf("+proj=pipeline +step +proj=webmerc "
+    return _per_point(spark, sf_dir, "+proj=pipeline +step +proj=webmerc "
                       "+step +proj=axisswap +order=2,1 "
-                      "+step +proj=unitconvert +xy_in=m +xy_out=us-ft")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_u", st)
-              .select("doc_id", (F.round("_u.x", 2) + 0.0).alias("x_usft"),
-                      (F.round("_u.y", 2) + 0.0).alias("y_usft"))
-              .orderBy("doc_id"))
+                      "+step +proj=unitconvert +xy_in=m +xy_out=us-ft",
+                      _XY_USFT)
 
 
 @register("unitconvert_time", """
@@ -1457,20 +1353,16 @@ def q_unitconvert_time(spark, sf_dir):
              .orderBy("doc_id"))
 
 
-@register("factors_lcc", O.factors_sql(_LCC))
+_HKS = (("h", "h", 4), ("k", "k", 4), ("s_areal", "s", 4))
+
+
+@register("factors_lcc", O.factors_sql(_LCC, _HKS))
 def q_factors_lcc(spark, sf_dir):
     """proj_factors (factors.cpp:111-240) over the CONUS LCC:
     meridional scale h, parallel scale k, areal scale s via central
     differences — for the 2SP secant cone h=k~1 on the standard
     parallels and s=h*k (conformal)."""
-    df = _coords(spark, sf_dir)
-    u = G.factors_udf(_LCC)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_f", st)
-              .select("doc_id", (F.round("_f.h", 4) + 0.0).alias("h"),
-                      (F.round("_f.k", 4) + 0.0).alias("k"),
-                      (F.round("_f.s", 4) + 0.0).alias("s_areal"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.factors_udf(_LCC), _HKS)
 
 
 # --- national grids (kernels/natgrid.py) ------------------------------
@@ -1479,34 +1371,31 @@ _RD = ("+proj=sterea +ellps=bessel +lat_0=52.15616055555555 "
        "+lon_0=5.38763888888889 +k=0.9999079 +x_0=155000 +y_0=463000")
 
 
-@register("sterea_rd_fwd", O.sterea_sql(_RD))
+@register("sterea_rd_fwd", O.sterea_sql(_RD, _XY_M))
 def q_sterea_rd_fwd(spark, sf_dir):
     """Dutch RD (Rijksdriehoek) — oblique stereographic on the Gauss
     conformal sphere (sterea.cpp:44-63 + gauss.cpp:89-99)."""
-    df = G.with_projected(_coords(spark, sf_dir), _RD)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _RD, _XY_M)
 
 
-@register("krovak_fwd", O.krovak_sql())
+_KROVAK = "+proj=krovak +ellps=GRS80"
+
+
+@register("krovak_fwd", O.krovak_sql(_KROVAK, _XY_M))
 def q_krovak_fwd(spark, sf_dir):
     """Czech/Slovak Krovak grid (krovak.cpp:145-206), default
     S-JTSK-style parameters (Bessel forced, Ferro-offset lon_0)."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=krovak +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _KROVAK, _XY_M)
 
 
 _CH = ("+proj=somerc +ellps=bessel +lat_0=46.95240555555556 "
        "+lon_0=7.439583333333333 +x_0=600000 +y_0=200000")
 
 
-@register("somerc_fwd", O.somerc_sql(_CH))
+@register("somerc_fwd", O.somerc_sql(_CH, _XY_M))
 def q_somerc_fwd(spark, sf_dir):
     """Swiss CH1903 oblique Mercator (somerc.cpp:35-52)."""
-    df = G.with_projected(_coords(spark, sf_dir), _CH)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _CH, _XY_M)
 
 
 # --- datum-shift family completion (molodensky + geoc) ----------------
@@ -1515,142 +1404,110 @@ _MOLO = ("+proj=molodensky +a=6378160 +rf=298.25 +da=-23 "
          "+df=-8.120449e-8 +dx=-134 +dy=-48 +dz=149")
 
 
-@register("molodensky_fwd", O.molodensky_sql(_MOLO))
+_MOLO_COLS = _LONLAT_OUT + (("dh_m", "z", 4),)
+
+
+@register("molodensky_fwd", O.molodensky_sql(_MOLO, _MOLO_COLS))
 def q_molodensky_fwd(spark, sf_dir):
     """Standard Molodensky datum shift (molodensky.cpp:120-172) —
     AGD66-style parameters, z=0; the direct-formula alternative to the
     cart->helmert->cart roundtrip."""
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(_MOLO)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_m", st)
-              .select("doc_id",
-                      (F.round("_m.x", 9) + 0.0).alias("lon_out"),
-                      (F.round("_m.y", 9) + 0.0).alias("lat_out"),
-                      (F.round("_m.z", 4) + 0.0).alias("dh_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, _MOLO, _MOLO_COLS)
 
 
-@register("geoc_lat", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id,
-  (round(CASE WHEN abs(radians(lat)) > pi()/2 - 1e-9 THEN lat
-              ELSE degrees(atan({O.L(1.0 - 0.0066943800229007876)}
-                                * tan(radians(lat)))) END, 9) + 0.0)
-    AS lat_geoc
-FROM coords ORDER BY doc_id
-""")
+_LAT_GEOC = (("lat_geoc", "y", 9),)
+
+
+@register("geoc_lat", _coords_sql(_LAT_GEOC, (
+    "CASE WHEN abs(radians(lat)) > pi()/2 - 1e-9 THEN lat ELSE degrees(atan("
+    f"{O.L(1.0 - 0.0066943800229007876)} * tan(radians(lat)))) END",)))
 def q_geoc_lat(spark, sf_dir):
     """Geographic -> geocentric latitude (geoc.cpp:38-64), GRS80."""
-    df = _coords(spark, sf_dir)
-    u = G.project_udf("+proj=geoc +ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_g", st)
-              .select("doc_id",
-                      (F.round("_g.y", 9) + 0.0).alias("lat_geoc"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, "+proj=geoc +ellps=GRS80", _LAT_GEOC)
 
 
 _EQDC = "+proj=eqdc +ellps=GRS80 +lat_1=20 +lat_2=60 +lon_0=-96"
 
 
-@register("eqdc_fwd", O.eqdc_sql(_EQDC))
+@register("eqdc_fwd", O.eqdc_sql(_EQDC, _XY_M))
 def q_eqdc_fwd(spark, sf_dir):
     """Equidistant conic (eqdc.cpp:54-66), secant CONUS-style cone."""
-    df = G.with_projected(_coords(spark, sf_dir), _EQDC)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _EQDC, _XY_M)
 
 
-@register("hammer_fwd", O.hammer_sql())
+_HAMMER = "+proj=hammer +R=6371000"
+
+
+@register("hammer_fwd", O.hammer_sql(_HAMMER, _XY_M))
 def q_hammer_fwd(spark, sf_dir):
     """Hammer equal-area world projection (hammer.cpp:19-35)."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=hammer +R=6371000")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _HAMMER, _XY_M)
 
 
 _CASS_H = "+proj=cass +ellps=GRS80 +hyperbolic +lon_0=179"
 
 
-@register("cass_hyperbolic_fwd", O.cass_hyperbolic_sql(_CASS_H))
+@register("cass_hyperbolic_fwd", O.cass_hyperbolic_sql(_CASS_H, _XY_M))
 def q_cass_hyperbolic_fwd(spark, sf_dir):
     """Cassini-Soldner, hyperbolic (Vanua Levu) variant
     (cass.cpp:25-49) — the closed-form series path."""
-    df = G.with_projected(_coords(spark, sf_dir), _CASS_H)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _CASS_H, _XY_M)
 
 
 _POLY = "+proj=poly +ellps=GRS80 +lon_0=-96"
 
 
-@register("poly_fwd", O.poly_sql(_POLY))
+@register("poly_fwd", O.poly_sql(_POLY, _XY_M))
 def q_poly_fwd(spark, sf_dir):
     """American polyconic (poly.cpp:25-46), historic USGS CONUS
     projection."""
-    df = G.with_projected(_coords(spark, sf_dir), _POLY)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _POLY, _XY_M)
 
 
 _BONNE = "+proj=bonne +ellps=GRS80 +lat_1=45 +lon_0=2"
 
 
-@register("bonne_fwd", O.bonne_sql(_BONNE))
+@register("bonne_fwd", O.bonne_sql(_BONNE, _XY_M))
 def q_bonne_fwd(spark, sf_dir):
     """Bonne pseudoconic (bonne.cpp:21-42), France-style lat_1=45."""
-    df = G.with_projected(_coords(spark, sf_dir), _BONNE)
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _BONNE, _XY_M)
 
 
-@register("igh_fwd", O.igh_sql())
+_IGH = "+proj=igh +a=6400000"
+
+
+@register("igh_fwd", O.igh_sql(_IGH, _XY_M))
 def q_igh_fwd(spark, sf_dir):
     """Interrupted Goode homolosine (igh.cpp): 12-zone composition of
     spherical sinusoidal and Mollweide with per-zone central meridians
     — the interrupted equal-area world map."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=igh +a=6400000")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _IGH, _XY_M)
 
 
-_TOPO = ("+proj=pipeline +step +proj=cart +ellps=GRS80 "
-         "+step +proj=topocentric +ellps=GRS80 +lon_0=10 +lat_0=52 +h_0=0")
+_TOPO_LON, _TOPO_LAT = 10.0, 52.0  # topocentric origin at h = 0
+_TOPO = (f"+proj=pipeline +step {_CART} +step +proj=topocentric +ellps=GRS80"
+         f" +lon_0={_TOPO_LON} +lat_0={_TOPO_LAT} +h_0=0")
+_ENU = (("e_m", "x", 2), ("n_m", "y", 2), ("u_m", "z", 2))
 
 
 def _topo_sql():
-    import math as _m
+    import numpy as np
 
     from .kernels import cart as _kc
     from .kernels.ellipsoid import Ellipsoid as _E
 
-    ell = _E.from_name("GRS80")
-    C = _kc.setup({}, ell)
-    import numpy as _np
-
-    X, Y, Z = _kc.fwd(_np.array([_m.radians(10.0)]),
-                      _np.array([_m.radians(52.0)]), _np.array([0.0]), C)
+    C = _kc.setup({}, _E.from_name("GRS80"))
+    lam, phi = math.radians(_TOPO_LON), math.radians(_TOPO_LAT)
+    X, Y, Z = _kc.fwd(np.array([lam]), np.array([phi]), np.array([0.0]), C)
     X0, Y0, Z0 = float(X[0]), float(Y[0]), float(Z[0])
-    sp, cp = _m.sin(_m.radians(52.0)), _m.cos(_m.radians(52.0))
-    sl, cl = _m.sin(_m.radians(10.0)), _m.cos(_m.radians(10.0))
-    cx, cy, cz = O.cart_xyz("+proj=cart +ellps=GRS80")
-    dX = f"({cx} - {O.L(X0)})"
-    dY = f"({cy} - {O.L(Y0)})"
-    dZ = f"({cz} - {O.L(Z0)})"
-    return f"""
-WITH coords AS ({O.coords_cte()}),
-d AS (
-  SELECT doc_id, {dX} AS dX, {dY} AS dY, {dZ} AS dZ FROM coords
-)
-SELECT doc_id,
-  (round(-dX*{O.L(sl)} + dY*{O.L(cl)}, 2) + 0.0) AS e_m,
-  (round(-dX*{O.L(sp * cl)} - dY*{O.L(sp * sl)} + dZ*{O.L(cp)}, 2) + 0.0)
-    AS n_m,
-  (round(dX*{O.L(cp * cl)} + dY*{O.L(cp * sl)} + dZ*{O.L(sp)}, 2) + 0.0)
-    AS u_m
-FROM d ORDER BY doc_id
-"""
+    sp, cp = math.sin(phi), math.cos(phi)
+    sl, cl = math.sin(lam), math.cos(lam)
+    return _coords_sql(_ENU, (
+        f"-dX*{O.L(sl)} + dY*{O.L(cl)}",
+        f"-dX*{O.L(sp * cl)} - dY*{O.L(sp * sl)} + dZ*{O.L(cp)}",
+        f"dX*{O.L(cp * cl)} + dY*{O.L(cp * sl)} + dZ*{O.L(sp)}"),
+        d=f"  SELECT doc_id, ({_cx} - {O.L(X0)}) AS dX, ({_cy} - {O.L(Y0)})"
+          f" AS dY, ({_cz} - {O.L(Z0)}) AS dZ FROM coords")
 
 
 @register("topocentric_enu", _topo_sql())
@@ -1658,14 +1515,7 @@ def q_topocentric_enu(spark, sf_dir):
     """Geodetic -> geocentric -> topocentric ENU about a Munich-ish
     origin (conversions/topocentric.cpp:22-33, IOGP GN 7-2), fused in
     one pipeline UDF."""
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(_TOPO)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_t", st)
-              .select("doc_id", (F.round("_t.x", 2) + 0.0).alias("e_m"),
-                      (F.round("_t.y", 2) + 0.0).alias("n_m"),
-                      (F.round("_t.z", 2) + 0.0).alias("u_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, _TOPO, _ENU)
 
 
 _TC32 = ("+proj=horner +ellps=intl +range=500000"
@@ -1697,61 +1547,58 @@ _HORNER_E = "877605.269066 + (doc_id % 997 - 498)*700.0"
 _HORNER_N = "6125810.306769 + (doc_id % 911 - 455)*700.0"
 
 
-@register("horner_tc32_fwd", O.horner_sql(_TC32, _HORNER_E, _HORNER_N))
+_UV_OUT = (("u_out", "x", 4), ("v_out", "y", 4))
+
+
+@register("horner_tc32_fwd",
+          O.horner_sql(_TC32, _HORNER_E, _HORNER_N, _UV_OUT))
 def q_horner_tc32_fwd(spark, sf_dir):
     """Danish TC32 -> System-45-Bornholm Horner polynomial datum
     transform (horner.cpp gen_pol; coefficients from the reference's
     gie_self_tests.cpp:812-834) over a synthetic in-range grid."""
-    d = _docs(spark, sf_dir)
-    pts = d.select(
-        "doc_id",
-        (877605.269066 + (F.col("doc_id") % 997 - 498) * 700.0).alias("e"),
-        (6125810.306769 + (F.col("doc_id") % 911 - 455) * 700.0).alias("n"))
-    u = G.project_udf(_TC32)
-    st = u(F.col("e"), F.col("n"))
-    return (pts.withColumn("_h", st)
-               .select("doc_id", (F.round("_h.x", 4) + 0.0).alias("u_out"),
-                       (F.round("_h.y", 4) + 0.0).alias("v_out"))
-               .orderBy("doc_id"))
+    # Spark SQL reads these literals as decimals: cast the exact sums
+    return _per_point(spark, sf_dir, _TC32, _UV_OUT,
+                      args=[F.expr(e).cast("double")
+                            for e in (_HORNER_E, _HORNER_N)])
 
 
-@register("qsc_fwd", O.qsc_sql())
+_QSC = "+proj=qsc +ellps=GRS80"
+
+
+@register("qsc_fwd", O.qsc_sql(_QSC, _XY_M))
 def q_qsc_fwd(spark, sf_dir):
     """Quadrilateralized spherical cube front face (qsc.cpp:66-180) —
     the COBE cube-face tiling projection."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=qsc +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _QSC, _XY_M)
 
 
-@register("airocean_fwd", O.airocean_sql())
+_AIROCEAN = "+proj=airocean +ellps=GRS80"
+
+
+@register("airocean_fwd", O.airocean_sql(_AIROCEAN, _XY_M))
 def q_airocean_fwd(spark, sf_dir):
     """Fuller Airocean / Dymaxion (airocean.cpp:726-772): 23-face
     gnomonic with per-face affine placement in the unfolded net."""
-    df = G.with_projected(_coords(spark, sf_dir),
-                          "+proj=airocean +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _AIROCEAN, _XY_M)
 
 
-@register("crs_osgb_fwd", O.crs_osgb_sql())
+_OSGB_WINDOW = "lon > -58.0 AND lon < 54.0"  # etmerc-convergent window
+_OSGB_SQL = O.crs_osgb_sql(_OSGB_WINDOW, _XY_M)
+
+
+@register("crs_osgb_fwd", _OSGB_SQL)
 def q_crs_osgb_fwd(spark, sf_dir):
     """crs_to_crs(EPSG:4326 -> EPSG:27700): WGS84 -> OSGB36 Helmert
     datum bridge (cart/helmert/cart, cs2cs emulation) + exact TM with
     false origin — the full CRS-level planner in the gate."""
-    from .crs import crs_to_crs
-
-    tr = crs_to_crs(4326, 27700)
-    d = _coords(spark, sf_dir).where("lon > -58.0 AND lon < 54.0")
-    u = G.project_udf(tr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (d.withColumn("_p", st)
-             .select("doc_id", (F.round("_p.x", 2) + 0.0).alias("x_m"),
-                     (F.round("_p.y", 2) + 0.0).alias("y_m"))
-             .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, crs_to_crs(4326, 27700), _XY_M,
+                      where=_OSGB_WINDOW)
 
 
-@register("crs_multiregion_select", O.multiregion_select_sql())
+_MR_COLS = _XY_M + (("op", "op", None),)
+
+
+@register("crs_multiregion_select", O.multiregion_select_sql(_MR_COLS))
 def q_crs_multiregion_select(spark, sf_dir):
     """PER-POINT candidate-operation selection (VERDICT r03 ask #5,
     trans.cpp:44-173 pj_get_suggested_operation): two regional datum
@@ -1780,30 +1627,13 @@ def q_crs_multiregion_select(spark, sf_dir):
         candidate("+proj=webmerc +ellps=WGS84 +towgs84=100,-50,30",
                   bbox=None, accuracy=float("inf"), name="helmert"),
     ])
-    df = _coords(spark, sf_dir)
-    u = G.project_select_udf(sel)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_p", st)
-              .select("doc_id", (F.round("_p.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_p.y", 2) + 0.0).alias("y_m"),
-                      F.col("_p.op").alias("op"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.project_select_udf(sel), _MR_COLS)
 
 
-def _lambert93_sql() -> str:
-    from .crs import epsg_projstring
-
-    ps = epsg_projstring(2154)
-    gx, gy = O.lcc_xy(ps)
-    return f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({gx} + 700000.0, 2) + 0.0) AS x_m,
-       (round({gy} + 6600000.0, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-"""
+_LAMBERT93_SQL = _lcc_sql(epsg_projstring(2154), 700000.0, 6600000.0)
 
 
-@register("projjson_roundtrip_fwd", _lambert93_sql())
+@register("projjson_roundtrip_fwd", _LAMBERT93_SQL)
 def q_projjson_roundtrip_fwd(spark, sf_dir):
     """PROJJSON WRITER in the gate (VERDICT r03 ask #9): EPSG:2154 is
     exported with crs_io.projstring_to_projjson, serialized to a JSON
@@ -1812,24 +1642,14 @@ def q_projjson_roundtrip_fwd(spark, sf_dir):
     definition, so any writer/reader asymmetry is a value mismatch."""
     import json as _json
 
-    from .crs import epsg_projstring
     from .crs_io import projstring_to_projjson
 
     doc = _json.dumps(projstring_to_projjson(epsg_projstring(2154),
                                              name="RGF93 / Lambert-93"))
-    from .crs import compile_crs
-
-    tr = compile_crs(doc)
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(tr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_p", st)
-              .select("doc_id", (F.round("_p.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_p.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, compile_crs(doc), _XY_M)
 
 
-@register("wkt1_roundtrip_fwd", _lambert93_sql())
+@register("wkt1_roundtrip_fwd", _LAMBERT93_SQL)
 def q_wkt1_roundtrip_fwd(spark, sf_dir):
     """WKT1_GDAL WRITER in the gate (VERDICT r04 ask #6): EPSG:2154
     is exported with crs_io.projstring_to_wkt1 (the proj_as_wkt
@@ -1837,24 +1657,16 @@ def q_wkt1_roundtrip_fwd(spark, sf_dir):
     compiled, and projected — matching the closed-form lcc SQL of the
     ORIGINAL definition, so any writer/reader asymmetry is a value
     mismatch."""
-    from .crs import compile_crs, epsg_projstring
     from .crs_io import projstring_to_wkt1
 
     wkt1 = projstring_to_wkt1(epsg_projstring(2154),
                               name="RGF93 / Lambert-93")
-    tr = compile_crs(wkt1)
-    df = _coords(spark, sf_dir)
-    u = G.project_udf(tr)
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_p", st)
-              .select("doc_id", (F.round("_p.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_p.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, compile_crs(wkt1), _XY_M)
 
 
 @register("cs2cs_two_crs", f"""
 SELECT doc_id, x_m, y_m, 0 AS errno
-FROM ({O.crs_osgb_sql()})
+FROM ({_OSGB_SQL})
 ORDER BY doc_id
 """)
 def q_cs2cs_two_crs(spark, sf_dir):
@@ -1864,11 +1676,10 @@ def q_cs2cs_two_crs(spark, sf_dir):
     CRS definitions through crs.crs_to_crs, with the job's per-row
     errno column.  Oracle: the full cart/helmert/cart/etmerc SQL chain
     plus errno 0 (no failures inside the longitude window)."""
-    from .crs import crs_to_crs
     from .jobs.cct_job import transform_frame
 
     tr = crs_to_crs("EPSG:4326", "EPSG:27700")
-    d = _coords(spark, sf_dir).where("lon > -58.0 AND lon < 54.0")
+    d = _coords(spark, sf_dir).where(_OSGB_WINDOW)
     out = transform_frame(d, tr, x_col="lon", y_col="lat")
     return (out.select("doc_id",
                        (F.round("x_out", 2) + 0.0).alias("x_m"),
@@ -1877,7 +1688,11 @@ def q_cs2cs_two_crs(spark, sf_dir):
                .orderBy("doc_id"))
 
 
-@register("defmodel_velocity", O.defmodel_sql())
+_LLZ_OUT = (("lon_out", "lon_out", 9), ("lat_out", "lat_out", 9),
+            ("z_out", "z_out", 4))
+
+
+@register("defmodel_velocity", O.defmodel_sql(_LLZ_OUT))
 def q_defmodel_velocity(spark, sf_dir):
     """JSON deformation-model driver (defmodel_impl.hpp:822-1219):
     velocity time function x bilinear 3d grid, addition method on
@@ -1888,29 +1703,19 @@ def q_defmodel_velocity(spark, sf_dir):
     GRID_REGISTRY["synthetic_nz_velocity"] = O.defmodel_grid()
     tr = compile_projstring(
         "+proj=defmodel +model=synthetic_nz_model +ellps=GRS80")
-    lon_e, lat_e, t_e = O.DEFMODEL_LONLAT_T
-    _shift = G.transform4d_udf(tr)
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pts = d.select("doc_id", F.expr(lon_e).alias("lon"),
-                   F.expr(lat_e).alias("lat"), F.expr(t_e).alias("t"))
-    st = _shift(F.col("lon"), F.col("lat"), F.col("t"))
-    return (pts.withColumn("_s", st)
-               .select("doc_id",
-                       (F.round("_s.lon_out", 9) + 0.0).alias("lon_out"),
-                       (F.round("_s.lat_out", 9) + 0.0).alias("lat_out"),
-                       (F.round("_s.z_out", 4) + 0.0).alias("z_out"))
-               .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, G.transform4d_udf(tr), _LLZ_OUT,
+                      args=[F.expr(e) for e in O.DEFMODEL_LONLAT_T])
 
 
-@register("healpix_fwd", O.healpix_sql())
+_HEALPIX = "+proj=healpix +ellps=GRS80"
+
+
+@register("healpix_fwd", O.healpix_sql(_HEALPIX, _XY_M))
 def q_healpix_fwd(spark, sf_dir):
     """HEALPix equal-area (healpix.cpp:181-202): authalic-latitude
     equatorial strip + interrupted polar triangles — the astronomy /
     Earth-grid tiling projection."""
-    df = G.with_projected(_coords(spark, sf_dir), "+proj=healpix +ellps=GRS80")
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _HEALPIX, _XY_M)
 
 
 @register("token_stats", f"""
@@ -1981,29 +1786,15 @@ _WKT2_LAMBERT93 = """PROJCRS["RGF93 v1 / Lambert-93",
     AXIS["(N)",north,ORDER[2],LENGTHUNIT["metre",1]]]"""
 
 
-def _wkt93_sql() -> str:
-    from .crs_io import wkt_to_projstring
-
-    wx, wy = O.lcc_xy(wkt_to_projstring(_WKT2_LAMBERT93))
-    return f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, (round({wx} + 700000.0, 2) + 0.0) AS x_m,
-       (round({wy} + 6600000.0, 2) + 0.0) AS y_m
-FROM coords ORDER BY doc_id
-"""
+_WKT93 = wkt_to_projstring(_WKT2_LAMBERT93)
 
 
-@register("wkt_lambert93_fwd", _wkt93_sql())
+@register("wkt_lambert93_fwd", _lcc_sql(_WKT93, 700000.0, 6600000.0))
 def q_wkt_lambert93_fwd(spark, sf_dir):
     """proj_create on a WKT2 PROJCRS text (io.cpp WKTParser /
     wkt2_grammar.y): the reader resolves methods/parameters/ellipsoid
     to the same LCC pipeline the EPSG registry entry compiles to."""
-    from .crs_io import wkt_to_projstring
-
-    df = G.with_projected(_coords(spark, sf_dir),
-                          wkt_to_projstring(_WKT2_LAMBERT93))
-    return df.select("doc_id", (F.round("x", 2) + 0.0).alias("x_m"),
-                     (F.round("y", 2) + 0.0).alias("y_m")).orderBy("doc_id")
+    return _per_point(spark, sf_dir, _WKT93, _XY_M)
 
 
 # deterministic DMS components from doc_id (FIXTURES.md house style:
@@ -2045,7 +1836,7 @@ def q_mined_coords_dms(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-@register("nadgrids_ctable2", O.nadgrids_ctable2_sql())
+@register("nadgrids_ctable2", O.nadgrids_ctable2_sql(_LONLAT_S6))
 def q_nadgrids_ctable2(spark, sf_dir):
     """The classic +nadgrids datum-file path end-to-end on REAL
     CTable2 byte payloads: two synthetic grids are serialized to
@@ -2060,19 +1851,15 @@ def q_nadgrids_ctable2(spark, sf_dir):
     fine_b, coarse_b = GF.synthetic_ctable2_pair()
     GF.register_grid_file("synth_fine.ct2", fine_b)
     GF.register_grid_file("synth_coarse.ct2", coarse_b)
-    df = _coords(spark, sf_dir)
-    u = G.project_udf("+proj=hgridshift "
+    return _per_point(spark, sf_dir, "+proj=hgridshift "
                       "+grids=@not_shipped,synth_fine.ct2,synth_coarse.ct2 "
-                      "+ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_g", st)
-              .select("doc_id",
-                      (F.round("_g.x", 6) + 0.0).alias("lon_s"),
-                      (F.round("_g.y", 6) + 0.0).alias("lat_s"))
-              .orderBy("doc_id"))
+                      "+ellps=GRS80", _LONLAT_S6)
 
 
-@register("gridshift_biquadratic", O.gridshift_biquadratic_sql())
+_LONLAT_DZ = _LONLAT_S6 + (("dz_m", "z", 4),)
+
+
+@register("gridshift_biquadratic", O.gridshift_biquadratic_sql(_LONLAT_DZ))
 def q_gridshift_biquadratic(spark, sf_dir):
     """Unified gridshift from REAL GeoTIFF bytes with the NOAA
     biquadratic interpolation (transformations/gridshift.cpp:474-540,
@@ -2086,16 +1873,10 @@ def q_gridshift_biquadratic(spark, sf_dir):
     GF.register_grid_file("synth3d.tif", O.synthetic_geotiff_3d_bytes())
     # out-of-grid points are a domain error for the unified gridshift
     # (gridshift.cpp OUTSIDE_GRID) — the gate tests in-grid sampling
-    df = _coords(spark, sf_dir).where(
-        "lon >= -12.0 AND lon <= 36.0 AND lat >= 34.0 AND lat <= 64.0")
-    u = G.project_udf("+proj=gridshift +grids=synth3d.tif +ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_g", st)
-              .select("doc_id",
-                      (F.round("_g.x", 6) + 0.0).alias("lon_s"),
-                      (F.round("_g.y", 6) + 0.0).alias("lat_s"),
-                      (F.round("_g.z", 4) + 0.0).alias("dz_m"))
-              .orderBy("doc_id"))
+    return _per_point(
+        spark, sf_dir, "+proj=gridshift +grids=synth3d.tif +ellps=GRS80",
+        _LONLAT_DZ,
+        where="lon >= -12.0 AND lon <= 36.0 AND lat >= 34.0 AND lat <= 64.0")
 
 
 def _dms_sql(col: str, pos: str, neg: str) -> str:
@@ -2112,12 +1893,9 @@ def _dms_sql(col: str, pos: str, neg: str) -> str:
             f"ELSE printf('%dd', {degs}) END || {hemi})")
 
 
-@register("dms_format", f"""
-WITH coords AS ({_COORDS_CTE})
-SELECT doc_id, {_dms_sql('lat', 'N', 'S')} AS lat_dms,
-       {_dms_sql('lon', 'E', 'W')} AS lon_dms
-FROM coords ORDER BY doc_id
-""")
+@register("dms_format", _coords_sql(
+    (("lat_dms", None, None), ("lon_dms", None, None)),
+    (_dms_sql("lat", "N", "S"), _dms_sql("lon", "E", "W"))))
 def q_dms_format(spark, sf_dir):
     """rtodms output formatting (src/rtodms.cpp:38-100, the cs2cs/
     proj ascii output path): decimal degrees -> 49d30'30.5\"N strings
@@ -2130,24 +1908,7 @@ def q_dms_format(spark, sf_dir):
              .orderBy("doc_id"))
 
 
-@register("knn_cell_pruned_top5", f"""
-WITH coords AS ({_COORDS_CTE}),
-q(query_id, q_lon, q_lat) AS (VALUES {_KNN_VALUES}),
-pairs AS (
-  SELECT q.query_id, c.doc_id,
-         (c.lon - q.q_lon)*(c.lon - q.q_lon)
-         + (c.lat - q.q_lat)*(c.lat - q.q_lat) AS dist2
-  FROM coords c CROSS JOIN q
-),
-r AS (
-  SELECT query_id, doc_id, dist2,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dist2 ASC, doc_id ASC) AS rank
-  FROM pairs
-)
-SELECT query_id, rank, doc_id, dist2 FROM r WHERE rank <= 5
-ORDER BY query_id, rank
-""")
+@register("knn_cell_pruned_top5", _KNN_SQL)
 def q_knn_cell_pruned_top5(spark, sf_dir):
     """The SCALE kNN path through the correctness gate: cell-bucketed
     candidates with the widening ring and the in-ring exactness bound
@@ -2163,10 +1924,15 @@ def q_knn_cell_pruned_top5(spark, sf_dir):
                .orderBy("query_id", "rank"))
 
 
+_EPOCH0, _N_EPOCHS = 2005.0, 21  # per-document epoch 2005 + doc_id % 21
+_HXYZ_4D = (("hx", "lon_out", 2), ("hy", "lat_out", 2), ("hz", "z_out", 2))
+
+
 @register("itrf_kinematic", O.helmert_kinematic_sql(
     {"x": "0.0007", "y": "0.0012", "z": "-0.0261", "s": "0.00212",
      "dx": "0.0001", "dy": "0.0001", "dz": "-0.0019", "ds": "0.00011",
-     "t_epoch": "2010.0", "convention": "position_vector"}))
+     "t_epoch": "2010.0", "convention": "position_vector"},
+    _CART, _N_EPOCHS, _EPOCH0, _HXYZ_4D))
 def q_itrf_kinematic(spark, sf_dir):
     """Epoch-dependent frame transformation through the classic init
     mechanism (+init=ITRF2014:ITRF2000, src/init.cpp + the published
@@ -2178,19 +1944,10 @@ def q_itrf_kinematic(spark, sf_dir):
 
     register_init_file("ITRF2014", ITRF2014_SUBSET)
     tr = compile_projstring(
-        "+proj=pipeline +ellps=GRS80 +step +proj=cart "
-        "+step +init=ITRF2014:ITRF2000")
-    u = G.transform4d_udf(tr)
-    d = _coords(spark, sf_dir)
-    pts = d.withColumn("t", (F.lit(2005.0)
-                             + (F.col("doc_id") % 21).cast("double")))
-    st = u(F.col("lon"), F.col("lat"), F.col("t"))
-    return (pts.withColumn("_h", st)
-               .select("doc_id",
-                       (F.round("_h.lon_out", 2) + 0.0).alias("hx"),
-                       (F.round("_h.lat_out", 2) + 0.0).alias("hy"),
-                       (F.round("_h.z_out", 2) + 0.0).alias("hz"))
-               .orderBy("doc_id"))
+        f"+proj=pipeline +step {_CART} +step +init=ITRF2014:ITRF2000")
+    t = F.lit(_EPOCH0) + (F.col("doc_id") % _N_EPOCHS).cast("double")
+    return _per_point(spark, sf_dir, G.transform4d_udf(tr), _HXYZ_4D,
+                      args=(F.col("lon"), F.col("lat"), t))
 
 
 # deterministic messy-URL synthesis, same construction on both sides
@@ -2253,7 +2010,10 @@ def q_url_canonical(spark, sf_dir):
 from .operators import geopolygon as GP  # noqa: E402
 
 
-@register("polygon_area_sphere", O.polygon_area_sphere_sql())
+_AUTHALIC_R = 6370997.0  # sphere radius of the f = 0 geodesic gates
+
+
+@register("polygon_area_sphere", O.polygon_area_sphere_sql(_AUTHALIC_R))
 def q_polygon_area_sphere(spark, sf_dir):
     """Distributed geodesic polygon area (geod_polygonarea,
     src/geodesic.c:1567-1727) over deterministic doc_id-derived
@@ -2272,7 +2032,7 @@ def q_polygon_area_sphere(spark, sf_dir):
          * F.lit(0.1)).alias("lat"),
         (F.lit(20.0) + (F.col("doc_id") * 11 % 41).cast("double")
          * F.lit(0.1)).alias("lon"))
-    out = GP.polygon_area(v, a=6370997.0, f=0.0)
+    out = GP.polygon_area(v, a=_AUTHALIC_R, f=0.0)
     return (out.select(
                 "poly_id", "n_vertices",
                 (F.round("perimeter_m", 2) + 0.0).alias("perim_m"),
@@ -2281,7 +2041,8 @@ def q_polygon_area_sphere(spark, sf_dir):
                .orderBy("poly_id"))
 
 
-@register("geodesic_direct_sphere", O.geodesic_direct_sphere_sql())
+@register("geodesic_direct_sphere",
+          O.geodesic_direct_sphere_sql(_AUTHALIC_R))
 def q_geodesic_direct_sphere(spark, sf_dir):
     """The direct geodesic problem (geod_direct, src/geodesic.c:686)
     through the driver gate: per-document azimuth/distance derived
@@ -2295,7 +2056,7 @@ def q_geodesic_direct_sphere(spark, sf_dir):
     az = ((F.col("doc_id") * 13 % 360).cast("double")
           - F.lit(180.0) + F.lit(0.5))
     s = F.lit(100000.0) + (F.col("doc_id") % 97).cast("double") * 10000.0
-    u = G.geodesic_direct_udf(6370997.0, 0.0)
+    u = G.geodesic_direct_udf(_AUTHALIC_R, 0.0)
     d = pts.withColumn("_d", u(F.col("lat"), F.col("lon"), az, s))
     lon2 = ((F.col("_d.lon2") + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
     return (d.select(
@@ -2306,24 +2067,24 @@ def q_geodesic_direct_sphere(spark, sf_dir):
                .orderBy("doc_id"))
 
 
-@register("tmerc_auto_fwd", O.tmerc_auto_sql())
+_TMERC_AUTO = "+proj=tmerc +algo=auto +ellps=GRS80 +lon_0=109"
+
+
+@register("tmerc_auto_fwd",
+          O.tmerc_auto_sql(_TMERC_AUTO, _TM109_WINDOW, _XY_M))
 def q_tmerc_auto_fwd(spark, sf_dir):
     """tmerc AUTO hybrid (tmerc.cpp:598-603, the proj 7+ default
     resolution of +algo=auto): Evenden/Snyder series within 3° of the
     central meridian, Poder/Engsager exact beyond it.  Oracle: both
     regimes as chained CTEs over disjoint row sets with the engine's
     own 3·DEG_TO_RAD switch literal (plans/oracles.py::tmerc_auto_sql)."""
-    df = _coords(spark, sf_dir).where(
-        (F.col("lon") > 59.0) & (F.col("lon") < 159.0))
-    u = G.project_udf("+proj=tmerc +algo=auto +ellps=GRS80 +lon_0=109")
-    st = u(F.col("lon"), F.col("lat"))
-    return (df.withColumn("_e", st)
-              .select("doc_id", (F.round("_e.x", 2) + 0.0).alias("x_m"),
-                      (F.round("_e.y", 2) + 0.0).alias("y_m"))
-              .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, _TMERC_AUTO, _XY_M, where=_TM109_WINDOW)
 
 
-@register("newton_inverse_roundtrip", O.wintri_roundtrip_sql())
+_WINTRI = "+proj=wintri"
+
+
+@register("newton_inverse_roundtrip", O.wintri_roundtrip_sql(_WINTRI))
 def q_newton_inverse_roundtrip(spark, sf_dir):
     """Generic 2D Newton inverse (src/generic_inverse.cpp:33+) through
     the driver gate, on the projection family it was built for: Winkel
@@ -2334,7 +2095,7 @@ def q_newton_inverse_roundtrip(spark, sf_dir):
     residuals to round to exactly 0.0 at 1e-6 deg (measured Newton
     residual < 1e-9 deg on the (-66,66) lat domain)."""
     df = _coords(spark, sf_dir)
-    u = G.roundtrip_udf("+proj=wintri")
+    u = G.roundtrip_udf(_WINTRI)
     st = u(F.col("lon"), F.col("lat"))
     return (df.withColumn("_r", st)
               .select("doc_id",
@@ -2444,7 +2205,11 @@ def q_bm25_top10(spark, sf_dir):
             .orderBy(F.col("bm25").desc(), "doc_id").limit(10))
 
 
-@register("deformation_cart", O.deformation_sql())
+_DEFORMATION_DT = 5.0  # years
+
+
+@register("deformation_cart",
+          O.deformation_sql(_CART, _DEFORMATION_DT, _XYZ_M4))
 def q_deformation_cart(spark, sf_dir):
     """Kinematic velocity-grid shift
     (transformations/deformation.cpp): cart fwd → bilinear ENU
@@ -2455,23 +2220,16 @@ def q_deformation_cart(spark, sf_dir):
     from .proj import GRID_REGISTRY
 
     GRID_REGISTRY.setdefault("bench_vel", synthetic_velgrid())
-    lon_e, lat_e = O.DEFORMATION_LONLAT
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pts = d.select("doc_id", F.expr(lon_e).alias("lon"),
-                   F.expr(lat_e).alias("lat"))
-    u = G.project_udf("+proj=pipeline +step +proj=cart +ellps=GRS80"
-                      " +step +proj=deformation +dt=5 +grids=bench_vel"
-                      " +ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (pts.withColumn("_s", st)
-               .select("doc_id",
-                       (F.round("_s.x", 4) + 0.0).alias("x_m"),
-                       (F.round("_s.y", 4) + 0.0).alias("y_m"),
-                       (F.round("_s.z", 4) + 0.0).alias("z_m"))
-               .orderBy("doc_id"))
+    return _per_point(
+        spark, sf_dir, f"+proj=pipeline +step {_CART} +step +proj=deformation"
+        f" +dt={_DEFORMATION_DT} +grids=bench_vel +ellps=GRS80", _XYZ_M4,
+        args=[F.expr(e) for e in O.DEFORMATION_LONLAT])
 
 
-@register("tinshift_fwd", O.tinshift_sql())
+_XYZ_OUT6 = (("x_out", "x", 6), ("y_out", "y", 6), ("z_out", "z", 6))
+
+
+@register("tinshift_fwd", O.tinshift_sql(_XYZ_OUT6))
 def q_tinshift_fwd(spark, sf_dir):
     """Triangulation-based shift (transformations/tinshift.cpp, the
     Finnish/Swiss datum-modernisation pathway): first containing
@@ -2482,20 +2240,15 @@ def q_tinshift_fwd(spark, sf_dir):
     from .proj import GRID_REGISTRY
 
     GRID_REGISTRY.setdefault("bench_tin", synthetic_tin())
-    xe, ye = O.TINSHIFT_XY
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pts = d.select("doc_id", F.expr(xe).alias("x"), F.expr(ye).alias("y"))
-    u = G.project_udf("+proj=tinshift +file=bench_tin")
-    st = u(F.col("x"), F.col("y"))
-    return (pts.withColumn("_s", st)
-               .select("doc_id",
-                       (F.round("_s.x", 6) + 0.0).alias("x_out"),
-                       (F.round("_s.y", 6) + 0.0).alias("y_out"),
-                       (F.round("_s.z", 6) + 0.0).alias("z_out"))
-               .orderBy("doc_id"))
+    return _per_point(spark, sf_dir, "+proj=tinshift +file=bench_tin",
+                      _XYZ_OUT6, args=[F.expr(e) for e in O.TINSHIFT_XY])
 
 
-@register("xyzgridshift_fwd", O.xyzgridshift_sql())
+_XYZ_MULT = 0.01  # +multiplier of the grid's (dx, dy, dz)
+
+
+@register("xyzgridshift_fwd",
+          O.xyzgridshift_sql(_CART, _XYZ_MULT, _XYZ_M4))
 def q_xyzgridshift_fwd(spark, sf_dir):
     """3D cartesian grid shift (transformations/xyzgridshift.cpp,
     grid_ref=input_crs): bilinear (dx,dy,dz) indexed by the input
@@ -2505,17 +2258,7 @@ def q_xyzgridshift_fwd(spark, sf_dir):
     from .proj import GRID_REGISTRY
 
     GRID_REGISTRY.setdefault("bench_vel", synthetic_velgrid())
-    lon_e, lat_e = O.DEFORMATION_LONLAT
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pts = d.select("doc_id", F.expr(lon_e).alias("lon"),
-                   F.expr(lat_e).alias("lat"))
-    u = G.project_udf("+proj=pipeline +step +proj=cart +ellps=GRS80"
-                      " +step +proj=xyzgridshift +grids=bench_vel"
-                      " +multiplier=0.01 +ellps=GRS80")
-    st = u(F.col("lon"), F.col("lat"))
-    return (pts.withColumn("_s", st)
-               .select("doc_id",
-                       (F.round("_s.x", 4) + 0.0).alias("x_m"),
-                       (F.round("_s.y", 4) + 0.0).alias("y_m"),
-                       (F.round("_s.z", 4) + 0.0).alias("z_m"))
-               .orderBy("doc_id"))
+    return _per_point(
+        spark, sf_dir, f"+proj=pipeline +step {_CART} +step +proj=xyzgridshift"
+        f" +grids=bench_vel +multiplier={_XYZ_MULT} +ellps=GRS80", _XYZ_M4,
+        args=[F.expr(e) for e in O.DEFORMATION_LONLAT])

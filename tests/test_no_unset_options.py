@@ -23,7 +23,7 @@ PKG = ROOT / "proj_4_spark"
 SCOPE = sorted(
     [PKG / "sources" / f"{m}.py" for m in ("pages", "coords", "polygons")]
     + [PKG / "plans" / f"{m}.py"
-       for m in ("checkpoint", "parity", "salting", "candidates")]
+       for m in ("checkpoint", "parity", "salting", "candidates", "oracles")]
     + [PKG / "queries.py"]
     + [p for d in ("functions", "operators", "streaming", "index", "jobs")
        for p in (PKG / d).glob("*.py")])

@@ -29,3 +29,18 @@ def test_stream_cell_counts_match_batch(spark, sf_dir, tmp_path):
     g = {r["cell"]: r["n_docs"] for r in got.collect()}
     b = {r["cell"]: r["n_docs"] for r in batch.collect()}
     assert g == b and len(g) > 10
+
+
+def test_stream_gate_query_leaves_no_staging_dir(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """The streaming gate query stages documents.parquet in a temp dir
+    for the file-stream source; it must remove it once drained, and its
+    result must still be readable afterwards (the memory sink holds it)."""
+    import tempfile
+
+    from proj_4_spark import queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = Q.queries()["stream_tile_rollup_batchpar"](spark, sf_dir).collect()
+    assert len(rows) > 10
+    assert not list(tmp_path.glob("stream_tiles_*"))
